@@ -7,21 +7,23 @@ import statistics
 
 # Every workload reports every end-to-end metric; what "operation" and
 # "item" mean per workload is set out in perfbench/README.md.
-# Wall-time latency and throughput are not among them: on a shared 4-core
-# host their run-to-run spread (0.2-0.3 of the median) exceeds any usable
-# bound. They are reported unbounded, as the per-layer "loop.*" metrics and
-# in every run's details line.
+# Wall-time latency and throughput are not among them: they follow the
+# shared host's speed, which drifts between sets of runs by more than any
+# usable bound. Nor is peak RSS, which follows the JVM's heap growth. All
+# three are reported unbounded in every run's details line, and latency and
+# throughput also as the per-layer "loop.*" metrics.
 END_TO_END = (
     {"name": "setup_s", "unit": "s", "better": "lower", "bound": 0.25},
     {"name": "success_rate", "unit": "ratio", "better": "higher", "bound": 0.02},
-    {"name": "peak_rss_mb", "unit": "MB", "better": "lower", "bound": 0.1},
     {"name": "cpu_ms_per_item", "unit": "ms", "better": "lower", "bound": 0.25},
-    {"name": "write_amp", "unit": "ratio", "better": "lower", "bound": 0.05},
-    {"name": "space_amp", "unit": "ratio", "better": "lower", "bound": 0.05},
+    {"name": "write_amp", "unit": "ratio", "better": "lower", "bound": 0.1},
+    {"name": "space_amp", "unit": "ratio", "better": "lower", "bound": 0.1},
 )
 
 # span name -> measures taken as a mean per call (``calls`` is per
-# benchmark operation instead)
+# benchmark operation instead). Lazy builders (read_where, fk_check,
+# contamination_ratios) run no Spark job of their own, so they have no
+# spark_jobs measure: their jobs land on the span that runs the action
 _SPAN_MEASURES = {
     "etl.orchestrator.run_pipeline": ("wall_s", "driver_s", "spark_jobs"),
     "etl.jobs.run_etl_job": ("wall_s", "self_s", "spark_jobs", "spark_stages",
@@ -29,7 +31,7 @@ _SPAN_MEASURES = {
     "operators.merge.merge_upsert": ("wall_s", "driver_s", "spark_jobs", "spark_stages",
                                      "exec_cpu_s", "shuffle_bytes", "bytes_written"),
     "sources.rejects.write_rejects": ("wall_s", "spark_jobs"),
-    "operators.joins.fk_check": ("wall_s", "spark_jobs"),
+    "operators.joins.fk_check": ("wall_s",),
     "sources.csv.read_csv": ("wall_s",),
     "operators.validation.validate": ("wall_s",),
     "operators.dedup.dedup_deterministic": ("wall_s",),
@@ -38,7 +40,7 @@ _SPAN_MEASURES = {
     "plans.catalog": ("spark_jobs", "spark_stages", "exec_cpu_s", "shuffle_bytes"),
     "plans.catalog.build": ("wall_s",),
     "plans.catalog.collect": ("wall_s",),
-    "sources.snapshots.read_where": ("calls", "wall_s", "driver_s", "spark_jobs"),
+    "sources.snapshots.read_where": ("calls", "wall_s", "driver_s"),
     "sources.snapshots.merge_commit": ("wall_s", "driver_s", "spark_jobs", "spark_stages",
                                        "exec_cpu_s", "bytes_written"),
     "sources.snapshots.load_snapshot": ("calls", "wall_s"),
@@ -50,7 +52,7 @@ _SPAN_MEASURES = {
     "operators.textdedup.shingle_arrays": ("wall_s",),
     "operators.textdedup.minhash_dedup_verified": ("wall_s", "spark_jobs"),
     "operators.graph.dedup_clusters": ("wall_s", "spark_jobs"),
-    "operators.contamination.contamination_ratios": ("wall_s", "spark_jobs"),
+    "operators.contamination.contamination_ratios": ("wall_s",),
     "operators.packing.pack_sequences": ("wall_s",),
 }
 # build/collect spans are reported under the shorter catalog names
@@ -80,10 +82,10 @@ EXTRAS = (
 
 def _unit(name: str) -> str:
     leaf = name.rsplit(".", 1)[-1]
-    if leaf.endswith("_s") or leaf.endswith("_s_p50") or leaf.endswith("_s_tail"):
-        return "s"
     if leaf.endswith("per_s"):
         return "1/s"
+    if leaf.endswith("_s") or leaf.endswith("_s_p50") or leaf.endswith("_s_tail"):
+        return "s"
     if leaf.endswith("bytes") or leaf == "bytes_written":
         return "bytes"
     if leaf.endswith("ratio") or leaf.endswith("recall"):

@@ -40,7 +40,7 @@ def main() -> int:
               f"attempted={plain['attempted']} failed={plain['failed']}")
         for name, m in plain["metrics"].items():
             print(f"  {name:16s} {m['value']:14.4f} {m['unit']}")
-        for k in ("loop.op_s_p50", "loop.items_per_s"):
+        for k in ("loop.op_s_p50", "loop.items_per_s", "peak_rss_mb"):
             print(f"  {k:16s} {plain_det[k]:14.4f} (untraced; unbounded)")
         p50, tp = plain_det["loop.op_s_p50"], plain_det["loop.items_per_s"]
         if p50 and tp:

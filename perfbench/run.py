@@ -37,19 +37,26 @@ from perfbench import metrics as M  # noqa: E402
 from perfbench.trace import PKG, Tracer  # noqa: E402
 from perfbench.workloads import WORKLOADS  # noqa: E402
 
+_QUERY_MIX = {"sf": 0.1, "snapshot_files": 16, "upsert_rows": 40}
+_CURATE = {"base_docs": 1500, "replicas": 2}
+_TINY_QUERY_MIX = {"sf": 0.002, "snapshot_files": 4, "upsert_rows": 8}
+_TINY_CURATE = {"base_docs": 60, "replicas": 2}
 SIZES = {
+    # etl_upsert batches are the paper's measured run (BASELINE.md):
+    # 1,000 products, 7,500 orders, ~41,000 order items
     "full": {
-        "etl_upsert": {"products": 150, "batches_per_step": 2},
-        "query_mix": {"sf": 0.1, "snapshot_files": 16, "upsert_rows": 40},
-        "stream_maintain": {"files": 3, "changes": 500, "keys": 300},
-        "curate_corpus": {"base_docs": 1500, "replicas": 2},
+        "etl_upsert": {"products": 1000, "curate": {"base_docs": 300, "replicas": 2}},
+        "query_mix": _QUERY_MIX,
+        "stream_maintain": {"files": 3, "changes": 500, "keys": 300,
+                            "serve": {"sf": 0.02, "snapshot_files": 8, "upsert_rows": 40}},
+        "curate_corpus": _CURATE,
     },
     # for the benchmark's own smoke tests
     "tiny": {
-        "etl_upsert": {"products": 20, "batches_per_step": 1},
-        "query_mix": {"sf": 0.002, "snapshot_files": 4, "upsert_rows": 8},
-        "stream_maintain": {"files": 2, "changes": 40, "keys": 12},
-        "curate_corpus": {"base_docs": 60, "replicas": 2},
+        "etl_upsert": {"products": 20, "curate": _TINY_CURATE},
+        "query_mix": _TINY_QUERY_MIX,
+        "stream_maintain": {"files": 2, "changes": 40, "keys": 12, "serve": _TINY_QUERY_MIX},
+        "curate_corpus": _TINY_CURATE,
     },
 }
 
@@ -89,18 +96,32 @@ def peak_rss_mb() -> float:
     return total_kb / 1024.0
 
 
-def cpu_s() -> float:
-    """CPU seconds used so far by this process plus its descendants,
-    counting children they have already reaped."""
-    ticks = 0
+def _stat_fields(path: str) -> list[str]:
+    with open(path) as f:
+        return f.read().rsplit(")", 1)[1].split()
+
+
+def cpu_s() -> tuple[float, float]:
+    """CPU seconds used so far by this process plus its descendants
+    (counting children they have already reaped), and the part of it spent
+    in the JVM's JIT compiler threads."""
+    ticks = jit = 0
     for pid in [os.getpid()] + _descendants(os.getpid()):
         try:
-            with open(f"/proc/{pid}/stat") as f:
-                fields = f.read().rsplit(")", 1)[1].split()
+            ticks += sum(int(x) for x in _stat_fields(f"/proc/{pid}/stat")[11:15])
+            tasks = os.listdir(f"/proc/{pid}/task")
         except OSError:
             continue
-        ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
-    return ticks / os.sysconf("SC_CLK_TCK")
+        for tid in tasks:
+            try:
+                with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                    if not f.read().startswith(("C1 CompilerThre", "C2 CompilerThre")):
+                        continue
+                jit += sum(int(x) for x in _stat_fields(f"/proc/{pid}/task/{tid}/stat")[11:13])
+            except OSError:
+                continue
+    hz = os.sysconf("SC_CLK_TCK")
+    return ticks / hz, jit / hz
 
 
 def start_session(work: str):
@@ -112,12 +133,14 @@ def start_session(work: str):
     return session.get_spark(
         "perfbench",
         master=f"local[{cpus}]",
+        # get_spark's own memory settings, so peak RSS follows what the
+        # program allocates. Compiler threads live as long as the JVM, so
+        # cpu_s() can take their time out of the loop's CPU time. No
+        # hsperfdata file, which the JVM would write under /tmp
         extra_conf={
-            # a fixed, pre-touched heap keeps peak RSS from following GC
-            # timing; 2g holds every workload at its full size
-            "spark.driver.memory": "2g",
             "spark.driver.extraJavaOptions": (
-                f"-Djava.io.tmpdir={tmp} -Xms2g -XX:+AlwaysPreTouch"
+                f"-Djava.io.tmpdir={tmp} -XX:-UseDynamicNumberOfCompilerThreads "
+                "-XX:-UsePerfData"
             ),
             "spark.local.dir": os.path.join(work, "spark-local"),
             "spark.sql.warehouse.dir": os.path.join(work, "spark-warehouse"),
@@ -195,29 +218,32 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str = "full
         w.setup()
         setup_s = time.perf_counter() - T_START
         t_loop = time.time()
-        deadline = time.perf_counter() + seconds
-        n_steps = 0
-        cpu0 = cpu_s()
-        while n_steps < w.min_steps or time.perf_counter() < deadline:
+        # a fixed amount of work, not a time box: a faster program runs the
+        # same steps in less time
+        n_steps = max(w.min_steps, round(seconds / w.step_s))
+        cpu0, jit0 = cpu_s()
+        for i in range(n_steps):
             if tracer is not None:
-                tracer.op = n_steps
+                tracer.op = i
             w.step()
-            n_steps += 1
-        loop_cpu_s = cpu_s() - cpu0
+        cpu1, jit1 = cpu_s()
+        # the program's own work: JIT compilation is warm-up that spills
+        # past set-up by a varying amount
+        loop_cpu_s = (cpu1 - cpu0) - (jit1 - jit0)
         w.finish()
         o = w.out
         rss = peak_rss_mb()
         loop = {"loop.op_s_p50": op_s_p50(o),
                 "loop.items_per_s": o.items / o.items_s if o.items_s else 0.0}
         details = {"workload": workload, "seed": seed, "session_s": t_session, "steps": n_steps,
-                   "loop_cpu_s": loop_cpu_s, **loop,
+                   "peak_rss_mb": rss,
+                   "loop_cpu_s": loop_cpu_s, "loop_jit_cpu_s": jit1 - jit0, **loop,
                    "op_s": [round(x, 3) for x in o.latencies], "errors": o.errors[:5],
                    **o.details}
         if tracer is None:
             metrics = {
                 "setup_s": setup_s,
                 "success_rate": 1.0 - o.failed / max(1, o.attempted),
-                "peak_rss_mb": rss,
                 "cpu_ms_per_item": 1000.0 * loop_cpu_s / max(1, o.items),
                 "write_amp": o.written / max(1, o.input_bytes),
                 "space_amp": o.live / max(1, o.absorbed),

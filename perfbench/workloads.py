@@ -82,10 +82,24 @@ class Outcome:
             msg += "\n" + "".join(traceback.format_exception(exc)[-3:])
         self.errors.append(msg)
 
+    def absorb(self, other: "Outcome", tag: str) -> None:
+        """Fold in the operations of a workload run as part of this one:
+        its counts, errors and per-layer values, and its details under
+        ``tag``. The item, byte and latency figures stay this workload's."""
+        self.attempted += other.attempted
+        self.failed += other.failed
+        self.errors += [f"{tag}: {e}" for e in other.errors]
+        self.extras.update(other.extras)
+        self.details[tag] = {**other.details, "op_s": [round(x, 3) for x in other.latencies]}
+
 
 class Workload:
     name = ""
     min_steps = 1
+    # seconds one step takes on the reference host; ``--seconds`` maps to
+    # a fixed step count through it, so both sides of a comparison time
+    # the same work however fast the code under test is
+    step_s = 10.0
 
     def __init__(self, spark, work: str, seed: int, size: dict, tracer=None):
         self.spark, self.work, self.seed, self.size = spark, work, seed, size
@@ -121,10 +135,13 @@ class Workload:
 
 class EtlUpsert(Workload):
     """Seeded raw CSV batches through ``etl.orchestrator.run_pipeline`` into
-    one growing warehouse. Set-up lands the table-creating batch and one
-    warm-up upsert; every timed batch is an upsert."""
+    one growing warehouse. Set-up lands the table-creating batch; every
+    timed batch is an upsert. Each step also runs one
+    ``etl.datapipe.run_curation_job`` over a small seeded corpus (the
+    package's other batch ETL job), so the curation layers are measured."""
 
     name = "etl_upsert"
+    step_s = 14.0
 
     def setup(self) -> None:
         self.mark("start")
@@ -135,8 +152,10 @@ class EtlUpsert(Workload):
         self.absorbed = 0
         self._run_batch(timed=False)  # creates the tables
         self.mark("first_batch")
-        self._run_batch(timed=False)  # the first upsert: JIT warm-up
-        self.mark("warm_batch")
+        self.curate = CurateCorpus(self.spark, self.work, self.seed, self.size["curate"],
+                                   self.tracer)
+        self.curate.setup()
+        self.mark("curate_setup")
 
     def _cfg(self, raw: str):
         return _O.PipelineConfig(
@@ -193,22 +212,21 @@ class EtlUpsert(Workload):
         return ""
 
     def step(self) -> None:
-        # a step is a fixed number of batches, larger than the run's time
-        # box, so every run times the same batches: the warehouse grows and
-        # the JIT keeps warming from batch to batch
-        for _ in range(self.size["batches_per_step"]):
-            try:
-                self._run_batch(timed=True)
-            except Exception as e:  # noqa: BLE001 - a failed batch is counted
-                self.out.attempted += 1
-                self.out.fail(f"batch {self.n}", e)
+        try:
+            self._run_batch(timed=True)
+        except Exception as e:  # noqa: BLE001 - a failed batch is counted
+            self.out.attempted += 1
+            self.out.fail(f"batch {self.n}", e)
         if not self.out.live:  # space amplification after the first step
             self.out.live = sum(sz for sz, _ in _files(self.wh).values())
             self.out.absorbed = self.absorbed
+        self.curate.step()
 
     def finish(self) -> None:
         """Read the curated parquet with DuckDB and compare every table with
         the generator's survivors, content and counts."""
+        self.curate.finish()
+        self.out.absorb(self.curate.out, "curate")
         o = self.out
         o.attempted += 1
         want = self.gen.expected_tables()
@@ -281,10 +299,12 @@ def _catalyst_s(df) -> float:
 
 class QueryMix(Workload):
     """Reads dominate, writes run beside them: headline catalog queries,
-    selective snapshot lookups, and one small MERGE upsert in ten."""
+    selective snapshot lookups, a small MERGE upsert and an OPTIMIZE
+    (``compact``) of the upserted table, in seeded blocks of 16."""
 
     name = "query_mix"
-    min_steps = 15  # one whole block: every query once, and an upsert
+    min_steps = 16  # one whole block: every query once, an upsert, a compaction
+    step_s = 0.6
 
     def setup(self) -> None:
         self.mark("start")
@@ -349,19 +369,19 @@ class QueryMix(Workload):
             self.out.fail(f"set-up lookup: {bad}")
         self.block: list[str] = []
         self.mark("warm_lookup")
-        self.lat = {"query": [], "lookup": [], "upsert": []}
+        self.lat = {"query": [], "lookup": [], "upsert": [], "compact": []}
         self.catalyst: list[float] = []
         self.upsert_src_bytes = 0
-        self.upsert_written = 0
+        self.table_written = 0
         self.t_loop = None
 
     def step(self) -> None:
         if self.t_loop is None:
             self.t_loop = time.perf_counter()
         if not self.block:
-            # ops come in seeded shuffles of fifteen: every headline query
-            # once, four lookups, one upsert
-            self.block = list(HEADLINE) + ["lookup"] * 4 + ["upsert"]
+            # ops come in seeded shuffles of sixteen: every headline query
+            # once, four lookups, one upsert, one compaction
+            self.block = list(HEADLINE) + ["lookup"] * 4 + ["upsert", "compact"]
             self.rng.shuffle(self.block)
         kind = self.block.pop()
         query = kind if kind in HEADLINE else None
@@ -373,8 +393,10 @@ class QueryMix(Workload):
                 bad = self._query(query)
             elif kind == "lookup":
                 bad = self._lookup()
-            else:
+            elif kind == "upsert":
                 bad = self._upsert()
+            else:
+                bad = self._compact()
         except Exception as e:  # noqa: BLE001
             o.fail(kind, e)
             return
@@ -447,19 +469,34 @@ class QueryMix(Workload):
         v = _S.merge_commit(self.spark, df, self.orders_path, self.spec)
         took = time.perf_counter() - t0
         self.lat["upsert"].append(took)
-        self.upsert_written += _new_bytes(before, _files(self.orders_path))
+        self.table_written += _new_bytes(before, _files(self.orders_path))
         for x in rows:
             self.upserted[x[0]] = x
         if v != v_before + 1:
             return f"merge_commit published version {v} after {v_before}"
         return ""
 
+    def _compact(self) -> str:
+        before = _files(self.orders_path)
+        v_before = _S.load_snapshot(self.orders_path).version
+        t0 = time.perf_counter()
+        v = _S.compact(self.spark, self.orders_path, cluster_by=["o_orderkey"],
+                       n_files=self.size["snapshot_files"])
+        self.lat["compact"].append(time.perf_counter() - t0)
+        self.table_written += _new_bytes(before, _files(self.orders_path))
+        if v != v_before + 1:
+            return f"compact published version {v} after {v_before}"
+        n = _S.read(self.spark, self.orders_path).count()
+        if n != self.next_key:  # keys are 0..next_key-1
+            return f"compact left {n} rows, expected {self.next_key}"
+        return ""
+
     def finish(self) -> None:
         o = self.out
         wall = time.perf_counter() - self.t_loop
-        o.items = len(self.lat["query"]) + len(self.lat["lookup"]) + len(self.lat["upsert"])
+        o.items = sum(len(v) for v in self.lat.values())
         o.items_s = wall
-        o.written = self.upsert_written
+        o.written = self.table_written
         o.input_bytes = max(1, self.upsert_src_bytes)
         o.live = _bytes(_S.data_files(self.orders_path))
         o.absorbed = self.setup_bytes
@@ -511,21 +548,29 @@ def tail_percentile(xs: list[float]) -> dict:
 class StreamMaintain(Workload):
     """The exactly-once MIN/MAX and TOP-K twins draining a seeded change
     feed, one paced availableNow query (one file per micro-batch) per twin,
-    each twin in fresh directories."""
+    each twin in fresh directories, compacting its tables every
+    ``COMPACT_EVERY`` micro-batches. Beside the twins, each step serves one
+    ``query_mix`` block over a small star schema (the headline catalog
+    queries, ``read_where`` lookups, a ``merge_commit`` upsert and a
+    ``compact``), so the catalog and snapshot read, upsert and compaction
+    layers are measured too."""
 
     name = "stream_maintain"
+    step_s = 20.0
     TOPK = 3
+    COMPACT_EVERY = 3
 
     def setup(self) -> None:
         self.round = 0
         self.progress: list[dict] = []
         self.last_state: list[str] = []
-        warm = gen.change_feed(self.seed + 10_000, 2, self.size["changes"] // 2,
-                               self.size["keys"], self.TOPK)
         self.mark("start")
-        for twin in ("minmax", "topk"):  # JIT warm-up, untimed
-            self._drain(twin, warm, "warm", timed=False)
-            self.mark(f"warm_{twin}")
+        # the serving block's set-up (its oracle pass, snapshot commits and
+        # a lookup) is also the JIT warm-up of the twins' scans, joins and
+        # snapshot commits
+        self.serve = QueryMix(self.spark, self.work, self.seed, self.size["serve"], self.tracer)
+        self.serve.setup()
+        self.mark("serve_setup")
 
     def _start(self, twin: str, raw: str, d: str):
         reader = (
@@ -536,10 +581,12 @@ class StreamMaintain(Workload):
         )
         fact, state, ck = (os.path.join(d, x) for x in ("fact", "state", "ckpt"))
         if twin == "minmax":
-            q = _AGG.stream_minmax_maintenance(self.spark, reader, fact, state, ck)
+            q = _AGG.stream_minmax_maintenance(self.spark, reader, fact, state, ck,
+                                               compact_every=self.COMPACT_EVERY)
         else:
             q = _AGG.stream_topk_maintenance(self.spark, reader, fact, state, ck,
-                                             k=self.TOPK, buffer=2)
+                                             k=self.TOPK, buffer=2,
+                                             compact_every=self.COMPACT_EVERY)
         return q, state
 
     def _write_feed(self, raw: str, feed: gen.ChangeFeed) -> int:
@@ -555,7 +602,7 @@ class StreamMaintain(Workload):
             total += len(text.encode())
         return total
 
-    def _drain(self, twin: str, feed: gen.ChangeFeed, tag: str, timed: bool) -> None:
+    def _drain(self, twin: str, feed: gen.ChangeFeed, tag: str) -> None:
         d = os.path.join(self.work, f"{twin}-{tag}")
         raw = os.path.join(d, "raw")
         feed_bytes = self._write_feed(raw, feed)
@@ -573,11 +620,6 @@ class StreamMaintain(Workload):
         if len(prog) != len(feed.files):
             raise RuntimeError(f"{twin}: {len(prog)} micro-batches for {len(feed.files)} files")
         bad = self._check(twin, state, feed)
-        if not timed:
-            if bad:
-                self.out.attempted += 1
-                self.out.fail(f"warm-up {twin}: {bad}")
-            return
         o = self.out
         o.attempted += len(prog)
         if bad:  # every micro-batch of the drain fed the wrong state
@@ -621,13 +663,17 @@ class StreamMaintain(Workload):
                                self.size["changes"], self.size["keys"], self.TOPK)
         for twin in ("minmax", "topk"):
             try:
-                self._drain(twin, feed, f"r{self.round}", timed=True)
+                self._drain(twin, feed, f"r{self.round}")
             except Exception as e:  # noqa: BLE001
                 self.out.attempted += len(feed.files)
                 self.out.fail(f"{twin} round {self.round}", e, n=len(feed.files))
+        for _ in range(QueryMix.min_steps):
+            self.serve.step()
 
     def finish(self) -> None:
+        self.serve.finish()
         o = self.out
+        o.absorb(self.serve.out, "serve")
         steady = [p for p in self.progress if p["batch"] > 0]
         # the TOP-K twin's batches run slower than MIN/MAX's, so a median
         # over both would sit in the gap between them: average the twins'
@@ -637,7 +683,7 @@ class StreamMaintain(Workload):
             if (xs := [p["trigger_s"] for p in steady if p["twin"] == twin])
         ]
         o.op_s_p50 = statistics.mean(medians) if medians else None
-        o.extras = {
+        o.extras |= {
             "streaming.aggmaint.batch.trigger_s": _p50([p["trigger_s"] for p in steady]),
             "streaming.aggmaint.batch.add_batch_s": _p50([p["add_batch_s"] for p in steady]),
         }
@@ -657,6 +703,7 @@ class CurateCorpus(Workload):
     fresh output path."""
 
     name = "curate_corpus"
+    step_s = 4.0
 
     def setup(self) -> None:
         self.mark("start")
@@ -703,7 +750,7 @@ class CurateCorpus(Workload):
         self.first = (self.first[0], None, out)
 
     def finish(self) -> None:
-        self.out.extras = {
+        self.out.extras |= {
             "operators.textdedup.seeded_dup_recall":
                 self.first[0].n_near_dups / max(1, self.n_near_seeded),
         }
