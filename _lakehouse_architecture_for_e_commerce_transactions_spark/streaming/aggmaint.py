@@ -38,6 +38,31 @@ empty rather than skipping or double-applying — with an
 rebuilt state converges to the same answer. Skipping on bare batch ids
 across app ids would silently drop never-applied data.
 
+ONE RUNNER for the eight keyed-state twins (agg, minmax, topk, kmv,
+hist, cm, hll, ewma): ``_keyed_twin`` owns the exactly-once skeleton,
+in this order — read the feed (``_change_reader``) → in-plan NULL-key
+guard → [fact-mirror twins: cache the batch, profile its keys once,
+advance the mirror] → ``_table_state`` → ``_guard`` → on creation or
+rebuild the FULL state, otherwise the touched keys' slice
+(``_scoped_slice``) → ``_commit_with_marker`` → the ``compact_every``
+cadence. A twin is only a ``_TwinSpec``:
+
+* ``state_schema`` — the state table, key first, ``_last_batch`` and
+  ``_app_id`` last; the watermark marker row derives from it;
+* ``feed_schema`` — the CSV feed (the change rows, or ``(k, v)`` /
+  ``(k, t, x)`` for the insert-only sketches and EWMA);
+* ``advance(slice, batch, fact_now)`` — the slice's next state rows;
+* ``touched(batch)`` — where the scope keys come from: the batch's
+  keys, or the deltas' keys for hist/cm;
+* ``build(fact_now)`` — set for the twins that keep a fact mirror
+  (minmax, topk): their creating state is built from the mirror;
+* ``counted`` — agg only: the profile collect also yields the change
+  count reported to ``on_batch``.
+
+``stream_join_view_maintenance`` stays hand-written (see its
+docstring): two tables, a multi-kind feed and a fixed commit order do
+not fit one keyed state.
+
 The batch twins prove the math by property test
 (tests/test_incremental.py): maintained state is bit-equal to a
 recompute of the post-change data.
@@ -47,6 +72,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,25 +108,26 @@ CHANGE_STREAM_SCHEMA = StructType(
 )
 
 
-def _change_reader(spark: SparkSession, src) -> DataFrame:
-    """The change-row feed a maintenance twin consumes: a directory of
-    change CSVs (the original contract), or any STREAMING DataFrame
-    already in ``CHANGE_STREAM_SCHEMA`` shape — e.g. a snapshot table's
-    change feed adapted by ``cdfmaint.changes_as_ops`` — so the same
-    exactly-once maintenance core serves both transports."""
+def _change_reader(
+    spark: SparkSession, src, schema: StructType
+) -> DataFrame:
+    """The feed a maintenance twin consumes: a directory of CSVs in
+    ``schema`` (the original contract), or any STREAMING DataFrame
+    already in that shape — e.g. a snapshot table's change feed adapted
+    by ``cdfmaint.changes_as_ops`` — so the same exactly-once
+    maintenance core serves both transports."""
     if isinstance(src, DataFrame):
         return src
-    return (
-        spark.readStream.schema(CHANGE_STREAM_SCHEMA)
-        .option("header", True)
-        .csv(src)
-    )
+    return spark.readStream.schema(schema).option("header", True).csv(src)
 
+
+# cnt/sum_scaled are non-nullable so the marker row carries 0 there,
+# not NULL (see _stamped)
 _STATE_SCHEMA = StructType(
     [
         StructField("k", StringType(), True),
-        StructField("cnt", LongType(), True),
-        StructField("sum_scaled", LongType(), True),
+        StructField("cnt", LongType(), False),
+        StructField("sum_scaled", LongType(), False),
         StructField("_last_batch", LongType(), True),
         StructField("_app_id", StringType(), True),
     ]
@@ -187,11 +214,16 @@ def _stats_watermark(path: str, spark=None, report: dict | None = None):
         return int(best_b), best_a
     if spark is None:
         return None, None  # caller can't scan here: legacy behavior
-    dv_dead = snap.dv_dead or {}
-    if any(dv_dead.get(f) for f in statless):
+    if snap.dv_files:
         # tombstoned rows in a statless file: the raw scan below would
-        # read through them, so use the DV-aware full fallback instead
-        return None, None
+        # read through them, so use the DV-aware full fallback instead.
+        # dv_dead is keyed by file: URIs, and a poisoned (None) map
+        # cannot say which files are clean.
+        if snap.dv_dead is None:
+            return None, None
+        dead = {S._strip_file_scheme(f) for f, n in snap.dv_dead.items() if n}
+        if dead.intersection(statless):
+            return None, None
     from pyspark.sql.types import StructField, StructType
 
     mapping = S._mapping(snap)
@@ -355,8 +387,37 @@ def _null_guarded_key(df: DataFrame, col: str, what: str) -> DataFrame:
     )
 
 
+def _stamped(
+    spark: SparkSession, df: DataFrame, schema: StructType, batch_id, app
+) -> DataFrame:
+    """``df`` stamped with (batch_id, app) plus the watermark marker
+    row, derived from ``schema`` (data columns, then ``_last_batch``,
+    ``_app_id``): NULL key and NULL data, except 0 in the columns the
+    schema declares non-nullable."""
+    marker_row = tuple(
+        None if f.nullable else 0 for f in schema.fields[:-2]
+    ) + (batch_id, app)
+    # literal_frame, not createDataFrame: a parallelize-backed marker
+    # adds a Python-deserialization stage to EVERY state-commit write
+    # (~0.5 s/batch warm, measured r14) — the expression form folds
+    # into the plan for free
+    marker = U.literal_frame(spark, [marker_row], schema)
+    return (
+        df.withColumn("_last_batch", F.lit(batch_id).cast("long"))
+        .withColumn("_app_id", F.lit(app))
+        .unionByName(marker)
+        # AQE-sized output files: without this, a batch-sized commit
+        # lands one file per upstream shuffle partition (32+ tiny
+        # files/batch locally) and every later phase — footer stats,
+        # bloom build, re-reads — pays per file. Rebalance costs one
+        # O(batch) shuffle and makes file count follow DATA size at any
+        # scale (r12 profile: ~3.5 s/batch -> see TUNING.md).
+        .hint("rebalance")
+    )
+
+
 def _commit_with_marker(
-    spark, df, path, batch_id, app, marker_row, schema,
+    spark, df, path, batch_id, app, schema,
     scope_keys: DataFrame | None = None,
     key_cols: list[str] | None = None,
     scope_key_list: list | None = None,
@@ -371,20 +432,7 @@ def _commit_with_marker(
     state files are carried by reference, never rewritten or shuffled.
     Marker rows (NULL keys) are outside every scope by SQL equality,
     so the watermark chain survives any number of scoped commits."""
-    # literal_frame, not createDataFrame: a parallelize-backed marker
-    # adds a Python-deserialization stage to EVERY state-commit write
-    # (~0.5 s/batch warm, measured r14) — the expression form folds
-    # into the plan for free
-    marker = U.literal_frame(spark, [marker_row], schema)
-    out = (
-        df.withColumn("_last_batch", F.lit(batch_id).cast("long"))
-        .withColumn("_app_id", F.lit(app))
-        .unionByName(marker)
-        # file count follows data size (AQE), not shuffle partition
-        # count — state advances are batch-sized, so without this each
-        # commit lands ~32 near-empty files (see _advance_fact.stamped)
-        .hint("rebalance")
-    )
+    out = _stamped(spark, df, schema, batch_id, app)
     # every state/fact schema leads with its key (the invariant
     # _compact_state also relies on): stats+bloom it on the creating
     # commit so the per-batch tombstone scans below can SKIP state
@@ -442,6 +490,7 @@ def _scoped_slice(
     cols: list[str],
     touched: DataFrame,
     key_col: str,
+    rows: list | None = None,
 ):
     """(slice, key_list, collected_rows) for an O(batch) state advance
     — ONE driver action per micro-batch where the previous shape paid
@@ -450,6 +499,9 @@ def _scoped_slice(
     caller that put extra aggregates on the frame (per-key counts,
     removal flags) reuses the same action for them; ``key_list`` is
     None past the cap (caller falls back to the DataFrame scope).
+    Pass ``rows`` (key first, at most cap + 1 of them) when the keys
+    were already collected — ``_batch_key_profile`` — and the slice
+    then costs no action at all.
 
     Within ``_REPLACE_KEY_CAP`` the touched key set is collected once
     and reused twice: the state slice becomes a predicate-pruned
@@ -465,7 +517,8 @@ def _scoped_slice(
     null-guarded batch keys or from delta frames that group by the
     key), and the IN predicate could not match them anyway (SQL
     equality), so marker rows stay outside every scope."""
-    rows = touched.limit(_REPLACE_KEY_CAP + 1).collect()
+    if rows is None:
+        rows = touched.limit(_REPLACE_KEY_CAP + 1).collect()
     if len(rows) <= _REPLACE_KEY_CAP:
         keys = [r[0] for r in rows]
         sl = (
@@ -478,18 +531,18 @@ def _scoped_slice(
 
 
 def _batch_key_profile(batch_df: DataFrame):
-    """(keys, rem_keys) of one cached change batch in ONE driver
-    action: the batch's distinct key set and its removal-carrying
-    subset (op ∈ D,U) — the two lists the mirror+state advance used to
-    pay separate collects for. Both are None past ``_REPLACE_KEY_CAP``
-    (callers fall back to DataFrame scopes / internal collects). The
-    groupBy consumes every row's key, so the in-plan NULL-key guard
+    """(rows, rem_keys) of one cached, NULL-key-guarded change batch in
+    ONE driver action: ``rows`` are its distinct keys (at most
+    ``_REPLACE_KEY_CAP`` + 1 of them, for ``_scoped_slice``) and
+    ``rem_keys`` their removal-carrying subset (op ∈ D,U), None past
+    the cap (``_advance_fact`` then collects its own scope) — the two
+    lists the mirror+state advance used to pay separate collects for.
+    The groupBy consumes every row's key, so the in-plan NULL-key guard
     fires at this first action — before any commit work — which is the
     documented twin contract (NULL-keyed change rows raise, they never
     vanish)."""
-    guarded = _null_guarded_key(batch_df, "k", "stream maintenance")
     rows = (
-        guarded.groupBy("k")
+        batch_df.groupBy("k")
         .agg(
             F.max(F.col("op").isin("D", "U").cast("int")).alias("_rem")
         )
@@ -497,36 +550,8 @@ def _batch_key_profile(batch_df: DataFrame):
         .collect()
     )
     if len(rows) > _REPLACE_KEY_CAP:
-        return None, None
-    return (
-        [r["k"] for r in rows],
-        [r["k"] for r in rows if r["_rem"]],
-    )
-
-
-def _keyed_state_slice(
-    spark: SparkSession,
-    state: DataFrame,
-    state_path: str,
-    cols: list[str],
-    keys: list | None,
-    batch_df: DataFrame,
-) -> DataFrame:
-    """State slice for the batch's touched keys: a predicate-pruned
-    ``read_where`` scan when the collected key list fits the cap
-    (per-file key stats/blooms skip untouched state files at planning
-    time — O(batch) files read, no shuffle), else the semi-join over
-    the batch's distinct keys (O(state) scan, batch-sized build side,
-    the pre-r14 shape)."""
-    if keys is None:
-        return state.join(
-            batch_df.select("k").distinct(), ["k"], "left_semi"
-        )
-    return (
-        S.read_where(spark, state_path, [("k", "in", keys)])
-        .filter(F.col("k").isNotNull())
-        .select(*cols)
-    )
+        return rows, None
+    return rows, [r["k"] for r in rows if r["_rem"]]
 
 
 def _compact_state(spark: SparkSession, path: str) -> None:
@@ -578,6 +603,134 @@ def _compact_state(spark: SparkSession, path: str) -> None:
     )
 
 
+def _start(
+    reader: DataFrame, process_batch, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    writer = (
+        reader.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _batch_keys(batch: DataFrame) -> DataFrame:
+    return batch.select("k").distinct()
+
+
+@dataclass(frozen=True)
+class _TwinSpec:
+    """What one keyed-state twin adds to ``_keyed_twin`` (the fields
+    are described in the module docstring). Keys are always column
+    ``k``; ``touched`` returns a frame whose first column is the key."""
+
+    name: str
+    state_schema: StructType
+    advance: Callable[[DataFrame, DataFrame, DataFrame | None], DataFrame]
+    feed_schema: StructType = CHANGE_STREAM_SCHEMA
+    touched: Callable[[DataFrame], DataFrame] = _batch_keys
+    build: Callable[[DataFrame], DataFrame] | None = None
+    counted: bool = False
+
+
+def _keyed_twin(
+    spark: SparkSession,
+    spec: _TwinSpec,
+    src,
+    state_path: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    compact_every: int | None,
+    fact_path: str | None = None,
+    on_batch: Callable[[int, int], None] | None = None,
+) -> StreamingQuery:
+    """Start the exactly-once maintenance stream of one keyed-state
+    twin (the skeleton in the module docstring). ``fact_path`` is the
+    fact mirror of a twin with ``spec.build``; ``on_batch(batch_id,
+    n_changes)`` is called after each applied batch of a ``counted``
+    twin. Within ``_REPLACE_KEY_CAP`` touched keys the runner's own
+    Spark actions are one key collect per batch (every batch of a
+    mirror twin, where it also scopes the mirror; the scoped path of
+    the others, where agg also reads its change count from it) and
+    agg's batch count on the creating path; everything else is the
+    twin's commits."""
+    app = _app_id(checkpoint_dir)
+    cols = [
+        f.name for f in spec.state_schema.fields if f.name not in _WM_STATS
+    ]
+
+    def advance_state(batch: DataFrame, batch_id: int, profile) -> None:
+        state, last, stored_app = _table_state(
+            spark, state_path, spec.state_schema, cols
+        )
+        skip, rebuild = _guard(batch_id, last, stored_app, app)
+        if skip:
+            return
+        fact_now = (
+            read_maintained_fact(spark, fact_path) if fact_path else None
+        )
+        n_changes = None
+        if last is None or rebuild:
+            # table creation / derivation rebuild: full state, once
+            touched = keys = None
+            slice_ = state.limit(0)
+            if spec.counted:
+                n_changes = batch.count()
+        else:
+            # O(batch): only the touched keys' slice is replaced; every
+            # other key's files carry by reference
+            touched = spec.touched(batch)
+            slice_, keys, rows = _scoped_slice(
+                spark, state, state_path, cols, touched, "k", rows=profile
+            )
+            if spec.counted:
+                n_changes = (
+                    sum(r["_n"] for r in rows)
+                    if keys is not None
+                    else batch.count()
+                )
+        if touched is None and spec.build is not None:
+            nxt = spec.build(fact_now)
+        elif n_changes == 0:
+            nxt = slice_  # empty batch: nothing to advance
+        else:
+            nxt = spec.advance(slice_, batch, fact_now)
+        _commit_with_marker(
+            spark, nxt, state_path, batch_id, app, spec.state_schema,
+            scope_keys=touched, key_cols=["k"], scope_key_list=keys,
+        )
+        if compact_every and (batch_id + 1) % compact_every == 0:
+            if fact_path is not None:
+                _compact_state(spark, fact_path)
+            _compact_state(spark, state_path)
+        if on_batch is not None:
+            on_batch(batch_id, n_changes)
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch = _null_guarded_key(batch_df, "k", spec.name)
+        if fact_path is None:
+            advance_state(batch, batch_id, None)
+            return
+        # fact first, then state: a crash between the two replays into
+        # "fact skips, state applies" (see the MIN/MAX section below)
+        batch = batch.cache()
+        try:
+            rows, rem_keys = _batch_key_profile(batch)
+            _advance_fact(
+                spark, batch, fact_path, batch_id, app, rem_keys=rem_keys
+            )
+            advance_state(batch, batch_id, rows)
+        finally:
+            batch.unpersist()
+
+    return _start(
+        _change_reader(spark, src, spec.feed_schema),
+        process_batch, checkpoint_dir, available_now,
+    )
+
+
 def read_maintained_agg(spark: SparkSession, table_path: str) -> DataFrame:
     """The queryable view of the maintained aggregate (marker row and
     bookkeeping columns stripped)."""
@@ -607,70 +760,21 @@ def stream_agg_maintenance(
     ``on_batch(batch_id, n_changes)`` is the observability hook (called
     only for applied, non-replayed batches).
     """
-    app = _app_id(checkpoint_dir)
-    reader = _change_reader(spark, raw_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _null_guarded_key(batch_df, "k", "stream_agg_maintenance")
-        state, last, stored_app = _table_state(
-            spark, table_path, _STATE_SCHEMA, ["k", "cnt", "sum_scaled"]
-        )
-        skip, rebuild = _guard(batch_id, last, stored_app, app)
-        if skip:
-            return
-        if last is None or rebuild:
-            # table creation / derivation rebuild: full state, once
-            n_changes = batch_df.count()
-            full = state.limit(0)
-            if n_changes:
-                full = INC.apply_agg_deltas(
-                    full, INC.agg_deltas(batch_df, ["k"]), ["k"]
-                )
-            _commit_with_marker(
-                spark, full, table_path, batch_id, app,
-                (None, 0, 0, batch_id, app), _STATE_SCHEMA,
-            )
-        else:
-            # O(batch): only the batch's groups change — replace their
-            # slice, carry every other group's files by reference. ONE
-            # profile action yields the touched keys (slice pruning +
-            # commit scope, see _scoped_slice) AND the change count
-            # that used to be its own count() job.
-            touched = batch_df.groupBy("k").agg(
-                F.count(F.lit(1)).alias("_n")
-            )
-            slice_, key_list, rows = _scoped_slice(
-                spark, state, table_path,
-                ["k", "cnt", "sum_scaled"], touched, "k",
-            )
-            n_changes = (
-                sum(r["_n"] for r in rows)
-                if key_list is not None
-                else batch_df.count()
-            )
-            if n_changes:
-                slice_ = INC.apply_agg_deltas(
-                    slice_, INC.agg_deltas(batch_df, ["k"]), ["k"]
-                )
-            _commit_with_marker(
-                spark, slice_, table_path, batch_id, app,
-                (None, 0, 0, batch_id, app), _STATE_SCHEMA,
-                scope_keys=touched, key_cols=["k"],
-                scope_key_list=key_list,
-            )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            _compact_state(spark, table_path)
-        if on_batch is not None:
-            on_batch(batch_id, n_changes)
-
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    spec = _TwinSpec(
+        "stream_agg_maintenance",
+        _STATE_SCHEMA,
+        advance=lambda sl, batch, _: INC.apply_agg_deltas(
+            sl, INC.agg_deltas(batch, ["k"]), ["k"]
+        ),
+        touched=lambda batch: batch.groupBy("k").agg(
+            F.count(F.lit(1)).alias("_n")
+        ),
+        counted=True,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _keyed_twin(
+        spark, spec, raw_dir, table_path, checkpoint_dir, available_now,
+        compact_every, on_batch=on_batch,
+    )
 
 
 MIXED_CHANGE_SCHEMA = StructType(
@@ -760,13 +864,15 @@ def stream_join_view_maintenance(
     view's new facts always see the batch's own dimension updates; a
     lost/relocated checkpoint (new app id) rebuilds both tables from
     the re-delivered input instead of silently skipping it.
+
+    Not a ``_keyed_twin`` spec, deliberately: it maintains TWO tables
+    keyed differently (``dim_key``, ``fact_key``), consumes a
+    multi-kind ``DU/FI/FD`` feed whose kinds address different tables,
+    and must commit the dimension before the view — the runner's one
+    keyed state per batch fits none of the three.
     """
     app = _app_id(checkpoint_dir)
-    reader = (
-        spark.readStream.schema(MIXED_CHANGE_SCHEMA)
-        .option("header", True)
-        .csv(raw_dir)
-    )
+    reader = _change_reader(spark, raw_dir, MIXED_CHANGE_SCHEMA)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -842,8 +948,7 @@ def stream_join_view_maintenance(
                     ),
                 )
                 _commit_with_marker(
-                    spark, dim_next, dim_path, batch_id, app,
-                    (None, None, batch_id, app), _DIM_SCHEMA,
+                    spark, dim_next, dim_path, batch_id, app, _DIM_SCHEMA
                 )
             else:
                 # O(batch): only the DU keys' rows change
@@ -861,8 +966,7 @@ def stream_join_view_maintenance(
                     ),
                 )
                 _commit_with_marker(
-                    spark, dim_slice, dim_path, batch_id, app,
-                    (None, None, batch_id, app), _DIM_SCHEMA,
+                    spark, dim_slice, dim_path, batch_id, app, _DIM_SCHEMA,
                     scope_keys=du_keys, key_cols=["dim_key"],
                     scope_key_list=dk_list,
                 )
@@ -895,9 +999,7 @@ def stream_join_view_maintenance(
                     *view_cols
                 )
                 _commit_with_marker(
-                    spark, out, view_path, batch_id, app,
-                    (None, None, None, None, None, batch_id, app),
-                    _VIEW_SCHEMA,
+                    spark, out, view_path, batch_id, app, _VIEW_SCHEMA
                 )
             else:
                 # O(batch) on the view's PK (fact_key): affected rows
@@ -936,9 +1038,7 @@ def stream_join_view_maintenance(
                     view_slice, **mjv,
                 ).select(*view_cols)
                 _commit_with_marker(
-                    spark, out, view_path, batch_id, app,
-                    (None, None, None, None, None, batch_id, app),
-                    _VIEW_SCHEMA,
+                    spark, out, view_path, batch_id, app, _VIEW_SCHEMA,
                     scope_keys=affected, key_cols=["fact_key"],
                     scope_key_list=aff_keys,
                 )
@@ -946,14 +1046,7 @@ def stream_join_view_maintenance(
             _compact_state(spark, dim_path)
             _compact_state(spark, view_path)
 
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(reader, process_batch, checkpoint_dir, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -1131,22 +1224,7 @@ def _advance_fact(
         ).select("k", "val")
 
     def stamped(df: DataFrame) -> DataFrame:
-        marker = U.literal_frame(
-            spark, [(None, None, batch_id, app)], _FACT_SCHEMA
-        )
-        return (
-            df.withColumn("_last_batch", F.lit(batch_id).cast("long"))
-            .withColumn("_app_id", F.lit(app))
-            .unionByName(marker)
-            # AQE-sized output files: without this, a batch-sized
-            # commit lands one file per upstream shuffle partition
-            # (32+ tiny files/batch locally) and every later phase —
-            # footer stats, bloom build, mirror re-reads — pays per
-            # file. Rebalance costs one O(batch) shuffle and makes
-            # file count follow DATA size at any scale (r12 profile:
-            # ~3.5 s/batch -> see TUNING.md).
-            .hint("rebalance")
-        )
+        return _stamped(spark, df, _FACT_SCHEMA, batch_id, app)
 
     if last is None or rebuild:
         # fresh table / new derivation: the batch IS the table
@@ -1233,72 +1311,21 @@ def stream_minmax_maintenance(
     ``compact_every=N`` to fold the accumulated small files and
     deletion vectors every N applied batches (amortized layout
     maintenance — correctness never depends on it)."""
-    app = _app_id(checkpoint_dir)
-    reader = _change_reader(spark, raw_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.cache()
-        try:
-            keys, rem_keys = _batch_key_profile(batch_df)
-            _advance_fact(
-                spark, batch_df, fact_path, batch_id, app,
-                rem_keys=rem_keys,
-            )
-            state, last, aid = _table_state(
-                spark, state_path, _MINMAX_SCHEMA,
-                ["k", "min_scaled", "max_scaled"],
-            )
-            skip, rebuild = _guard(batch_id, last, aid, app)
-            if skip:
-                return
-            fact_now = read_maintained_fact(spark, fact_path)
-            fx = F.floor(F.col("val") * scale + F.lit(0.5)).cast("long")
-            if last is None or rebuild:
-                nxt = (
-                    fact_now.groupBy("k")
-                    .agg(
-                        F.min(fx).alias("min_scaled"),
-                        F.max(fx).alias("max_scaled"),
-                    )
-                    .filter(F.col("min_scaled").isNotNull())
-                )
-                _commit_with_marker(
-                    spark, nxt, state_path, batch_id, app,
-                    (None, None, None, batch_id, app), _MINMAX_SCHEMA,
-                )
-            else:
-                # O(batch) state commit: only the batch's groups can
-                # change; maintain their slice (a stats/bloom-pruned
-                # read_where scan when the key set fits the cap, the
-                # semi-join past it) and replace it scoped
-                slice_ = _keyed_state_slice(
-                    spark, state, state_path,
-                    ["k", "min_scaled", "max_scaled"], keys, batch_df,
-                )
-                nxt = INC.maintain_min_max(
-                    slice_, batch_df, fact_now, ["k"], "val",
-                    scale=scale,
-                )
-                _commit_with_marker(
-                    spark, nxt, state_path, batch_id, app,
-                    (None, None, None, batch_id, app), _MINMAX_SCHEMA,
-                    scope_keys=batch_df.select("k").distinct(),
-                    key_cols=["k"], scope_key_list=keys,
-                )
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                _compact_state(spark, fact_path)
-                _compact_state(spark, state_path)
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    fx = F.floor(F.col("val") * scale + F.lit(0.5)).cast("long")
+    spec = _TwinSpec(
+        "stream_minmax_maintenance",
+        _MINMAX_SCHEMA,
+        advance=lambda sl, batch, fact_now: INC.maintain_min_max(
+            sl, batch, fact_now, ["k"], "val", scale=scale
+        ),
+        build=lambda fact_now: fact_now.groupBy("k")
+        .agg(F.min(fx).alias("min_scaled"), F.max(fx).alias("max_scaled"))
+        .filter(F.col("min_scaled").isNotNull()),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _keyed_twin(
+        spark, spec, raw_dir, state_path, checkpoint_dir, available_now,
+        compact_every, fact_path=fact_path,
+    )
 
 
 def stream_topk_maintenance(
@@ -1320,63 +1347,29 @@ def stream_topk_maintenance(
     committed fact mirror, via a key semi-join. Mirror commits are
     O(batch); ``compact_every`` folds small files/DVs periodically
     (see ``stream_minmax_maintenance``)."""
-    app = _app_id(checkpoint_dir)
-    reader = _change_reader(spark, raw_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.cache()
-        try:
-            keys, rem_keys = _batch_key_profile(batch_df)
-            _advance_fact(
-                spark, batch_df, fact_path, batch_id, app,
-                rem_keys=rem_keys,
-            )
-            state, last, aid = _table_state(
-                spark, state_path, _TOPK_SCHEMA,
-                ["k", "val_scaled", "incomplete"],
-            )
-            skip, rebuild = _guard(batch_id, last, aid, app)
-            if skip:
-                return
-            fact_now = read_maintained_fact(spark, fact_path)
-            if last is None or rebuild:
-                nxt = INC.build_topk_state(
-                    fact_now, ["k"], "val", k, buffer, scale
-                )
-                _commit_with_marker(
-                    spark, nxt, state_path, batch_id, app,
-                    (None, None, None, batch_id, app), _TOPK_SCHEMA,
-                )
-            else:
-                slice_ = _keyed_state_slice(
-                    spark, state, state_path,
-                    ["k", "val_scaled", "incomplete"], keys, batch_df,
-                )
-                nxt = INC.maintain_topk(
-                    slice_, batch_df, fact_now, ["k"], "val",
-                    k, buffer, scale=scale,
-                )
-                _commit_with_marker(
-                    spark, nxt, state_path, batch_id, app,
-                    (None, None, None, batch_id, app), _TOPK_SCHEMA,
-                    scope_keys=batch_df.select("k").distinct(),
-                    key_cols=["k"], scope_key_list=keys,
-                )
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                _compact_state(spark, fact_path)
-                _compact_state(spark, state_path)
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    spec = _TwinSpec(
+        "stream_topk_maintenance",
+        _TOPK_SCHEMA,
+        advance=lambda sl, batch, fact_now: INC.maintain_topk(
+            sl, batch, fact_now, ["k"], "val", k, buffer, scale=scale
+        ),
+        build=lambda fact_now: INC.build_topk_state(
+            fact_now, ["k"], "val", k, buffer, scale
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _keyed_twin(
+        spark, spec, raw_dir, state_path, checkpoint_dir, available_now,
+        compact_every, fact_path=fact_path,
+    )
 
+
+# insert-only (k, v) feed of the KMV and HLL twins
+_KV_FEED_SCHEMA = StructType(
+    [
+        StructField("k", StringType(), False),
+        StructField("v", StringType(), False),
+    ]
+)
 
 _KMV_STATE_SCHEMA = StructType(
     [
@@ -1424,68 +1417,22 @@ def stream_kmv_maintenance(
     bare ``(k, v)`` rows — there is no op column to misread as delete
     support. Replays skip via the (app id, batch id) watermark; a lost
     checkpoint rebuilds from the re-delivered feed at batch 0."""
-    from pyspark.sql.types import StructType as _ST
-
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
         sketches as SK,
     )
 
-    app = _app_id(checkpoint_dir)
-    schema = _ST(
-        [
-            StructField("k", StringType(), False),
-            StructField("v", StringType(), False),
-        ]
+    spec = _TwinSpec(
+        "stream_kmv_maintenance",
+        _KMV_STATE_SCHEMA,
+        advance=lambda sl, batch, _: SK.kmv_merge(
+            sl, SK.kmv_sketch(batch, ["k"], "v", k=kmv_k), ["k"], k=kmv_k
+        ),
+        feed_schema=_KV_FEED_SCHEMA,
     )
-    reader = (
-        raw_dir
-        if isinstance(raw_dir, DataFrame)
-        else spark.readStream.schema(schema)
-        .option("header", True)
-        .csv(raw_dir)
+    return _keyed_twin(
+        spark, spec, raw_dir, state_path, checkpoint_dir, available_now,
+        compact_every,
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _null_guarded_key(batch_df, "k", "stream_kmv_maintenance")
-        state, last, aid = _table_state(
-            spark, state_path, _KMV_STATE_SCHEMA, ["k", "h"]
-        )
-        skip, rebuild = _guard(batch_id, last, aid, app)
-        if skip:
-            return
-        batch_sketch = SK.kmv_sketch(batch_df, ["k"], "v", k=kmv_k)
-        if last is None or rebuild:
-            nxt = SK.kmv_merge(
-                state.limit(0), batch_sketch, ["k"], k=kmv_k
-            )
-            _commit_with_marker(
-                spark, nxt, state_path, batch_id, app,
-                (None, None, batch_id, app), _KMV_STATE_SCHEMA,
-            )
-        else:
-            # O(batch): only the batch's groups' sketches move
-            touched = batch_df.select("k").distinct()
-            slice_, key_list, _ = _scoped_slice(
-                spark, state, state_path, ["k", "h"], touched, "k",
-            )
-            nxt = SK.kmv_merge(slice_, batch_sketch, ["k"], k=kmv_k)
-            _commit_with_marker(
-                spark, nxt, state_path, batch_id, app,
-                (None, None, batch_id, app), _KMV_STATE_SCHEMA,
-                scope_keys=touched, key_cols=["k"],
-                scope_key_list=key_list,
-            )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            _compact_state(spark, state_path)
-
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 _HIST_STATE_SCHEMA = StructType(
@@ -1541,53 +1488,21 @@ def stream_hist_maintenance(
         sketches as SK,
     )
 
-    app = _app_id(checkpoint_dir)
-    reader = _change_reader(spark, raw_dir)
+    def deltas(batch: DataFrame) -> DataFrame:
+        return SK.hist_deltas(batch, ["k"], bin_width, scale=scale)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _null_guarded_key(batch_df, "k", "stream_hist_maintenance")
-        state, last, aid = _table_state(
-            spark, state_path, _HIST_STATE_SCHEMA, ["k", "bin", "cnt"]
-        )
-        skip, rebuild = _guard(batch_id, last, aid, app)
-        if skip:
-            return
-        deltas = SK.hist_deltas(
-            batch_df, ["k"], bin_width, scale=scale
-        )
-        if last is None or rebuild:
-            nxt = SK.hist_merge(state.limit(0), deltas, ["k"])
-            _commit_with_marker(
-                spark, nxt, state_path, batch_id, app,
-                (None, None, None, batch_id, app), _HIST_STATE_SCHEMA,
-            )
-        else:
-            # O(batch): replace only the groups with bin deltas (a
-            # group whose batch rows all carried NULL images produces
-            # no delta and stays out of scope)
-            touched = deltas.select("k").distinct()
-            slice_, key_list, _ = _scoped_slice(
-                spark, state, state_path,
-                ["k", "bin", "cnt"], touched, "k",
-            )
-            nxt = SK.hist_merge(slice_, deltas, ["k"])
-            _commit_with_marker(
-                spark, nxt, state_path, batch_id, app,
-                (None, None, None, batch_id, app), _HIST_STATE_SCHEMA,
-                scope_keys=touched, key_cols=["k"],
-                scope_key_list=key_list,
-            )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            _compact_state(spark, state_path)
-
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    # a group whose batch rows all carried NULL images produces no delta
+    # and stays out of scope
+    spec = _TwinSpec(
+        "stream_hist_maintenance",
+        _HIST_STATE_SCHEMA,
+        advance=lambda sl, batch, _: SK.hist_merge(sl, deltas(batch), ["k"]),
+        touched=lambda batch: _batch_keys(deltas(batch)),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _keyed_twin(
+        spark, spec, raw_dir, state_path, checkpoint_dir, available_now,
+        compact_every,
+    )
 
 
 _CM_STATE_SCHEMA = StructType(
@@ -1649,49 +1564,19 @@ def stream_cm_maintenance(
         sketches as SK,
     )
 
-    app = _app_id(checkpoint_dir)
-    reader = _change_reader(spark, raw_dir)
+    def deltas(batch: DataFrame) -> DataFrame:
+        return SK.cm_deltas(batch, ["k"], depth=depth, width=width)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _null_guarded_key(batch_df, "k", "stream_cm_maintenance")
-        state, last, aid = _table_state(
-            spark, state_path, _CM_STATE_SCHEMA, ["k", "row", "bucket", "cnt"]
-        )
-        skip, rebuild = _guard(batch_id, last, aid, app)
-        if skip:
-            return
-        deltas = SK.cm_deltas(batch_df, ["k"], depth=depth, width=width)
-        if last is None or rebuild:
-            nxt = SK.cm_merge(state.limit(0), deltas, ["k"])
-            _commit_with_marker(
-                spark, nxt, state_path, batch_id, app,
-                (None, None, None, None, batch_id, app), _CM_STATE_SCHEMA,
-            )
-        else:
-            # O(batch): replace only the groups with counter deltas
-            touched = deltas.select("k").distinct()
-            slice_, key_list, _ = _scoped_slice(
-                spark, state, state_path,
-                ["k", "row", "bucket", "cnt"], touched, "k",
-            )
-            nxt = SK.cm_merge(slice_, deltas, ["k"])
-            _commit_with_marker(
-                spark, nxt, state_path, batch_id, app,
-                (None, None, None, None, batch_id, app), _CM_STATE_SCHEMA,
-                scope_keys=touched, key_cols=["k"],
-                scope_key_list=key_list,
-            )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            _compact_state(spark, state_path)
-
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    spec = _TwinSpec(
+        "stream_cm_maintenance",
+        _CM_STATE_SCHEMA,
+        advance=lambda sl, batch, _: SK.cm_merge(sl, deltas(batch), ["k"]),
+        touched=lambda batch: _batch_keys(deltas(batch)),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _keyed_twin(
+        spark, spec, raw_dir, state_path, checkpoint_dir, available_now,
+        compact_every,
+    )
 
 
 _HLL_STATE_SCHEMA = StructType(
@@ -1743,68 +1628,31 @@ def stream_hll_maintenance(
     guard still skips replays — it keeps the commit count O(new
     batches), not correctness). Insert-only like KMV: a register
     cannot unsee a value, so the feed schema is bare ``(k, v)``."""
-    from pyspark.sql.types import StructType as _ST
-
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
         sketches as SK,
     )
 
-    app = _app_id(checkpoint_dir)
-    schema = _ST(
-        [
-            StructField("k", StringType(), False),
-            StructField("v", StringType(), False),
-        ]
+    spec = _TwinSpec(
+        "stream_hll_maintenance",
+        _HLL_STATE_SCHEMA,
+        advance=lambda sl, batch, _: SK.hll_merge(
+            sl, SK.hll_sketch(batch, ["k"], "v", p=p), ["k"]
+        ),
+        feed_schema=_KV_FEED_SCHEMA,
     )
-    reader = (
-        raw_dir
-        if isinstance(raw_dir, DataFrame)
-        else spark.readStream.schema(schema)
-        .option("header", True)
-        .csv(raw_dir)
+    return _keyed_twin(
+        spark, spec, raw_dir, state_path, checkpoint_dir, available_now,
+        compact_every,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _null_guarded_key(batch_df, "k", "stream_hll_maintenance")
-        state, last, aid = _table_state(
-            spark, state_path, _HLL_STATE_SCHEMA, ["k", "reg", "m"]
-        )
-        skip, rebuild = _guard(batch_id, last, aid, app)
-        if skip:
-            return
-        batch_sketch = SK.hll_sketch(batch_df, ["k"], "v", p=p)
-        if last is None or rebuild:
-            nxt = SK.hll_merge(state.limit(0), batch_sketch, ["k"])
-            _commit_with_marker(
-                spark, nxt, state_path, batch_id, app,
-                (None, None, None, batch_id, app), _HLL_STATE_SCHEMA,
-            )
-        else:
-            # O(batch): only the batch's groups' registers move
-            touched = batch_df.select("k").distinct()
-            slice_, key_list, _ = _scoped_slice(
-                spark, state, state_path,
-                ["k", "reg", "m"], touched, "k",
-            )
-            nxt = SK.hll_merge(slice_, batch_sketch, ["k"])
-            _commit_with_marker(
-                spark, nxt, state_path, batch_id, app,
-                (None, None, None, batch_id, app), _HLL_STATE_SCHEMA,
-                scope_keys=touched, key_cols=["k"],
-                scope_key_list=key_list,
-            )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            _compact_state(spark, state_path)
 
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
+_EWMA_FEED_SCHEMA = StructType(
+    [
+        StructField("k", StringType(), False),
+        StructField("t", LongType(), False),
+        StructField("x", LongType(), False),
+    ]
+)
 
 _EWMA_STATE_SCHEMA = StructType(
     [
@@ -1854,29 +1702,11 @@ def stream_ewma_maintenance(
     driver ``ValueError`` — callers must match on the message text,
     never the exception type (the tests assert with
     ``pytest.raises(Exception, match=...)``)."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.types import StructType as _ST
-
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators.timeseries import (
         _half,
     )
 
-    app = _app_id(checkpoint_dir)
-    schema = _ST(
-        [
-            StructField("k", StringType(), False),
-            StructField("t", LongType(), False),
-            StructField("x", LongType(), False),
-        ]
-    )
-    reader = (
-        raw_dir
-        if isinstance(raw_dir, DataFrame)
-        else spark.readStream.schema(schema)
-        .option("header", True)
-        .csv(raw_dir)
-    )
-    out_schema = _ST(
+    out_schema = StructType(
         [
             StructField("k", StringType(), True),
             StructField("t", LongType(), True),
@@ -1884,89 +1714,67 @@ def stream_ewma_maintenance(
         ]
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state, last, aid = _table_state(
-            spark, state_path, _EWMA_STATE_SCHEMA, ["k", "t", "ewma"]
-        )
-        skip, rebuild = _guard(batch_id, last, aid, app)
-        if skip:
-            return
-        if last is None or rebuild:
-            touched, key_list = None, None
-            seed_touched = state.limit(0)
-        else:
-            touched = batch_df.select("k").distinct()
-            seed_touched, key_list, _ = _scoped_slice(
-                spark, state, state_path, ["k", "t", "ewma"],
-                touched, "k",
+    def walk(pdf):
+        # feed-contract guards live INSIDE the walk (r12): each
+        # used to be its own driver action (take(1) per guard per
+        # micro-batch); here they ride the state-commit job for
+        # free and still fail the batch BEFORE the manifest
+        # publish, so a bad batch never corrupts state.
+        batch = pdf[pdf["_seed"] == 0]
+        if batch[["k", "t", "v"]].isna().any().any():
+            raise ValueError(
+                "stream_ewma_maintenance: NULL key/t/x in change "
+                "row — the streaming state tables reserve NULL "
+                "keys for the watermark marker; NULL-keyed groups "
+                "are supported by the batch operators only"
             )
-        union = batch_df.select(
+        if batch["t"].duplicated().any():
+            t_dup = int(batch["t"][batch["t"].duplicated()].iloc[0])
+            raise ValueError(
+                "stream_ewma_maintenance: duplicate (k, t) in "
+                f"batch (k={batch['k'].iloc[0]!r}, t={t_dup}) — "
+                "the recursion is order-ambiguous"
+            )
+        seed_rows = pdf[pdf["_seed"] == 1]
+        if len(seed_rows) and len(batch):
+            hw = int(seed_rows["t"].max())
+            if int(batch["t"].min()) <= hw:
+                raise ValueError(
+                    "stream_ewma_maintenance: out-of-order "
+                    f"observation (k={batch['k'].iloc[0]!r}, "
+                    f"t={int(batch['t'].min())}) at or before the "
+                    f"key's high-water t={hw} — late data needs "
+                    "the batch operator's full rescan"
+                )
+        pdf = pdf.sort_values(["_seed", "t"], ascending=[False, True])
+        prev = None
+        for is_seed, v in zip(pdf["_seed"], pdf["v"]):
+            v = int(v)
+            if prev is None:
+                prev = v  # seed ewma, or first-ever observation
+            elif int(is_seed) == 0:
+                prev = _half(v + prev)
+        return pdf.iloc[-1:][["k"]].assign(
+            t=int(pdf["t"].max()), ewma=prev
+        )
+
+    def advance(seed: DataFrame, batch: DataFrame, _) -> DataFrame:
+        union = batch.select(
             "k", "t", F.col("x").alias("v"), F.lit(0).alias("_seed")
         ).unionByName(
-            seed_touched.select(
+            seed.select(
                 "k", "t", F.col("ewma").alias("v"), F.lit(1).alias("_seed")
             )
         )
+        return union.groupBy("k").applyInPandas(walk, out_schema)
 
-        def walk(pdf):
-            # feed-contract guards live INSIDE the walk (r12): each
-            # used to be its own driver action (take(1) per guard per
-            # micro-batch); here they ride the state-commit job for
-            # free and still fail the batch BEFORE the manifest
-            # publish, so a bad batch never corrupts state.
-            batch = pdf[pdf["_seed"] == 0]
-            if batch[["k", "t", "v"]].isna().any().any():
-                raise ValueError(
-                    "stream_ewma_maintenance: NULL key/t/x in change "
-                    "row — the streaming state tables reserve NULL "
-                    "keys for the watermark marker; NULL-keyed groups "
-                    "are supported by the batch operators only"
-                )
-            if batch["t"].duplicated().any():
-                t_dup = int(batch["t"][batch["t"].duplicated()].iloc[0])
-                raise ValueError(
-                    "stream_ewma_maintenance: duplicate (k, t) in "
-                    f"batch (k={batch['k'].iloc[0]!r}, t={t_dup}) — "
-                    "the recursion is order-ambiguous"
-                )
-            seed_rows = pdf[pdf["_seed"] == 1]
-            if len(seed_rows) and len(batch):
-                hw = int(seed_rows["t"].max())
-                if int(batch["t"].min()) <= hw:
-                    raise ValueError(
-                        "stream_ewma_maintenance: out-of-order "
-                        f"observation (k={batch['k'].iloc[0]!r}, "
-                        f"t={int(batch['t'].min())}) at or before the "
-                        f"key's high-water t={hw} — late data needs "
-                        "the batch operator's full rescan"
-                    )
-            pdf = pdf.sort_values(["_seed", "t"], ascending=[False, True])
-            prev = None
-            for is_seed, v in zip(pdf["_seed"], pdf["v"]):
-                v = int(v)
-                if prev is None:
-                    prev = v  # seed ewma, or first-ever observation
-                elif int(is_seed) == 0:
-                    prev = _half(v + prev)
-            return pdf.iloc[-1:][["k"]].assign(
-                t=int(pdf["t"].max()), ewma=prev
-            )
-
-        nxt = union.groupBy("k").applyInPandas(walk, out_schema)
-        _commit_with_marker(
-            spark, nxt, state_path, batch_id, app,
-            (None, None, None, batch_id, app), _EWMA_STATE_SCHEMA,
-            scope_keys=touched, key_cols=["k"],
-            scope_key_list=key_list,
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            _compact_state(spark, state_path)
-
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    spec = _TwinSpec(
+        "stream_ewma_maintenance",
+        _EWMA_STATE_SCHEMA,
+        advance=advance,
+        feed_schema=_EWMA_FEED_SCHEMA,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _keyed_twin(
+        spark, spec, raw_dir, state_path, checkpoint_dir, available_now,
+        compact_every,
+    )

@@ -198,27 +198,6 @@ def table_hll_maintenance(
     )
 
 
-def table_kmv_maintenance(
-    spark: SparkSession,
-    table_path: str,
-    state_path: str,
-    checkpoint_dir: str,
-    key_col: str,
-    val_col: str,
-    **kw,
-) -> StreamingQuery:
-    """Per-key KMV distinct sketch of ``val_col`` from ``table_path``'s
-    APPENDS (same refuse-on-change contract as the HLL twin); read with
-    ``aggmaint.read_maintained_kmv_estimate``."""
-    return AM.stream_kmv_maintenance(
-        spark,
-        table_rows_as_kv(spark, table_path, key_col, val_col),
-        state_path,
-        checkpoint_dir,
-        **kw,
-    )
-
-
 _CDC_MARK = "@cdcbatch="
 
 
@@ -370,29 +349,3 @@ def apply_changes_into(
     w = w.trigger(**(trigger or {"availableNow": True}))
     return w.start()
 
-
-def table_cm_maintenance(
-    spark: SparkSession,
-    table_path: str,
-    state_path: str,
-    checkpoint_dir: str,
-    key_col: str,
-    val_col: str,
-    starting_version: int | str | None = "earliest",
-    **kw,
-) -> StreamingQuery:
-    """Count-Min frequency sketch of ``val_col`` items per ``key_col``
-    group, kept current from ``table_path``'s commits. The sketch is
-    delete-capable (turnstile counters), so DV deletes and rewrites
-    maintain exactly; read with
-    ``aggmaint.read_maintained_cm_estimate``."""
-    return AM.stream_cm_maintenance(
-        spark,
-        changes_as_ops(
-            spark, table_path, key_col, val_col,
-            starting_version=starting_version,
-        ),
-        state_path,
-        checkpoint_dir,
-        **kw,
-    )

@@ -141,8 +141,7 @@ def main() -> None:
                     .filter(F.col("min_scaled").isNotNull())
                 )
                 AM._commit_with_marker(
-                    spark, nxt, sp, bi, app,
-                    (None, None, None, bi, app), AM._MINMAX_SCHEMA,
+                    spark, nxt, sp, bi, app, AM._MINMAX_SCHEMA,
                 )
             else:
                 from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
@@ -155,8 +154,7 @@ def main() -> None:
                     bdf, fact_now, ["k"], "val", scale=100,
                 )
                 AM._commit_with_marker(
-                    spark, nxt, sp, bi, app,
-                    (None, None, None, bi, app), AM._MINMAX_SCHEMA,
+                    spark, nxt, sp, bi, app, AM._MINMAX_SCHEMA,
                     scope_keys=touched, key_cols=["k"],
                 )
             t3 = time.time()

@@ -49,7 +49,9 @@ def spark(tmp_path_factory):
             # suite wall on the CDF+incremental files; the driver's
             # verify has a finite budget and the suite must fit it).
             # Production/bench sessions keep codegen on — this is the
-            # TEST session only, and no test asserts codegen nodes.
+            # TEST session only; a test that asserts codegen nodes turns
+            # it on for its own duration
+            # (test_pricing_summary_whole_stage_codegen).
             "spark.sql.codegen.wholeStage": "false",
         },
     )

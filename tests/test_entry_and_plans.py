@@ -45,9 +45,17 @@ def test_fk_semi_is_broadcast_not_shuffle(spark, sf_dir):
 
 
 def test_pricing_summary_whole_stage_codegen(spark, sf_dir):
-    df = catalog.q_pricing_summary(spark, sf_dir)
-    assert explain.codegen_stage_count(df) >= 1
-    explain.assert_no_python_row_udf(df)
+    # the test session turns whole-stage codegen off (conftest.py);
+    # production sessions keep it on, and this is the plan they run
+    key = "spark.sql.codegen.wholeStage"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df = catalog.q_pricing_summary(spark, sf_dir)
+        assert explain.codegen_stage_count(df) >= 1
+        explain.assert_no_python_row_udf(df)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_merge_sim_no_python_udf(spark, sf_dir):

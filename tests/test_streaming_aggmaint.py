@@ -5,9 +5,18 @@ late-arriving files exactly once."""
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
+import pytest
+
+from _lakehouse_architecture_for_e_commerce_transactions_spark.sources import (
+    snapshots as S,
+)
+from _lakehouse_architecture_for_e_commerce_transactions_spark.streaming import (
+    aggmaint as AM,
+)
 from _lakehouse_architecture_for_e_commerce_transactions_spark.streaming.aggmaint import (
     read_maintained_agg,
     stream_agg_maintenance,
@@ -222,9 +231,7 @@ def test_guard_skip_branch_via_prestamped_table(spark, tmp_path):
     state = spark.createDataFrame(
         [("z", 9, 900)], "k string, cnt long, sum_scaled long"
     )
-    _commit_with_marker(
-        spark, state, table, 5, app, (None, 0, 0, 5, app), _STATE_SCHEMA
-    )
+    _commit_with_marker(spark, state, table, 5, app, _STATE_SCHEMA)
     applied = []
     q = stream_agg_maintenance(
         spark, raw, table, ckpt,
@@ -321,21 +328,87 @@ def test_early_fact_recovered_by_late_dimension(spark, tmp_path):
     } == {(200, "violet")}
 
 
-def test_null_key_change_rows_fail_loudly(spark, tmp_path):
+_CHANGE = (HEADER, ["a,I,,1.0"], ["a,I,,3.0", ",I,,2.0"])
+_KV = ("k,v", ["a,v1"], ["a,v3", ",v2"])
+# twin -> (feed header, clean creating batch, later batch whose second
+# row has a NULL key, starter(spark, raw, state_path, work_dir))
+_NULL_KEY_TWINS = {
+    "agg": _CHANGE + (
+        lambda spark, raw, st, w: AM.stream_agg_maintenance(
+            spark, raw, st, f"{w}/ck"
+        ),
+    ),
+    "minmax": _CHANGE + (
+        lambda spark, raw, st, w: AM.stream_minmax_maintenance(
+            spark, raw, f"{w}/fact", st, f"{w}/ck"
+        ),
+    ),
+    "topk": _CHANGE + (
+        lambda spark, raw, st, w: AM.stream_topk_maintenance(
+            spark, raw, f"{w}/fact", st, f"{w}/ck", k=2
+        ),
+    ),
+    "kmv": _KV + (
+        lambda spark, raw, st, w: AM.stream_kmv_maintenance(
+            spark, raw, st, f"{w}/ck"
+        ),
+    ),
+    "hist": _CHANGE + (
+        lambda spark, raw, st, w: AM.stream_hist_maintenance(
+            spark, raw, st, f"{w}/ck"
+        ),
+    ),
+    "cm": _CHANGE + (
+        lambda spark, raw, st, w: AM.stream_cm_maintenance(
+            spark, raw, st, f"{w}/ck"
+        ),
+    ),
+    "hll": _KV + (
+        lambda spark, raw, st, w: AM.stream_hll_maintenance(
+            spark, raw, st, f"{w}/ck"
+        ),
+    ),
+    "ewma": (
+        "k,t,x",
+        ["a,1,5"],
+        ["a,2,6", ",3,7"],
+        lambda spark, raw, st, w: AM.stream_ewma_maintenance(
+            spark, raw, st, f"{w}/ck"
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("path", ["creating", "scoped"])
+@pytest.mark.parametrize("twin", list(_NULL_KEY_TWINS))
+def test_null_key_change_rows_fail_loudly(spark, tmp_path, twin, path):
     """The snapshot-state twins reserve NULL keys for the watermark
     marker and strip them on read — a NULL-keyed change row must raise,
     not vanish between batches (the batch operators remain the
-    null-safe path)."""
-    import pytest
-
+    null-safe path). Every twin, on both runner paths: the creating
+    batch (full state commit) and a later batch (scoped slice)."""
+    header, clean, with_null, start = _NULL_KEY_TWINS[twin]
     raw = str(tmp_path / "raw")
-    _write(os.path.join(raw, "b1.csv"), ["a,I,,1.0", ",I,,2.0"])
-    q = stream_agg_maintenance(
-        spark, raw, str(tmp_path / "t"), str(tmp_path / "ck")
-    )
+    state = str(tmp_path / "state")
+
+    def write(name, rows):
+        os.makedirs(raw, exist_ok=True)
+        with open(os.path.join(raw, name), "w") as f:
+            f.write(header + "\n" + "\n".join(rows) + "\n")
+
+    if path == "scoped":
+        write("b1.csv", clean)
+        start(spark, raw, state, str(tmp_path)).awaitTermination(120)
+        write("b2.csv", with_null)
+    else:
+        write("b1.csv", clean + with_null[1:])
+    before = S._versions(state)
+    assert len(before) == (1 if path == "scoped" else 0)
+    q = start(spark, raw, state, str(tmp_path))
     with pytest.raises(Exception, match="NULL key"):
         q.awaitTermination(120)
         q.processAllAvailable()
+    assert S._versions(state) == before  # the batch published nothing
 
 
 def test_state_commits_are_o_batch_across_all_twins(spark, tmp_path):
@@ -533,3 +606,41 @@ def test_stats_watermark_mixed_table_scans_statless_files_only(
     rep2: dict = {}
     assert _stats_watermark(p2, spark, report=rep2) == (3, "app")
     assert rep2["files_scanned"] == 0
+
+    # a statless file whose highest-batch row is tombstoned by a
+    # deletion vector (a scoped replace, the twins' own commit shape):
+    # the raw statless scan would read through the tombstone and
+    # over-read the watermark (9), so it must fall back to the DV-aware
+    # logical read instead (5)
+    p3 = str(tmp_path / "dv_state")
+    S.commit(
+        spark,
+        spark.createDataFrame([("a", 0, "app")], ddl),
+        p3,
+        stats_for=_WM_STATS + ["k"],
+    )
+    S.commit(
+        spark,
+        spark.createDataFrame([("z", 5, "app"), ("y", 9, "app")], ddl),
+        p3,
+        mode="append",
+    )
+    S.replace_where_commit(
+        spark,
+        spark.createDataFrame([("b", 2, "app")], ddl),
+        p3,
+        predicates=[("k", "in", ["y"])],
+        stats_for=_WM_STATS + ["k"],
+    )
+    assert S.read(spark, p3).agg({"_last_batch": "max"}).first()[0] == 5
+    assert _stats_watermark(p3, spark) == (None, None)
+    # a poisoned dead-row map (its sidecar lost) cannot say which files
+    # the tombstones hit: same fallback, never "no deletion vectors"
+    mdir = os.path.join(p3, "_manifests")
+    head = max(f for f in os.listdir(mdir) if f.startswith("v"))
+    with open(os.path.join(mdir, head)) as f:
+        dv_sidecars = json.load(f)["dv_sidecars"]
+    for name in dv_sidecars:
+        os.remove(os.path.join(mdir, name))
+    assert S.load_snapshot(p3).dv_dead is None
+    assert _stats_watermark(p3, spark) == (None, None)
