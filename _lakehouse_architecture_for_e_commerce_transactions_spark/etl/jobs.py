@@ -91,12 +91,13 @@ def run_etl_job(
     else:
         M.merge_upsert(spark, valid, table_path, spec, check_source_unique=False)
 
+    # the merge's action ran the validation pass: its observation already
+    # holds the reject count, so counting `rejected` again would re-scan
+    metrics = res.metrics()
     reject_paths: list[str] = []
-    n_rejected = 0
-    rej_count = rejected.count()
-    if rej_count:
+    n_rejected = int(metrics["rows_in"]) - int(metrics["rows_valid"])
+    if n_rejected:
         reject_paths.append(write_rejects(rejected, rejected_path, spec.name, run_id))
-        n_rejected += rej_count
     if orphans is not None:
         orph_count = orphans.count()
         if orph_count:
@@ -105,7 +106,6 @@ def run_etl_job(
             )
             n_rejected += orph_count
 
-    metrics = res.metrics()
     res.unpersist()  # all outputs consumed; release the cached batch
     if fk_cleanup is not None:
         fk_cleanup()

@@ -7,17 +7,29 @@ keyed on the PK, with create-if-absent (S3/S4/S5 in SURVEY.md §2.1).
 
 delta-spark is not available in this environment, so the upsert is
 re-expressed as a native Spark plan with the same partition-touch profile
-Delta MERGE has:
+Delta MERGE has. ``scoped_upsert`` is the step both partitioned writers
+(``merge_upsert`` here, ``snapshots.merge_commit``) share:
 
-1. restrict the rewrite to *affected partitions* — target partitions that
-   contain at least one source key (a broadcast semi join on the partition
-   columns of the tiny distinct-partitions set of the source);
-2. within those partitions, keep target rows whose PK is absent from the
-   source (broadcast anti join — the source batch is the small side in an
-   incremental load), union the source rows;
-3. write with **dynamic partition overwrite** so untouched partitions'
-   files are never rewritten — the moral equivalent of Delta rewriting only
-   files containing matches.
+1. materialize the source batch once, then find the *affected partitions*
+   — those the source writes into plus those holding a matched key — in
+   one collect of per-partition counts (target rows and matched keys from
+   a column-pruned target scan probed against the broadcast source keys,
+   grouped together with the source's partition values, so NULL partition
+   values group like any other). The same counts say which affected
+   partitions end up empty (every row matched, none written back);
+2. read the target through a literal, NULL-safe predicate on the
+   affected partition values — the file index prunes to those
+   directories at planning time — keep the rows whose PK is absent from
+   the source (broadcast anti join — the source batch is the small side
+   in an incremental load), and union the source rows;
+3. ``merge_upsert`` writes with **dynamic partition overwrite** so
+   untouched partitions' files are never rewritten — the moral
+   equivalent of Delta rewriting only files containing matches — and
+   deletes the emptied partitions' directories.
+
+``merge_plan`` is the relational core both use for step 2 (anti join
+plus union); the unpartitioned path runs it against the whole target, and
+the catalog's checkable ``merge_upsert_sim`` query runs it as one plan.
 
 Durability note: parquet overwrite is not ACID; a production deployment at
 100 TB swaps this writer for Delta/Iceberg via the same interface (an
@@ -31,9 +43,12 @@ enforces it.
 
 from __future__ import annotations
 
+import operator
 import os
+from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import TableSpec
@@ -59,43 +74,121 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return False
 
 
-def affected_partitions(
-    source: DataFrame, target: DataFrame, spec: TableSpec
-) -> DataFrame:
-    """Partitions the upsert may rewrite: partitions the source writes into
-    ∪ partitions holding a matched key (a row whose partition value changed
-    must have its old copy rewritten away — Delta's find-touched-files join
-    equivalent)."""
-    pk = spec.primary_key
-    parts = list(spec.partition_by)
-    keys = F.broadcast(source.select(pk))
-    source_parts = source.select(*parts).distinct()
-    matched_parts = (
-        target.join(keys, on=pk, how="left_semi").select(*parts).distinct()
-    )
-    return source_parts.union(matched_parts).distinct()
-
-
-def merge_plan(
-    source: DataFrame,
-    target: DataFrame,
-    spec: TableSpec,
-) -> DataFrame:
-    """The pure-relational core of the upsert: rows that must exist in the
-    affected partitions afterwards = source ∪ (target in affected partitions
-    ∖ source-by-PK). Exposed separately so the correctness oracle can check
-    it as a query (SQL: UNION ALL + NOT EXISTS)."""
-    pk = spec.primary_key
-    parts = list(spec.partition_by)
-    keys = F.broadcast(source.select(pk))
-    if parts:
-        affected = affected_partitions(source, target, spec)
-        target_scope = target.join(F.broadcast(affected), on=parts, how="left_semi")
-    else:
-        target_scope = target
-    kept = target_scope.join(keys, on=pk, how="left_anti")
+def merge_plan(source: DataFrame, target: DataFrame, spec: TableSpec) -> DataFrame:
+    """The pure-relational core of the upsert: source ∪ (target ∖
+    source-by-PK), in the spec's column order. Given a target already
+    scoped to the affected partitions, these are the rows those partitions
+    hold afterwards. Exposed separately so the correctness oracle can
+    check it as a query (SQL: UNION ALL + NOT EXISTS)."""
+    kept = target.join(F.broadcast(source.select(spec.primary_key)),
+                       on=spec.primary_key, how="left_anti")
     cols = [f.name for f in spec.schema.fields]
     return source.select(*cols).unionByName(kept.select(*cols))
+
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+@dataclass(frozen=True)
+class ScopedUpsert:
+    """One partitioned upsert, planned by ``scoped_upsert``."""
+
+    source: DataFrame  # the batch, materialized once
+    target: DataFrame  # the target pruned to the affected partitions
+    merged: DataFrame  # rows the affected partitions hold afterwards
+    # affected partitions as hive-directory values (unescaped; NULL and
+    # '' are _HIVE_NULL), and the subset left with no rows
+    dirs: frozenset[tuple[str, ...]]
+    emptied: frozenset[tuple[str, ...]]
+
+
+def _any_of(terms: list[Column]) -> Column:
+    """OR of ``terms`` as a balanced tree: Catalyst overflows the JVM
+    stack analysing a left-deep chain of a few hundred terms."""
+    if not terms:
+        return F.lit(False)
+    if len(terms) == 1:
+        return terms[0]
+    mid = len(terms) // 2
+    return _any_of(terms[:mid]) | _any_of(terms[mid:])
+
+
+def scoped_upsert(
+    source: DataFrame, target: DataFrame, spec: TableSpec
+) -> ScopedUpsert:
+    """Plan an upsert into a partitioned target: run the source's plan
+    once, collect the affected partitions once, and scope the rewrite's
+    target read by a literal partition predicate the file index prunes
+    with.
+
+    Affected = partitions the source writes into ∪ partitions holding a
+    matched key (a row whose partition value changed must have its old
+    copy rewritten away — Delta's find-touched-files join). One grouped
+    count over target and source rows yields both that set and which of
+    its partitions end up empty (all target rows matched, no source row);
+    grouping, unlike an equi join, keeps NULL partition values."""
+    pk = spec.primary_key
+    parts = list(spec.partition_by)
+    types = [target.schema[p].dataType for p in parts]
+    # lazy: the stats query's first job fills the checkpoint, so the
+    # batch plan runs once without a job of its own
+    source = source.localCheckpoint(eager=False)
+    keys = F.broadcast(source.select(pk, F.lit(1).alias("_m")))
+    rows = (
+        target.select(*parts, pk)
+        .join(keys, on=pk, how="left")
+        .select(*parts, F.lit(1).alias("_t"), "_m")
+        .unionByName(
+            source.select(
+                *[F.col(p).cast(t).alias(p) for p, t in zip(parts, types)],
+                F.lit(0).alias("_t"),
+                F.lit(None).cast("int").alias("_m"),
+            )
+        )
+        .groupBy(*parts)
+        .agg(
+            F.sum("_t").alias("n_target"),
+            F.count("_m").alias("n_matched"),
+            F.count(F.when(F.col("_t") == 0, 1)).alias("n_source"),
+        )
+        .filter((F.col("n_matched") > 0) | (F.col("n_source") > 0))
+        .select(
+            *parts,
+            *[F.col(p).cast("string").alias(f"_dir_{p}") for p in parts],
+            (
+                (F.col("n_source") == 0)
+                & (F.col("n_target") == F.col("n_matched"))
+            ).alias("_emptied"),
+        )
+        .collect()
+    )
+    n = len(parts)
+    # a value whose directory is _HIVE_NULL (NULL, or a string '') reads
+    # back as NULL, so the predicate must name it as NULL
+    dirs = [tuple(d if d else _HIVE_NULL for d in r[n : 2 * n]) for r in rows]
+    values = [
+        tuple(None if d == _HIVE_NULL else v for v, d in zip(r[:n], dr))
+        for r, dr in zip(rows, dirs)
+    ]
+    pred = _any_of(
+        [
+            reduce(
+                operator.and_,
+                (F.col(p).eqNullSafe(F.lit(x).cast(t))
+                 for p, t, x in zip(parts, types, vals)),
+            )
+            for vals in values
+        ]
+    )
+    filled = {d for d, r in zip(dirs, rows) if not r["_emptied"]}
+    scoped = target.filter(pred)
+    return ScopedUpsert(
+        source=source,
+        target=scoped,
+        merged=merge_plan(source, scoped, spec),
+        dirs=frozenset(dirs),
+        emptied=frozenset(dirs) - filled,
+    )
 
 
 def apply_changes(
@@ -226,25 +319,29 @@ def merge_upsert(
             target = target.withColumn(
                 c, F.lit(None).cast(spec.schema[c].dataType)
             )
-    merged = merge_plan(source, target, spec)
-    # The plan reads the same files the overwrite will replace: break the
-    # lineage before writing. localCheckpoint materializes the merged rows
-    # (only the affected partitions — small for incremental batches).
-    merged = merged.localCheckpoint(eager=True)
     stale_dirs: list[str] = []
     if spec.partition_by:
+        scope = scoped_upsert(source, target, spec)
+        if not scope.dirs:
+            return  # empty batch: no partition to rewrite
+        merged = scope.merged
         # dynamic overwrite only replaces partitions *present* in `merged`;
         # an affected partition left with zero rows (its only row moved to a
         # new partition value) must be deleted explicitly or the stale copy
         # survives on disk
-        parts = list(spec.partition_by)
-        affected = {
-            tuple(r) for r in affected_partitions(source, target, spec).collect()
-        }
-        written = {tuple(r) for r in merged.select(*parts).distinct().collect()}
-        for vals in affected - written:
-            subdir = "/".join(f"{c}={v}" for c, v in zip(parts, vals))
-            stale_dirs.append(f"{path}/{subdir}")
+        utils = spark._jvm.org.apache.spark.sql.catalyst.catalog  # type: ignore[attr-defined]
+        esc = utils.ExternalCatalogUtils.escapePathName
+        stale_dirs = [
+            path
+            + "".join(f"/{esc(c)}={esc(v)}" for c, v in zip(spec.partition_by, vals))
+            for vals in scope.emptied
+        ]
+    else:
+        merged = merge_plan(source, target, spec)
+    # The plan reads the same files the overwrite will replace: break the
+    # lineage before writing. localCheckpoint materializes the merged rows
+    # (only the affected partitions — small for incremental batches).
+    merged = merged.localCheckpoint(eager=True)
     try:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     except Exception:  # pragma: no cover

@@ -1970,20 +1970,17 @@ def merge_commit(
         target = read(spark, path).select(*cols)
         if parent.part_entries is None:
             # parent was a plain commit (no partition-granular entries):
-            # merge against the FULL target — partition-scoped merge_plan
+            # merge against the FULL target — a partition-scoped merge
             # would silently drop unaffected partitions from the result
-            import dataclasses
-
-            spec_nopart = dataclasses.replace(spec, partition_by=())
-            merged = M.merge_plan(source, target, spec_nopart)
+            merged = M.merge_plan(source, target, spec)
             affected = None
             full_rewrite = True
         else:
-            merged = M.merge_plan(source, target, spec)
-            affected = {
-                tuple(str(x) for x in r)
-                for r in M.affected_partitions(source, target, spec).collect()
-            }
+            # affected partitions in hive-directory form: the conflict
+            # check and the carry-forward compare them with entry names
+            scope = M.scoped_upsert(source, target, spec)
+            source, target, merged = scope.source, scope.target, scope.merged
+            affected = set(scope.dirs)
     except FileNotFoundError:
         parent, merged, affected = None, source, None  # initial commit
 
@@ -2288,7 +2285,7 @@ def delete_where(
         return base.version + 1
 
     # partition-granular: find partitions holding matching rows (bounded
-    # by partition count — the same contract as affected_partitions)
+    # by partition count — the same contract as merge's scoped_upsert)
     hit_rows = data.filter(cond).select(*parts).distinct().collect()
     if not hit_rows:
         return base.version
@@ -3467,8 +3464,8 @@ def _hive_leaf_dirs(
             if name.startswith(f"{parts[depth]}="):
                 # Spark hive-escapes partition values in dir names
                 # ('North America' → 'North%20America'); unquote so the
-                # keys compare equal to affected_partitions()'s raw
-                # str(value) tuples — otherwise an escapable value keeps
+                # keys compare equal to scoped_upsert()'s unescaped
+                # directory values — otherwise an escapable value keeps
                 # its stale carried entry AND gains a fresh one
                 walk(
                     os.path.join(d, name),

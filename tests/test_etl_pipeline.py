@@ -103,6 +103,8 @@ def test_rerun_idempotent(pipeline_run, spark):
     results2 = run_pipeline(spark, cfg, run_id="r2")
     for table, exp in expected.items():
         assert results2[table].rows_written == exp["written"], table
+        exp_rej = exp["rejected"] + exp.get("orphans", 0)
+        assert results2[table].rows_rejected == exp_rej, table
 
 
 def test_availability_gate(spark, tmp_path):

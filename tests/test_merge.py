@@ -154,6 +154,67 @@ def test_partition_move_with_otherwise_untouched_old_partition(spark, tmp_path):
     assert len(rows) == 2  # no duplicate pk=1 left behind in partition a
 
 
+def test_null_partition_upsert_keeps_the_partitions_other_rows(spark, tmp_path):
+    """Upserting pk=1 into the NULL partition rewrites
+    __HIVE_DEFAULT_PARTITION__ with every row it holds: pk=2, which lives
+    there too, must survive (an equi join on the partition value never
+    matches NULL, so it used to be dropped)."""
+    path = str(tmp_path / "t")
+    M.merge_upsert(
+        spark, _df(spark, [(1, 1.0, None), (2, 2.0, None), (3, 3.0, "a")]), path, SPEC
+    )
+    M.merge_upsert(spark, _df(spark, [(1, 10.0, None)]), path, SPEC)
+    rows = spark.read.parquet(path).select("pk", "amt", "part").collect()
+    assert sorted(tuple(r) for r in rows) == [
+        (1, 10.0, None),
+        (2, 2.0, None),
+        (3, 3.0, "a"),
+    ]
+
+
+def test_scoped_upsert_plans_a_thousand_affected_partitions(spark):
+    """The rewrite's partition predicate names every affected partition;
+    a batch touching a thousand must still plan (a left-deep OR chain of
+    a few hundred terms overflows the JVM stack during analysis)."""
+    rows = [(i, float(i), f"p{i}") for i in range(1000)]
+    scope = M.scoped_upsert(_df(spark, rows[:10]), _df(spark, rows), SPEC)
+    assert scope.target.count() == 10
+    scope = M.scoped_upsert(_df(spark, rows), _df(spark, rows), SPEC)
+    assert len(scope.dirs) == 1000 and not scope.emptied
+    assert scope.target.count() == 1000
+
+
+TYPED_SPEC = TableSpec(  # the products.department_id shape
+    name="t",
+    schema=StructType(
+        [
+            StructField("pk", IntegerType(), False),
+            StructField("amt", DoubleType(), False),
+            StructField("dept", IntegerType(), False),
+        ]
+    ),
+    primary_key="pk",
+    partition_by=("dept",),
+)
+
+
+def test_typed_partition_move_deletes_emptied_directory(spark, tmp_path):
+    """An IntegerType partition column reads back as a string (partition
+    type inference is off). pk=1 moves out of dept=1, leaving it empty: the
+    directory goes and no key is duplicated."""
+    path = str(tmp_path / "t")
+
+    def df(rows):
+        return spark.createDataFrame(rows, "pk int, amt double, dept int")
+
+    M.merge_upsert(spark, df([(1, 1.0, 1), (2, 2.0, 3)]), path, TYPED_SPEC)
+    M.merge_upsert(spark, df([(1, 5.0, 2)]), path, TYPED_SPEC)
+    assert not os.path.isdir(f"{path}/dept=1")
+    rows = spark.read.parquet(path).collect()
+    got = sorted((r["pk"], r["amt"], str(r["dept"])) for r in rows)
+    assert got == [(1, 5.0, "2"), (2, 2.0, "3")]
+
+
 @pytest.mark.skipif(
     not M._HAS_DELTA, reason="delta-spark not installed in this environment"
 )

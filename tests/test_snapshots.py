@@ -153,6 +153,57 @@ def test_merge_commit_partition_move_empties_old_partition(spark, tmp_path):
     assert ("a",) not in parts  # emptied partition left the manifest
 
 
+def test_merge_commit_typed_partition_move_drops_emptied_entry(spark, tmp_path):
+    """IntegerType partition column (the products.department_id shape):
+    pk=1 moves out of dept=1, leaving it empty — the entry leaves the
+    manifest and no key is duplicated."""
+    spec = TableSpec(
+        name="t",
+        schema=StructType(
+            [
+                StructField("pk", IntegerType(), False),
+                StructField("amt", DoubleType(), False),
+                StructField("dept", IntegerType(), False),
+            ]
+        ),
+        primary_key="pk",
+        partition_by=("dept",),
+    )
+    path = str(tmp_path / "t")
+
+    def df(rows):
+        return spark.createDataFrame(rows, "pk int, amt double, dept int")
+
+    S.merge_commit(spark, df([(1, 1.0, 1), (2, 2.0, 3)]), path, spec)
+    S.merge_commit(spark, df([(1, 5.0, 2)]), path, spec)
+    rows = S.read(spark, path).collect()
+    assert sorted((r["pk"], r["amt"], r["dept"]) for r in rows) == [
+        (1, 5.0, 2),
+        (2, 2.0, 3),
+    ]
+    parts = {tuple(e["parts"]) for e in S.load_snapshot(path).part_entries}
+    assert parts == {("2",), ("3",)}
+
+
+def test_merge_commit_null_partition_upsert_replaces_its_entry(spark, tmp_path):
+    """Upserting pk=1 into the NULL partition replaces the
+    __HIVE_DEFAULT_PARTITION__ entry: the old pk=1 must not be carried
+    beside the new one, and pk=2 (same partition) must survive."""
+    path = str(tmp_path / "t")
+    S.merge_commit(
+        spark, _mdf(spark, [(1, 1.0, None), (2, 2.0, None), (3, 3.0, "a")]), path, MSPEC
+    )
+    S.merge_commit(spark, _mdf(spark, [(1, 10.0, None)]), path, MSPEC)
+    rows = S.read(spark, path).select("pk", "amt", "part").collect()
+    assert sorted(tuple(r) for r in rows) == [
+        (1, 10.0, None),
+        (2, 2.0, None),
+        (3, 3.0, "a"),
+    ]
+    parts = sorted(tuple(e["parts"]) for e in S.load_snapshot(path).part_entries)
+    assert parts == [("__HIVE_DEFAULT_PARTITION__",), ("a",)]
+
+
 def test_merge_commit_disjoint_partitions_rebase(spark, tmp_path, monkeypatch):
     """A writer that loses the manifest race to a DISJOINT-partition commit
     must rebase and succeed, keeping both commits' rows."""
