@@ -116,7 +116,7 @@ def run_curation_job(
     # reductions over it, no explode/groupBy passes; see
     # operators/textdedup.shingle_arrays), and uncached each consumer
     # would re-tokenize the corpus text (the dominant pass at scale).
-    idx = TD.shingle_arrays(
+    arrays = TD.shingle_arrays(
         survivors, "doc_id", "text", n=shingle_n
     ).persist()
     pairs = TD.minhash_dedup_verified(
@@ -126,7 +126,7 @@ def run_curation_job(
         n=shingle_n,
         k=minhash_k,
         threshold=jaccard_min,
-        arrays=idx,
+        arrays=arrays,
     ).select("doc1", "doc2")
     # cache the (small, dup-sized) id frame: it feeds both the stat count
     # and the anti-join, and uncached each use re-runs the LSH self-join
@@ -139,13 +139,13 @@ def run_curation_job(
     )
     n_near = near_drop.count()  # materializes the LSH + component chain
     # the cached shingle arrays can feed decontamination too when the
-    # n-gram orders line up — one fewer full corpus tokenize pass (the
-    # exploded view below is derived per-row from the CACHED arrays)
-    share_index = (
+    # n-gram orders line up — one fewer full corpus tokenize pass
+    # (decontamination explodes the CACHED arrays per row for its hits)
+    share_arrays = (
         eval_docs is not None and contamination_ngram == shingle_n
     )
-    if not share_index:
-        idx.unpersist()  # near_drop is cached; nothing re-reads the index
+    if not share_arrays:
+        arrays.unpersist()  # near_drop is cached; nothing re-reads them
     deduped = survivors.join(near_drop, "doc_id", "left_anti")
 
     n_contaminated = 0
@@ -155,7 +155,7 @@ def run_curation_job(
             deduped,
             eval_docs,
             n=contamination_ngram,
-            arrays=idx if share_index else None,
+            arrays=arrays if share_arrays else None,
         )
         dirty = (
             ratios.filter(F.col("contamination") > contamination_max)
@@ -163,8 +163,8 @@ def run_curation_job(
             .cache()
         )
         n_contaminated = dirty.count()
-        if share_index:
-            idx.unpersist()
+        if share_arrays:
+            arrays.unpersist()
         deduped = deduped.join(dirty, "doc_id", "left_anti")
 
     packed = PK.pack_sequences(deduped, ctx_tokens=ctx_tokens)

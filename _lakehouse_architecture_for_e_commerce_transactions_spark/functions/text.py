@@ -36,10 +36,6 @@ def distinct_token_count(text: Column) -> Column:
     return F.size(F.array_distinct(tokens(text)))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def occurrences(text: Column, needle: str) -> Column:
     """Non-overlapping occurrence count via replace-shrinkage — identical
     semantics in Spark and ANSI SQL (length(x)-length(replace(x,n,'')))/len(n).

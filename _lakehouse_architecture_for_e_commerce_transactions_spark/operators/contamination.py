@@ -31,7 +31,6 @@ def contamination_ratios(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 13,
-    index: DataFrame | None = None,
     arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Per-training-document contamination: ``(id_col, n_grams, n_hits,
@@ -41,21 +40,18 @@ def contamination_ratios(
     ``eval_docs`` must be the bounded benchmark side — its distinct
     n-gram set is broadcast.
 
-    ``index`` supplies a prebuilt (doc, shingle) distinct-n-gram frame,
-    ``arrays`` a prebuilt (doc, sh) per-doc distinct-array frame
-    (``textdedup.shingle_arrays``) — each ONLY valid when its n-gram
+    ``arrays`` supplies a prebuilt (doc, sh) per-doc distinct-n-gram
+    frame (``textdedup.shingle_arrays``), ONLY valid when its n-gram
     order equals ``n``. A curation pipeline that already built (and
     cached) the MinHash substrate passes it here so decontamination
     skips its own corpus tokenize — one fewer full text pass, which is
-    a whole scan saved at 100 TB. Either may cover a superset of
-    ``train``; it is semi-joined down, and docs with zero n-grams still
-    get their (0, 0, 0.0) row. With ``arrays`` the per-doc totals are
-    ``size(sh)`` per row — the totals aggregation exchange of the
-    exploded-index form disappears (r14, guide §2.4). ``arrays``
-    SHOULD be cached/persisted by the caller (etl/datapipe.py passes
-    its cached curation substrate): it is consumed by two plan
-    branches here (totals via ``size(sh)``, hits via ``explode``), so
-    an uncached frame re-runs its tokenize pass twice.
+    a whole scan saved at 100 TB. It may cover a superset of ``train``;
+    it is semi-joined down, and docs with zero n-grams still get their
+    (0, 0, 0.0) row. ``arrays`` SHOULD be cached/persisted by the caller
+    (etl/datapipe.py passes its cached curation substrate): it is
+    consumed by two plan branches here (totals via ``size(sh)``, hits
+    via ``explode``), so an uncached frame re-runs its tokenize pass
+    twice.
     """
     ev = (
         eval_docs.select(
@@ -78,32 +74,7 @@ def contamination_ratios(
             )
             .na.fill({"n_grams": 0})
         )
-        hits = (
-            arr.select(id_col, F.explode("sh").alias("ngram"))
-            .join(F.broadcast(ev), "ngram")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-    elif index is not None:
-        idx = index.select(
-            F.col("doc").alias(id_col), F.col("shingle").alias("ngram")
-        ).join(train.select(id_col), id_col, "left_semi")
-        totals = (
-            train.select(id_col)
-            .join(
-                idx.groupBy(id_col).agg(
-                    F.count(F.lit(1)).cast("long").alias("n_grams")
-                ),
-                id_col,
-                "left",
-            )
-            .na.fill({"n_grams": 0})
-        )
-        hits = (
-            idx.join(F.broadcast(ev), "ngram")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
+        grams = arr.select(id_col, F.explode("sh").alias("ngram"))
     else:
         base = train.select(
             F.col(id_col), T.shingles(F.col(text_col), n).alias("_grams")
@@ -113,14 +84,14 @@ def contamination_ratios(
         totals = base.select(
             F.col(id_col), F.size("_grams").cast("long").alias("n_grams")
         )
-        # inner join marks hits; shingles are distinct per doc, so
-        # counting matched rows counts matched distinct n-grams
-        hits = (
-            base.select(F.col(id_col), F.explode("_grams").alias("ngram"))
-            .join(F.broadcast(ev), "ngram")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
+        grams = base.select(F.col(id_col), F.explode("_grams").alias("ngram"))
+    # inner join marks hits; shingles are distinct per doc, so counting
+    # matched rows counts matched distinct n-grams
+    hits = (
+        grams.join(F.broadcast(ev), "ngram")
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
     return (
         totals.join(hits, id_col, "left")
         .na.fill({"n_hits": 0})

@@ -48,7 +48,7 @@ import os
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import TableSpec
@@ -113,6 +113,43 @@ def _any_of(terms: list[Column]) -> Column:
     return _any_of(terms[:mid]) | _any_of(terms[mid:])
 
 
+def partition_scope(
+    parts_df: DataFrame, parts: list[str], *extra: Column
+) -> tuple[list[Row], list[tuple[str, ...]], Column]:
+    """Collect ``parts_df``'s partition values (plus ``extra`` columns)
+    in one action and name them the way both partitioned writers need:
+    ``(rows, dirs, pred)`` with each row's partition in hive-directory
+    form (Spark's string cast, unescaped; NULL and '' are _HIVE_NULL —
+    what partition-granular snapshot entries and ``_hive_leaf_dirs``
+    compare against) and a literal NULL-safe predicate selecting exactly
+    those partitions, which the file index prunes with."""
+    types = [parts_df.schema[p].dataType for p in parts]
+    rows = parts_df.select(
+        *parts,
+        *[F.col(p).cast("string").alias(f"_dir_{p}") for p in parts],
+        *extra,
+    ).collect()
+    n = len(parts)
+    dirs = [tuple(d if d else _HIVE_NULL for d in r[n : 2 * n]) for r in rows]
+    # a value whose directory is _HIVE_NULL (NULL, or a string '') reads
+    # back as NULL, so the predicate must name it as NULL
+    pred = _any_of(
+        [
+            reduce(
+                operator.and_,
+                (
+                    F.col(p).eqNullSafe(
+                        F.lit(None if d == _HIVE_NULL else v).cast(t)
+                    )
+                    for p, t, v, d in zip(parts, types, r[:n], dr)
+                ),
+            )
+            for r, dr in zip(rows, dirs)
+        ]
+    )
+    return rows, dirs, pred
+
+
 def scoped_upsert(
     source: DataFrame, target: DataFrame, spec: TableSpec
 ) -> ScopedUpsert:
@@ -134,7 +171,7 @@ def scoped_upsert(
     # batch plan runs once without a job of its own
     source = source.localCheckpoint(eager=False)
     keys = F.broadcast(source.select(pk, F.lit(1).alias("_m")))
-    rows = (
+    counts = (
         target.select(*parts, pk)
         .join(keys, on=pk, how="left")
         .select(*parts, F.lit(1).alias("_t"), "_m")
@@ -152,33 +189,14 @@ def scoped_upsert(
             F.count(F.when(F.col("_t") == 0, 1)).alias("n_source"),
         )
         .filter((F.col("n_matched") > 0) | (F.col("n_source") > 0))
-        .select(
-            *parts,
-            *[F.col(p).cast("string").alias(f"_dir_{p}") for p in parts],
-            (
-                (F.col("n_source") == 0)
-                & (F.col("n_target") == F.col("n_matched"))
-            ).alias("_emptied"),
-        )
-        .collect()
     )
-    n = len(parts)
-    # a value whose directory is _HIVE_NULL (NULL, or a string '') reads
-    # back as NULL, so the predicate must name it as NULL
-    dirs = [tuple(d if d else _HIVE_NULL for d in r[n : 2 * n]) for r in rows]
-    values = [
-        tuple(None if d == _HIVE_NULL else v for v, d in zip(r[:n], dr))
-        for r, dr in zip(rows, dirs)
-    ]
-    pred = _any_of(
-        [
-            reduce(
-                operator.and_,
-                (F.col(p).eqNullSafe(F.lit(x).cast(t))
-                 for p, t, x in zip(parts, types, vals)),
-            )
-            for vals in values
-        ]
+    rows, dirs, pred = partition_scope(
+        counts,
+        parts,
+        (
+            (F.col("n_source") == 0)
+            & (F.col("n_target") == F.col("n_matched"))
+        ).alias("_emptied"),
     )
     filled = {d for d, r in zip(dirs, rows) if not r["_emptied"]}
     scoped = target.filter(pred)

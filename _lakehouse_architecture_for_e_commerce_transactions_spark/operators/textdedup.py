@@ -6,9 +6,10 @@ Four families, all shuffle-disciplined for 100 TB corpora:
   partial aggregation collapses most duplicates before the exchange.
 * **n-gram Jaccard** — token-shingle inverted index self-join restricted to a
   blocking key; exact similarity on candidate pairs only.
-* **MinHash + LSH** — k salted-md5 min-hashes per doc (one shuffle), band
-  keys, bucket self-join: near-dup candidates without the quadratic join.
-  Candidates are verified with true Jaccard.
+* **MinHash + LSH** — k salted-md5 min-hashes per doc, computed per row
+  from its shingle array (no shuffle), band keys, bucket self-join:
+  near-dup candidates without the quadratic join. Candidates are verified
+  with true Jaccard.
 * **SimHash** — per-bit majority over token hashes; Hamming-near signatures
   bucket by band of bits.
 
@@ -18,7 +19,7 @@ engine-portable for the oracle gate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from _lakehouse_architecture_for_e_commerce_transactions_spark.functions import (
@@ -51,22 +52,23 @@ def exact_dedup(
 def shingle_arrays(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """(doc, sh) — per-doc DISTINCT word-n-gram array, the unexploded twin
-    of ``shingle_index`` (``T.shingles`` already dedups within a doc).
+    """(doc, sh) — the per-doc DISTINCT word-n-gram array (``T.shingles``
+    already dedups within a doc), the one shingle substrate of MinHash
+    dedup and decontamination.
 
     Docs with no shingles (shorter than ``n`` tokens, or NULL text) are
-    dropped, exactly as ``explode`` drops them from the index form, so
-    every aggregate derived from either representation agrees row-for-row.
+    dropped, exactly as ``explode`` would drop them from a (doc, shingle)
+    row form, so every per-doc aggregate agrees with that form row for
+    row.
 
-    This is the shuffle-free substrate for MinHash (r14, guide §2.4):
-    a min-hash signature is a per-doc reduction, so computing it as
-    ``array_min(transform(sh, …))`` in the row's own projection removes
-    BOTH the explode (corpus × shingles row expansion through the hash
-    stage) and the groupBy exchange the exploded form needs — and the
-    exact-Jaccard verification set is just ``sort_array(sh)``, removing a
-    second explode + groupBy(collect_set) pass. The input is spread
-    across the cluster first: the per-row work (tokenize + k hashes per
-    shingle) is the dominant cost and must not run on 1-2 input splits.
+    Shuffle-free by design (guide §2.4): a min-hash signature is a
+    per-doc reduction, so computing it as ``array_min(transform(sh, …))``
+    in the row's own projection needs neither an explode (corpus ×
+    shingles row expansion through the hash stage) nor a groupBy
+    exchange, and the exact-Jaccard verification set is just
+    ``sort_array(sh)``. The input is spread across the cluster first:
+    the per-row work (tokenize + k hashes per shingle) is the dominant
+    cost and must not run on 1-2 input splits.
     """
     return (
         spread(df)
@@ -78,46 +80,20 @@ def shingle_arrays(
     )
 
 
-def shingle_index(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, shingle) inverted index — distinct word n-grams per doc.
-
-    The input is spread across the cluster first: the explode multiplies
-    row count by ~tokens-per-doc, which must not run on 1-2 input splits.
-    """
-    return shingle_arrays(df, id_col, text_col, n).select(
-        "doc", F.explode("sh").alias("shingle")
-    )
-
-
-def _one_substrate(index, arrays) -> None:
-    """``index`` and ``arrays`` are alternative prebuilt substrates; a
-    caller passing both has a bug (r14 advice: the legacy index path
-    would win and the cached arrays frame would be silently unused —
-    e.g. a cached arrays substrate paired with a STALE index)."""
-    if index is not None and arrays is not None:
-        raise ValueError(
-            "pass either index= (exploded legacy substrate) or arrays= "
-            "(per-doc shingle arrays), not both — with both supplied the "
-            "index path would win and the arrays frame would be ignored"
-        )
-
-
 def _sig_from_arrays(arrays: DataFrame, k: int) -> DataFrame:
     """(doc, mh0..mh{k-1}) from per-doc shingle ARRAYS — no explode, no
     exchange: each signature slot is ``array_min`` over a per-element
     transform, evaluated in the row's own projection.
 
     Value-identical to ``groupBy(doc).agg(*H.minhash_aggs(...))`` over the
-    exploded index: the min of the same hash multiset (duplicates cannot
-    change a min), string comparison is the same binary ordering in both
-    forms, and docs with empty shingle sets are absent from both. Cheaper
-    than the aggregate form even per-element: the salted digests are
-    materialized ONCE per shingle into ``k/4``-wide digest arrays and the
-    k chunk-mins slice them, where the aggregate form re-hashes the
-    shingle for every one of the k aggregate expressions (4× fewer md5
-    calls at k=8)."""
+    exploded (doc, shingle) rows: the min of the same hash multiset
+    (duplicates cannot change a min), string comparison is the same
+    binary ordering in both forms, and docs with empty shingle sets are
+    absent from both. Cheaper than the aggregate form even per-element:
+    the salted digests are materialized ONCE per shingle into
+    ``k/4``-wide digest arrays and the k chunk-mins slice them, where the
+    aggregate form re-hashes the shingle for every one of the k aggregate
+    expressions (4× fewer md5 calls at k=8)."""
     per_digest = 32 // H.CHUNK_HEX
     n_digests = (k + per_digest - 1) // per_digest
 
@@ -145,8 +121,35 @@ def _sig_from_arrays(arrays: DataFrame, k: int) -> DataFrame:
     )
 
 
-def shingle_counts(index: DataFrame) -> DataFrame:
-    return index.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
+def _melt_bands(sig: DataFrame, band_cols: list[Column]) -> DataFrame:
+    """(doc, band_id, bkey): one row per LSH band (``band{b}`` columns)
+    of each signature."""
+    bands = sig.select(F.col("doc"), *band_cols)
+    n_bands = len(band_cols)
+    stack_args = ", ".join(f"{b}, band{b}" for b in range(n_bands))
+    return bands.select(
+        "doc", F.expr(f"stack({n_bands}, {stack_args}) AS (band_id, bkey)")
+    )
+
+
+def _band_pairs(melted: DataFrame) -> DataFrame:
+    """(doc1, doc2), doc1 < doc2: docs sharing ≥1 band key, from one
+    self-equi-join of the melted band rows on (band_id, bkey)."""
+    # The per-row signature pipeline has NO exchange of its own, so the
+    # self-join's two sides would each recompute tokenize+hash
+    # (ReuseExchange shares subtrees only at exchange boundaries). One
+    # narrow shuffle of the melted rows (k/rows_per_band per doc) on the
+    # join key IS that boundary: upstream runs once, and the join reads
+    # both sides from the same shuffle output.
+    melted = melted.repartition("band_id", "bkey")
+    a = melted.select(F.col("doc").alias("doc1"), "band_id", "bkey")
+    c = melted.select(F.col("doc").alias("doc2"), "band_id", "bkey")
+    return (
+        a.join(c, ["band_id", "bkey"])
+        .filter(F.col("doc1") < F.col("doc2"))
+        .select("doc1", "doc2")
+        .distinct()
+    )
 
 
 def ngram_jaccard_pairs(
@@ -206,23 +209,14 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     k: int = 8,
-    index: DataFrame | None = None,
     arrays: DataFrame | None = None,
 ) -> DataFrame:
     """(doc, mh0..mh{k-1}) — signatures are 32-char hex-chunk strings
-    (lexicographic min-hash).
-
-    Default path (r14): per-row ``array_min`` over the per-doc shingle
-    ARRAY — zero exchanges, no explode (see ``_sig_from_arrays`` for the
-    value-identity argument vs the exploded aggregate). ``arrays``
-    supplies a prebuilt/cached (doc, sh) frame (``shingle_arrays``) when
-    several stages share the tokenization pass. ``index`` supplies a
-    prebuilt EXPLODED (doc, shingle) frame — kept for callers that
-    already hold one; it uses the legacy groupBy aggregation. Passing
-    BOTH raises (see ``_one_substrate``)."""
-    _one_substrate(index, arrays)
-    if index is not None:
-        return index.groupBy("doc").agg(*H.minhash_aggs("shingle", k))
+    (lexicographic min-hash), computed per row from the doc's shingle
+    array: zero exchanges, no explode (see ``_sig_from_arrays``).
+    ``arrays`` supplies a prebuilt/cached (doc, sh) frame
+    (``shingle_arrays``) when several stages share the tokenization
+    pass."""
     if arrays is None:
         arrays = shingle_arrays(df, id_col, text_col, n)
     return _sig_from_arrays(arrays, k)
@@ -235,20 +229,12 @@ def melted_band_keys(
     n: int = 3,
     k: int = 8,
     rows_per_band: int = 2,
-    index: DataFrame | None = None,
     arrays: DataFrame | None = None,
 ) -> DataFrame:
     """(doc, band_id, bkey) LSH band rows — the storable/joinable index
     form of a MinHash signature (k/rows_per_band rows per document)."""
-    sig = minhash_signatures(
-        df, id_col, text_col, n, k, index=index, arrays=arrays
-    )
-    bands = sig.select(F.col("doc"), *H.band_keys(k, rows_per_band))
-    n_bands = k // rows_per_band
-    stack_args = ", ".join(f"{b}, band{b}" for b in range(n_bands))
-    return bands.select(
-        "doc", F.expr(f"stack({n_bands}, {stack_args}) AS (band_id, bkey)")
-    )
+    sig = minhash_signatures(df, id_col, text_col, n, k, arrays=arrays)
+    return _melt_bands(sig, H.band_keys(k, rows_per_band))
 
 
 def minhash_lsh_pairs(
@@ -258,7 +244,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     k: int = 8,
     rows_per_band: int = 2,
-    index: DataFrame | None = None,
     arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing ≥1 LSH band (doc1 < doc2).
@@ -267,36 +252,15 @@ def minhash_lsh_pairs(
     see ``_sig_from_arrays``) → band keys → *melt* the bands to
     (doc, band_id, key) rows → one self-equi-join on (band_id, key) →
     distinct pairs. Melting instead of a per-band join loop matters twice:
-    the signature computation runs once (identical-plan sides hit Spark's
-    ReuseExchange) instead of once per band per side, and bucket fan-out is
+    the signature computation runs once (both join sides read one
+    shuffle) instead of once per band per side, and bucket fan-out is
     bounded per band key, so cost is Σ bucket² — the point of LSH vs the
     quadratic join.
     """
-    melted = melted_band_keys(
-        df, id_col, text_col, n, k, rows_per_band, index=index,
-        arrays=arrays,
-    )
-    if index is None:
-        # The per-row signature pipeline has NO exchange of its own, so
-        # the self-join's two sides would each recompute tokenize+hash
-        # (ReuseExchange shares subtrees only at exchange boundaries).
-        # One narrow shuffle of the melted rows (4 per doc) on the join
-        # key IS that boundary: upstream runs once, and the join reads
-        # both sides from the same shuffle output (r14 A/B: restores
-        # the shared-computation property the old groupBy exchange
-        # provided, at 4× fewer md5 calls per shingle).
-        melted = melted.repartition("band_id", "bkey")
-    a = melted.select(
-        F.col("doc").alias("doc1"), F.col("band_id"), F.col("bkey")
-    )
-    c = melted.select(
-        F.col("doc").alias("doc2"), F.col("band_id"), F.col("bkey")
-    )
-    return (
-        a.join(c, ["band_id", "bkey"])
-        .filter(F.col("doc1") < F.col("doc2"))
-        .select("doc1", "doc2")
-        .distinct()
+    return _band_pairs(
+        melted_band_keys(
+            df, id_col, text_col, n, k, rows_per_band, arrays=arrays
+        )
     )
 
 
@@ -307,7 +271,6 @@ def minhash_lsh_pairs_fast(
     n: int = 3,
     k: int = 8,
     rows_per_band: int = 2,
-    index: DataFrame | None = None,
     arrays: DataFrame | None = None,
 ) -> DataFrame:
     """xxhash64 twin of ``minhash_lsh_pairs``: same plan shape, ~3× less
@@ -318,53 +281,23 @@ def minhash_lsh_pairs_fast(
     families). Use this at scale; use the md5 variant when results must be
     reproducible by other engines (xxhash64 seeds are Spark-specific).
     """
-    _one_substrate(index, arrays)
-    if index is not None:
-        sig = index.groupBy("doc").agg(
-            *[
-                F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"mh{i}")
-                for i in range(k)
-            ]
-        )
-    else:
-        # per-row long-min over the shingle array: the same hash multiset
-        # min (duplicates cannot change it; both forms drop shingle-less
-        # docs), with no explode and no exchange — see _sig_from_arrays
-        if arrays is None:
-            arrays = shingle_arrays(df, id_col, text_col, n)
+    if arrays is None:
+        arrays = shingle_arrays(df, id_col, text_col, n)
 
-        def _mh(i: int):  # closure factory: see _sig_from_arrays note
-            return F.array_min(
-                F.transform(F.col("sh"), lambda s: F.xxhash64(F.lit(i), s))
-            )
-
-        sig = arrays.select(
-            "doc", *[_mh(i).alias(f"mh{i}") for i in range(k)]
+    # per-row long-min over the shingle array, as in _sig_from_arrays
+    def _mh(i: int):  # closure factory: see _sig_from_arrays note
+        return F.array_min(
+            F.transform(F.col("sh"), lambda s: F.xxhash64(F.lit(i), s))
         )
-    n_bands = k // rows_per_band
+
+    sig = arrays.select("doc", *[_mh(i).alias(f"mh{i}") for i in range(k)])
     band_cols = [
         F.xxhash64(
             *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
         ).alias(f"band{b}")
-        for b in range(n_bands)
+        for b in range(k // rows_per_band)
     ]
-    bands = sig.select(F.col("doc"), *band_cols)
-    stack_args = ", ".join(f"{b}, band{b}" for b in range(n_bands))
-    melted = bands.select(
-        "doc", F.expr(f"stack({n_bands}, {stack_args}) AS (band_id, bkey)")
-    )
-    if index is None:
-        # shared-exchange point for the self-join — see the identical
-        # note in minhash_lsh_pairs
-        melted = melted.repartition("band_id", "bkey")
-    a = melted.select(F.col("doc").alias("doc1"), "band_id", "bkey")
-    c = melted.select(F.col("doc").alias("doc2"), "band_id", "bkey")
-    return (
-        a.join(c, ["band_id", "bkey"])
-        .filter(F.col("doc1") < F.col("doc2"))
-        .select("doc1", "doc2")
-        .distinct()
-    )
+    return _band_pairs(_melt_bands(sig, band_cols))
 
 
 def minhash_dedup_verified(
@@ -376,7 +309,6 @@ def minhash_dedup_verified(
     rows_per_band: int = 2,
     threshold: float = 0.5,
     fast: bool = False,
-    index: DataFrame | None = None,
     arrays: DataFrame | None = None,
     verify_filter_threshold: int = 100_000,
 ) -> DataFrame:
@@ -392,39 +324,25 @@ def minhash_dedup_verified(
     path's exact-duplicate output cross-engine verifiable even though
     xxhash64 itself is Spark-specific.
 
-    Default substrate (r14): ONE per-doc shingle-ARRAY pass
-    (``shingle_arrays``, lazily checkpointed) feeds both stages —
-    signatures are per-row ``array_min`` reductions and the verification
-    set is ``sort_array(sh)``, so the tokenize pass runs once and the
-    explode + two groupBy exchanges of the index form disappear
-    (guide §2.4). ``arrays`` supplies a prebuilt (doc, sh) frame — pass
-    a CACHED one (the curation job does) when other stages share the
-    tokenization. ``index`` supplies a prebuilt EXPLODED (doc, shingle)
-    frame instead and keeps the legacy aggregate verification shape.
-    Passing BOTH raises (see ``_one_substrate``)."""
-    _one_substrate(index, arrays)
-    base = None
-    if index is None:
-        base = (
-            arrays
-            if arrays is not None
-            else shingle_arrays(df, id_col, text_col, n).localCheckpoint(
-                eager=False
-            )
+    ONE per-doc shingle-array pass (``shingle_arrays``, lazily
+    checkpointed) feeds both stages — signatures are per-row
+    ``array_min`` reductions and the verification set is
+    ``sort_array(sh)``, so the tokenize pass runs once with no explode
+    and no groupBy exchange (guide §2.4). ``arrays`` supplies a prebuilt
+    (doc, sh) frame — pass a CACHED one (the curation job does) when
+    other stages share the tokenization."""
+    base = (
+        arrays
+        if arrays is not None
+        else shingle_arrays(df, id_col, text_col, n).localCheckpoint(
+            eager=False
         )
-    if fast:
-        cand = minhash_lsh_pairs_fast(
-            df, id_col, text_col, n, k, rows_per_band, index=index,
-            arrays=base,
-        )
-    else:
-        cand = minhash_lsh_pairs(
-            df, id_col, text_col, n, k, rows_per_band, index=index,
-            arrays=base,
-        )
+    )
+    pairs_of = minhash_lsh_pairs_fast if fast else minhash_lsh_pairs
+    cand = pairs_of(df, id_col, text_col, n, k, rows_per_band, arrays=base)
     # Materialize the candidate pairs once: they are consumed by several
     # branches below (the intersection join, and in the sparse regime two
-    # index semi-filters), and un-materialized each branch would re-run
+    # array semi-filters), and un-materialized each branch would re-run
     # the signature computation + band self-join. Candidate count is
     # bounded by Σ bucket² (the LSH guarantee), so the checkpoint is
     # dup-scale, never corpus-scale. LAZY + count (r14): the count action
@@ -434,39 +352,30 @@ def minhash_dedup_verified(
     cand = cand.localCheckpoint(eager=False)
     # Adaptive verification plan, keyed on the (now cheap) candidate
     # count. Sparse regime — the 100 TB norm, few near-dups in a huge
-    # corpus: semi-filter the index to candidate docs first, so the
-    # candidate-doc set broadcasts under AQE and the full index is never
-    # shuffled on (doc, shingle) to intersect a handful of pairs
-    # (measured: a 4.5M-row shuffle for 491 candidates at sf0.1).
-    # Dense regime — candidates cover much of the corpus (adversarial
-    # dup-heavy corpora): the filter removes little but adds extra index
-    # passes, so join the full index directly.
+    # corpus: semi-filter the arrays to candidate docs first, so the
+    # candidate-doc set broadcasts under AQE and the full substrate is
+    # never shuffled to verify a handful of pairs. Dense regime —
+    # candidates cover much of the corpus (adversarial dup-heavy
+    # corpora): the filter removes little but adds an extra pass, so
+    # join the full substrate directly.
     sparse = cand.count() <= verify_filter_threshold
+    vsrc = base
     if sparse:
         cdocs = (
             cand.select(F.col("doc1").alias("doc"))
             .unionByName(cand.select(F.col("doc2").alias("doc")))
             .distinct()
         )
-    # Verification over per-doc shingle-SET ARRAYS, never the exploded
-    # index: candidates join two array lookups on doc. Rows shuffled =
-    # |docs| + 2|cand|, never |docs| × |shingles|. The r12 form — an
-    # intersect sort-merge join on (doc, shingle) — sorted the FULL
-    # exploded index in the dense regime: the r13 sf10 probe (dup-dense
-    # 1.5M-doc corpus, 225M index rows) measured it spilling >72 GiB and
-    # dying ENOSPC, a cluster-killer shape at 100 TB (TUNING.md r13).
-    # With the r14 array substrate the canonical set is sort_array(sh)
-    # per row — value-identical to sort_array(collect_set(shingle)) over
-    # the exploded rows (sh is already distinct) with no groupBy
-    # exchange at all.
-    if base is not None:
-        vsrc = base.join(cdocs, "doc", "left_semi") if sparse else base
-        sets = vsrc.select("doc", F.sort_array("sh").alias("shset"))
-    else:
-        vidx = index.join(cdocs, "doc", "left_semi") if sparse else index
-        sets = vidx.groupBy("doc").agg(
-            F.sort_array(F.collect_set("shingle")).alias("shset")
-        )
+        vsrc = base.join(cdocs, "doc", "left_semi")
+    # Verification over per-doc shingle-SET ARRAYS: candidates join two
+    # array lookups on doc. Rows shuffled = |docs| + 2|cand|, never
+    # |docs| × |shingles|. The r12 form — an intersect sort-merge join on
+    # exploded (doc, shingle) rows — sorted the FULL exploded corpus in
+    # the dense regime: the r13 sf10 probe (dup-dense 1.5M-doc corpus,
+    # 225M exploded rows) measured it spilling >72 GiB and dying ENOSPC,
+    # a cluster-killer shape at 100 TB (TUNING.md r13). The canonical set
+    # is sort_array(sh) per row (sh is already distinct).
+    sets = vsrc.select("doc", F.sort_array("sh").alias("shset"))
     pairs = cand.join(
         sets.select(F.col("doc").alias("doc1"), F.col("shset").alias("sh_a")),
         "doc1",
@@ -481,7 +390,7 @@ def minhash_dedup_verified(
         return pairs.filter(F.col("sh_a") == F.col("sh_b")).select(
             "doc1", "doc2", F.lit(1.0).alias("jaccard")
         )
-    out = (
+    return (
         pairs.withColumn(
             "inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
         )
@@ -503,7 +412,6 @@ def minhash_dedup_verified(
         )
         .select("doc1", "doc2", "jaccard")
     )
-    return out
 
 
 def jaccard_prefix_pairs(

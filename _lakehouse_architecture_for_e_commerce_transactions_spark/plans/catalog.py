@@ -9930,7 +9930,3 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {name: qd.oracle for name, qd in CATALOG.items() if qd.oracle}
-
-
-def headline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: qd.builder for n, qd in CATALOG.items() if qd.headline}

@@ -2284,25 +2284,20 @@ def delete_where(
             )
         return base.version + 1
 
-    # partition-granular: find partitions holding matching rows (bounded
-    # by partition count — the same contract as merge's scoped_upsert)
-    hit_rows = data.filter(cond).select(*parts).distinct().collect()
-    if not hit_rows:
-        return base.version
-    affected = {tuple(str(r[p]) for p in parts) for r in hit_rows}
-    import functools
-    import operator
-
-    part_match = functools.reduce(
-        operator.or_,
-        (
-            functools.reduce(
-                operator.and_,
-                (F.col(p).eqNullSafe(F.lit(r[p])) for p in parts),
-            )
-            for r in hit_rows
-        ),
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
+        merge as M,
     )
+
+    # partition-granular: find partitions holding matching rows (bounded
+    # by partition count — the same contract as merge's scoped_upsert),
+    # named as the manifest's entries are (hive-directory form, so a NULL
+    # value matches its __HIVE_DEFAULT_PARTITION__ entry)
+    _, dirs, part_match = M.partition_scope(
+        data.filter(cond).select(*parts).distinct(), parts
+    )
+    if not dirs:
+        return base.version
+    affected = set(dirs)
     survivors = data.filter(part_match).filter(~cond)
     commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
     (

@@ -192,10 +192,6 @@ def table_row_count(sf_dir: str, name: str) -> int:
     return int(_ds.dataset(f"{sf_dir}/{name}.parquet").count_rows())
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose the testdata tables to ``spark.sql`` by name (catalog surface,
     SURVEY.md §2.1 S8 — Spark's catalog replaces the Glue crawler)."""

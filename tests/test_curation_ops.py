@@ -136,9 +136,10 @@ def test_repetition_signals(spark):
 
 
 def test_contamination_prebuilt_index_equivalent(spark):
-    """contamination_ratios(index=...) must equal the self-built path
-    exactly — including (0,0,0.0) rows for docs shorter than n — even
-    when the index covers a superset of the train frame."""
+    """contamination_ratios(arrays=...) over a prebuilt shingle substrate
+    must equal the self-built path exactly — including (0,0,0.0) rows for
+    docs shorter than n — even when the substrate covers a superset of
+    the train frame."""
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
         contamination as CON,
     )
@@ -154,17 +155,19 @@ def test_contamination_prebuilt_index_equivalent(spark):
     ]
     train = spark.createDataFrame(rows, "doc_id long, text string")
     ev = spark.createDataFrame([(99, "a b c d")], "doc_id long, text string")
-    # superset index: includes a doc not in train
+    # superset substrate: includes a doc not in train
     sup = train.unionByName(
         spark.createDataFrame([(50, "m n o p q")], "doc_id long, text string")
     )
-    idx = TD.shingle_index(sup, "doc_id", "text", n=3)
+    arrays = TD.shingle_arrays(sup, "doc_id", "text", n=3)
     want = sorted(
         tuple(r) for r in CON.contamination_ratios(train, ev, n=3).collect()
     )
     got = sorted(
         tuple(r)
-        for r in CON.contamination_ratios(train, ev, n=3, index=idx).collect()
+        for r in CON.contamination_ratios(
+            train, ev, n=3, arrays=arrays
+        ).collect()
     )
     assert got == want
     assert any(r[0] == 3 and r[1] == 0 and r[3] == 0.0 for r in got)

@@ -58,6 +58,66 @@ def test_pricing_summary_whole_stage_codegen(spark, sf_dir):
         spark.conf.set(key, prev)
 
 
+def test_codegen_on_and_off_give_equal_rows(spark):
+    """The test session runs with whole-stage codegen off; production
+    runs it on. The deterministic transcendentals and the
+    higher-order-function array paths must give the same rows both
+    ways (each frame is rebuilt per setting, so each is planned under
+    it)."""
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.functions import (
+        detmath as DM,
+    )
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
+        textdedup as TD,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog again and again today"),
+            (2, "the quick brown fox jumps over the lazy dog again and again today"),
+            (3, "the quick brown fox jumps over a sleepy dog again and again today"),
+            (4, "completely different text about spark optimization rounds"),
+            (5, "two words"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def frames():
+        x = (F.col("id") / F.lit(500.0)).alias("x")
+        return {
+            "detmath": spark.range(-1000, 1000).select(
+                "id", DM.det_exp(x).alias("e"), DM.det_exp_fold(x).alias("ef")
+            ),
+            "log2": spark.range(1, 2000).select(
+                "id", DM.det_log2_int(F.col("id")).alias("l")
+            ),
+            "signatures": TD.minhash_signatures(docs, "doc_id", "text", n=3, k=8),
+            "lsh_fast": TD.minhash_lsh_pairs_fast(docs, "doc_id", "text", n=3, k=8),
+            "spans": TD.duplicate_span_pairs(docs, span_tokens=4),
+        }
+
+    def collect_all():
+        return {
+            name: sorted(tuple(r) for r in df.collect())
+            for name, df in frames().items()
+        }
+
+    key = "spark.sql.codegen.wholeStage"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert explain.codegen_stage_count(frames()["detmath"]) >= 1
+        on = collect_all()
+        spark.conf.set(key, "false")
+        off = collect_all()
+    finally:
+        spark.conf.set(key, prev)
+    assert on == off
+    assert len(on["detmath"]) == 2000 and len(on["log2"]) == 1999
+    assert (1, 2) in {r[:2] for r in on["lsh_fast"]}
+    assert (1, 2) in {r[:2] for r in on["spans"]}
+
+
 def test_merge_sim_no_python_udf(spark, sf_dir):
     explain.assert_no_python_row_udf(catalog.q_merge_upsert_sim(spark, sf_dir))
 

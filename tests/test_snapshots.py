@@ -204,6 +204,35 @@ def test_merge_commit_null_partition_upsert_replaces_its_entry(spark, tmp_path):
     assert parts == [("__HIVE_DEFAULT_PARTITION__",), ("a",)]
 
 
+def test_delete_where_null_partition_replaces_its_entry(spark, tmp_path):
+    """Deleting pk=1 from the NULL partition replaces the
+    __HIVE_DEFAULT_PARTITION__ entry: the deleted row must not be carried
+    in the old entry, and pk=2 (same partition) must appear once."""
+    path = str(tmp_path / "t")
+    S.merge_commit(
+        spark, _mdf(spark, [(1, 1.0, None), (2, 2.0, None), (3, 3.0, "a")]), path, MSPEC
+    )
+    S.delete_where(spark, path, "pk = 1")
+    rows = S.read(spark, path).select("pk", "amt", "part").collect()
+    assert sorted(tuple(r) for r in rows) == [(2, 2.0, None), (3, 3.0, "a")]
+    parts = sorted(tuple(e["parts"]) for e in S.load_snapshot(path).part_entries)
+    assert parts == [("__HIVE_DEFAULT_PARTITION__",), ("a",)]
+
+
+def test_delete_where_plans_a_thousand_affected_partitions(spark, tmp_path):
+    """The rewrite's partition predicate names every partition holding a
+    deleted row; a delete touching a thousand must still plan (a
+    left-deep OR chain of that many terms overflows the JVM stack during
+    analysis)."""
+    path = str(tmp_path / "t")
+    S.merge_commit(
+        spark, _mdf(spark, [(i, float(i), f"p{i}") for i in range(1010)]), path, MSPEC
+    )
+    S.delete_where(spark, path, "pk < 1000")
+    assert S.read(spark, path).count() == 10
+    assert len(S.load_snapshot(path).part_entries) == 10
+
+
 def test_merge_commit_disjoint_partitions_rebase(spark, tmp_path, monkeypatch):
     """A writer that loses the manifest race to a DISJOINT-partition commit
     must rebase and succeed, keeping both commits' rows."""

@@ -1,12 +1,14 @@
-"""Value-identity pins for the r14 array-substrate MinHash paths.
+"""Value-identity pins for the array-substrate MinHash paths.
 
-The optimization replaced the exploded shingle index + groupBy
-aggregations (signatures, verification sets) with per-row array
-reductions over ``shingle_arrays``. These tests pin the claimed
-bit-identities on a corpus that exercises the edge semantics:
+Signatures and verification sets are per-row array reductions over
+``shingle_arrays``. These tests pin them against a reference built here
+from the exploded (doc, shingle) rows: ``groupBy`` + ``H.minhash_aggs``
+(or ``F.min(xxhash64)``) signatures, band candidates and exact Jaccard
+over the collected shingle sets. The corpus exercises the edge
+semantics:
 
 * blank text / text shorter than ``n`` tokens (empty shingle array —
-  absent from the exploded index via explode, absent from the array
+  absent from the exploded rows via explode, absent from the array
   substrate via the ``size > 0`` filter),
 * exact duplicates (identical shingle sets ⇒ jaccard 1.0 pairs),
 * near duplicates straddling the 0.5 threshold,
@@ -15,11 +17,16 @@ bit-identities on a corpus that exercises the edge semantics:
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import pytest
 from pyspark.sql import functions as F
 
 from _lakehouse_architecture_for_e_commerce_transactions_spark.functions import (
     hashing as H,
+)
+from _lakehouse_architecture_for_e_commerce_transactions_spark.functions import (
+    text as T,
 )
 from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
     textdedup as TD,
@@ -48,12 +55,58 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _index(df):
+    """The exploded (doc, shingle) reference rows: one row per distinct
+    word 3-gram of each doc, shingle-less docs dropped by ``explode``."""
+    return df.select(
+        F.col("doc_id").alias("doc"),
+        F.explode(T.shingles(F.col("text"), 3)).alias("shingle"),
+    )
+
+
+def _index_signatures(idx, k, fast):
+    """Signatures as a per-doc aggregate over the exploded rows."""
+    if fast:
+        return idx.groupBy("doc").agg(
+            *[
+                F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"mh{i}")
+                for i in range(k)
+            ]
+        )
+    return idx.groupBy("doc").agg(*H.minhash_aggs("shingle", k))
+
+
+def _reference_verified(df, k, rows_per_band, threshold, fast):
+    """(doc1, doc2, jaccard) computed from the exploded rows: docs
+    sharing a band (equal signature slices) are candidates, verified by
+    exact Jaccard of their shingle sets on the exact rational."""
+    idx = _index(df)
+    sigs = {
+        r["doc"]: [r[f"mh{i}"] for i in range(k)]
+        for r in _index_signatures(idx, k, fast).collect()
+    }
+    sets = {}
+    for r in idx.collect():
+        sets.setdefault(r["doc"], set()).add(r["shingle"])
+    out = []
+    for d1, d2 in combinations(sorted(sigs), 2):
+        if not any(
+            sigs[d1][b : b + rows_per_band] == sigs[d2][b : b + rows_per_band]
+            for b in range(0, k, rows_per_band)
+        ):
+            continue
+        inter = len(sets[d1] & sets[d2])
+        union = len(sets[d1] | sets[d2])
+        if inter >= threshold * union:
+            out.append((d1, d2, round(inter / union, 6)))
+    return sorted(out)
+
+
 def test_shingle_index_equals_explode_of_arrays(spark):
     df = _corpus(spark)
-    idx = TD.shingle_index(df, "doc_id", "text", n=3)
     arr = TD.shingle_arrays(df, "doc_id", "text", n=3)
     exploded = arr.select("doc", F.explode("sh").alias("shingle"))
-    assert _rows(idx) == _rows(exploded)
+    assert _rows(_index(df)) == _rows(exploded)
     # blank/short/NULL docs appear in neither representation
     docs = {r["doc"] for r in arr.select("doc").distinct().collect()}
     assert docs == {1, 2, 3, 4, 7}
@@ -61,26 +114,13 @@ def test_shingle_index_equals_explode_of_arrays(spark):
 
 def test_md5_signatures_match_exploded_aggregation(spark):
     df = _corpus(spark)
-    k = 8
-    arr_sig = TD.minhash_signatures(df, "doc_id", "text", n=3, k=k)
-    legacy = (
-        TD.shingle_index(df, "doc_id", "text", n=3)
-        .groupBy("doc")
-        .agg(*H.minhash_aggs("shingle", k))
-    )
-    assert _rows(arr_sig) == _rows(legacy)
+    arr_sig = TD.minhash_signatures(df, "doc_id", "text", n=3, k=8)
+    assert _rows(arr_sig) == _rows(_index_signatures(_index(df), 8, False))
 
 
 def test_xxhash_signatures_match_exploded_aggregation(spark):
     df = _corpus(spark)
     k = 8
-    idx = TD.shingle_index(df, "doc_id", "text", n=3)
-    legacy = idx.groupBy("doc").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"mh{i}")
-            for i in range(k)
-        ]
-    )
     arr = TD.shingle_arrays(df, "doc_id", "text", n=3)
 
     def _mh(i):
@@ -89,7 +129,7 @@ def test_xxhash_signatures_match_exploded_aggregation(spark):
         )
 
     fast_sig = arr.select("doc", *[_mh(i).alias(f"mh{i}") for i in range(k)])
-    assert _rows(fast_sig) == _rows(legacy)
+    assert _rows(fast_sig) == _rows(_index_signatures(_index(df), k, True))
 
 
 @pytest.mark.parametrize("fast", [False, True])
@@ -99,30 +139,20 @@ def test_verified_pairs_match_legacy_index_path(spark, fast, threshold):
     via_arrays = TD.minhash_dedup_verified(
         df, "doc_id", "text", n=3, k=8, threshold=threshold, fast=fast
     )
-    legacy_idx = TD.shingle_index(df, "doc_id", "text", n=3)
-    via_index = TD.minhash_dedup_verified(
-        df, "doc_id", "text", n=3, k=8, threshold=threshold, fast=fast,
-        index=legacy_idx,
-    )
-    assert _rows(via_arrays) == _rows(via_index)
+    got = _rows(via_arrays)
+    assert got == _reference_verified(df, 8, 2, threshold, fast)
     # the exact dup must always be found
-    pair_ids = {(r["doc1"], r["doc2"]) for r in via_arrays.collect()}
-    assert (1, 2) in pair_ids
+    assert (1, 2, 1.0) in got
 
 
 def test_verified_dense_regime_matches(spark):
-    # force the dense branch (no candidate-doc semi filter) on both paths
+    # force the dense branch (no candidate-doc semi filter)
     df = _corpus(spark)
     via_arrays = TD.minhash_dedup_verified(
         df, "doc_id", "text", n=3, k=8, threshold=0.5,
         verify_filter_threshold=0,
     )
-    via_index = TD.minhash_dedup_verified(
-        df, "doc_id", "text", n=3, k=8, threshold=0.5,
-        index=TD.shingle_index(df, "doc_id", "text", n=3),
-        verify_filter_threshold=0,
-    )
-    assert _rows(via_arrays) == _rows(via_index)
+    assert _rows(via_arrays) == _reference_verified(df, 8, 2, 0.5, False)
 
 
 def test_contamination_arrays_matches_index_and_direct(spark):
@@ -136,20 +166,23 @@ def test_contamination_arrays_matches_index_and_direct(spark):
         "doc_id long, text string",
     )
     direct = CON.contamination_ratios(train, ev, n=3)
-    via_index = CON.contamination_ratios(
-        train, ev, n=3, index=TD.shingle_index(train, "doc_id", "text", n=3)
-    )
     via_arrays = CON.contamination_ratios(
         train, ev, n=3, arrays=TD.shingle_arrays(train, "doc_id", "text", n=3)
     )
-    # index/arrays cover only shingle-bearing docs; the direct path also
-    # emits (0, 0, 0.0) rows for blank/short docs it sees in `train` —
-    # compare on the docs the substrate covers, plus the documented
-    # zero-row contract for the rest
+    # reference from the exploded rows: per doc, distinct 3-grams and
+    # those that occur in the eval set
+    ev_grams = {r["shingle"] for r in _index(ev).collect()}
+    grams = {}
+    for r in _index(train).collect():
+        grams.setdefault(r["doc"], []).append(r["shingle"])
+    ref = {}
+    for doc, gs in grams.items():
+        hits = sum(g in ev_grams for g in gs)
+        ref[doc] = (doc, len(gs), hits, round(hits / len(gs), 6))
+    # the arrays path emits (0, 0, 0.0) rows for blank/short docs it sees
+    # in `train`, exactly as the direct path does
     d_rows = {r["doc_id"]: tuple(r) for r in direct.collect()}
-    i_rows = {r["doc_id"]: tuple(r) for r in via_index.collect()}
     a_rows = {r["doc_id"]: tuple(r) for r in via_arrays.collect()}
-    assert i_rows == a_rows
-    for doc, row in a_rows.items():
-        if row[1] > 0:
-            assert d_rows[doc] == row
+    assert a_rows == d_rows
+    assert {d: r for d, r in a_rows.items() if r[1] > 0} == ref
+    assert all(a_rows[d] == (d, 0, 0, 0.0) for d in (5, 6, 8))
