@@ -113,6 +113,15 @@ def _any_of(terms: list[Column]) -> Column:
     return _any_of(terms[:mid]) | _any_of(terms[mid:])
 
 
+def _any_of_sql(terms: list[str]) -> str:
+    """``_any_of`` as SQL text: the parser, too, builds a left-deep
+    tree from a flat ``a OR b OR ...`` chain."""
+    if len(terms) == 1:
+        return terms[0]
+    mid = len(terms) // 2
+    return f"({_any_of_sql(terms[:mid])} OR {_any_of_sql(terms[mid:])})"
+
+
 def partition_scope(
     parts_df: DataFrame, parts: list[str], *extra: Column
 ) -> tuple[list[Row], list[tuple[str, ...]], Column]:
@@ -122,7 +131,16 @@ def partition_scope(
     form (Spark's string cast, unescaped; NULL and '' are _HIVE_NULL —
     what partition-granular snapshot entries and ``_hive_leaf_dirs``
     compare against) and a literal NULL-safe predicate selecting exactly
-    those partitions, which the file index prunes with."""
+    those partitions, which the file index prunes with.
+
+    The predicate is ONE parsed SQL expression (the ``util.in_list``
+    idiom): building it from Columns costs a py4j call per literal and
+    per OR — about 9 s for a thousand partitions. Values without an
+    exact SQL text form fall back to Columns."""
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
+        util as U,
+    )
+
     types = [parts_df.schema[p].dataType for p in parts]
     rows = parts_df.select(
         *parts,
@@ -131,20 +149,33 @@ def partition_scope(
     ).collect()
     n = len(parts)
     dirs = [tuple(d if d else _HIVE_NULL for d in r[n : 2 * n]) for r in rows]
+    if not rows:
+        return rows, dirs, F.lit(False)
     # a value whose directory is _HIVE_NULL (NULL, or a string '') reads
     # back as NULL, so the predicate must name it as NULL
+    values = [
+        [None if d == _HIVE_NULL else v for v, d in zip(r[:n], dr)]
+        for r, dr in zip(rows, dirs)
+    ]
+    lits = [[U.sql_literal(v) for v in vs] for vs in values]
+    if all(lit is not None for ls in lits for lit in ls):
+        return rows, dirs, F.expr(_any_of_sql([
+            "(" + " AND ".join(
+                f"{U.sql_ident(p)} <=> CAST({lit} AS {t.simpleString()})"
+                for p, t, lit in zip(parts, types, ls)
+            ) + ")"
+            for ls in lits
+        ]))
     pred = _any_of(
         [
             reduce(
                 operator.and_,
                 (
-                    F.col(p).eqNullSafe(
-                        F.lit(None if d == _HIVE_NULL else v).cast(t)
-                    )
-                    for p, t, v, d in zip(parts, types, r[:n], dr)
+                    F.col(p).eqNullSafe(F.lit(v).cast(t))
+                    for p, t, v in zip(parts, types, vs)
                 ),
             )
-            for r, dr in zip(rows, dirs)
+            for vs in values
         ]
     )
     return rows, dirs, pred

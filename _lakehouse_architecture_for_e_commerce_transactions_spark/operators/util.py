@@ -45,6 +45,35 @@ def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.range(1).select(F.inline(F.array(*structs)))
 
 
+def sql_literal(v) -> str | None:
+    """``v`` rendered as a Spark SQL literal, or None when the type has
+    no exact text form here (timestamps, decimals, binary, non-finite
+    floats) and the caller must fall back to ``F.lit``."""
+    import datetime as _dt
+    import math
+
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):  # before int: bool is an int subclass
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return repr(v) if math.isfinite(v) else None
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, _dt.datetime):  # before date: datetime is a date
+        return None
+    if isinstance(v, _dt.date):
+        return f"DATE '{v.isoformat()}'"
+    return None
+
+
+def sql_ident(name: str) -> str:
+    """A column name quoted for Spark SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def in_list(col_name: str, values) -> "F.Column":
     """``F.col(col_name).isin(values)`` built as ONE parsed SQL
     expression instead of one py4j round-trip per element.
@@ -58,37 +87,15 @@ def in_list(col_name: str, values) -> "F.Column":
     JVM one expression to parse — identical semantics (Catalyst ``In``
     over the same literals, same null/coercion behavior).
 
-    Fast-path types: str, bool, int, finite float, date, None. Anything
-    else (timestamps, decimals, binary, non-finite floats) falls back to
-    ``isin`` so literal fidelity is never at risk. Empty lists also fall
-    back (``IN ()`` does not parse).
+    Fast-path types: those ``sql_literal`` renders. Anything else falls
+    back to ``isin`` so literal fidelity is never at risk. Empty lists
+    also fall back (``IN ()`` does not parse).
     """
-    import datetime as _dt
-    import math
-
-    def render(v) -> str | None:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):  # before int: bool is an int subclass
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, int):
-            return str(v)
-        if isinstance(v, float):
-            return repr(v) if math.isfinite(v) else None
-        if isinstance(v, str):
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        if isinstance(v, _dt.datetime):  # before date: datetime is a date
-            return None
-        if isinstance(v, _dt.date):
-            return f"DATE '{v.isoformat()}'"
-        return None
-
     vals = list(values)
-    rendered = [render(v) for v in vals]
+    rendered = [sql_literal(v) for v in vals]
     if not vals or any(r is None for r in rendered):
         return F.col(col_name).isin(vals)
-    quoted = "`" + col_name.replace("`", "``") + "`"
-    return F.expr(f"{quoted} IN ({', '.join(rendered)})")
+    return F.expr(f"{sql_ident(col_name)} IN ({', '.join(rendered)})")
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

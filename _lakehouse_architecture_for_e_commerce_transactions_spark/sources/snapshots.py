@@ -60,6 +60,35 @@ Iceberg metadata layers, small enough to audit:
   a translation); a RENAME/DROP landing mid-write conflicts instead
   of publishing mislabeled files.
 
+Commit protocol
+---------------
+Every writer publishes through ONE optimistic loop, ``_publish``. Each
+attempt reads the head manifest once, refuses a RENAME/DROP COLUMN that
+landed after the writer's data write, applies the writer's conflict
+rule, and calls its ``build(head, head_manifest)``, which returns only
+what differs (a ``_Change``). One rule each then derives the rest: the
+writer's named stats/bloom columns, else the table's (kept files carry
+their sidecar entries by name, fresh files get new sidecars); deletion
+vectors carry while any head file stays; NDV sketches survive only
+when the writer hands them over; the column mapping is the head's
+unless the writer sets it. A lost race deletes that attempt's orphan
+dirs and retries; a conflict raises ``WriteConflict``:
+
+  ====================================  ================================
+  writer                                when another commit lands first
+  ====================================  ================================
+  commit, restore                       retry on top of the winner
+  merge_commit, delete_where            rebase if the partition sets are
+  (partition-granular), compact_where   disjoint, else conflict
+  merge_commit, delete_where (plain)    conflict
+  delete_where_dv, delete_matching_dv,  re-evaluate against the new head
+  update_where_dv, replace_where_commit
+  compact                               restart the rewrite
+  clone, rename_column, drop_column     conflict
+  ====================================  ================================
+
+(``compact_where`` restarts its scoped rewrite on a conflict.)
+
 Scale notes: the manifest lists commit *directories*, not individual
 files, so manifest size grows with commit count, not data size; the
 per-FILE metadata (stats/blooms/dv-dead counts) lives in immutable
@@ -75,13 +104,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Mapping
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 _MANIFESTS = "_manifests"
 _DATA = "data"
@@ -165,25 +196,6 @@ def _try_publish_manifest(path: str, version: int, manifest: dict) -> bool:
     """
     mdir = os.path.join(path, _MANIFESTS)
     os.makedirs(mdir, exist_ok=True)
-    # Column-mapping state flows through EVERY publish: a publisher
-    # that doesn't manage it inherits the predecessor's mapping
-    # verbatim (setdefault — explicit keys, including explicit None
-    # from compact/restore/clone, win). Centralizing here means no
-    # write path can silently strip a mapping and misname columns.
-    if "column_mapping" not in manifest or "retired_physical" not in manifest:
-        prior = [v for v in _versions(path) if v < version]
-        if prior:
-            try:
-                with open(_manifest_path(path, prior[-1])) as pf:
-                    pm = json.load(pf)
-                manifest.setdefault(
-                    "column_mapping", pm.get("column_mapping")
-                )
-                manifest.setdefault(
-                    "retired_physical", pm.get("retired_physical")
-                )
-            except (OSError, json.JSONDecodeError):
-                pass
     tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as f:
         json.dump(manifest, f)
@@ -334,37 +346,38 @@ def _write_sidecar(path: str, entries: dict) -> str:
     return name
 
 
-def _carry_sidecars(
+def _next_sidecars(
     path: str,
-    refs: list[str] | None,
+    parent_manifest: dict | None,
+    kind: str,
     keep=None,
-    fresh: dict | None = None,
-    extra: dict | None = None,
-    summed: bool = False,
+    fresh=(),
 ) -> list[str]:
-    """The next manifest's sidecar name list. Carried names whose every
-    entry survives ``keep(key)`` ride by reference — zero rewrite;
-    dirty sidecars are rewritten without the dead entries (plus
-    ``extra``, the inline-migration bucket); ``fresh`` entries land in
-    their OWN new sidecar, never mixed into salvage — mixing would
-    re-dirty the combined sidecar on every later op that touches any
-    of its partitions. Publish cost = O(entries touched). ``summed``
-    selects the dv-delta algebra (entries add; otherwise later-wins).
-    Past _SIDECAR_FOLD names the list folds into one checkpoint
-    sidecar — amortized O(table)/_SIDECAR_FOLD per commit, and
-    ``compact`` folds to fresh anyway."""
+    """The next manifest's sidecar name list for ``kind`` in
+    stats|bloom|dv. The parent's names whose every entry survives
+    ``keep(key)`` ride by reference — zero rewrite; dirty sidecars are
+    rewritten without the dead entries (together with a pre-sidecar
+    parent's INLINE map, which migrates once); each non-empty map in
+    ``fresh`` lands in its OWN new sidecar, never mixed into salvage —
+    mixing would re-dirty the combined sidecar on every later op that
+    touches any of its partitions. Publish cost = O(entries touched).
+    dv entries are deltas that SUM; stats/blooms are later-wins. Past
+    _SIDECAR_FOLD names the list folds into one checkpoint sidecar —
+    amortized O(table)/_SIDECAR_FOLD per commit."""
     mdir = os.path.join(path, _MANIFESTS)
+    m = parent_manifest or {}
 
     def _acc(dst: dict, src: dict) -> None:
-        if summed:
+        if kind == "dv":
             for k, v in src.items():
                 dst[k] = dst.get(k, 0) + v
         else:
             dst.update(src)
 
     out: list[str] = []
-    salvage: dict = dict(extra or {})
-    for name in refs or []:
+    inline = m.get(_SC_INLINE[kind]) or {}
+    salvage = {k: v for k, v in inline.items() if keep is None or keep(k)}
+    for name in m.get(_SC_REFS[kind]) or []:
         if keep is None:
             out.append(name)
             continue
@@ -379,8 +392,7 @@ def _carry_sidecars(
             _acc(salvage, {k: v for k, v in ent.items() if keep(k)})
     if salvage:
         out.append(_write_sidecar(path, salvage))
-    if fresh:
-        out.append(_write_sidecar(path, fresh))
+    out += [_write_sidecar(path, ent) for ent in fresh if ent]
     if len(out) > _SIDECAR_FOLD:
         whole: dict = {}
         for name in out:
@@ -393,34 +405,18 @@ def _carry_sidecars(
     return out
 
 
-def _next_sidecars(
-    path: str,
-    parent_manifest: dict | None,
-    kind: str,
-    keep=None,
-    fresh: dict | None = None,
-) -> list[str]:
-    """Sidecar carry for one publish, ``kind`` in stats|bloom|dv: the
-    parent's names carry per `_carry_sidecars`; a pre-sidecar parent's
-    INLINE map migrates into the fresh sidecar once (transition path —
-    new-format tables never hit it)."""
-    summed = kind == "dv"
-    m = parent_manifest or {}
-    refs = list(m.get(_SC_REFS[kind]) or [])
-    inline = m.get(_SC_INLINE[kind])
-    kept_inline = (
-        {k: v for k, v in inline.items() if keep is None or keep(k)}
-        if inline
-        else None
-    )
-    return _carry_sidecars(
-        path,
-        refs,
-        keep=keep,
-        fresh=fresh,
-        extra=kept_inline,
-        summed=summed,
-    )
+def _read_manifest(path: str, v: int) -> dict:
+    with open(_manifest_path(path, v)) as f:
+        try:
+            return json.load(f)
+        except json.JSONDecodeError as e:
+            raise RuntimeError(
+                f"manifest v{v} at {path} is torn/unreadable — a "
+                "publish crashed mid-write (possible only on the "
+                "no-hardlink fallback path); delete "
+                f"{_manifest_path(path, v)} to expose the previous "
+                "version"
+            ) from e
 
 
 def load_snapshot(path: str, version: int | None = None) -> Snapshot:
@@ -438,17 +434,13 @@ def load_snapshot(path: str, version: int | None = None) -> Snapshot:
                 "keep_last)"
             )
         raise ValueError(f"version {v} not in {path} (have {vs})")
-    with open(_manifest_path(path, v)) as f:
-        try:
-            m = json.load(f)
-        except json.JSONDecodeError as e:
-            raise RuntimeError(
-                f"manifest v{v} at {path} is torn/unreadable — a "
-                "publish crashed mid-write (possible only on the "
-                "no-hardlink fallback path); delete "
-                f"{_manifest_path(path, v)} to expose the previous "
-                "version"
-            ) from e
+    return _snapshot(path, _read_manifest(path, v))
+
+
+def _snapshot(path: str, m: dict, dead_counts: bool = True) -> Snapshot:
+    """The Snapshot view of manifest ``m``. ``dead_counts=False`` skips
+    reading the dv sidecars (``dv_dead`` stays None) — for the commit
+    loop's head, whose writers carry dead counts by sidecar name."""
     mdir = os.path.join(path, _MANIFESTS)
 
     def lazy(kind: str) -> Mapping | None:
@@ -465,7 +457,7 @@ def load_snapshot(path: str, version: int | None = None) -> Snapshot:
     # always safe for pruning).
     dv_inline = m.get("dv_dead")
     dv_refs = m.get("dv_sidecars") or []
-    if dv_inline is None and not dv_refs:
+    if not dead_counts or (dv_inline is None and not dv_refs):
         dv_dead = None
     else:
         dv_dead = dict(dv_inline or {})
@@ -498,6 +490,249 @@ def load_snapshot(path: str, version: int | None = None) -> Snapshot:
     )
 
 
+# ---------------------------------------------------------------------------
+# The commit loop (see "Commit protocol" in the module docstring)
+# ---------------------------------------------------------------------------
+
+_MAX_ATTEMPTS = 10  # publish attempts before a writer gives up
+
+
+class WriteConflict(RuntimeError):
+    """Another commit landed that this writer may not publish over
+    (overlapping partitions, a moved head, a RENAME/DROP COLUMN after
+    its data write); re-run the operation against the new head."""
+
+
+@dataclass
+class _Change:
+    """What one commit attempt changes, relative to the head its build
+    saw; ``_publish`` derives every other manifest field from that
+    head. ``kept`` names which head files stay in the table: None =
+    all, () = none, else the dir prefixes of carried partitions."""
+
+    metrics: dict
+    dirs: list[str] | None = None
+    schema: str | None = None
+    entries: list[dict] | None = None  # partition-granular tables
+    partition_by: list[str] | None = None
+    kept: tuple[str, ...] | None = None
+    fresh: list[str] = field(default_factory=list)  # one sidecar each
+    stats_cols: list[str] | None = None  # None: keep the table's
+    bloom_cols: list[str] | None = None
+    dv_dir: str | None = None
+    dead: dict | None = None
+    ndv: dict | None = None
+    refs: dict | None = None  # republish these references verbatim
+    extra: dict = field(default_factory=dict)
+    orphans: tuple[str, ...] = ()  # deleted when the publish loses
+
+
+def _head(path: str) -> tuple[Snapshot | None, dict | None]:
+    """The head snapshot and its raw manifest from ONE manifest read."""
+    vs = _versions(path)
+    if not vs:
+        return None, None
+    m = _read_manifest(path, vs[-1])
+    return _snapshot(path, m, dead_counts=False), m
+
+
+_REFERENCE_KEYS = (
+    "dirs", "schema", "part_entries", "partition_by", "stats_cols",
+    "bloom_cols", "dv_files", "ndv_sketches",
+    *_SC_REFS.values(), *_SC_INLINE.values(),
+)
+
+
+def _references(m: dict) -> dict:
+    """Everything a manifest references (data, tombstones, sidecar
+    NAMES, sketches, column mapping) — what a metadata-only commit,
+    a restore or a clone republishes, at O(1) metadata cost."""
+    out = {k: m[k] for k in _REFERENCE_KEYS if m.get(k) is not None}
+    out["column_mapping"] = m.get("column_mapping")
+    out["retired_physical"] = m.get("retired_physical")
+    return out
+
+
+def _check_base(
+    path: str, op: str, head: Snapshot | None, base: int, affected
+) -> None:
+    """Refuse to publish over commits that landed after ``base`` (-1:
+    no table yet) unless ``affected`` partitions can rebase across
+    every one of them."""
+    have = -1 if head is None else head.version
+    if have == base:
+        return
+    if head is None:
+        raise RuntimeError(f"history at {path} vanished mid-commit")
+    if affected is None or base < 0:
+        raise WriteConflict(
+            f"write conflict at {path}: a concurrent commit published "
+            f"version {have} during this {op}; re-run it"
+        )
+    for v in range(base + 1, have + 1):
+        entries = _read_manifest(path, v).get("part_entries")
+        if entries is None or {
+            tuple(e["parts"]) for e in entries if e.get("changed")
+        } & affected:
+            raise WriteConflict(
+                f"write conflict at {path}: version {v} touched "
+                f"overlapping partitions; re-run the {op}"
+            )
+
+
+def _manifest(
+    path: str, version: int, op: str, ch: _Change,
+    head: Snapshot | None, head_m: dict | None,
+) -> dict:
+    m = {"version": version, "committed_at": time.time(), "op": op,
+         "metrics": ch.metrics}
+    if ch.refs is not None:
+        m.update(ch.refs)
+    else:
+        m["dirs"], m["schema"] = ch.dirs, ch.schema
+        if ch.entries is not None:
+            m["part_entries"] = ch.entries
+            m["partition_by"] = ch.partition_by
+        # metadata of head files the commit keeps carries by name;
+        # tombstones addressing rewritten files simply match nothing
+        kept_m = head_m if ch.kept != () else None
+        keep = None if not ch.kept else (lambda f: f.startswith(ch.kept))
+        dv = list(head.dv_files or []) if kept_m else []
+        if ch.dv_dir is not None:
+            dv.append(ch.dv_dir)
+        if dv:
+            m["dv_files"] = dv
+            scs = _next_sidecars(path, kept_m, "dv", fresh=[ch.dead or {}])
+            if scs:
+                m["dv_sidecars"] = scs
+        for kind, named, collect in (
+            ("stats", ch.stats_cols, collect_file_stats),
+            ("bloom", ch.bloom_cols, collect_file_blooms),
+        ):
+            cols = named
+            if cols is None and head is not None:
+                cols = getattr(head, f"{kind}_cols")
+            if cols:
+                m[_SC_REFS[kind]] = _next_sidecars(
+                    path, kept_m, kind, keep=keep,
+                    fresh=[collect([d], list(cols)) for d in ch.fresh],
+                )
+                m[f"{kind}_cols"] = list(cols)
+        if ch.ndv is not None:
+            m["ndv_sketches"] = ch.ndv
+    m.update(ch.extra)
+    if head_m is not None:
+        m.setdefault("column_mapping", head_m.get("column_mapping"))
+        m.setdefault("retired_physical", head_m.get("retired_physical"))
+    return m
+
+
+def _publish(
+    path: str,
+    op: str,
+    build,
+    base: int | None = None,
+    affected: set | None = None,
+    written_under: tuple[dict, set] | None = None,
+    create: bool = False,
+) -> int:
+    """THE optimistic-commit loop; returns the published version (or
+    the head's, when ``build`` returns None: nothing to commit).
+
+    ``base`` is the head version the writer read (-1: no table): a
+    commit landing after it conflicts, unless ``affected`` partitions
+    rebase across it. ``written_under`` is the (mapping, retired
+    names) the writer's data files were written under. ``create``
+    lets the writer start a table."""
+    for _ in range(_MAX_ATTEMPTS):
+        head, head_m = _head(path)
+        if head is None and base is None and not create:
+            raise FileNotFoundError(f"no snapshot table at {path}")
+        if written_under is not None and head is not None and (
+            _mapping(head) != written_under[0]
+            or set(head.retired_physical or []) != written_under[1]
+        ):
+            raise WriteConflict(
+                f"write conflict at {path}: concurrent RENAME/DROP "
+                f"COLUMN during {op}; re-run against the new schema"
+            )
+        if base is not None:
+            _check_base(path, op, head, base, affected)
+        ch = build(head, head_m)
+        if ch is None:
+            return head.version
+        version = 0 if head is None else head.version + 1
+        manifest = _manifest(path, version, op, ch, head, head_m)
+        if _try_publish_manifest(path, version, manifest):
+            return version
+        for d in ch.orphans:
+            shutil.rmtree(d, ignore_errors=True)
+    raise RuntimeError(
+        f"commit contention at {path}: {_MAX_ATTEMPTS} attempts"
+    )
+
+
+def _publish_rewrite(
+    path: str,
+    op: str,
+    base: int,
+    affected: set | None,
+    commit_dir: str,
+    parts: list[str],
+    schema: str,
+    written_under: tuple[dict, set],
+    fresh_changed: bool = True,
+    stats_cols: list[str] | None = None,
+    extra: dict | None = None,
+) -> int:
+    """Publish an already-written partition-granular rewrite (MERGE,
+    DELETE, scoped OPTIMIZE) built on version ``base`` (-1: none): the
+    rewrite replaces the ``affected`` partitions (None: the whole
+    table), every other head entry carries by reference, and the
+    commit rebases across concurrent commits that changed disjoint
+    partitions."""
+    fresh = _fresh_entries(commit_dir, parts, fresh_changed)
+    scope = affected
+    if scope is None:
+        scope = {tuple(e["parts"]) for e in fresh}
+    nf, nr = _dir_file_metrics([commit_dir])
+    # one stats sidecar per directory of fresh files: a later rewrite
+    # of one partition then dirties exactly one sidecar
+    fresh_dirs = sorted(
+        {os.path.dirname(f) for f in _parquet_files(commit_dir)}
+    )
+
+    def build(head, head_m):
+        carried = [
+            {**e, "changed": False}
+            for e in (head.part_entries or [] if head else [])
+            if tuple(e["parts"]) not in scope
+        ]
+        return _Change(
+            metrics={
+                "num_files_added": nf,
+                "num_output_rows": nr,
+                "num_partitions_changed": len(scope),
+                "num_partitions_carried": len(carried),
+            },
+            dirs=[commit_dir],
+            schema=schema,
+            entries=carried + fresh,
+            partition_by=parts,
+            # match on directory boundaries: a carried dir .../p=1 must
+            # not prefix-capture files of a rewritten sibling .../p=10
+            kept=tuple(e["dir"].rstrip(os.sep) + os.sep for e in carried),
+            fresh=fresh_dirs,
+            stats_cols=stats_cols,
+            extra=extra or {},
+        )
+
+    return _publish(
+        path, op, build, base=base, affected=affected,
+        written_under=written_under, create=True,
+    )
+
+
 # type-widening chains (Delta's typeWidening set for integral and
 # floating types): evolution may move a column RIGHTWARD along its
 # chain only — the table schema takes the wider of (table, incoming)
@@ -526,8 +761,6 @@ def _merged_schema_json(parent_json: str, df: DataFrame) -> str:
     becomes the wider of the two, a metadata-only update); any other
     type change — including narrowing and cross-kind changes — is a
     typed refusal (Delta's ``mergeSchema`` + typeWidening rule)."""
-    from pyspark.sql.types import StructField, StructType
-
     parent = StructType.fromJson(json.loads(parent_json))
     have = {f.name: f for f in parent.fields}
     merged = list(parent.fields)
@@ -734,10 +967,14 @@ def collect_file_blooms(
                 if not name.endswith(".parquet"):
                     continue
                 fpath = os.path.join(root, name)
-                tbl = pq.read_table(fpath, columns=list(cols))
+                pf = pq.ParquetFile(fpath)
+                # a file may lack an inherited bloom column (written
+                # after a DROP COLUMN): it gets no bloom for it
+                have = [c for c in cols if c in pf.schema_arrow.names]
+                tbl = pf.read(columns=have)
                 built = {
                     c: _bloom_build(tbl.column(c).to_pylist(), fpp)
-                    for c in cols
+                    for c in have
                 }
                 # a None build means no canonical form: record no bloom
                 # for that column so reads fail open rather than prune
@@ -794,9 +1031,9 @@ def _cluster_shape(
 def _raw_manifest(path: str, version: int | None = None) -> dict:
     """The manifest JSON verbatim — for fields the Snapshot dataclass
     doesn't surface (NDV sketches)."""
-    v = _versions(path)[-1] if version is None else version
-    with open(_manifest_path(path, v)) as f:
-        return json.load(f)
+    return _read_manifest(
+        path, _versions(path)[-1] if version is None else version
+    )
 
 
 def _mapping(snap: Snapshot) -> dict[str, str]:
@@ -824,8 +1061,6 @@ def _logical_select(raw: DataFrame, snap: Snapshot, extra: tuple = ()):
     rename mapped columns, null-fill columns a commit predates, cast
     to the manifest types. The one read-side seam every mapped-table
     consumer shares."""
-    from pyspark.sql.types import StructType
-
     schema = StructType.fromJson(json.loads(snap.schema_json))
     mapping = _mapping(snap)
     have = set(raw.columns)
@@ -880,59 +1115,20 @@ def _guard_mapping_refs(path: str, snap: Snapshot, col: str, op: str):
 
 
 def _publish_metadata_only(
-    path: str, snap: Snapshot, patch: dict, max_retries: int = 10
+    path: str, snap: Snapshot, op: str, metrics: dict, **patch
 ) -> int:
     """Publish a new head that references the SAME data as ``snap``
     with manifest fields overridden by ``patch`` — the RENAME/DROP
-    COLUMN commit shape (zero data movement, like restore)."""
-    for _ in range(max_retries):
-        head = load_snapshot(path)
-        if head.version != snap.version:
-            raise RuntimeError(
-                f"concurrent commit at {path} during metadata-only op "
-                f"(head moved {snap.version} -> {head.version}); re-run"
-            )
-        manifest = {
-            "version": snap.version + 1,
-            "dirs": snap.dirs,
-            "schema": snap.schema_json,
-            "committed_at": time.time(),
-            "column_mapping": snap.column_mapping,
-            "retired_physical": snap.retired_physical,
-        }
-        for k in (
-            "part_entries",
-            "partition_by",
-            "stats_cols",
-            "bloom_cols",
-            "dv_files",
-        ):
-            v = getattr(snap, k)
-            if v is not None:
-                manifest[k] = v
-        raw = _raw_manifest(path, snap.version)
-        # per-file stats/blooms/dv-deltas live in sidecar files; a
-        # metadata-only publish carries the NAMES — O(1), not O(table).
-        # Pre-sidecar inline maps carry verbatim (no migration cost).
-        for k in (
-            "stats_sidecars",
-            "bloom_sidecars",
-            "dv_sidecars",
-            "file_stats",
-            "file_blooms",
-            "dv_dead",
-        ):
-            if raw.get(k) is not None:
-                manifest[k] = raw[k]
-        # rows are untouched by a metadata-only op: NDV sketches (raw
-        # manifest field, physical keys) stay valid and carry over
-        ndv = raw.get("ndv_sketches")
-        if ndv is not None:
-            manifest["ndv_sketches"] = ndv
-        manifest.update(patch)
-        if _try_publish_manifest(path, snap.version + 1, manifest):
-            return snap.version + 1
-    raise RuntimeError(f"metadata-only publish contention at {path}")
+    COLUMN commit shape (zero data movement, like restore). Rows are
+    untouched, so NDV sketches carry too."""
+    return _publish(
+        path,
+        op,
+        lambda head, head_m: _Change(
+            metrics, refs={**_references(head_m), **patch}
+        ),
+        base=snap.version,
+    )
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -948,8 +1144,6 @@ def rename_column(path: str, old: str, new: str) -> int:
     Refused for columns referenced by partition layout/transforms,
     CHECK constraints, generated columns, or the identity column
     (their expressions name this column). Returns the new version."""
-    from pyspark.sql.types import StructField, StructType
-
     snap = load_snapshot(path)
     schema = StructType.fromJson(json.loads(snap.schema_json))
     names = [f.name for f in schema.fields]
@@ -973,12 +1167,10 @@ def rename_column(path: str, old: str, new: str) -> int:
     return _publish_metadata_only(
         path,
         snap,
-        {
-            "schema": new_schema.json(),
-            "column_mapping": mapping or None,
-            "op": "RENAME COLUMN",
-            "metrics": {"renamed_from": old, "renamed_to": new},
-        },
+        "RENAME COLUMN",
+        {"renamed_from": old, "renamed_to": new},
+        schema=new_schema.json(),
+        column_mapping=mapping or None,
     )
 
 
@@ -991,8 +1183,6 @@ def drop_column(path: str, col: str) -> int:
     resurrecting dropped data under a re-added name (Delta assigns
     fresh physical ids for the same reason). Same reference guards as
     ``rename_column``. Returns the new version."""
-    from pyspark.sql.types import StructType
-
     snap = load_snapshot(path)
     schema = StructType.fromJson(json.loads(snap.schema_json))
     names = [f.name for f in schema.fields]
@@ -1008,13 +1198,11 @@ def drop_column(path: str, col: str) -> int:
     return _publish_metadata_only(
         path,
         snap,
-        {
-            "schema": new_schema.json(),
-            "column_mapping": mapping or None,
-            "retired_physical": retired,
-            "op": "DROP COLUMN",
-            "metrics": {"dropped_column": col},
-        },
+        "DROP COLUMN",
+        {"dropped_column": col},
+        schema=new_schema.json(),
+        column_mapping=mapping or None,
+        retired_physical=retired,
     )
 
 
@@ -1095,7 +1283,6 @@ def commit(
     df: DataFrame,
     path: str,
     mode: str = "overwrite",
-    max_retries: int = 10,
     merge_schema: bool = False,
     stats_for: list[str] | None = None,
     cluster_by: list[str] | None = None,
@@ -1120,7 +1307,9 @@ def commit(
     ``stats_for=[cols]`` records per-file min/max/null-count for those
     columns in the manifest (footer metadata only, no data re-read) so
     ``read_where`` can skip files at *planning* time — Delta/Iceberg data
-    skipping. ``cluster_by=[cols]`` Z-orders the rows before writing
+    skipping; ``bloom_for`` records per-file Bloom filters. Omitted,
+    both default to the table's current stats/bloom columns.
+    ``cluster_by=[cols]`` Z-orders the rows before writing
     (``sources.layout.z_value``) so each file covers a narrow min/max
     window on every cluster column, making those stats bite; appends
     carry the parent's per-file stats forward untouched (data dirs are
@@ -1133,12 +1322,9 @@ def commit(
     meta = _load_table_meta(path)
     df = _stamp_identity(df, path, meta)
     df = _apply_constraint_guard(df, path, meta)
-    try:
-        head0 = load_snapshot(path)
-        mapping = _mapping(head0)
-        retired = set(head0.retired_physical or [])
-    except FileNotFoundError:
-        mapping, retired = {}, set()
+    head0, head0_m = _head(path)
+    mapping = _mapping(head0) if head0 else {}
+    retired = set(head0.retired_physical or []) if head0 else set()
     if mapping or retired:
         # a NEW logical column may not land on a physical name that a
         # different logical column occupies or a dropped column retired
@@ -1151,36 +1337,20 @@ def commit(
                 "names in use or retired by rename/drop; pick other "
                 "names or compact() to materialize the mapping"
             )
-        if stats_for:
-            stats_for = _phys_cols(mapping, stats_for)
-        if bloom_for:
-            bloom_for = _phys_cols(mapping, bloom_for)
     if cluster_by:
         df = _cluster_shape(df, list(cluster_by), n_files)
     commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
     _to_physical(df, mapping).write.mode("errorifexists").parquet(commit_dir)
-    fresh_stats = (
-        collect_file_stats([commit_dir], list(stats_for))
-        if stats_for
-        else None
-    )
-    fresh_blooms = (
-        collect_file_blooms([commit_dir], list(bloom_for))
-        if bloom_for
-        else None
-    )
+    nf, nr = _dir_file_metrics([commit_dir])
     # NDV sketches: explicit request, or (append) the parent's sketched
     # columns so table-level NDV survives appends without re-requesting.
     # Sketch LOGICAL df columns, store under PHYSICAL keys (like stats).
     ndv_logical = list(ndv_for) if ndv_for else None
-    if ndv_logical is None and mode == "append":
-        pvs = _versions(path)
-        if pvs:
-            with open(_manifest_path(path, pvs[-1])) as pf:
-                parent_ndv = json.load(pf).get("ndv_sketches")
-            if parent_ndv:
-                inv = {p: l for l, p in mapping.items()}
-                ndv_logical = [inv.get(c, c) for c in parent_ndv]
+    if ndv_logical is None and mode == "append" and head0_m:
+        inv = {p: l for l, p in mapping.items()}
+        ndv_logical = [
+            inv.get(c, c) for c in head0_m.get("ndv_sketches") or []
+        ]
     fresh_ndv = (
         {
             mapping.get(c, c): regs
@@ -1192,42 +1362,22 @@ def commit(
         else None
     )
 
-    for _ in range(max_retries):
-        vs = _versions(path)
-        next_v = (vs[-1] + 1) if vs else 0
-        if vs:
-            # the data files were written under the mapping loaded
-            # BEFORE the write; if a RENAME/DROP landed since, the
-            # inherited head mapping would mislabel those files —
-            # refuse rather than publish silently-corrupt columns
-            head_m = _raw_manifest(path, vs[-1])
-            if (head_m.get("column_mapping") or {}) != mapping or set(
-                head_m.get("retired_physical") or []
-            ) != retired:
-                raise RuntimeError(
-                    f"concurrent RENAME/DROP COLUMN at {path} during "
-                    "commit; re-run the commit against the new schema"
-                )
-        dirs = [commit_dir]
-        schema_json = df.schema.json()
-        parent = (
-            load_snapshot(path, vs[-1]) if mode == "append" and vs else None
-        )
-        if parent is not None:
-            if parent.part_entries is not None:
+    def build(head, head_m):
+        if mode == "overwrite" or head is None:
+            dirs, schema_json, kept = [commit_dir], df.schema.json(), ()
+        else:
+            if head.part_entries is not None:
                 raise ValueError(
                     "commit(mode='append') onto a merge-committed table "
                     "would drop its carried-by-reference partitions; use "
                     "merge_commit (or compact) on partitioned tables"
                 )
-            dirs = parent.dirs + [commit_dir]
+            dirs, kept = head.dirs + [commit_dir], None
             if merge_schema:
-                schema_json = _merged_schema_json(parent.schema_json, df)
+                schema_json = _merged_schema_json(head.schema_json, df)
             else:
-                from pyspark.sql.types import StructType
-
                 pfields = StructType.fromJson(
-                    json.loads(parent.schema_json)
+                    json.loads(head.schema_json)
                 ).fields
                 if [(f.name, f.dataType) for f in pfields] != [
                     (f.name, f.dataType) for f in df.schema.fields
@@ -1236,60 +1386,41 @@ def commit(
                         "append schema differs from table schema; pass "
                         "merge_schema=True to evolve by column addition"
                     )
-                schema_json = parent.schema_json
-        nf, nr = _dir_file_metrics([commit_dir])
-        manifest = {
-            "version": next_v,
-            "dirs": dirs,
-            "schema": schema_json,
-            "committed_at": time.time(),
-            # ``op`` override: maintenance passes that publish through
-            # commit() (e.g. the streaming state compactor) keep their
-            # true operation name in DESCRIBE HISTORY
-            "op": op or ("WRITE" if mode == "overwrite" else "APPEND"),
-            "metrics": {"num_files_added": nf, "num_output_rows": nr},
-        }
-        parent_m = head_m if parent is not None else None
-        if parent is not None and parent.dv_files:
-            # appended files can't have tombstones, but the carried
-            # parent files keep theirs (sidecar names carry verbatim)
-            manifest["dv_files"] = parent.dv_files
-            dv_scs = _next_sidecars(path, parent_m, "dv")
-            if dv_scs:
-                manifest["dv_sidecars"] = dv_scs
-        if fresh_stats is not None:
-            # carry the parent's sidecar names by reference; only the
-            # freshly written files' stats serialize — O(touched)
-            manifest["stats_sidecars"] = _next_sidecars(
-                path, parent_m, "stats", fresh=fresh_stats
-            )
-            manifest["stats_cols"] = list(stats_for)
-        if fresh_blooms is not None:
-            manifest["bloom_sidecars"] = _next_sidecars(
-                path, parent_m, "bloom", fresh=fresh_blooms
-            )
-            manifest["bloom_cols"] = list(bloom_for)
-        if fresh_ndv is not None:
-            merged_ndv = fresh_ndv
-            if parent_m is not None:
-                parent_ndv_m = parent_m.get("ndv_sketches")
-                if ndv_for is not None and parent_ndv_m:
-                    # explicit ndv_for narrower than the parent's
-                    # sketched set: the un-requested columns' sketches
-                    # never see the appended rows' values — carrying
-                    # them would silently underestimate. Drop them
-                    # (fail-open, like row-removing ops).
-                    parent_ndv_m = {
-                        c: r
-                        for c, r in parent_ndv_m.items()
-                        if c in fresh_ndv
-                    }
-                merged_ndv = _merge_ndv(parent_ndv_m, fresh_ndv)
-            manifest["ndv_sketches"] = merged_ndv
-        if not _try_publish_manifest(path, next_v, manifest):
-            continue  # lost the race: recompute on top of the winner
-        return next_v
-    raise RuntimeError(f"commit contention at {path}: {max_retries} retries")
+                schema_json = head.schema_json
+        ndv = fresh_ndv
+        if fresh_ndv is not None and kept is None:
+            parent_ndv = head_m.get("ndv_sketches")
+            if ndv_for is not None and parent_ndv:
+                # explicit ndv_for narrower than the parent's sketched
+                # set: the un-requested columns' sketches never see the
+                # appended rows' values — carrying them would silently
+                # underestimate. Drop them (fail-open, like row-removing
+                # ops).
+                parent_ndv = {
+                    c: r for c, r in parent_ndv.items() if c in fresh_ndv
+                }
+            ndv = _merge_ndv(parent_ndv, fresh_ndv)
+        return _Change(
+            {"num_files_added": nf, "num_output_rows": nr},
+            dirs=dirs,
+            schema=schema_json,
+            kept=kept,
+            fresh=[commit_dir],
+            stats_cols=_phys_cols(mapping, stats_for) if stats_for else None,
+            bloom_cols=_phys_cols(mapping, bloom_for) if bloom_for else None,
+            ndv=ndv,
+        )
+
+    # ``op`` override: maintenance passes that publish through commit()
+    # (e.g. the streaming state compactor) keep their true operation
+    # name in DESCRIBE HISTORY
+    return _publish(
+        path,
+        op or ("WRITE" if mode == "overwrite" else "APPEND"),
+        build,
+        written_under=(mapping, retired),
+        create=True,
+    )
 
 
 # Tombstone files all share this fixed shape (written from
@@ -1347,8 +1478,6 @@ def _physical_schema(snap: Snapshot):
     file predates (add-column evolution) read as null exactly as under
     mergeSchema. Everything is declared nullable — old files null-fill
     evolved columns regardless of the manifest's nullability."""
-    from pyspark.sql.types import StructField, StructType
-
     schema = StructType.fromJson(json.loads(snap.schema_json))
     mapping = _mapping(snap)
     return StructType(
@@ -1359,34 +1488,45 @@ def _physical_schema(snap: Snapshot):
     )
 
 
-def _scan_with_address(spark: SparkSession, snap: Snapshot) -> DataFrame:
-    """Raw file scan of a snapshot's data rows with physical-address
-    columns (``__fp``, ``__ri``) attached. The ``_metadata``
-    pseudo-column resolves against each file-source relation, so on
-    merge-committed (hive-partitioned) layouts it is captured per base
-    group BEFORE the union; partition columns come back via basePath.
-    The scan declares the snapshot's physical schema (see
-    ``_physical_schema`` — add-column evolution null-fills, type
-    widening upcasts, both without footer merging). No DV filtering,
-    no logical normalization — callers do both."""
-    phys = _physical_schema(snap)
-    if not snap.part_entries:
-        df = spark.read.schema(phys).parquet(*snap.dirs)
-        return df.withColumn(
-            "__fp", F.col("_metadata.file_path")
-        ).withColumn("__ri", F.col("_metadata.row_index"))
-    from collections import defaultdict
-
-    groups: dict[str, list[str]] = defaultdict(list)
-    for e in snap.part_entries:
-        groups[e["base"]].append(e["dir"])
-    frames = [
-        spark.read.schema(phys)
-        .option("basePath", base)
-        .parquet(*dirs)
+def _addressed(
+    spark: SparkSession, snap: Snapshot, paths: list[str], base=None
+) -> DataFrame:
+    """Scan ``paths`` (dirs or files) under the snapshot's declared
+    physical schema (see ``_physical_schema`` — add-column evolution
+    null-fills, type widening upcasts, both without footer merging),
+    with physical-address columns (``__fp``, ``__ri``) attached.
+    ``base`` is the hive basePath partition columns come back under."""
+    reader = spark.read.schema(_physical_schema(snap))
+    if base is not None:
+        reader = reader.option("basePath", base)
+    return (
+        reader.parquet(*paths)
         .withColumn("__fp", F.col("_metadata.file_path"))
         .withColumn("__ri", F.col("_metadata.row_index"))
-        for base, dirs in groups.items()
+    )
+
+
+def _scan_with_address(
+    spark: SparkSession, snap: Snapshot, groups: dict | None = None
+) -> DataFrame:
+    """Raw file scan of a snapshot's data rows with physical-address
+    columns attached. The ``_metadata`` pseudo-column resolves against
+    each file-source relation, so on merge-committed (hive-partitioned)
+    layouts it is captured per base group BEFORE the union; ``groups``
+    ({basePath: paths}) narrows that scan, and defaults to every
+    partition entry. No DV filtering, no logical normalization —
+    callers do both."""
+    if not snap.part_entries:
+        return _addressed(spark, snap, snap.dirs)
+    if groups is None:
+        from collections import defaultdict
+
+        groups = defaultdict(list)
+        for e in snap.part_entries:
+            groups[e["base"]].append(e["dir"])
+    frames = [
+        _addressed(spark, snap, paths, base)
+        for base, paths in groups.items()
     ]
     out = frames[0]
     for f in frames[1:]:
@@ -1661,8 +1801,6 @@ def read_where(
         if len(p) != 3 or p[1] not in _PRUNE_OPS:
             raise ValueError(f"bad predicate {p!r}; ops: {_PRUNE_OPS}")
     snap = load_snapshot(path, version)
-    from pyspark.sql.types import StructType
-
     schema = StructType.fromJson(json.loads(snap.schema_json))
     mapping = _mapping(snap)
     fs = snap.file_stats or {}
@@ -1700,16 +1838,7 @@ def read_where(
             report["files_kept"] = kept_n
         if not by_base:
             return spark.createDataFrame([], schema)
-        frames = [
-            spark.read.option("basePath", base)
-            .parquet(*files)
-            .withColumn("__fp", F.col("_metadata.file_path"))
-            .withColumn("__ri", F.col("_metadata.row_index"))
-            for base, files in by_base.items()
-        ]
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
+        out = _scan_with_address(spark, snap, by_base)
         out = _logical_select(
             _dv_filter(out, _dv_tombstones(spark, snap)), snap
         )
@@ -1726,23 +1855,9 @@ def read_where(
         report["files_kept"] = len(kept)
     if not kept:
         return spark.createDataFrame([], schema)
-    from pyspark.sql.types import StructField
-
-    phys_schema = (
-        StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable
-                )
-                for f in schema.fields
-            ]
-        )
-        if mapping
-        else schema
-    )
     df = _logical_select(
         _apply_dv(
-            spark.read.schema(phys_schema).parquet(*kept),
+            spark.read.schema(_physical_schema(snap)).parquet(*kept),
             _dv_tombstones(spark, snap),
         ),
         snap,
@@ -1813,7 +1928,6 @@ def merge_commit(
     path: str,
     spec,
     check_source_unique: bool = True,
-    max_retries: int = 10,
     stats_for: list[str] | None = None,
     op: str = "MERGE",
     change_data: bool = False,
@@ -1840,7 +1954,10 @@ def merge_commit(
 
     Concurrency: each manifest records which partitions it changed; a
     losing writer rebases onto the winner when their partition sets are
-    disjoint and raises otherwise (write-conflict, Delta-style).
+    disjoint and raises ``WriteConflict`` otherwise (Delta-style). A
+    full rewrite (unpartitioned spec, or a plain parent) is a
+    read-modify-write of the whole table: any concurrent commit
+    conflicts — a blind overwrite would erase its rows.
 
     ``stats_for`` records per-file min/max for those columns on the
     rewritten files (carried partitions keep the parent's stats — their
@@ -1860,8 +1977,6 @@ def merge_commit(
     cols = [f.name for f in spec.schema.fields]
     source = source.select(*cols)
     if check_source_unique:
-        from pyspark.sql import functions as F
-
         dup = (
             source.groupBy(spec.primary_key)
             .agg(F.count(F.lit(1)).alias("c"))
@@ -1872,80 +1987,21 @@ def merge_commit(
                 f"merge source has duplicate {spec.primary_key!r} keys"
             )
     parts = list(spec.partition_by)
-    if not parts:
-        # unpartitioned: the merge result IS the next full snapshot.
-        # Read-modify-write still needs optimistic concurrency: publish
-        # ONLY as base_version+1 — if another writer got there first the
-        # manifest create fails and this merge must re-run against the
-        # new head (a blind overwrite would silently erase its rows).
-        base_version = None
-        parent_stats_cols = None
-        mapping: dict[str, str] = {}
-        target = None
-        try:
-            parent = load_snapshot(path)
-            base_version = parent.version
-            parent_stats_cols = parent.stats_cols
-            mapping = _mapping(parent)
-            target = read(spark, path).select(*cols)
-            merged = M.merge_plan(source, target, spec)
-        except FileNotFoundError:
-            merged = source
-        merged = _apply_constraint_guard(merged, path, meta)
-        commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
-        _to_physical(merged, mapping).write.mode("errorifexists").parquet(
-            commit_dir
-        )
-        next_v = 0 if base_version is None else base_version + 1
-        nf, nr = _dir_file_metrics([commit_dir])
-        manifest = {
-            "version": next_v,
-            "dirs": [commit_dir],
-            "schema": merged.schema.json(),
-            "committed_at": time.time(),
-            "op": op,
-            "metrics": {"num_files_added": nf, "num_output_rows": nr},
-        }
-        if change_data:
-            manifest["change_data"] = _write_change_data(
-                spec, source, target, commit_dir, mapping
-            )
-        eff_stats = (
-            _phys_cols(mapping, stats_for)
-            if stats_for
-            else parent_stats_cols  # already physical
-        )
-        if eff_stats:
-            # full rewrite: every old file left the snapshot, so no
-            # sidecar carries — one fresh sidecar holds the new stats
-            manifest["stats_sidecars"] = [
-                _write_sidecar(
-                    path,
-                    collect_file_stats([commit_dir], list(eff_stats)),
-                )
-            ]
-            manifest["stats_cols"] = list(eff_stats)
-        if not _try_publish_manifest(path, next_v, manifest):
-            raise RuntimeError(
-                f"write conflict at {path}: version {next_v} was "
-                "committed concurrently; re-run the merge"
-            )
-        return next_v
-
-    base_version: int | None = None
-    full_rewrite = False
-    mapping = {}
+    mapping: dict[str, str] = {}
     retired: set = set()
-    target = None
+    base, target, affected = -1, None, None
     try:
         parent = load_snapshot(path)
-        base_version = parent.version
-        # column mapping flows through the partitioned path like
-        # commit(): the target reads back LOGICAL (read() translates),
-        # the merge plans logically, and the rewrite lands PHYSICAL
-        # names so rewritten and carried partitions agree column-for-
-        # column. Partition columns are rename-guarded, so the hive
-        # layout itself never needs translating.
+    except FileNotFoundError:
+        parent, merged = None, source  # initial commit
+    if parent is not None:
+        base = parent.version
+        # column mapping flows through the merge like commit(): the
+        # target reads back LOGICAL (read() translates), the merge plans
+        # logically, and the rewrite lands PHYSICAL names so rewritten
+        # and carried partitions agree column-for-column. Partition
+        # columns are rename-guarded, so the hive layout itself never
+        # needs translating.
         mapping = _mapping(parent)
         retired = set(parent.retired_physical or [])
         taken = set(mapping.values()) | retired
@@ -1968,73 +2024,65 @@ def merge_commit(
                 "materialize the mapping into the data files"
             )
         target = read(spark, path).select(*cols)
-        if parent.part_entries is None:
-            # parent was a plain commit (no partition-granular entries):
-            # merge against the FULL target — a partition-scoped merge
-            # would silently drop unaffected partitions from the result
-            merged = M.merge_plan(source, target, spec)
-            affected = None
-            full_rewrite = True
-        else:
+        if parts and parent.part_entries is not None:
             # affected partitions in hive-directory form: the conflict
             # check and the carry-forward compare them with entry names
             scope = M.scoped_upsert(source, target, spec)
             source, target, merged = scope.source, scope.target, scope.merged
             affected = set(scope.dirs)
-    except FileNotFoundError:
-        parent, merged, affected = None, source, None  # initial commit
+        else:
+            # no partition-granular entries: merge against the FULL
+            # target — a partition-scoped merge would silently drop
+            # unaffected partitions from the result
+            merged = M.merge_plan(source, target, spec)
 
     merged = _apply_constraint_guard(merged, path, meta)
     commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
-    (
-        _to_physical(merged, mapping)
-        .write.mode("errorifexists")
-        .partitionBy(*parts)
-        .parquet(commit_dir)
-    )
-    written = _hive_leaf_dirs(commit_dir, parts)
-    if affected is None:
-        affected = set(written)
-    cdc_dir = (
-        _write_change_data(spec, source, target, commit_dir, mapping)
+    writer = _to_physical(merged, mapping).write.mode("errorifexists")
+    if parts:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(commit_dir)
+    if not parts:  # a full rewrite counts its files before change rows
+        nf, nr = _dir_file_metrics([commit_dir])
+    extra = (
+        {"change_data": _write_change_data(
+            _merge_changes(spec, source, target), commit_dir, mapping
+        )}
         if change_data
-        else None
+        else {}
     )
-    return _publish_partitioned(
+    stats_cols = _phys_cols(mapping, stats_for) if stats_for else None
+    if parts:
+        return _publish_rewrite(
+            path, op, base, affected, commit_dir, parts,
+            merged.schema.json(), (mapping, retired),
+            stats_cols=stats_cols, extra=extra,
+        )
+    return _publish(
         path,
-        base_version,
-        affected,
-        written,
-        commit_dir,
-        parts,
-        merged.schema.json(),
-        full_rewrite,
-        max_retries,
-        stats_cols=(
-            _phys_cols(mapping, stats_for)
-            if stats_for
-            else (parent.stats_cols if parent is not None else None)
+        op,
+        lambda head, head_m: _Change(
+            {"num_files_added": nf, "num_output_rows": nr},
+            dirs=[commit_dir],
+            schema=merged.schema.json(),
+            kept=(),
+            fresh=[commit_dir],
+            stats_cols=stats_cols,
+            extra=extra,
         ),
-        op=op,
-        mapping=mapping,
-        retired=retired,
-        change_data_dir=cdc_dir,
+        base=base,
+        written_under=(mapping, retired),
+        create=True,
     )
 
 
-def _write_change_data(
-    spec, source: DataFrame, target: DataFrame | None, commit_dir: str,
-    mapping: dict,
-) -> str:
-    """Write a MERGE's precise row-level changes (Delta
-    ``_change_data`` shape) under the commit dir — underscore-prefixed
-    so no data scan (Spark or the tail source's file walk) ever reads
-    it as rows. Matched keys emit update_preimage+update_postimage
-    (Delta's matched-row semantics: every matched row is an update),
-    unmatched source keys emit insert; an initial commit is all
-    inserts. Columns land under PHYSICAL names + ``_change_type`` so
-    the CDF stream's one mapping serves data and change files alike.
-    Cost: source-scaled joins and one source-scaled write — never
+def _merge_changes(
+    spec, source: DataFrame, target: DataFrame | None
+) -> DataFrame:
+    """A MERGE's precise row-level changes: matched keys emit
+    update_preimage+update_postimage (Delta's matched-row semantics:
+    every matched row is an update), unmatched source keys emit insert;
+    an initial commit is all inserts. Cost: source-scaled joins, never
     table-scaled."""
     keys = (
         [spec.primary_key]
@@ -2042,199 +2090,48 @@ def _write_change_data(
         else list(spec.primary_key)
     )
     if target is None:
-        changes = source.withColumn("_change_type", F.lit("insert"))
-    else:
-        pre = target.join(source, keys, "left_semi").withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = source.join(target, keys, "left_semi").withColumn(
-            "_change_type", F.lit("update_postimage")
-        )
-        ins = source.join(target, keys, "left_anti").withColumn(
-            "_change_type", F.lit("insert")
-        )
-        changes = pre.unionByName(post).unionByName(ins)
+        return source.withColumn("_change_type", F.lit("insert"))
+    pre = target.join(source, keys, "left_semi").withColumn(
+        "_change_type", F.lit("update_preimage")
+    )
+    post = source.join(target, keys, "left_semi").withColumn(
+        "_change_type", F.lit("update_postimage")
+    )
+    ins = source.join(target, keys, "left_anti").withColumn(
+        "_change_type", F.lit("insert")
+    )
+    return pre.unionByName(post).unionByName(ins)
+
+
+def _write_change_data(
+    changes: DataFrame, commit_dir: str, mapping: dict
+) -> str:
+    """Write a commit's change rows (Delta ``_change_data`` shape) under
+    the commit dir — underscore-prefixed so no data scan (Spark or the
+    tail source's file walk) ever reads it as rows. Columns land under
+    PHYSICAL names + ``_change_type`` (``_to_physical`` passes unmapped
+    names through) so the CDF stream's one mapping serves data and
+    change files alike."""
     cdc_dir = os.path.join(commit_dir, "_change_data")
-    # _to_physical passes unmapped names through, so _change_type
-    # (never a data column) survives the rename untouched
     _to_physical(changes, mapping).write.mode("errorifexists").parquet(
         cdc_dir
     )
     return cdc_dir
 
 
-def _publish_partitioned(
-    path: str,
-    base_version: int | None,
-    affected: set[tuple[str, ...]],
-    written: dict[tuple[str, ...], str],
-    commit_dir: str,
-    parts: list[str],
-    schema_json: str,
-    full_rewrite: bool,
-    max_retries: int,
-    stats_cols: list[str] | None = None,
-    op: str = "MERGE",
-    fresh_changed: bool = True,
-    mapping: dict | None = None,
-    retired: set | None = None,
-    change_data_dir: str | None = None,
-) -> int:
-    """Publish an already-written partition-granular rewrite (MERGE or
-    DELETE) as the next version: carry unaffected entries by reference,
-    rebase across disjoint intervening commits, conflict otherwise.
-    With ``stats_cols``, fresh files get footer stats collected and
-    carried entries keep the parent's (their dirs are immutable).
-    ``mapping``/``retired`` are the column-mapping state the data files
-    were written under — a RENAME/DROP landing mid-rewrite conflicts
-    (the files would publish under a mapping that mislabels them)."""
-    fresh_stats = (
-        collect_file_stats([commit_dir], stats_cols) if stats_cols else None
-    )
-    for _ in range(max_retries):
-        head = None
-        try:
-            head = load_snapshot(path)
-        except FileNotFoundError:
-            pass
-        if head is None and base_version is not None:
-            raise RuntimeError(f"history at {path} vanished mid-commit")
-        if head is not None and base_version is None:
-            raise RuntimeError(
-                f"write conflict at {path}: table created concurrently"
-            )
-        if (
-            head is not None
-            and mapping is not None
-            and (
-                _mapping(head) != mapping
-                or set(head.retired_physical or []) != (retired or set())
-            )
-        ):
-            raise RuntimeError(
-                f"concurrent RENAME/DROP COLUMN at {path} during "
-                f"{op}; re-run against the new schema"
-            )
-        if head is not None and head.version != base_version:
-            if full_rewrite:
-                raise RuntimeError(
-                    f"write conflict at {path}: concurrent commit under a "
-                    "full-rewrite merge; re-run the merge"
-                )
-            # rebase across intervening commits; conflict if any touched
-            # one of our affected partitions (or was a full-table commit)
-            for v in range(base_version + 1, head.version + 1):
-                other = load_snapshot(path, v)
-                changed = (
-                    None
-                    if other.part_entries is None
-                    else {tuple(e["parts"]) for e in other.part_entries
-                          if e.get("changed")}
-                )
-                if changed is None or changed & affected:
-                    raise RuntimeError(
-                        f"write conflict at {path}: version {v} touched "
-                        "overlapping partitions; re-run the merge"
-                    )
-        head_m = (
-            _raw_manifest(path, head.version) if head is not None else None
-        )
-        carried = (
-            []
-            if head is None or head.part_entries is None
-            else [
-                {**e, "changed": False}
-                for e in head.part_entries
-                if tuple(e["parts"]) not in affected
-            ]
-        )
-        fresh = [
-            {
-                "parts": list(pt),
-                "base": commit_dir,
-                "dir": d,
-                "changed": fresh_changed,
-            }
-            for pt, d in written.items()
-        ]
-        next_v = (head.version + 1) if head is not None else 0
-        nf, nr = _dir_file_metrics([commit_dir])
-        manifest = {
-            "version": next_v,
-            "dirs": [commit_dir],
-            "part_entries": carried + fresh,
-            "partition_by": parts,
-            "schema": schema_json,
-            "committed_at": time.time(),
-            "op": op,
-            "metrics": {
-                "num_files_added": nf,
-                "num_output_rows": nr,
-                "num_partitions_changed": len(affected),
-                "num_partitions_carried": len(carried),
-            },
-        }
-        if change_data_dir is not None:
-            manifest["change_data"] = change_data_dir
-        if head is not None and head.dv_files and carried:
-            # carried-by-reference partitions still need their deletion
-            # vectors (dropping them would resurrect DV-deleted rows);
-            # tombstones addressing rewritten files match nothing. With
-            # no carried entries everything was rewritten from the
-            # DV-filtered read, so the vectors are fully materialized.
-            manifest["dv_files"] = head.dv_files
-            dv_scs = _next_sidecars(path, head_m, "dv")
-            if dv_scs:
-                manifest["dv_sidecars"] = dv_scs
-        if fresh_stats is not None:
-            # match on directory boundaries: a carried dir .../p=1 must not
-            # prefix-capture files in a rewritten sibling .../p=10.
-            # Sidecars wholly inside carried partitions ride by name —
-            # only sidecars holding entries for rewritten partitions are
-            # rewritten (minus those entries), so publish cost follows
-            # the partitions this commit touched, never the table.
-            carried_dirs = tuple(
-                e["dir"].rstrip(os.sep) + os.sep for e in carried
-            )
-            scs = _next_sidecars(
-                path,
-                head_m,
-                "stats",
-                keep=lambda f: f.startswith(carried_dirs),
-            )
-            # fresh entries land one sidecar PER PARTITION DIR: a later
-            # op rewriting one partition then dirties exactly one
-            # sidecar — the log converges to partition-scoped chunks
-            from collections import defaultdict
-
-            by_dir: dict[str, dict] = defaultdict(dict)
-            for f, st in fresh_stats.items():
-                by_dir[os.path.dirname(f)][f] = st
-            scs += [
-                _write_sidecar(path, ent)
-                for _, ent in sorted(by_dir.items())
-            ]
-            manifest["stats_sidecars"] = scs
-            manifest["stats_cols"] = list(stats_cols)
-        if not _try_publish_manifest(path, next_v, manifest):
-            continue  # raced: loop re-checks conflicts against new head
-        return next_v
-    raise RuntimeError(f"commit contention at {path}: {max_retries} retries")
-
-
 def delete_where(
     spark: SparkSession,
     path: str,
     predicate: str,
-    max_retries: int = 10,
     change_data: bool = False,
 ) -> int:
     """``DELETE FROM <table> WHERE predicate`` published as an atomic
-    next version (Delta DELETE semantics). Returns the new version, or
-    the unchanged head version when no row matches (no empty commit).
-    ``change_data=True`` also records the deleted rows as precise
-    ``delete`` change rows (see ``merge_commit``) so the change feed
-    skips the rewritten partitions' carried-row churn.
+    next version (Delta DELETE semantics: only rows whose predicate is
+    TRUE go; a NULL predicate keeps the row). Returns the new version,
+    or the unchanged head version when no row matches (no empty
+    commit). ``change_data=True`` also records the deleted rows as
+    precise ``delete`` change rows (see ``merge_commit``) so the change
+    feed skips the rewritten partitions' carried-row churn.
 
     On a merge-committed (partition-granular) table only partitions that
     contain matching rows are rewritten — every other partition carries
@@ -2242,115 +2139,81 @@ def delete_where(
     not table size (the GDPR-erasure shape: deleting one user touches
     only the partitions holding their rows). Fully-emptied partitions
     drop out of the manifest. Concurrency follows MERGE's rules: commits
-    touching disjoint partitions rebase; overlapping ones conflict.
+    touching disjoint partitions rebase; overlapping ones conflict, and
+    so does any concurrent commit under a plain-table delete.
     """
     base = load_snapshot(path)
     data = read(spark, path)
     cond = F.expr(predicate)
+    mapping = _mapping(base)
+    under = (mapping, set(base.retired_physical or []))
     parts = base.partition_by or []
-    if base.part_entries is None or not parts:
-        # plain table: read-modify-write, publish strictly at base+1
-        survivors = _to_physical(data.filter(~cond), _mapping(base))
+    plain = base.part_entries is None or not parts
+    if plain:
         if data.filter(cond).limit(1).count() == 0:
             return base.version
-        commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
-        survivors.write.mode("errorifexists").parquet(commit_dir)
-        nf, nr = _dir_file_metrics([commit_dir])
-        manifest = {
-            "version": base.version + 1,
-            "dirs": [commit_dir],
-            "schema": base.schema_json,
-            "committed_at": time.time(),
-            "op": "DELETE",
-            "metrics": {"num_files_added": nf, "num_output_rows": nr},
-        }
-        if change_data:
-            manifest["change_data"] = _write_typed_changes(
-                data.filter(cond), "delete", commit_dir, _mapping(base)
-            )
-        if base.stats_cols:
-            # full rewrite: one fresh sidecar, no carries
-            manifest["stats_sidecars"] = [
-                _write_sidecar(
-                    path,
-                    collect_file_stats([commit_dir], base.stats_cols),
-                )
-            ]
-            manifest["stats_cols"] = base.stats_cols
-        if not _try_publish_manifest(path, base.version + 1, manifest):
-            raise RuntimeError(
-                f"write conflict at {path}: version {base.version + 1} "
-                "was committed concurrently; re-run the delete"
-            )
-        return base.version + 1
-
-    from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
-        merge as M,
-    )
-
-    # partition-granular: find partitions holding matching rows (bounded
-    # by partition count — the same contract as merge's scoped_upsert),
-    # named as the manifest's entries are (hive-directory form, so a NULL
-    # value matches its __HIVE_DEFAULT_PARTITION__ entry)
-    _, dirs, part_match = M.partition_scope(
-        data.filter(cond).select(*parts).distinct(), parts
-    )
-    if not dirs:
-        return base.version
-    affected = set(dirs)
-    survivors = data.filter(part_match).filter(~cond)
-    commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
-    (
-        # survivors read back logical; the rewrite lands physical names
-        # so rewritten and carried partitions agree column-for-column
-        _to_physical(survivors, _mapping(base))
-        .write.mode("errorifexists")
-        .partitionBy(*parts)
-        .parquet(commit_dir)
-    )
-    written = _hive_leaf_dirs(commit_dir, parts)
-    cdc_dir = (
-        _write_typed_changes(
-            data.filter(cond), "delete", commit_dir, _mapping(base)
+        survivors, affected = data, None
+    else:
+        from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
+            merge as M,
         )
+
+        # partition-granular: find partitions holding matching rows
+        # (bounded by partition count — the same contract as merge's
+        # scoped_upsert), named as the manifest's entries are
+        # (hive-directory form, so a NULL value matches its
+        # __HIVE_DEFAULT_PARTITION__ entry)
+        _, dirs, part_match = M.partition_scope(
+            data.filter(cond).select(*parts).distinct(), parts
+        )
+        if not dirs:
+            return base.version
+        survivors, affected = data.filter(part_match), set(dirs)
+    commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
+    # survivors read back logical; the rewrite lands physical names so
+    # rewritten and carried partitions agree column-for-column
+    writer = _to_physical(
+        survivors.filter(~F.coalesce(cond, F.lit(False))), mapping
+    ).write.mode("errorifexists")
+    if not plain:
+        writer = writer.partitionBy(*parts)
+    writer.parquet(commit_dir)
+    if plain:  # a full rewrite counts its files before change rows
+        nf, nr = _dir_file_metrics([commit_dir])
+    extra = (
+        {"change_data": _write_change_data(
+            data.filter(cond).withColumn("_change_type", F.lit("delete")),
+            commit_dir,
+            mapping,
+        )}
         if change_data
-        else None
+        else {}
     )
-    return _publish_partitioned(
+    if not plain:
+        return _publish_rewrite(
+            path, "DELETE", base.version, affected, commit_dir, parts,
+            base.schema_json, under, extra=extra,
+        )
+    return _publish(
         path,
-        base.version,
-        affected,
-        written,
-        commit_dir,
-        parts,
-        base.schema_json,
-        False,
-        max_retries,
-        stats_cols=base.stats_cols,
-        op="DELETE",
-        mapping=_mapping(base),
-        retired=set(base.retired_physical or []),
-        change_data_dir=cdc_dir,
+        "DELETE",
+        lambda head, head_m: _Change(
+            {"num_files_added": nf, "num_output_rows": nr},
+            dirs=[commit_dir],
+            schema=base.schema_json,
+            kept=(),
+            fresh=[commit_dir],
+            extra=extra,
+        ),
+        base=base.version,
+        written_under=under,
     )
-
-
-def _write_typed_changes(
-    rows: DataFrame, change_type: str, commit_dir: str, mapping: dict
-) -> str:
-    """One-type variant of ``_write_change_data`` (DELETE's precise
-    change rows); same physical-name + underscore-dir contract."""
-    cdc_dir = os.path.join(commit_dir, "_change_data")
-    _to_physical(
-        rows.withColumn("_change_type", F.lit(change_type)), mapping
-    ).write.mode("errorifexists").parquet(cdc_dir)
-    return cdc_dir
 
 
 def delete_where_dv(
     spark: SparkSession,
     path: str,
     predicate: str,
-    max_retries: int = 10,
 ) -> int:
     """Row-level DELETE via DELETION VECTORS (Delta's DV mechanism): no
     data file is rewritten — matching rows' physical addresses
@@ -2379,9 +2242,7 @@ def delete_where_dv(
     pre-delete read.
     """
     cond = F.expr(predicate)
-    return _delete_selected_dv(
-        spark, path, lambda live: live.filter(cond), max_retries
-    )
+    return _delete_selected_dv(spark, path, lambda live: live.filter(cond))
 
 
 _DELETE_KEY_CAP = 2048  # small key sets become literal predicates
@@ -2392,7 +2253,6 @@ def delete_matching_dv(
     path: str,
     keys_df: DataFrame,
     key_cols: list[str],
-    max_retries: int = 10,
     op: str = "DELETE",
 ) -> int:
     """Deletion-vector DELETE of every row whose ``key_cols`` tuple
@@ -2432,7 +2292,6 @@ def delete_matching_dv(
             spark,
             path,
             lambda live: live.filter(_in_list(keys[0], lits)),
-            max_retries,
             op=op,
             prune=(keys[0], lits),
         )
@@ -2440,19 +2299,17 @@ def delete_matching_dv(
     def _select(live: DataFrame) -> DataFrame:
         return live.join(keys_df.select(*keys).distinct(), keys, "left_semi")
 
-    return _delete_selected_dv(spark, path, _select, max_retries, op=op)
+    return _delete_selected_dv(spark, path, _select, op=op)
 
 
 def _delete_selected_dv(
     spark: SparkSession,
     path: str,
     selector,
-    max_retries: int = 10,
     op: str = "DELETE",
     prune: tuple | None = None,
 ) -> int:
-    for _ in range(max_retries):
-        snap = load_snapshot(path)
+    def build(snap, snap_m):
         raw = None
         if prune is not None and snap.part_entries is None:
             # manifest-level file skipping for the tombstone scan
@@ -2463,8 +2320,6 @@ def _delete_selected_dv(
             phys = _mapping(snap).get(col, col)
             fs, fb = snap.file_stats or {}, snap.file_blooms or {}
             if fs or fb:
-                from pyspark.sql.types import StructType as _ST
-
                 preds = [(phys, "in", list(lits))]
                 kept = [
                     f
@@ -2472,24 +2327,8 @@ def _delete_selected_dv(
                     if _file_maybe_matches(fs.get(f), preds, fb.get(f))
                 ]
                 if not kept:
-                    return snap.version  # no file can hold the keys
-                schema = _ST.fromJson(json.loads(snap.schema_json))
-                phys_schema = _ST(
-                    [
-                        type(f)(
-                            _mapping(snap).get(f.name, f.name),
-                            f.dataType,
-                            f.nullable,
-                        )
-                        for f in schema.fields
-                    ]
-                )
-                raw = (
-                    spark.read.schema(phys_schema)
-                    .parquet(*kept)
-                    .withColumn("__fp", F.col("_metadata.file_path"))
-                    .withColumn("__ri", F.col("_metadata.row_index"))
-                )
+                    return None  # no file can hold the keys
+                raw = _addressed(spark, snap, kept)
         if raw is None:
             raw = _scan_with_address(spark, snap)
         raw = _dv_filter(raw, _dv_tombstones(spark, snap))
@@ -2504,56 +2343,31 @@ def _delete_selected_dv(
         # the partitioned changed-flags, one tiny read for both
         dead = _dv_dead_counts(spark, dv_dir)
         if not dead:
-            import shutil
-
             shutil.rmtree(dv_dir, ignore_errors=True)
-            return snap.version
-        raw_m = _raw_manifest(path, snap.version)
-        manifest = {
-            "version": snap.version + 1,
-            "dirs": snap.dirs,
-            "schema": snap.schema_json,
-            "committed_at": time.time(),
-            "dv_files": (snap.dv_files or []) + [dv_dir],
-            # dead counts are DELTAS that sum across sidecars: this
-            # commit serializes only the files IT tombstoned
-            "dv_sidecars": _next_sidecars(path, raw_m, "dv", fresh=dead),
-            "op": op,
-            "metrics": {
+            return None
+        entries = None
+        if snap.part_entries is not None:
+            affected = _dv_affected_partitions(snap, set(dead))
+            entries = [
+                {**e, "changed": tuple(e["parts"]) in affected}
+                for e in snap.part_entries
+            ]
+        return _Change(
+            {
                 "num_deleted_rows": sum(dead.values()),
                 "num_files_with_dv": len(dead),
                 "num_dv_files_added": 1,
             },
-        }
-        if snap.part_entries is not None:
-            affected = _dv_affected_partitions(snap, set(dead))
-            manifest["part_entries"] = [
-                {**e, "changed": tuple(e["parts"]) in affected}
-                for e in snap.part_entries
-            ]
-            manifest["partition_by"] = snap.partition_by
-        if snap.file_stats is not None:
-            # no file left the snapshot: sidecar names carry verbatim
-            manifest["stats_sidecars"] = _next_sidecars(
-                path, raw_m, "stats"
-            )
-            manifest["stats_cols"] = snap.stats_cols
-        if snap.file_blooms is not None:
-            manifest["bloom_sidecars"] = _next_sidecars(
-                path, raw_m, "bloom"
-            )
-            manifest["bloom_cols"] = snap.bloom_cols
-        if not _try_publish_manifest(path, snap.version + 1, manifest):
-            import shutil
+            dirs=snap.dirs,
+            schema=snap.schema_json,
+            entries=entries,
+            partition_by=snap.partition_by,
+            dv_dir=dv_dir,
+            dead=dead,
+            orphans=(dv_dir,),
+        )
 
-            # lost the race: drop the orphan tombstones and re-evaluate
-            # the predicate against the winning head
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            continue
-        return snap.version + 1
-    raise RuntimeError(
-        f"dv delete contention at {path}: {max_retries} retries"
-    )
+    return _publish(path, op, build)
 
 
 # Above this many tombstone rows, per-file dead counts go through a
@@ -2629,7 +2443,6 @@ def update_where_dv(
     path: str,
     predicate: str,
     set_map: dict[str, str],
-    max_retries: int = 10,
 ) -> int:
     """``UPDATE <table> SET col = expr WHERE predicate`` via deletion
     vectors: matching rows are tombstoned in place (no data file
@@ -2655,10 +2468,8 @@ def update_where_dv(
     unknown_cols = set(set_map)
     cond = F.expr(predicate)
     meta = _load_table_meta(path)  # one read feeds every commit hook
-    from pyspark.sql.types import StructType
 
-    for _ in range(max_retries):
-        snap = load_snapshot(path)
+    def build(snap, snap_m):
         parts = list(snap.partition_by or [])
         schema = StructType.fromJson(json.loads(snap.schema_json))
         bad = unknown_cols - {f.name for f in schema.fields}
@@ -2675,10 +2486,8 @@ def update_where_dv(
         live = live.cache()
         try:
             if not live.take(1):
-                return snap.version
-            dv_dir = os.path.join(
-                path, _DATA, f"dv-{uuid.uuid4().hex}"
-            )
+                return None
+            dv_dir = os.path.join(path, _DATA, f"dv-{uuid.uuid4().hex}")
             live.select(
                 F.col("__fp").alias("file"),
                 F.col("__ri").alias("row_idx"),
@@ -2695,82 +2504,46 @@ def update_where_dv(
             # path: a violating updated image fails inside this write,
             # before publication
             updated = _apply_constraint_guard(updated, path, meta)
-            updated_w = _to_physical(updated, _mapping(snap))
             commit_dir = os.path.join(
                 path, _DATA, f"commit-{uuid.uuid4().hex}"
             )
+            writer = _to_physical(updated, _mapping(snap)).write.mode(
+                "errorifexists"
+            )
             if snap.part_entries is not None:
-                (
-                    updated_w.write.mode("errorifexists")
-                    .partitionBy(*parts)
-                    .parquet(commit_dir)
-                )
-            else:
-                updated_w.write.mode("errorifexists").parquet(commit_dir)
+                writer = writer.partitionBy(*parts)
+            writer.parquet(commit_dir)
         finally:
             live.unpersist()
         dead = _dv_dead_counts(spark, dv_dir)
         nf, nr = _dir_file_metrics([commit_dir])
-        raw_m = _raw_manifest(path, snap.version)
-        manifest = {
-            "version": snap.version + 1,
-            "dirs": snap.dirs + [commit_dir],
-            "schema": snap.schema_json,
-            "committed_at": time.time(),
-            "dv_files": (snap.dv_files or []) + [dv_dir],
-            "dv_sidecars": _next_sidecars(path, raw_m, "dv", fresh=dead),
-            "op": "UPDATE",
-            "metrics": {
+        entries = None
+        if snap.part_entries is not None:
+            fresh = _fresh_entries(commit_dir, parts, True)
+            affected = _dv_affected_partitions(snap, set(dead)) | {
+                tuple(e["parts"]) for e in fresh
+            }
+            entries = [
+                {**e, "changed": tuple(e["parts"]) in affected}
+                for e in snap.part_entries
+            ] + fresh
+        return _Change(
+            {
                 "num_updated_rows": sum(dead.values()),
                 "num_files_added": nf,
                 "num_output_rows": nr,
             },
-        }
-        if snap.part_entries is not None:
-            written = _hive_leaf_dirs(commit_dir, parts)
-            affected = _dv_affected_partitions(snap, set(dead)) | set(
-                written
-            )
-            manifest["part_entries"] = [
-                {**e, "changed": tuple(e["parts"]) in affected}
-                for e in snap.part_entries
-            ] + [
-                {
-                    "parts": list(pt),
-                    "base": commit_dir,
-                    "dir": d,
-                    "changed": True,
-                }
-                for pt, d in written.items()
-            ]
-            manifest["partition_by"] = parts
-        if snap.file_stats is not None and snap.stats_cols:
-            # carries ride by name; only the updated images' stats write
-            manifest["stats_sidecars"] = _next_sidecars(
-                path,
-                raw_m,
-                "stats",
-                fresh=collect_file_stats([commit_dir], snap.stats_cols),
-            )
-            manifest["stats_cols"] = snap.stats_cols
-        if snap.file_blooms is not None and snap.bloom_cols:
-            manifest["bloom_sidecars"] = _next_sidecars(
-                path,
-                raw_m,
-                "bloom",
-                fresh=collect_file_blooms([commit_dir], snap.bloom_cols),
-            )
-            manifest["bloom_cols"] = snap.bloom_cols
-        if not _try_publish_manifest(path, snap.version + 1, manifest):
-            import shutil
+            dirs=snap.dirs + [commit_dir],
+            schema=snap.schema_json,
+            entries=entries,
+            partition_by=parts,
+            fresh=[commit_dir],
+            dv_dir=dv_dir,
+            dead=dead,
+            orphans=(dv_dir, commit_dir),
+        )
 
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            shutil.rmtree(commit_dir, ignore_errors=True)
-            continue  # lost the race: re-evaluate against the new head
-        return snap.version + 1
-    raise RuntimeError(
-        f"update_where_dv contention at {path}: {max_retries} retries"
-    )
+    return _publish(path, "UPDATE", build)
 
 
 def replace_where_commit(
@@ -2780,7 +2553,6 @@ def replace_where_commit(
     predicates: list[tuple] | None = None,
     keys: DataFrame | None = None,
     key_cols: list[str] | None = None,
-    max_retries: int = 10,
     stats_for: list[str] | None = None,
     bloom_for: list[str] | None = None,
     report: dict | None = None,
@@ -2817,8 +2589,6 @@ def replace_where_commit(
         for p in predicates:
             if len(p) != 3 or p[1] not in _PRUNE_OPS:
                 raise ValueError(f"bad predicate {p!r}; ops: {_PRUNE_OPS}")
-    from pyspark.sql.types import StructField, StructType
-
     head = load_snapshot(path)
     if head.part_entries is not None:
         raise ValueError(
@@ -2835,35 +2605,19 @@ def replace_where_commit(
     # column mapping: the replacement frame and scope are LOGICAL; the
     # data write and the tombstone scan run under PHYSICAL names (the
     # same seam as commit()/read_where). Captured ONCE here — a
-    # concurrent RENAME/DROP conflicts inside the retry loop below.
+    # concurrent RENAME/DROP conflicts inside the commit loop.
     mapping = _mapping(head)
     retired = set(head.retired_physical or [])
     df = _apply_constraint_guard(df, path, _load_table_meta(path))
     # the replacement data is scope-independent: write it once, reuse
-    # across contention retries (same pattern as commit())
+    # across lost publish races (same pattern as commit())
     commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
     _to_physical(df, mapping).write.mode("errorifexists").parquet(
         commit_dir
     )
+    nf, nr = _dir_file_metrics([commit_dir])
 
-    for _ in range(max_retries):
-        snap = load_snapshot(path)
-        if _mapping(snap) != mapping or set(
-            snap.retired_physical or []
-        ) != retired:
-            raise RuntimeError(
-                f"concurrent RENAME/DROP COLUMN at {path} during "
-                "replace_where_commit; re-run against the new schema"
-            )
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        phys_schema = StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name), f.dataType, f.nullable
-                )
-                for f in schema.fields
-            ]
-        )
+    def build(snap, snap_m):
         fs, fb = snap.file_stats or {}, snap.file_blooms or {}
         # tombstone scan over the PRE-append head (commit_dir is not in
         # snap.dirs yet, so the fresh rows can never self-tombstone)
@@ -2881,18 +2635,12 @@ def replace_where_commit(
             if report is not None:
                 report["files_total"] = len(all_files)
                 report["files_kept"] = len(kept)
+            dels = None
             if kept:
-                marked = (
-                    spark.read.schema(phys_schema)
-                    .parquet(*kept)
-                    .withColumn("__fp", F.col("_metadata.file_path"))
-                    .withColumn("__ri", F.col("_metadata.row_index"))
-                )
+                marked = _addressed(spark, snap, kept)
                 dels = _dv_filter(
                     marked, _dv_tombstones(spark, snap)
                 ).filter(_residual(phys_preds))
-            else:
-                dels = None
         else:
             marked = _dv_filter(
                 _scan_with_address(spark, snap),
@@ -2914,71 +2662,26 @@ def replace_where_commit(
             ).coalesce(1).write.mode("errorifexists").parquet(dv_dir)
             dead = _dv_dead_counts(spark, dv_dir)
         if not dead:
-            import shutil
-
             shutil.rmtree(dv_dir, ignore_errors=True)
             dv_dir = None
-        stats_cols = (
-            _phys_cols(mapping, stats_for)
-            if stats_for
-            else list(snap.stats_cols or [])
-        ) or None
-        bloom_cols = (
-            _phys_cols(mapping, bloom_for)
-            if bloom_for
-            else list(snap.bloom_cols or [])
-        ) or None
-        nf, nr = _dir_file_metrics([commit_dir])
-        manifest = {
-            "version": snap.version + 1,
-            "dirs": snap.dirs + [commit_dir],
-            "schema": snap.schema_json,
-            "committed_at": time.time(),
-            "op": "REPLACEWHERE",
-            "metrics": {
+        return _Change(
+            {
                 "num_deleted_rows": sum(dead.values()),
                 "num_files_added": nf,
                 "num_output_rows": nr,
             },
-        }
-        raw_m = _raw_manifest(path, snap.version)
-        if dv_dir is not None or snap.dv_files:
-            manifest["dv_files"] = (snap.dv_files or []) + (
-                [dv_dir] if dv_dir is not None else []
-            )
-            dv_scs = _next_sidecars(path, raw_m, "dv", fresh=dead)
-            if dv_scs:
-                manifest["dv_sidecars"] = dv_scs
-        if stats_cols:
-            # per-batch streaming commits ride this path: carried names
-            # pass by reference, only df-sized fresh stats serialize
-            manifest["stats_sidecars"] = _next_sidecars(
-                path,
-                raw_m,
-                "stats",
-                fresh=collect_file_stats([commit_dir], stats_cols),
-            )
-            manifest["stats_cols"] = stats_cols
-        if bloom_cols:
-            manifest["bloom_sidecars"] = _next_sidecars(
-                path,
-                raw_m,
-                "bloom",
-                fresh=collect_file_blooms([commit_dir], bloom_cols),
-            )
-            manifest["bloom_cols"] = bloom_cols
-        if not _try_publish_manifest(path, snap.version + 1, manifest):
-            import shutil
+            dirs=snap.dirs + [commit_dir],
+            schema=snap.schema_json,
+            fresh=[commit_dir],
+            stats_cols=_phys_cols(mapping, stats_for) if stats_for else None,
+            bloom_cols=_phys_cols(mapping, bloom_for) if bloom_for else None,
+            dv_dir=dv_dir,
+            dead=dead,
+            orphans=(dv_dir,) if dv_dir else (),
+        )
 
-            if dv_dir is not None:
-                shutil.rmtree(dv_dir, ignore_errors=True)
-            continue  # lost the race: re-scope against the new head
-        return snap.version + 1
-    import shutil
-
-    shutil.rmtree(commit_dir, ignore_errors=True)
-    raise RuntimeError(
-        f"replace_where_commit contention at {path}: {max_retries} retries"
+    return _publish(
+        path, "REPLACEWHERE", build, written_under=(mapping, retired)
     )
 
 
@@ -3050,8 +2753,6 @@ def snapshot_diff(
 
     # align the old side to the new schema (evolution adds columns; a
     # version that predates one reads as null there)
-    from pyspark.sql.types import StructType
-
     schema = StructType.fromJson(json.loads(new_snap.schema_json))
     cols = [f.name for f in schema.fields]
     old_have = set(old.columns)
@@ -3124,29 +2825,19 @@ def _read_snapshot_pruned(
     plain snapshots."""
     if snap.part_entries is None or not prune:
         return read(spark, path, snap.version)
-    from collections import defaultdict
+    import dataclasses
 
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(snap.schema_json))
-    groups: dict[str, list[str]] = defaultdict(list)
     kept = [e for e in snap.part_entries if tuple(e["parts"]) not in prune]
     if not kept:
-        return spark.createDataFrame([], schema)
-    for e in kept:
-        groups[e["base"]].append(e["dir"])
-    frames = [
-        spark.read.option("basePath", base)
-        .parquet(*dirs)
-        .withColumn("__fp", F.col("_metadata.file_path"))
-        .withColumn("__ri", F.col("_metadata.row_index"))
-        for base, dirs in groups.items()
-    ]
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return _dv_filter(out, _dv_tombstones(spark, snap)).select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+        return spark.createDataFrame(
+            [], StructType.fromJson(json.loads(snap.schema_json))
+        )
+    scoped = dataclasses.replace(snap, part_entries=kept)
+    return _logical_select(
+        _dv_filter(
+            _scan_with_address(spark, scoped), _dv_tombstones(spark, snap)
+        ),
+        snap,
     )
 
 
@@ -3443,6 +3134,17 @@ def _apply_constraint_guard(
     return df.withColumn(first.name, guard)
 
 
+def _fresh_entries(
+    commit_dir: str, parts: list[str], changed: bool
+) -> list[dict]:
+    """Partition entries for the hive-partitioned write in
+    ``commit_dir``."""
+    return [
+        {"parts": list(pt), "base": commit_dir, "dir": d, "changed": changed}
+        for pt, d in _hive_leaf_dirs(commit_dir, parts).items()
+    ]
+
+
 def _hive_leaf_dirs(
     commit_dir: str, parts: list[str]
 ) -> dict[tuple[str, ...], str]:
@@ -3475,7 +3177,6 @@ def _hive_leaf_dirs(
 def compact(
     spark: SparkSession,
     path: str,
-    max_retries: int = 3,
     cluster_by: list[str] | None = None,
     n_files: int | None = None,
 ) -> int:
@@ -3503,9 +3204,8 @@ def compact(
     a concurrent merge rebases across them without conflict — the
     logical data it merged against is identical.
     """
-    for _ in range(max_retries):
-        base = load_snapshot(path)
-        data = read(spark, path)
+    def build(base, base_m):
+        data = read(spark, path, base.version)
         parts = base.partition_by or []
         commit_dir = os.path.join(path, _DATA, f"commit-{uuid.uuid4().hex}")
         cluster = [c for c in (cluster_by or []) if c not in parts]
@@ -3531,73 +3231,39 @@ def compact(
         # compact MATERIALIZES the column mapping: read() yields
         # logical names, so the rewrite lands logical-named files with
         # dropped columns physically gone — the fresh manifest clears
-        # the mapping (explicit None beats publish-time inheritance)
-        # and re-keys stats/blooms to the now-logical on-disk names.
+        # the mapping and re-keys stats/blooms to the now-logical
+        # on-disk names.
         inv = {p: l for l, p in _mapping(base).items()}
-        manifest = {
-            "version": base.version + 1,
-            "dirs": [commit_dir],
-            "schema": base.schema_json,
-            "committed_at": time.time(),
-            "op": "OPTIMIZE",
-            "column_mapping": None,
-            "retired_physical": None,
-            "metrics": {
+        live_cols = set(data.columns)  # drops fall out of the rewrite
+
+        def logical(cols):
+            return [
+                inv.get(c, c) for c in cols or [] if inv.get(c, c) in live_cols
+            ]
+
+        entries = None
+        if base.part_entries is not None:
+            entries = _fresh_entries(commit_dir, parts, False)
+        return _Change(
+            {
                 "num_files_added": nf,
                 "num_files_removed": len(data_files(path, base.version)),
                 "num_output_rows": nr,
                 "num_dv_files_cleared": len(base.dv_files or []),
             },
-        }
-        live_cols = set(data.columns)  # drops fall out of the rewrite
-        if base.stats_cols:
-            # files were rewritten: parent per-file stats are stale
-            stats_cols = [
-                inv.get(c, c)
-                for c in base.stats_cols
-                if inv.get(c, c) in live_cols
-            ]
-            if stats_cols:
-                # every file is fresh: the whole sidecar log folds into
-                # one checkpoint sidecar (compact = metadata OPTIMIZE)
-                manifest["stats_sidecars"] = [
-                    _write_sidecar(
-                        path, collect_file_stats([commit_dir], stats_cols)
-                    )
-                ]
-                manifest["stats_cols"] = stats_cols
-        if base.bloom_cols:
-            bloom_cols = [
-                inv.get(c, c)
-                for c in base.bloom_cols
-                if inv.get(c, c) in live_cols
-            ]
-            if bloom_cols:
-                manifest["bloom_sidecars"] = [
-                    _write_sidecar(
-                        path,
-                        collect_file_blooms([commit_dir], bloom_cols),
-                    )
-                ]
-                manifest["bloom_cols"] = bloom_cols
-        if base.part_entries is not None:
-            written = _hive_leaf_dirs(commit_dir, parts)
-            manifest["part_entries"] = [
-                {
-                    "parts": list(pt),
-                    "base": commit_dir,
-                    "dir": d,
-                    "changed": False,
-                }
-                for pt, d in written.items()
-            ]
-            manifest["partition_by"] = parts
-        if not _try_publish_manifest(path, base.version + 1, manifest):
-            continue  # a commit landed mid-rewrite: restart from new head
-        return base.version + 1
-    raise RuntimeError(
-        f"compact contention at {path}: {max_retries} restarts"
-    )
+            dirs=[commit_dir],
+            schema=base.schema_json,
+            entries=entries,
+            partition_by=parts,
+            kept=(),
+            fresh=[commit_dir],
+            stats_cols=logical(base.stats_cols),
+            bloom_cols=logical(base.bloom_cols),
+            extra={"column_mapping": None, "retired_physical": None},
+            orphans=(commit_dir,),
+        )
+
+    return _publish(path, "OPTIMIZE", build)
 
 
 def compact_where(
@@ -3605,7 +3271,6 @@ def compact_where(
     path: str,
     predicates: list[tuple],
     cluster_by: list[str] | None = None,
-    max_retries: int = 3,
 ) -> int | None:
     """``OPTIMIZE <table> WHERE <partition predicate>`` — rewrite ONLY
     the partitions the predicate selects; everything else carries by
@@ -3627,13 +3292,15 @@ def compact_where(
     ``cluster_by`` sorts within the rewritten partitions (scoped
     ZORDER). Rewritten partitions publish ``changed=False`` — logical
     rows are untouched, so concurrent merges rebase across the
-    compaction without conflict, exactly like full ``compact``."""
+    compaction without conflict, exactly like full ``compact``. A
+    conflicting commit into the scope restarts the pass from the new
+    head (publishing the stale rewrite would drop its rows)."""
     import dataclasses
 
     for p in predicates:
         if len(p) != 3 or p[1] not in _PRUNE_OPS:
             raise ValueError(f"bad predicate {p!r}; ops: {_PRUNE_OPS}")
-    for _ in range(max_retries):
+    for _ in range(_MAX_ATTEMPTS):
         base = load_snapshot(path)
         if base.part_entries is None:
             raise ValueError(
@@ -3655,7 +3322,6 @@ def compact_where(
         ]
         if not hit:
             return None
-        affected = {tuple(e["parts"]) for e in hit}
         scoped = dataclasses.replace(base, part_entries=hit)
         data = _logical_select(
             _dv_filter(
@@ -3672,36 +3338,22 @@ def compact_where(
         # a SCOPED compaction cannot materialize the mapping away (the
         # carried partitions keep physical names), so rewritten files
         # land physical too — only full compact() clears the mapping
-        _to_physical(shaped, _mapping(base)).write.mode(
+        mapping = _mapping(base)
+        _to_physical(shaped, mapping).write.mode(
             "errorifexists"
         ).partitionBy(*parts).parquet(commit_dir)
         try:
-            return _publish_partitioned(
-                path,
-                base.version,
-                affected,
-                _hive_leaf_dirs(commit_dir, parts),
-                commit_dir,
-                parts,
+            return _publish_rewrite(
+                path, "OPTIMIZE", base.version,
+                {tuple(e["parts"]) for e in hit}, commit_dir, parts,
                 base.schema_json,
-                False,
-                max_retries,
-                stats_cols=base.stats_cols,
-                op="OPTIMIZE",
+                (mapping, set(base.retired_physical or [])),
                 fresh_changed=False,
-                mapping=_mapping(base),
-                retired=set(base.retired_physical or []),
             )
-        except RuntimeError:
-            # a conflicting commit touched our scope mid-rewrite:
-            # restart the pass from the new head (stale-data publish
-            # would drop the interleaved commit's rows)
-            import shutil
-
+        except WriteConflict:
             shutil.rmtree(commit_dir, ignore_errors=True)
-            continue
     raise RuntimeError(
-        f"compact_where contention at {path}: {max_retries} restarts"
+        f"compact_where contention at {path}: {_MAX_ATTEMPTS} restarts"
     )
 
 
@@ -3737,7 +3389,6 @@ def maybe_compact(
 def restore(
     path: str,
     version: int | None = None,
-    max_retries: int = 10,
     timestamp=None,
 ) -> int:
     """Delta RESTORE: publish an old version's exact file references as
@@ -3745,65 +3396,28 @@ def restore(
     preserved (the bad versions stay time-travelable until vacuum).
     Target by ``version`` (``RESTORE ... VERSION AS OF``) or
     ``timestamp`` (``TIMESTAMP AS OF``, resolved by
-    ``version_at_timestamp``) — exactly one of the two."""
+    ``version_at_timestamp``) — exactly one of the two. The references
+    include tombstones, sidecar names, sketches and column mapping."""
     if (version is None) == (timestamp is None):
         raise ValueError("pass exactly one of version / timestamp")
     if timestamp is not None:
         version = version_at_timestamp(path, timestamp)
     snap = load_snapshot(path, version)
-    for _ in range(max_retries):
-        head = load_snapshot(path)
-        next_v = head.version + 1
-        manifest = {
-            "version": next_v,
-            "dirs": snap.dirs,
-            "schema": snap.schema_json,
-            "committed_at": time.time(),
-            "op": "RESTORE",
-            "metrics": {"restored_version": version},
-            # restored head gets the restored version's mapping, not
-            # the (possibly renamed-since) head's — explicit keys
-            # override publish-time inheritance
-            "column_mapping": snap.column_mapping,
-            "retired_physical": snap.retired_physical,
-        }
-        raw = _raw_manifest(path, snap.version)
-        ndv = raw.get("ndv_sketches")
-        if ndv is not None:
-            manifest["ndv_sketches"] = ndv
-        if snap.part_entries is not None:
-            # a restore changes nothing physically; entries carry over
-            # but must rebase-conflict with any concurrent merge, so
-            # mark every partition changed
-            manifest["part_entries"] = [
-                {**e, "changed": True} for e in snap.part_entries
-            ]
-            manifest["partition_by"] = snap.partition_by
-        # stats/blooms/dv-deltas carry as sidecar NAMES (plus verbatim
-        # inline maps from pre-sidecar manifests) — restore stays a
-        # pure O(1) manifest write, never O(table) metadata
-        for k in (
-            "stats_sidecars",
-            "bloom_sidecars",
-            "dv_sidecars",
-            "file_stats",
-            "file_blooms",
-            "dv_dead",
-        ):
-            if raw.get(k) is not None:
-                manifest[k] = raw[k]
-        if snap.stats_cols is not None:
-            manifest["stats_cols"] = snap.stats_cols
-        if snap.bloom_cols is not None:
-            manifest["bloom_cols"] = snap.bloom_cols
-        if snap.dv_files:
-            # "exact file references" includes the tombstones: dropping
-            # them would resurrect DV-deleted rows at the restored head
-            manifest["dv_files"] = snap.dv_files
-        if not _try_publish_manifest(path, next_v, manifest):
-            continue
-        return next_v
-    raise RuntimeError(f"restore contention at {path}")
+    refs = _references(_raw_manifest(path, snap.version))
+    if snap.part_entries is not None:
+        # a restore changes nothing physically; entries carry over but
+        # must rebase-conflict with any concurrent merge, so mark every
+        # partition changed
+        refs["part_entries"] = [
+            {**e, "changed": True} for e in snap.part_entries
+        ]
+    return _publish(
+        path,
+        "RESTORE",
+        lambda head, head_m: _Change(
+            {"restored_version": version}, refs=refs
+        ),
+    )
 
 
 def clone(src: str, dst: str, version: int | None = None) -> int:
@@ -3814,52 +3428,32 @@ def clone(src: str, dst: str, version: int | None = None) -> int:
     data root), and vacuuming the SOURCE can orphan a shallow clone —
     the same caveat real Delta documents."""
     snap = load_snapshot(src, version)
-    if os.path.isdir(os.path.join(dst, _MANIFESTS)) and _versions(dst):
+    if _versions(dst):
         raise ValueError(f"clone target {dst} already exists")
-    manifest = {
-        "version": 0,
-        "dirs": snap.dirs,
-        "schema": snap.schema_json,
-        "committed_at": time.time(),
-        "op": "CLONE",
-        "metrics": {"source_version": snap.version},
-        # the clone references the source's PHYSICAL files, so it must
-        # carry the source's logical→physical mapping verbatim
-        "column_mapping": snap.column_mapping,
-        "retired_physical": snap.retired_physical,
-    }
-    ndv = _raw_manifest(src, snap.version).get("ndv_sketches")
-    if ndv is not None:
-        manifest["ndv_sketches"] = ndv
-    if snap.part_entries is not None:
-        manifest["part_entries"] = snap.part_entries
-        manifest["partition_by"] = snap.partition_by
+    refs = _references(_raw_manifest(src, snap.version))
     # sidecar names are table-relative, so the clone MATERIALIZES the
-    # source's merged stats into its own sidecars (one read of the
-    # source metadata at clone time) — the clone's metadata is then
-    # self-contained and a source-side vacuum can't strip its pruning
-    # stats (data dirs keep the documented shallow-clone caveat)
-    if snap.file_stats is not None:
-        manifest["stats_sidecars"] = [
-            _write_sidecar(dst, dict(snap.file_stats))
-        ]
-        manifest["stats_cols"] = snap.stats_cols
-    if snap.file_blooms is not None:
-        manifest["bloom_sidecars"] = [
-            _write_sidecar(dst, dict(snap.file_blooms))
-        ]
-        manifest["bloom_cols"] = snap.bloom_cols
-    if snap.dv_files:
-        # the clone references the source's files AS FILTERED — without
-        # the tombstones it would contain the source's deleted rows
-        manifest["dv_files"] = snap.dv_files
-        if snap.dv_dead is not None:
-            manifest["dv_sidecars"] = [
-                _write_sidecar(dst, dict(snap.dv_dead))
-            ]
-    if not _try_publish_manifest(dst, 0, manifest):
-        raise ValueError(f"clone target {dst} was created concurrently")
-    return 0
+    # source's merged stats/blooms/dead counts into its own sidecars —
+    # the clone's metadata is then self-contained and a source-side
+    # vacuum can't strip it (data dirs keep the documented
+    # shallow-clone caveat)
+    for k in (*_SC_REFS.values(), *_SC_INLINE.values()):
+        refs.pop(k, None)
+    for kind, merged in (
+        ("stats", snap.file_stats),
+        ("bloom", snap.file_blooms),
+        ("dv", snap.dv_dead if snap.dv_files else None),
+    ):
+        if merged is not None:
+            refs[_SC_REFS[kind]] = [_write_sidecar(dst, dict(merged))]
+    return _publish(
+        dst,
+        "CLONE",
+        lambda head, head_m: _Change(
+            {"source_version": snap.version}, refs=refs
+        ),
+        base=-1,
+        create=True,
+    )
 
 
 def deep_clone(
@@ -3889,15 +3483,7 @@ def data_files(path: str, version: int | None = None) -> list[str]:
         if snap.part_entries
         else snap.dirs
     )
-    out: list[str] = []
-    for d in dirs:
-        for root, _, files in os.walk(d):
-            out.extend(
-                os.path.join(root, f)
-                for f in files
-                if f.endswith(".parquet")
-            )
-    return out
+    return [f for d in dirs for f in _parquet_files(d)]
 
 
 def history(path: str) -> list[Snapshot]:
@@ -3989,8 +3575,6 @@ def vacuum(
     window also survives, so time travel stays available for the whole
     retention period regardless of commit frequency. The head version
     is always kept."""
-    import shutil
-
     vs = _versions(path)
     keep_vs = vs[-keep_last:] if vs else []
     if retention_hours is not None and vs:
@@ -4004,21 +3588,18 @@ def vacuum(
             }
         )
     live: set[str] = set()
-    for v in keep_vs:
-        snap = load_snapshot(path, v)
-        live.update(snap.dirs)
-        live.update(snap.dv_files or [])
-        # merge-committed manifests reference partition subdirs of older
-        # commit dirs; a base with ANY surviving reference stays whole
-        # (conservative — subdir-granular deletion is a later refinement)
-        for e in snap.part_entries or []:
-            live.add(e["base"])
-    # sidecar GC: a stats/bloom/dv sidecar survives iff some surviving
-    # manifest names it (same liveness rule as data dirs)
     live_sc: set[str] = set()
     for v in keep_vs:
         m = _raw_manifest(path, v)
-        for k in ("stats_sidecars", "bloom_sidecars", "dv_sidecars"):
+        live.update(m["dirs"])
+        live.update(m.get("dv_files") or [])
+        # merge-committed manifests reference partition subdirs of older
+        # commit dirs; a base with ANY surviving reference stays whole
+        # (conservative — subdir-granular deletion is a later refinement)
+        live.update(e["base"] for e in m.get("part_entries") or [])
+        # sidecar GC: a stats/bloom/dv sidecar survives iff some
+        # surviving manifest names it (same liveness rule as data dirs)
+        for k in _SC_REFS.values():
             live_sc.update(m.get(k) or [])
     for v in vs:
         if v not in keep_vs:

@@ -184,6 +184,47 @@ def test_scoped_upsert_plans_a_thousand_affected_partitions(spark):
     assert scope.target.count() == 1000
 
 
+def test_partition_scope_sql_predicate_matches_column_predicate(
+    spark, tmp_path
+):
+    """partition_scope renders its predicate as one SQL expression; on
+    awkward values (quotes, backslashes, '', NULL, dates, two partition
+    columns) it selects exactly the rows the Column form selects, and
+    the file index still prunes with it."""
+    import datetime as dt
+
+    rows = [
+        (1, "it's", dt.date(2024, 1, 1)),
+        (2, "a\\b", dt.date(2024, 1, 2)),
+        (3, "", dt.date(2024, 1, 3)),
+        (4, None, None),
+        (5, "plain", dt.date(2024, 1, 1)),
+        (6, "plain", dt.date(2024, 1, 9)),
+    ]
+    df = spark.createDataFrame(rows, "pk int, s string, d date")
+    path = str(tmp_path / "t")
+    df.write.partitionBy("s", "d").parquet(path)
+    table = spark.read.parquet(path)
+    picked = table.filter("pk IN (1, 2, 3, 4, 5)").select("s", "d")
+    _, dirs, pred = M.partition_scope(picked.distinct(), ["s", "d"])
+    assert len(dirs) == 5
+    got = sorted(r["pk"] for r in table.filter(pred).collect())
+    assert got == [1, 2, 3, 4, 5]
+    column_pred = M._any_of(
+        [
+            F.col("s").eqNullSafe(F.lit(s)) & F.col("d").eqNullSafe(F.lit(d))
+            for s, d in [
+                ("it's", dt.date(2024, 1, 1)), ("a\\b", dt.date(2024, 1, 2)),
+                (None, dt.date(2024, 1, 3)), (None, None),
+                ("plain", dt.date(2024, 1, 1)),
+            ]
+        ]
+    )
+    assert got == sorted(r["pk"] for r in table.filter(column_pred).collect())
+    plan = table.filter(pred)._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan and "PartitionFilters: []" not in plan
+
+
 TYPED_SPEC = TableSpec(  # the products.department_id shape
     name="t",
     schema=StructType(

@@ -233,29 +233,54 @@ def test_delete_where_plans_a_thousand_affected_partitions(spark, tmp_path):
     assert len(S.load_snapshot(path).part_entries) == 10
 
 
+def _race_once(monkeypatch, path, adversary):
+    """Run ``adversary`` once, inside the first manifest publish to
+    ``path``: the writer under test has built its manifest against a
+    head that moves before its publish lands. Nested publishes (the
+    adversary's own) pass straight through."""
+    real = S._try_publish_manifest
+    state = {"fired": False}
+
+    def racing(p, version, manifest):
+        if not state["fired"] and os.path.abspath(p) == os.path.abspath(path):
+            state["fired"] = True
+            adversary()
+        return real(p, version, manifest)
+
+    monkeypatch.setattr(S, "_try_publish_manifest", racing)
+    return state
+
+
+def _referenced_dirs(path):
+    """Basenames of every data/tombstone dir some version references."""
+    refs = set()
+    for s in S.history(path):
+        refs.update(s.dirs)
+        refs.update(s.dv_files or [])
+        refs.update(e["base"] for e in s.part_entries or [])
+    return {os.path.basename(d.rstrip(os.sep)) for d in refs}
+
+
+def _assert_no_orphans(path):
+    """Every dir under data/ is referenced by a version, and every
+    referenced dir exists: a lost race left nothing behind."""
+    on_disk = set(os.listdir(os.path.join(path, "data")))
+    assert on_disk == _referenced_dirs(path)
+
+
 def test_merge_commit_disjoint_partitions_rebase(spark, tmp_path, monkeypatch):
     """A writer that loses the manifest race to a DISJOINT-partition commit
     must rebase and succeed, keeping both commits' rows."""
     path = str(tmp_path / "t")
     S.merge_commit(spark, _mdf(spark, [(1, 1.0, "a"), (2, 2.0, "b")]), path, MSPEC)
 
-    real_load = S.load_snapshot
-    state = {"calls": 0, "raced": False}
-
-    def racing_load(p, version=None):
-        # call 1 = parent resolution, call 2 = read(); call 3 is the
-        # publish-loop head check — sneak the adversary in right before it
-        # so the outer merge already built its plan against the old head
-        if version is None:
-            state["calls"] += 1
-            if state["calls"] == 3 and not state["raced"]:
-                state["raced"] = True
-                S.merge_commit(spark, _mdf(spark, [(2, 7.0, "b")]), path, MSPEC)
-        return real_load(p, version)
-
-    monkeypatch.setattr(S, "load_snapshot", racing_load)
+    state = _race_once(
+        monkeypatch,
+        path,
+        lambda: S.merge_commit(spark, _mdf(spark, [(2, 7.0, "b")]), path, MSPEC),
+    )
     v = S.merge_commit(spark, _mdf(spark, [(1, 9.0, "a")]), path, MSPEC)
-    monkeypatch.setattr(S, "load_snapshot", real_load)
+    assert state["fired"]
     assert v == 2
     got = {r["pk"]: r["amt"] for r in S.read(spark, path).collect()}
     assert got == {1: 9.0, 2: 7.0}  # both the adversary's and our write
@@ -265,20 +290,256 @@ def test_merge_commit_overlapping_partitions_conflict(spark, tmp_path, monkeypat
     path = str(tmp_path / "t")
     S.merge_commit(spark, _mdf(spark, [(1, 1.0, "a")]), path, MSPEC)
 
-    real_load = S.load_snapshot
-    state = {"calls": 0, "raced": False}
-
-    def racing_load(p, version=None):
-        if version is None:
-            state["calls"] += 1
-            if state["calls"] == 3 and not state["raced"]:
-                state["raced"] = True
-                S.merge_commit(spark, _mdf(spark, [(9, 9.0, "a")]), path, MSPEC)
-        return real_load(p, version)
-
-    monkeypatch.setattr(S, "load_snapshot", racing_load)
+    _race_once(
+        monkeypatch,
+        path,
+        lambda: S.merge_commit(spark, _mdf(spark, [(9, 9.0, "a")]), path, MSPEC),
+    )
     with pytest.raises(RuntimeError, match="conflict"):
         S.merge_commit(spark, _mdf(spark, [(1, 5.0, "a")]), path, MSPEC)
+
+
+def test_append_commit_lost_race_lands_on_top_of_winner(
+    spark, tmp_path, monkeypatch
+):
+    """An append that loses the publish race retries on the winner's
+    head: both appends' rows land, in two linear versions."""
+    path = str(tmp_path / "t")
+    S.commit(spark, _df(spark, [(1, "a")]), path)
+    state = _race_once(
+        monkeypatch,
+        path,
+        lambda: S.commit(spark, _df(spark, [(2, "adv")]), path, mode="append"),
+    )
+    v = S.commit(spark, _df(spark, [(3, "late")]), path, mode="append")
+    assert state["fired"] and v == 2
+    assert {r["k"] for r in S.read(spark, path).collect()} == {1, 2, 3}
+    assert [s.op for s in S.history(path)] == ["WRITE", "APPEND", "APPEND"]
+    _assert_no_orphans(path)
+
+
+def test_replace_where_lost_race_rescopes_on_new_head(
+    spark, tmp_path, monkeypatch
+):
+    """replace_where_commit re-evaluates its scope against the winner:
+    the adversary's appended row inside the scope is replaced too, its
+    row outside the scope survives, and the lost attempt's tombstones
+    are deleted."""
+    path = str(tmp_path / "t")
+    S.commit(spark, _df(spark, [(i, f"v{i}") for i in range(10)]), path)
+    state = _race_once(
+        monkeypatch,
+        path,
+        lambda: S.commit(
+            spark, _df(spark, [(3, "adv3"), (20, "adv20")]), path,
+            mode="append",
+        ),
+    )
+    v = S.replace_where_commit(
+        spark, _df(spark, [(3, "new")]), path, predicates=[("k", "==", 3)]
+    )
+    assert state["fired"] and v == 2
+    got = sorted(tuple(r) for r in S.read(spark, path).collect())
+    assert got == sorted(
+        [(i, f"v{i}") for i in range(10) if i != 3] + [(3, "new"), (20, "adv20")]
+    )
+    _assert_no_orphans(path)
+
+
+def test_update_where_dv_lost_race_reevaluates_on_new_head(
+    spark, tmp_path, monkeypatch
+):
+    """update_where_dv re-evaluates its predicate against the winner:
+    a matching row the adversary appended is updated too, and the lost
+    attempt's tombstone and image dirs are deleted."""
+    path = str(tmp_path / "t")
+    S.commit(spark, _df(spark, [(1, "a"), (2, "b")]), path)
+    state = _race_once(
+        monkeypatch,
+        path,
+        lambda: S.commit(spark, _df(spark, [(1, "adv")]), path, mode="append"),
+    )
+    v = S.update_where_dv(spark, path, "k = 1", {"v": "'u'"})
+    assert state["fired"] and v == 2
+    got = sorted(tuple(r) for r in S.read(spark, path).collect())
+    assert got == [(1, "u"), (1, "u"), (2, "b")]
+    _assert_no_orphans(path)
+
+
+def test_restore_lost_race_retries_on_top_of_winner(
+    spark, tmp_path, monkeypatch
+):
+    """A restore that loses the publish race retries: it lands as the
+    newest version, the winner's version stays in history."""
+    path = str(tmp_path / "t")
+    S.commit(spark, _df(spark, [(1, "good")]), path)
+    S.commit(spark, _df(spark, [(1, "bad")]), path)
+    state = _race_once(
+        monkeypatch,
+        path,
+        lambda: S.commit(spark, _df(spark, [(2, "adv")]), path, mode="append"),
+    )
+    v = S.restore(path, 0)
+    assert state["fired"] and v == 3
+    assert {tuple(r) for r in S.read(spark, path).collect()} == {(1, "good")}
+    assert {tuple(r) for r in S.read(spark, path, 2).collect()} == {
+        (1, "bad"), (2, "adv")
+    }
+    assert S.load_snapshot(path).op == "RESTORE"
+    _assert_no_orphans(path)
+
+
+def test_rename_column_lost_race_conflicts(spark, tmp_path, monkeypatch):
+    """A metadata-only RENAME raises when any commit lands first: the
+    rename was validated against a schema that is no longer the head."""
+    path = str(tmp_path / "t")
+    S.commit(spark, _df(spark, [(1, "a")]), path)
+    state = _race_once(
+        monkeypatch,
+        path,
+        lambda: S.commit(spark, _df(spark, [(2, "b")]), path, mode="append"),
+    )
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        S.rename_column(path, "v", "w")
+    assert state["fired"]
+    head = S.load_snapshot(path)
+    assert head.version == 1 and head.op == "APPEND"
+    assert S.read(spark, path).columns == ["k", "v"]
+
+
+def test_partitioned_delete_where_disjoint_race_rebases(
+    spark, tmp_path, monkeypatch
+):
+    """A partitioned DELETE that loses the race to a MERGE into another
+    partition rebases: both commits' effects land."""
+    path = str(tmp_path / "t")
+    S.merge_commit(
+        spark, _mdf(spark, [(1, 1.0, "a"), (2, 2.0, "a"), (3, 3.0, "b")]),
+        path, MSPEC,
+    )
+    state = _race_once(
+        monkeypatch,
+        path,
+        lambda: S.merge_commit(spark, _mdf(spark, [(4, 4.0, "b")]), path, MSPEC),
+    )
+    v = S.delete_where(spark, path, "pk = 1")
+    assert state["fired"] and v == 2
+    got = {r["pk"]: r["part"] for r in S.read(spark, path).collect()}
+    assert got == {2: "a", 3: "b", 4: "b"}
+    _assert_no_orphans(path)
+
+
+def test_partitioned_delete_where_overlapping_race_conflicts(
+    spark, tmp_path, monkeypatch
+):
+    """A partitioned DELETE that loses the race to a MERGE into one of
+    its partitions raises a write conflict; the winner's rows stand and
+    the delete's rewrite is not referenced."""
+    path = str(tmp_path / "t")
+    S.merge_commit(
+        spark, _mdf(spark, [(1, 1.0, "a"), (2, 2.0, "a"), (3, 3.0, "b")]),
+        path, MSPEC,
+    )
+    _race_once(
+        monkeypatch,
+        path,
+        lambda: S.merge_commit(spark, _mdf(spark, [(5, 5.0, "a")]), path, MSPEC),
+    )
+    with pytest.raises(RuntimeError, match="write conflict"):
+        S.delete_where(spark, path, "pk = 1")
+    head = S.load_snapshot(path)
+    assert head.version == 1 and head.op == "MERGE"
+    assert {r["pk"] for r in S.read(spark, path).collect()} == {1, 2, 3, 5}
+    on_disk = set(os.listdir(os.path.join(path, "data")))
+    assert len(on_disk - _referenced_dirs(path)) <= 1  # the refused rewrite
+
+
+NSPEC = TableSpec(
+    name="t",
+    schema=StructType(
+        [
+            StructField("pk", IntegerType(), False),
+            StructField("x", IntegerType(), True),
+            StructField("part", StringType(), False),
+        ]
+    ),
+    primary_key="pk",
+    partition_by=("part",),
+)
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+@pytest.mark.parametrize("change_data", [False, True])
+def test_delete_where_keeps_rows_whose_predicate_is_null(
+    spark, tmp_path, partitioned, change_data
+):
+    """SQL/Delta DELETE removes only rows whose predicate is TRUE: a row
+    where ``x = 1`` is NULL survives, on the plain and the
+    partition-granular path alike; the change feed records only the
+    deleted row."""
+    path = str(tmp_path / "t")
+    rows = spark.createDataFrame(
+        [(1, 1, "a"), (2, None, "a"), (3, 3, "b")],
+        "pk int, x int, part string",
+    )
+    if partitioned:
+        S.merge_commit(spark, rows, path, NSPEC)
+    else:
+        S.commit(spark, rows, path)
+    v = S.delete_where(spark, path, "x = 1", change_data=change_data)
+    assert v == 1
+    got = sorted(tuple(r) for r in S.read(spark, path).select("pk", "x", "part").collect())
+    assert got == [(2, None, "a"), (3, 3, "b")]
+    if change_data:
+        cdc = spark.read.parquet(S._raw_manifest(path)["change_data"])
+        assert [(r["pk"], r["_change_type"]) for r in cdc.collect()] == [
+            (1, "delete")
+        ]
+
+
+def _prunes_on(spark, path, col, val):
+    """(files_total, files_kept) of a point lookup on ``col``."""
+    rep: dict = {}
+    S.read_where(spark, path, [(col, "==", val)], report=rep).collect()
+    return rep["files_total"], rep["files_kept"]
+
+
+def test_append_without_stats_for_keeps_stats_and_blooms(spark, tmp_path):
+    """A writer keeps the table's stats and bloom columns unless it
+    names new ones: an append that passes neither still records stats
+    and blooms for its own files, so lookups keep pruning."""
+    path = str(tmp_path / "t")
+    S.commit(
+        spark, _df(spark, [(1, "a"), (2, "b")]).coalesce(1), path,
+        stats_for=["k"], bloom_for=["v"],
+    )
+    S.commit(spark, _df(spark, [(10, "x")]).coalesce(1), path, mode="append")
+    snap = S.load_snapshot(path)
+    assert snap.stats_cols == ["k"] and snap.bloom_cols == ["v"]
+    assert _prunes_on(spark, path, "k", 10) == (2, 1)  # min/max prunes v0
+    assert _prunes_on(spark, path, "v", "b") == (2, 1)  # bloom prunes v1
+    assert S.table_stats(path)["rows"] == 3
+
+
+@pytest.mark.parametrize("writer", ["merge", "delete"])
+def test_full_rewrite_keeps_bloom_columns(spark, tmp_path, writer):
+    """The full-rewrite paths of plain merge_commit and plain
+    delete_where re-collect the table's blooms along with its stats."""
+    import dataclasses
+
+    spec = dataclasses.replace(MSPEC, partition_by=())
+    path = str(tmp_path / "t")
+    S.commit(
+        spark, _mdf(spark, [(i, float(i), "a") for i in range(4)]).coalesce(1),
+        path, stats_for=["amt"], bloom_for=["pk"],
+    )
+    if writer == "merge":
+        S.merge_commit(spark, _mdf(spark, [(9, 9.0, "a")]), path, spec)
+    else:
+        S.delete_where(spark, path, "pk = 0")
+    snap = S.load_snapshot(path)
+    assert snap.stats_cols == ["amt"] and snap.bloom_cols == ["pk"]
+    assert set(snap.file_blooms) == set(S.data_files(path))
 
 
 def test_merge_commit_onto_plain_commit_full_rewrite(spark, tmp_path):

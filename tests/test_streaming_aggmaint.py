@@ -558,22 +558,22 @@ def test_stats_watermark_mixed_table_scans_statless_files_only(
 
     path = str(tmp_path / "mixed_state")
     ddl = "k string, _last_batch long, _app_id string"
-    # v0: stamped (the twins' shape) — complete stats
-    S.commit(
-        spark,
-        spark.createDataFrame([("a", 0, "app")], ddl),
-        path,
-        stats_for=_WM_STATS + ["k"],
-    )
-    # v1: FOREIGN append, no stats — and it carries the LATEST batch
+    # v0: FOREIGN commit, no stats — and it carries the LATEST batch
+    # (it comes first: a later writer keeps the table's stats columns)
     S.commit(
         spark,
         spark.createDataFrame([("z", 5, "app")], ddl),
         path,
-        mode="append",
     )
-    # v2: stamped again (the twin's next applied batch re-introduces
-    # stats, but sidecar carry only covers v2's own files)
+    # v1, v2: stamped appends (the twins' shape) — stats cover only
+    # their own files
+    S.commit(
+        spark,
+        spark.createDataFrame([("a", 0, "app")], ddl),
+        path,
+        mode="append",
+        stats_for=_WM_STATS + ["k"],
+    )
     S.commit(
         spark,
         spark.createDataFrame([("b", 2, "app")], ddl),
@@ -615,15 +615,15 @@ def test_stats_watermark_mixed_table_scans_statless_files_only(
     p3 = str(tmp_path / "dv_state")
     S.commit(
         spark,
-        spark.createDataFrame([("a", 0, "app")], ddl),
+        spark.createDataFrame([("z", 5, "app"), ("y", 9, "app")], ddl),
         p3,
-        stats_for=_WM_STATS + ["k"],
     )
     S.commit(
         spark,
-        spark.createDataFrame([("z", 5, "app"), ("y", 9, "app")], ddl),
+        spark.createDataFrame([("a", 0, "app")], ddl),
         p3,
         mode="append",
+        stats_for=_WM_STATS + ["k"],
     )
     S.replace_where_commit(
         spark,
