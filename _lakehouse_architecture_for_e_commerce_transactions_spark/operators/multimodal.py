@@ -36,7 +36,8 @@ bounds the per-task working set.
 
 from __future__ import annotations
 
-import hashlib
+import struct
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -2253,222 +2254,17 @@ DECODED_STATS_SCHEMA = StructType(
 )
 
 
-class NativeDecoderDrift(RuntimeError):
-    """A native codec disagreed with the oracle-exact pure decoder on
-    a sampled cross-check. Deliberately NOT a subclass of the
-    poison-caught exceptions (ValueError etc.): decoder drift means
-    every NON-sampled payload may be silently wrong, so the task must
-    fail loud instead of yielding one quiet NULL row."""
+def _pixel_decoders() -> dict:
+    """``{format: decoder}`` for the four image containers, built from
+    ``_make_content_decoders``: the one decode table that
+    ``extract_decoded_stats`` and ``resize_image_stats`` share. Every
+    decoder returns an (H, W, C) ndarray; the dict of dynamic closures
+    ships by value into the tasks."""
+    bmp, _, png, gif, jpeg = _make_content_decoders()
+    return {"bmp": bmp, "png": png, "gif": gif, "jpeg": jpeg}
 
 
-def _load_native_codecs(pure: dict) -> dict:
-    """Opt-in pluggable NATIVE codec seam, resolved where decode runs
-    (executor side). Gate: ``SPARK_GRAFT_NATIVE_DECODE``:
-
-    * unset/empty — ``{}``: the pure, oracle-exact decoders are the
-      only path (this container ships no codec library; on a cluster
-      image with Pillow the same code picks up libjpeg-turbo-class
-      throughput).
-    * ``"1"`` — probe ``PIL.Image``; map JPEG/PNG/GIF/BMP to it with
-      the pure decoders' output conventions (grayscale as (H, W, 1),
-      GIF first frame as RGB, BMP as RGB). Missing import → ``{}``.
-    * ``"fake"`` / ``"fake-drift"`` — CLEARLY-MARKED deterministic
-      test fakes built over the captured pure decoders (the brief's
-      sanctioned stub: the libs aren't in this container, so the
-      Spark-side plumbing is exercised with a fake; ``fake-drift``
-      perturbs pixels to prove the sampled cross-check fails LOUD).
-    """
-    import os as _os
-
-    mode = _os.environ.get("SPARK_GRAFT_NATIVE_DECODE", "")
-    if mode in ("fake", "fake-drift"):
-        import numpy as _np
-
-        def _mk(fmt):
-            def f(payload):
-                out = pure[fmt](payload)
-                if mode == "fake-drift":
-                    out = out.copy()
-                    out[..., -1] = _np.minimum(out[..., -1] + 2, 255)
-                return out
-
-            return f
-
-        return {fmt: _mk(fmt) for fmt in pure}
-    if mode != "1":
-        return {}
-    try:
-        import io as _io
-
-        import numpy as _np
-        from PIL import Image as _Image
-    except ImportError:
-        return {}
-
-    def _pil(payload):
-        im = _Image.open(_io.BytesIO(bytes(payload)))
-        im.load()
-        if im.mode == "L":
-            return _np.asarray(im, dtype=_np.uint8)[..., None]
-        if im.mode == "P":
-            im = im.convert("RGB")
-        elif im.mode not in ("RGB", "RGBA"):
-            im = im.convert("RGB")
-        return _np.asarray(im, dtype=_np.uint8)
-
-    return {fmt: _pil for fmt in ("jpeg", "png", "gif", "bmp")}
-
-
-def _jpeg_is_subsampled(b: bytes) -> bool:
-    """Walk the segment chain to the first SOF and report whether any
-    component's sampling factors differ (i.e. 4:2:0/4:2:2/4:1:1).
-    Unparseable headers report True — the LOOSER cross-check bound —
-    so a truncated header can never turn legitimate upsampling
-    variance into a spurious drift kill."""
-    import struct as _struct
-
-    i, n = 2, len(b)
-    while i + 4 <= n and b[i] == 0xFF:
-        m = b[i + 1]
-        if m in (0xD8, 0x01) or 0xD0 <= m <= 0xD7:
-            i += 2
-            continue
-        (ln,) = _struct.unpack(">H", b[i + 2 : i + 4])
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            nc = b[i + 9] if i + 9 < n else 0
-            if i + 10 + 3 * nc > n:
-                return True
-            facs = {b[i + 11 + 3 * k] for k in range(nc)}
-            return len(facs) > 1
-        i += 2 + ln
-    return True
-
-
-def _make_pixel_decoder(pure: dict, native: dict, xcheck_every: int):
-    """``decode(fmt, payload) -> uint8 ndarray``: native codec when one
-    is registered for the format, pure decoder otherwise. Every
-    ``xcheck_every``-th native decode (per task, starting with the
-    first) is RE-decoded through the oracle-exact pure path and
-    compared. Tolerances reflect LEGITIMATE decoder variance:
-
-    * lossless formats (png/gif/bmp): shape and values exact;
-    * grayscale / 4:4:4 JPEG: only IDCT rounding differs (libjpeg
-      integer IDCT vs our float IDCT, legitimately ±1 on a large
-      fraction of pixels) — max |diff| ≤ 2, mean ≤ 1.0;
-    * subsampled JPEG (4:2:0 etc.): libjpeg's fancy (triangular)
-      chroma upsampling vs our replication upsampling legitimately
-      diverges by tens at chroma edges — compare aggregates instead:
-      mean |diff| ≤ 3.0 and |mean(out) − mean(ref)| ≤ 1.0, which a
-      wrong image (mean |diff| ~60+ on natural content) still trips.
-
-    A payload the PURE decoders cannot decode (a variant only the
-    native codec supports, e.g. a lossless-JPEG frame, or one past the
-    pure path's size cap) SKIPS the comparison instead of leaking the
-    pure decoder's exception: output must not depend on which call
-    positions the sampling stride lands on. The skip is NARROW —
-    NotImplementedError (the typed unsupported-variant signal) and
-    ValueError (the typed malformed/over-cap signal) only; a pure
-    decoder CRASHING (IndexError/KeyError/struct/zlib leaking through)
-    on a payload it should decode is a regression that is RE-RAISED as
-    NativeDecoderDrift — the stats path's poison catch swallows the
-    raw crash types as per-row NULLs, which would make a sampled crash
-    surface as a nondeterministic NULL instead of a loud failure. If
-    EVERY sampled cross-check for a format skipped (≥8 samples,
-    counted PER FORMAT), a ``warnings.warn`` flags that drift
-    detection never ran for that format in this task — a warning, not
-    a raise, because an all-native-only corpus (e.g. every image past
-    the size cap) is a legitimate workload.
-    Drift raises NativeDecoderDrift, which no poison catch swallows."""
-    import warnings as _warnings
-
-    import numpy as _np
-
-    state = {"n": 0}
-    xchecks: dict[str, int] = {}
-    xskips: dict[str, int] = {}
-
-    def decode(fmt: str, payload: bytes):
-        nd = native.get(fmt)
-        if nd is None:
-            return pure[fmt](payload)
-        out = nd(payload)
-        state["n"] += 1
-        if xcheck_every and state["n"] % xcheck_every == 1 % xcheck_every:
-            xchecks[fmt] = xchecks.get(fmt, 0) + 1
-            try:
-                ref = pure[fmt](payload)
-            except (NotImplementedError, ValueError):
-                xskips[fmt] = xskips.get(fmt, 0) + 1
-                if xskips[fmt] == xchecks[fmt] >= 8:
-                    _warnings.warn(
-                        f"all {xchecks[fmt]} sampled native-{fmt} "
-                        "cross-checks skipped (pure path decoded none "
-                        "of them) — drift detection never ran for "
-                        f"{fmt} in this task",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-                return out  # pure path can't decode this variant
-            except Exception as exc:
-                # a pure-decoder CRASH on a natively-decodable payload:
-                # surface it loudly and deterministically — the raw
-                # type would be poison-nulled per sample downstream
-                raise NativeDecoderDrift(
-                    f"pure {fmt} decoder crashed on a sampled payload "
-                    f"the native codec decodes "
-                    f"({type(exc).__name__}: {exc})"
-                ) from exc
-            why = None
-            if tuple(out.shape) != tuple(ref.shape):
-                why = (
-                    f"shape {tuple(out.shape)} vs {tuple(ref.shape)}"
-                )
-            elif ref.size:
-                diff = _np.abs(
-                    out.astype(_np.int64) - ref.astype(_np.int64)
-                )
-                dmax = int(diff.max())
-                dmean = float(diff.mean())
-                if fmt != "jpeg":
-                    if dmax > 0:
-                        why = f"lossless format, max|diff|={dmax}"
-                elif not _jpeg_is_subsampled(bytes(payload)):
-                    if dmax > 2 or dmean > 1.0:
-                        why = (
-                            f"4:4:4/gray JPEG, max|diff|={dmax}, "
-                            f"mean|diff|={dmean:.2f}"
-                        )
-                else:
-                    bias = abs(
-                        float(out.astype(_np.float64).mean())
-                        - float(ref.astype(_np.float64).mean())
-                    )
-                    # max|diff| ≤ 128: fancy-vs-replication chroma
-                    # upsampling legitimately differs by tens at hard
-                    # chroma edges, but a corrupted region (one wrong
-                    # MCU) lands near full-range — catch gross LOCAL
-                    # corruption the global aggregates dilute away
-                    if dmean > 3.0 or bias > 1.0 or dmax > 128:
-                        why = (
-                            f"subsampled JPEG, mean|diff|="
-                            f"{dmean:.2f}, mean bias={bias:.2f}, "
-                            f"max|diff|={dmax}"
-                        )
-            if why is not None:
-                raise NativeDecoderDrift(
-                    f"native {fmt} codec disagrees with the pure "
-                    f"decoder on a sampled payload ({why})"
-                )
-        return out
-
-    return decode
-
-
-def extract_decoded_stats(
-    media: DataFrame,
-    native_codecs: dict | None = None,
-    xcheck_every: int = 64,
-) -> DataFrame:
+def extract_decoded_stats(media: DataFrame) -> DataFrame:
     """Partition-parallel FULL-CONTENT decode over binary payloads for
     the uncompressed containers (24-bit BMP pixels, 16-bit PCM WAV
     samples) — the real thing, not a header skim: bytes are decoded to
@@ -2479,24 +2275,10 @@ def extract_decoded_stats(
     PNG and GIF are decoded for real (zlib inflate + unfilter; LZW +
     palette). Unsupported variants or unparseable payloads yield NULL
     stats with the header format (poison files must not kill a
-    corpus-scale job).
-
-    Image decode goes through the pluggable native seam
-    (``_load_native_codecs`` / ``_make_pixel_decoder``): pure
-    oracle-exact decoders by default, an env-gated native codec with
-    sampled pure-path cross-checks when one is importable.
-    ``native_codecs`` injects codecs explicitly (tests);
-    ``xcheck_every`` sets the sampling stride (0 disables)."""
-    bmp_core, wav_core, png_core, gif_core, jpeg_core = (
-        _make_content_decoders()
-    )
+    corpus-scale job). Images decode through ``_pixel_decoders``."""
+    decoders = _pixel_decoders()
+    wav_core = _make_content_decoders()[1]
     header_core = _make_header_parser()
-    pure = {
-        "bmp": bmp_core,
-        "png": png_core,
-        "gif": gif_core,
-        "jpeg": jpeg_core,
-    }
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct as _struct
@@ -2504,19 +2286,12 @@ def extract_decoded_stats(
 
         import pandas as _pd
 
-        native = (
-            native_codecs
-            if native_codecs is not None
-            else _load_native_codecs(pure)
-        )
-        decode = _make_pixel_decoder(pure, native, xcheck_every)
-
         def one(b: bytes) -> tuple:
             meta = header_core(b) or {}
             fmt = meta.get("format")
             try:
-                if fmt in ("bmp", "png", "gif", "jpeg"):
-                    px = decode(fmt, b).astype("int64")
+                if fmt in decoders:
+                    px = decoders[fmt](b).astype("int64")
                     return (fmt, px.size, int(px.sum()), int(px.min()),
                             int(px.max()), int(px[0].sum()))
                 if fmt == "wav":
@@ -2555,16 +2330,6 @@ def extract_decoded_stats(
     # spread (r15, guide §2.5): no-op when the payload frame already
     # has cluster parallelism; rescues 1-2-split local inputs
     return spread(media).mapInPandas(batches, DECODED_STATS_SCHEMA)
-
-
-def _fake_meta(payload: bytes) -> tuple[int, int, str]:
-    """Deterministic stand-in for decoded (width, height, format): derived
-    from the content hash so tests are stable and distribution-friendly."""
-    h = hashlib.sha256(payload).digest()
-    width = 64 + h[0] % 192
-    height = 64 + h[1] % 192
-    fmt = ("jpeg", "png", "webp")[h[2] % 3]
-    return width, height, fmt
 
 
 def extract_image_meta(media: DataFrame) -> DataFrame:
@@ -2742,90 +2507,32 @@ def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
     )
 
 
-def synthesize_decodable_media(docs: DataFrame) -> DataFrame:
-    """Deterministic REAL containers for the full-decode path, by
-    ``doc_id mod 3``: 0 → uncompressed 24-bit BMP (16×4, stored pixel
-    bytes ``(doc_id·7 + i) mod 256`` in file order); 1 → 16-bit PCM
-    mono WAV (128 samples ``((doc_id·13 + i·37) mod 65536) − 32768``);
-    2 → zlib-COMPRESSED 8-bit RGB PNG (8×4, pixel bytes
-    ``(doc_id·5 + i) mod 256`` in scanline order — the decode has to
-    inflate and unfilter to recover them). Closed-form content means a
-    SQL oracle recomputes the decoded stats independently — the
-    decoder is checked against math, not against itself. Construction
-    runs in ``mapInPandas`` (one Arrow batch per partition),
-    self-contained so it ships by value."""
+# --------------------------------------------------------------------------
+# Synthesized fixture media with CLOSED-FORM decoded content.
+#
+# Each ``synthesize_*_media`` maps doc_ids to real container payloads
+# whose decoded stats a SQL oracle recomputes from doc_id alone, so the
+# decoders are checked against math, not against themselves. They all
+# run through ``_synthesize``; the JPEG fixtures share one marker-segment
+# writer and one Huffman bit packer.
+# --------------------------------------------------------------------------
+
+
+def _synthesize(docs: DataFrame, payload_fn) -> DataFrame:
+    """One media row per document: ``payload_fn(doc_id) -> (payload,
+    media_type)``, called executor-side inside ``mapInPandas`` (one
+    Arrow batch per partition)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
         import pandas as _pd
 
-        def bmp_payload(doc_id: int) -> bytes:
-            w, h = 16, 4
-            stride = (w * 3 + 3) // 4 * 4  # 48: no padding at w=16
-            body = bytes(
-                (doc_id * 7 + i) % 256 for i in range(stride * h)
-            )
-            header = b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-            dib = struct.pack(
-                "<IiiHHIIiiII",
-                40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0,
-            )
-            return header + dib + body
-
-        def wav_payload(doc_id: int) -> bytes:
-            data = b"".join(
-                struct.pack(
-                    "<h", ((doc_id * 13 + i * 37) % 65536) - 32768
-                )
-                for i in range(128)
-            )
-            fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-            return (
-                b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<I", 16) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-
-        def png_payload(doc_id: int) -> bytes:
-            w, h = 8, 4
-            stride = w * 3
-            rows = b"".join(
-                b"\x00"  # filter type None per scanline
-                + bytes(
-                    (doc_id * 5 + y * stride + x) % 256
-                    for x in range(stride)
-                )
-                for y in range(h)
-            )
-
-            def chunk(typ: bytes, data: bytes) -> bytes:
-                return (
-                    struct.pack(">I", len(data)) + typ + data
-                    + struct.pack(">I", zlib.crc32(typ + data))
-                )
-
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(rows))
-                + chunk(b"IEND", b"")
-            )
-
-        def payload(d: int) -> bytes:
-            return (bmp_payload, wav_payload, png_payload)[d % 3](d)
-
         for pdf in it:
-            ids = [int(d) for d in pdf["doc_id"]]
+            rows = [payload_fn(int(d)) for d in pdf["doc_id"]]
             yield _pd.DataFrame(
                 {
                     "media_id": pdf["doc_id"],
-                    "payload": [payload(d) for d in ids],
-                    "media_type": [
-                        "audio" if d % 3 == 1 else "image" for d in ids
-                    ],
+                    "payload": [r[0] for r in rows],
+                    "media_type": [r[1] for r in rows],
                 }
             )
 
@@ -2837,6 +2544,205 @@ def synthesize_decodable_media(docs: DataFrame) -> DataFrame:
     return spread(docs.select("doc_id")).mapInPandas(
         batches, MEDIA_SCHEMA
     )
+
+
+def _png_chunk(typ: bytes, data: bytes) -> bytes:
+    """One PNG chunk: length, type, data, CRC-32 of type + data."""
+    return (
+        struct.pack(">I", len(data)) + typ + data
+        + struct.pack(">I", zlib.crc32(typ + data))
+    )
+
+
+def _seg(marker: int, body: bytes) -> bytes:
+    """One JPEG marker segment: 0xFF, marker, length, body."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+def _put_dc(bits: list, d: int, cat_bits: int) -> None:
+    """Huffman-code one DC diff ``d`` onto ``bits`` (MSB first): its
+    magnitude category ``s`` as a fixed ``cat_bits``-wide code, then
+    ``s`` extra bits (one's complement for negative diffs)."""
+    s = abs(d).bit_length()
+    v = d if d > 0 else d + (1 << s) - 1
+    bits.extend((s >> i) & 1 for i in range(cat_bits - 1, -1, -1))
+    bits.extend((v >> i) & 1 for i in range(s - 1, -1, -1))
+
+
+def _pack_scan(bits: list) -> bytes:
+    """Pack an entropy-coded bit list MSB first: the last byte is
+    padded with 1-bits and every 0xFF byte is stuffed with 0x00."""
+    bits = bits + [1] * ((-len(bits)) % 8)
+    out = bytearray()
+    for i in range(0, len(bits), 8):
+        byte = 0
+        for bit in bits[i : i + 8]:
+            byte = (byte << 1) | bit
+        out.append(byte)
+        if byte == 0xFF:
+            out.append(0x00)
+    return bytes(out)
+
+
+def _dc_tables(prec: int, q: int = 16) -> tuple[bytes, int]:
+    """``(DQT + DC DHT segments, DC code width)`` of the DC-only
+    Huffman fixtures: one flat ``q`` table (Pq=1 16-bit entries at
+    12-bit precision) and DC categories 0..11 (8-bit) or 0..15
+    (12-bit) as fixed 4- or 5-bit codes."""
+    if prec == 8:
+        dqt = _seg(0xDB, bytes([0]) + bytes([q] * 64))
+        ncat, width = 12, 4
+    else:
+        dqt = _seg(0xDB, bytes([0x10]) + struct.pack(">H", q) * 64)
+        ncat, width = 16, 5
+    counts = [0] * 16
+    counts[width - 1] = ncat
+    dht_dc = _seg(0xC4, bytes([0x00]) + bytes(counts) + bytes(range(ncat)))
+    return dqt + dht_dc, width
+
+
+def _dc_jpeg(
+    dcs, prec: int = 8, q: int = 16, adobe: int | None = None
+) -> bytes:
+    """A 16×8 DC-only baseline (SOF0) JPEG with one component per entry
+    of ``dcs`` (1 = grayscale, 3 = YCbCr, 4 = CMYK/YCCK), 1×1 sampling
+    (two MCUs, one block per component each), one flat ``q`` table
+    shared by all components and a genuinely Huffman-coded interleaved
+    scan (AC: EOB as 1 bit). Plane ``i`` decodes uniformly to
+    ``dcs[i]·q/8 + 2^(prec-1)``: ``128 + 2·dc`` at the defaults,
+    ``2048 + 2·dc`` at ``prec=12``. ``adobe`` adds an Adobe APP14
+    segment carrying that color-transform byte (0 = CMYK planes stored
+    directly, 2 = YCCK)."""
+    cids = range(1, len(dcs) + 1)
+    tables, dc_bits = _dc_tables(prec, q)
+    dht_ac = _seg(0xC4, bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0]))
+    sof = _seg(
+        0xC0,
+        bytes([prec]) + struct.pack(">HH", 8, 16) + bytes([len(dcs)])
+        + b"".join(bytes([cid, 0x11, 0]) for cid in cids),
+    )
+    sos = _seg(
+        0xDA,
+        bytes([len(dcs)])
+        + b"".join(bytes([cid, 0x00]) for cid in cids)
+        + bytes([0, 63, 0]),
+    )
+    bits: list[int] = []
+    for mcu in range(2):
+        for dc in dcs:
+            _put_dc(bits, dc if mcu == 0 else 0, dc_bits)  # diff vs pred
+            bits.append(0)  # EOB
+    app14 = b"" if adobe is None else _seg(
+        0xEE, b"Adobe" + struct.pack(">HHH", 100, 0, 0) + bytes([adobe])
+    )
+    return (
+        b"\xff\xd8" + app14 + tables + dht_ac + sof + sos
+        + _pack_scan(bits) + b"\xff\xd9"
+    )
+
+
+def _make_progressive_dc_jpeg():
+    """``prog_jpeg(dc, prec=8) -> bytes``: the progressive (SOF2) twin
+    of the grayscale ``_dc_jpeg`` — same 16×8 DC-only content under a
+    flat q=16 table, split into DC-first (Al=1) + DC-refinement (Al=0)
+    + EOB-run AC scans. Decodes to uniform ``128 + 2·dc`` (``prec=12``:
+    Pq=1 table, 5-bit DC categories, uniform ``2048 + 2·dc``)."""
+
+    def prog_jpeg(dc: int, prec: int = 8) -> bytes:
+        tables, dc_bits = _dc_tables(prec)
+        dht_ac = _seg(
+            0xC4, bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0x10])
+        )
+        sof = _seg(
+            0xC2,
+            bytes([prec]) + struct.pack(">HH", 8, 16)
+            + bytes([1, 1, 0x11, 0]),
+        )
+        # scan 1 — DC first, Al=1: diffs of (dc >> 1) over two blocks
+        b1: list = []
+        for d in (dc >> 1, 0):
+            _put_dc(b1, d, dc_bits)
+        sos1 = _seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01]))
+        # scan 2 — DC refinement, Ah=1 Al=0: one raw bit per block
+        b2 = [dc & 1, dc & 1]
+        sos2 = _seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x10]))
+        # scan 3 — AC first over [1, 63]: one EOB1 symbol (run of 2)
+        b3: list = [0, 0]  # EOB1 code (1 bit) + 1 extension bit (0)
+        sos3 = _seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00]))
+        return (
+            b"\xff\xd8" + tables + dht_ac + sof
+            + sos1 + _pack_scan(b1)
+            + sos2 + _pack_scan(b2)
+            + sos3 + _pack_scan(b3)
+            + b"\xff\xd9"
+        )
+
+    return prog_jpeg
+
+
+def synthesize_decodable_media(docs: DataFrame) -> DataFrame:
+    """Deterministic REAL containers for the full-decode path, by
+    ``doc_id mod 3``: 0 → uncompressed 24-bit BMP (16×4, stored pixel
+    bytes ``(doc_id·7 + i) mod 256`` in file order); 1 → 16-bit PCM
+    mono WAV (128 samples ``((doc_id·13 + i·37) mod 65536) − 32768``);
+    2 → zlib-COMPRESSED 8-bit RGB PNG (8×4, pixel bytes
+    ``(doc_id·5 + i) mod 256`` in scanline order — the decode has to
+    inflate and unfilter to recover them). Closed-form content means a
+    SQL oracle recomputes the decoded stats independently — the
+    decoder is checked against math, not against itself."""
+
+    def bmp_payload(doc_id: int) -> bytes:
+        w, h = 16, 4
+        stride = (w * 3 + 3) // 4 * 4  # 48: no padding at w=16
+        body = bytes(
+            (doc_id * 7 + i) % 256 for i in range(stride * h)
+        )
+        header = b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
+        dib = struct.pack(
+            "<IiiHHIIiiII",
+            40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0,
+        )
+        return header + dib + body
+
+    def wav_payload(doc_id: int) -> bytes:
+        data = b"".join(
+            struct.pack(
+                "<h", ((doc_id * 13 + i * 37) % 65536) - 32768
+            )
+            for i in range(128)
+        )
+        fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+        return (
+            b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+            + b"fmt " + struct.pack("<I", 16) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+
+    def png_payload(doc_id: int) -> bytes:
+        w, h = 8, 4
+        stride = w * 3
+        rows = b"".join(
+            b"\x00"  # filter type None per scanline
+            + bytes(
+                (doc_id * 5 + y * stride + x) % 256
+                for x in range(stride)
+            )
+            for y in range(h)
+        )
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"IDAT", zlib.compress(rows))
+            + _png_chunk(b"IEND", b"")
+        )
+
+    def payload(d: int) -> tuple[bytes, str]:
+        if d % 3 == 1:
+            return wav_payload(d), "audio"
+        return (bmp_payload if d % 3 == 0 else png_payload)(d), "image"
+
+    return _synthesize(docs, payload)
 
 
 def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
@@ -2852,300 +2758,10 @@ def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
     segments), so the full marker-walk → bit-reader → Huffman →
     dequant → IDCT path runs for real."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+    def payload(d: int) -> tuple[bytes, str]:
+        return _dc_jpeg([(d * 7) % 100 - 50]), "image"
 
-        dc_jpeg = _make_dc_jpeg()
-
-        for pdf in it:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        dc_jpeg((d * 7) % 100 - 50) for d in ids
-                    ],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    # spread first (r15, guide §2.5): a small/packed documents table
-    # arrives as 1-2 input splits, and the whole synthesize->decode
-    # mapInPandas chain inherits that parallelism (measured: the six
-    # decode legs ran on ONE task at sf0.1). At real scale the input
-    # already has many splits and spread() is a no-op.
-    return spread(docs.select("doc_id")).mapInPandas(
-        batches, MEDIA_SCHEMA
-    )
-
-
-def _make_dc_jpeg():
-    """``dc_jpeg(dc) -> bytes``: the 16×8 grayscale DC-only baseline
-    JPEG of ``synthesize_jpeg_media`` (flat q=16 table, genuinely
-    Huffman-coded scan), factored so the MJPEG video synthesizer can
-    reuse frames with closed-form decoded content (uniform
-    ``128 + 2·dc`` exactly)."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(body) + 2)
-            + body
-        )
-
-    def dc_jpeg(dc: int) -> bytes:
-        dqt = seg(0xDB, bytes([0]) + bytes([16] * 64))
-        # DC: categories 0..11 as 4-bit codes; AC: EOB as 1 bit
-        dht_dc = seg(
-            0xC4,
-            bytes([0x00]) + bytes([0, 0, 0, 12] + [0] * 12)
-            + bytes(range(12)),
-        )
-        dht_ac = seg(
-            0xC4, bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0])
-        )
-        sof = seg(
-            0xC0,
-            bytes([8]) + struct.pack(">HH", 8, 16)
-            + bytes([1, 1, 0x11, 0]),
-        )
-        sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        bits: list[int] = []
-
-        def put(v: int, n: int) -> None:
-            bits.extend((v >> i) & 1 for i in range(n - 1, -1, -1))
-
-        for blk in range(2):  # 16x8 = two 8x8 blocks
-            d = dc if blk == 0 else 0  # DC diff vs predictor
-            s = abs(d).bit_length()
-            put(s, 4)
-            if s:
-                put(d if d > 0 else d + (1 << s) - 1, s)
-            put(0, 1)  # EOB
-        bits += [1] * ((-len(bits)) % 8)
-        scan = bytearray()
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for bit in bits[i : i + 8]:
-                byte = (byte << 1) | bit
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0x00)
-        return (
-            b"\xff\xd8" + dqt + dht_dc + dht_ac + sof + sos
-            + bytes(scan) + b"\xff\xd9"
-        )
-
-    return dc_jpeg
-
-
-def _make_dc_jpeg12():
-    """``dc_jpeg12(dc) -> bytes``: a 16×8 GRAYSCALE **12-bit**
-    baseline DC-only JPEG — Pq=1 (16-bit) flat q=16 quantization
-    table, 5-bit DC category codes (so categories up to 15 are
-    encodable, per the 12-bit DC range), genuinely Huffman-coded
-    scan. The IDCT of a DC-only block is uniform:
-    dc·16/8 + 2048 = **2048 + 2·dc** exactly — closed form for the
-    SQL oracle, with values an 8-bit path cannot represent."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(body) + 2)
-            + body
-        )
-
-    def dc_jpeg12(dc: int, q0: int = 16) -> bytes:
-        qtbl = b"".join(struct.pack(">H", q0) for _ in range(64))
-        dqt = seg(0xDB, bytes([0x10]) + qtbl)  # Pq=1, Tq=0
-        # DC: categories 0..15 as 5-bit codes; AC: EOB as 1 bit
-        dht_dc = seg(
-            0xC4,
-            bytes([0x00]) + bytes([0, 0, 0, 0, 16] + [0] * 11)
-            + bytes(range(16)),
-        )
-        dht_ac = seg(
-            0xC4, bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0])
-        )
-        sof = seg(
-            0xC0,
-            bytes([12]) + struct.pack(">HH", 8, 16)
-            + bytes([1, 1, 0x11, 0]),
-        )
-        sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        bits: list[int] = []
-
-        def put(v: int, n: int) -> None:
-            bits.extend((v >> i) & 1 for i in range(n - 1, -1, -1))
-
-        for blk in range(2):  # 16x8 = two 8x8 blocks
-            d = dc if blk == 0 else 0  # DC diff vs predictor
-            s = abs(d).bit_length()
-            put(s, 5)
-            if s:
-                put(d if d > 0 else d + (1 << s) - 1, s)
-            put(0, 1)  # EOB
-        bits += [1] * ((-len(bits)) % 8)
-        scan = bytearray()
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for bit in bits[i : i + 8]:
-                byte = (byte << 1) | bit
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0x00)
-        return (
-            b"\xff\xd8" + dqt + dht_dc + dht_ac + sof + sos
-            + bytes(scan) + b"\xff\xd9"
-        )
-
-    return dc_jpeg12
-
-
-def _make_dc_jpeg12_color():
-    """``dc_jpeg12_color(dcs) -> bytes``: a 16×8 THREE-COMPONENT
-    **12-bit** baseline DC-only JPEG (Pq=1 flat q=16 table shared,
-    1×1 sampling, 5-bit DC categories, interleaved Ns=3 scan).
-    Plane ``i`` decodes uniformly to ``2048 + 2·dc_i``; the YCbCr
-    conversion then runs at the 12-bit chroma center (2048), so a
-    wrong-center regression (e.g. reusing 128) shifts the output by
-    thousands and cannot hide."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(body) + 2)
-            + body
-        )
-
-    def dc_jpeg12_color(dcs) -> bytes:
-        qtbl = b"".join(struct.pack(">H", 16) for _ in range(64))
-        dqt = seg(0xDB, bytes([0x10]) + qtbl)  # Pq=1, Tq=0
-        dht_dc = seg(
-            0xC4,
-            bytes([0x00]) + bytes([0, 0, 0, 0, 16] + [0] * 11)
-            + bytes(range(16)),
-        )
-        dht_ac = seg(
-            0xC4, bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0])
-        )
-        sof = seg(
-            0xC0,
-            bytes([12]) + struct.pack(">HH", 8, 16) + bytes([3])
-            + b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3)),
-        )
-        sos = seg(
-            0xDA,
-            bytes([3])
-            + b"".join(bytes([cid, 0x00]) for cid in (1, 2, 3))
-            + bytes([0, 63, 0]),
-        )
-        bits: list[int] = []
-
-        def put(v: int, n: int) -> None:
-            bits.extend((v >> i) & 1 for i in range(n - 1, -1, -1))
-
-        for mcu in range(2):  # 16x8 at 1x1 sampling = two MCUs
-            for ci in range(3):
-                d = dcs[ci] if mcu == 0 else 0
-                s = abs(d).bit_length()
-                put(s, 5)
-                if s:
-                    put(d if d > 0 else d + (1 << s) - 1, s)
-                put(0, 1)  # EOB
-        bits += [1] * ((-len(bits)) % 8)
-        scan = bytearray()
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for bit in bits[i : i + 8]:
-                byte = (byte << 1) | bit
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0x00)
-        return (
-            b"\xff\xd8" + dqt + dht_dc + dht_ac + sof + sos
-            + bytes(scan) + b"\xff\xd9"
-        )
-
-    return dc_jpeg12_color
-
-
-def _make_dc_jpeg_cmyk():
-    """``cmyk_jpeg(dcs, transform) -> bytes``: a 16×8 FOUR-COMPONENT
-    DC-only baseline JPEG with an Adobe APP14 marker carrying the
-    color-transform flag (0 = CMYK planes stored directly, 2 = YCCK).
-    Flat q=16 table shared by all components, 1×1 sampling (one block
-    per component per MCU, two MCUs), genuinely Huffman-coded
-    interleaved Ns=4 scan. Each decoded plane is uniformly
-    ``128 + 2·dc`` exactly, so the decoder's APP14 dispatch +
-    inverted-ink CMYK→RGB math has a closed form a SQL oracle
-    recomputes from the dcs alone."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(body) + 2)
-            + body
-        )
-
-    def cmyk_jpeg(dcs, transform: int) -> bytes:
-        app14 = seg(
-            0xEE,
-            b"Adobe" + struct.pack(">HHH", 100, 0, 0)
-            + bytes([transform]),
-        )
-        dqt = seg(0xDB, bytes([0]) + bytes([16] * 64))
-        dht_dc = seg(
-            0xC4,
-            bytes([0x00]) + bytes([0, 0, 0, 12] + [0] * 12)
-            + bytes(range(12)),
-        )
-        dht_ac = seg(
-            0xC4, bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0])
-        )
-        sof = seg(
-            0xC0,
-            bytes([8]) + struct.pack(">HH", 8, 16) + bytes([4])
-            + b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3, 4)),
-        )
-        sos = seg(
-            0xDA,
-            bytes([4])
-            + b"".join(bytes([cid, 0x00]) for cid in (1, 2, 3, 4))
-            + bytes([0, 63, 0]),
-        )
-        bits: list[int] = []
-
-        def put(v: int, n: int) -> None:
-            bits.extend((v >> i) & 1 for i in range(n - 1, -1, -1))
-
-        for mcu in range(2):  # 16x8 at 1x1 sampling = two MCUs
-            for ci in range(4):
-                d = dcs[ci] if mcu == 0 else 0  # diff vs predictor
-                s = abs(d).bit_length()
-                put(s, 4)
-                if s:
-                    put(d if d > 0 else d + (1 << s) - 1, s)
-                put(0, 1)  # EOB
-        bits += [1] * ((-len(bits)) % 8)
-        scan = bytearray()
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for bit in bits[i : i + 8]:
-                byte = (byte << 1) | bit
-            scan.append(byte)
-            if byte == 0xFF:
-                scan.append(0x00)
-        return (
-            b"\xff\xd8" + app14 + dqt + dht_dc + dht_ac + sof + sos
-            + bytes(scan) + b"\xff\xd9"
-        )
-
-    return cmyk_jpeg
+    return _synthesize(docs, payload)
 
 
 def _make_dc_jpeg_arith():
@@ -3173,16 +2789,7 @@ def _make_dc_jpeg_arith():
       the reassembled DC ((dc>>1)<<1 | bit0) keeps the same closed
       form.
     """
-    import struct
-
     from . import jpegarith as _ja
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(body) + 2)
-            + body
-        )
 
     def _encode_mcus(ncomp: int, dcs, lo: int, hi: int, kx: int,
                      mcus) -> bytes:
@@ -3206,16 +2813,16 @@ def _make_dc_jpeg_arith():
         """Variant 3: the SOF10 three-scan-family fixture."""
         ncomp = 3
         cids = (1, 2, 3)
-        dqt = seg(0xDB, bytes([0]) + bytes([16] * 64))
-        dac = seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))
-        sof = seg(
+        dqt = _seg(0xDB, bytes([0]) + bytes([16] * 64))
+        dac = _seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))
+        sof = _seg(
             0xCA,
             bytes([8]) + struct.pack(">HH", 8, 16) + bytes([ncomp])
             + b"".join(bytes([cid, 0x11, 0]) for cid in cids),
         )
         out = bytearray(b"\xff\xd8" + dqt + dac + sof)
         # scan 1: interleaved DC first, Al=1 — diffs of (dc >> 1)
-        sos1 = seg(
+        sos1 = _seg(
             0xDA,
             bytes([ncomp])
             + b"".join(bytes([cid, 0x00]) for cid in cids)
@@ -3233,7 +2840,7 @@ def _make_dc_jpeg_arith():
         out += sos1 + enc.finish()
         # scan 2: interleaved DC refinement, Ah=1/Al=0 — one
         # fixed-bin bit (bit 0 of the DC value) per block
-        sos2 = seg(
+        sos2 = _seg(
             0xDA,
             bytes([ncomp])
             + b"".join(bytes([cid, 0x00]) for cid in cids)
@@ -3247,7 +2854,7 @@ def _make_dc_jpeg_arith():
         out += sos2 + enc.finish()
         # scans 3-5: per-component AC first over [1, 63] — all EOB
         for cid in cids:
-            sos = seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0x00]))
+            sos = _seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0x00]))
             enc = _ja.QMEncoder()
             ac_stats = _ja.new_ac_stats()
             for _blk in range(2):
@@ -3258,26 +2865,26 @@ def _make_dc_jpeg_arith():
     def dc_jpeg_arith(dcs, variant: int) -> bytes:
         if variant == 3:
             return _progressive_arith(dcs)
-        dqt = seg(0xDB, bytes([0]) + bytes([16] * 64))
+        dqt = _seg(0xDB, bytes([0]) + bytes([16] * 64))
         if variant == 0:
             ncomp, lo, hi, kx = 1, 0, 1, 5
             dac = b""
             dri = b""
         elif variant == 1:
             ncomp, lo, hi, kx = 3, 0, 2, 9
-            dac = seg(0xCC, bytes([0x00, (hi << 4) | lo, 0x10, kx]))
+            dac = _seg(0xCC, bytes([0x00, (hi << 4) | lo, 0x10, kx]))
             dri = b""
         else:
             ncomp, lo, hi, kx = 3, 0, 1, 5
-            dac = seg(0xCC, bytes([0x00, (hi << 4) | lo, 0x10, kx]))
-            dri = seg(0xDD, struct.pack(">H", 1))
+            dac = _seg(0xCC, bytes([0x00, (hi << 4) | lo, 0x10, kx]))
+            dri = _seg(0xDD, struct.pack(">H", 1))
         cids = list(range(1, ncomp + 1))
-        sof = seg(
+        sof = _seg(
             0xC9,
             bytes([8]) + struct.pack(">HH", 8, 16) + bytes([ncomp])
             + b"".join(bytes([cid, 0x11, 0]) for cid in cids),
         )
-        sos = seg(
+        sos = _seg(
             0xDA,
             bytes([ncomp])
             + b"".join(bytes([cid, 0x00]) for cid in cids)
@@ -3314,34 +2921,13 @@ def synthesize_arith_jpeg_media(docs: DataFrame) -> DataFrame:
     fixture variant (grayscale/defaults, color/non-default DAC,
     color/restart, color/PROGRESSIVE-with-refinement — see
     ``_make_dc_jpeg_arith``)."""
+    dc_jpeg_arith = _make_dc_jpeg_arith()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+    def payload(d: int) -> tuple[bytes, str]:
+        dc = (d * 7) % 100 - 50
+        return dc_jpeg_arith([dc, 0, 0], d % 4), "image"
 
-        dc_jpeg_arith = _make_dc_jpeg_arith()
-
-        def payload(d: int) -> bytes:
-            dc = (d * 7) % 100 - 50
-            return dc_jpeg_arith([dc, 0, 0], d % 4)
-
-        for pdf in it:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [payload(d) for d in ids],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    # spread first (r15, guide §2.5): a small/packed documents table
-    # arrives as 1-2 input splits, and the whole synthesize->decode
-    # mapInPandas chain inherits that parallelism (measured: the six
-    # decode legs ran on ONE task at sf0.1). At real scale the input
-    # already has many splits and spread() is a no-op.
-    return spread(docs.select("doc_id")).mapInPandas(
-        batches, MEDIA_SCHEMA
-    )
+    return _synthesize(docs, payload)
 
 
 def synthesize_cmyk_jpeg_media(docs: DataFrame) -> DataFrame:
@@ -3355,33 +2941,11 @@ def synthesize_cmyk_jpeg_media(docs: DataFrame) -> DataFrame:
     (``_jpeg_color_out``), so one oracle covers the APP14 dispatch
     AND both transform paths."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+    def payload(d: int) -> tuple[bytes, str]:
+        dcs = [(d * 7 + 13 * i) % 100 - 50 for i in range(4)]
+        return _dc_jpeg(dcs, adobe=0 if d % 2 == 0 else 2), "image"
 
-        cmyk_jpeg = _make_dc_jpeg_cmyk()
-
-        def payload(d: int) -> bytes:
-            dcs = [(d * 7 + 13 * i) % 100 - 50 for i in range(4)]
-            return cmyk_jpeg(dcs, 0 if d % 2 == 0 else 2)
-
-        for pdf in it:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [payload(d) for d in ids],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    # spread first (r15, guide §2.5): a small/packed documents table
-    # arrives as 1-2 input splits, and the whole synthesize->decode
-    # mapInPandas chain inherits that parallelism (measured: the six
-    # decode legs ran on ONE task at sf0.1). At real scale the input
-    # already has many splits and spread() is a no-op.
-    return spread(docs.select("doc_id")).mapInPandas(
-        batches, MEDIA_SCHEMA
-    )
+    return _synthesize(docs, payload)
 
 
 def synthesize_jpeg12_media(docs: DataFrame) -> DataFrame:
@@ -3390,48 +2954,25 @@ def synthesize_jpeg12_media(docs: DataFrame) -> DataFrame:
     ``2048 + 2·dc`` with ``dc = (doc_id·11) mod 2000 − 1000`` —
     values almost all beyond what any 8-bit path could produce, so a
     precision regression cannot hide. ``doc_id mod 4``: 0 → BASELINE
-    grayscale (``_make_dc_jpeg12``), 1/3 → the PROGRESSIVE three-scan
-    twin (``_make_progressive_dc_jpeg`` at prec=12), 2 → baseline
-    THREE-COMPONENT 12-bit COLOR (``_make_dc_jpeg12_color``, round
-    10) with zero chroma DCs, so Cb=Cr=2048 and RGB = (v, v, v)
+    grayscale (``_dc_jpeg`` at prec=12), 1/3 → the PROGRESSIVE
+    three-scan twin (``_make_progressive_dc_jpeg`` at prec=12), 2 →
+    baseline THREE-COMPONENT 12-bit COLOR (``_dc_jpeg``, round 10)
+    with zero chroma DCs, so Cb=Cr=2048 and RGB = (v, v, v)
     exactly — trivial chroma, but a wrong chroma center (the 8-bit
     128 instead of 2048) would shift every channel by thousands;
     n_units becomes 384 for the color rows. One closed-form oracle
     covers all three 12-bit decode paths."""
+    prog_jpeg = _make_progressive_dc_jpeg()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+    def payload(d: int) -> tuple[bytes, str]:
+        dc = (d * 11) % 2000 - 1000
+        if d % 4 == 0:
+            return _dc_jpeg([dc], prec=12), "image"
+        if d % 4 == 2:
+            return _dc_jpeg([dc, 0, 0], prec=12), "image"
+        return prog_jpeg(dc, prec=12), "image"
 
-        dc_jpeg12 = _make_dc_jpeg12()
-        dc_jpeg12_color = _make_dc_jpeg12_color()
-        prog_jpeg = _make_progressive_dc_jpeg()
-
-        def payload(d: int) -> bytes:
-            dc = (d * 11) % 2000 - 1000
-            if d % 4 == 0:
-                return dc_jpeg12(dc)
-            if d % 4 == 2:
-                return dc_jpeg12_color([dc, 0, 0])
-            return prog_jpeg(dc, prec=12)
-
-        for pdf in it:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [payload(d) for d in ids],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    # spread first (r15, guide §2.5): a small/packed documents table
-    # arrives as 1-2 input splits, and the whole synthesize->decode
-    # mapInPandas chain inherits that parallelism (measured: the six
-    # decode legs ran on ONE task at sf0.1). At real scale the input
-    # already has many splits and spread() is a no-op.
-    return spread(docs.select("doc_id")).mapInPandas(
-        batches, MEDIA_SCHEMA
-    )
+    return _synthesize(docs, payload)
 
 
 def synthesize_bmp_wav_variant_media(docs: DataFrame) -> DataFrame:
@@ -3457,122 +2998,98 @@ def synthesize_bmp_wav_variant_media(docs: DataFrame) -> DataFrame:
       same closed form as the PCM arm of media_decode_stats, through
       the float path."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import pandas as _pd
-
-        def bmp_rle_payload(d: int, bpp: int) -> bytes:
-            """Same raster as ``bmp8_payload`` in a BI_RLE8 (bpp=8) or
-            BI_RLE4 (bpp=4) container: even stored rows absolute-mode,
-            odd rows encoded runs, a (0,0) delta escape opening stored
-            row 1, EOL after every row, EOB at the end."""
-            w, h = 8, 4
-            pal = b"".join(
-                bytes([3 * j, 5 * j, 10 * j, 0]) for j in range(16)
-            )
-            stream = bytearray()
-            for r in range(h):  # stored order: bottom-up
-                y = h - 1 - r  # logical row
-                row = [(d * 3 + y * w + x) % 16 for x in range(w)]
-                if r == 1:
-                    stream += bytes([0, 2, 0, 0])  # delta: no-op move
-                if r % 2 == 0:  # absolute mode (count 8: word-aligned)
-                    if bpp == 8:
-                        stream += bytes([0, 8]) + bytes(row)
-                    else:
-                        stream += bytes([0, 8]) + bytes(
-                            (row[i] << 4) | row[i + 1]
-                            for i in range(0, 8, 2)
+    def bmp_rle_payload(d: int, bpp: int) -> bytes:
+        """Same raster as ``bmp8_payload`` in a BI_RLE8 (bpp=8) or
+        BI_RLE4 (bpp=4) container: even stored rows absolute-mode,
+        odd rows encoded runs, a (0,0) delta escape opening stored
+        row 1, EOL after every row, EOB at the end."""
+        w, h = 8, 4
+        pal = b"".join(
+            bytes([3 * j, 5 * j, 10 * j, 0]) for j in range(16)
+        )
+        stream = bytearray()
+        for r in range(h):  # stored order: bottom-up
+            y = h - 1 - r  # logical row
+            row = [(d * 3 + y * w + x) % 16 for x in range(w)]
+            if r == 1:
+                stream += bytes([0, 2, 0, 0])  # delta: no-op move
+            if r % 2 == 0:  # absolute mode (count 8: word-aligned)
+                if bpp == 8:
+                    stream += bytes([0, 8]) + bytes(row)
+                else:
+                    stream += bytes([0, 8]) + bytes(
+                        (row[i] << 4) | row[i + 1]
+                        for i in range(0, 8, 2)
+                    )
+            else:  # encoded runs
+                if bpp == 8:
+                    for v in row:
+                        stream += bytes([1, v])
+                else:
+                    for i in range(0, 8, 2):
+                        stream += bytes(
+                            [2, (row[i] << 4) | row[i + 1]]
                         )
-                else:  # encoded runs
-                    if bpp == 8:
-                        for v in row:
-                            stream += bytes([1, v])
-                    else:
-                        for i in range(0, 8, 2):
-                            stream += bytes(
-                                [2, (row[i] << 4) | row[i + 1]]
-                            )
-                stream += bytes([0, 0])  # end of line
-            stream += bytes([0, 1])  # end of bitmap
-            body = bytes(stream)
-            off = 54 + len(pal)
-            header = b"BM" + struct.pack(
-                "<IHHI", off + len(body), 0, 0, off
-            )
-            dib = struct.pack(
-                "<IiiHHIIiiII",
-                40, w, h, 1, bpp, 1 if bpp == 8 else 2,
-                len(body), 2835, 2835, 16, 16,
-            )
-            return header + dib + pal + body
+            stream += bytes([0, 0])  # end of line
+        stream += bytes([0, 1])  # end of bitmap
+        body = bytes(stream)
+        off = 54 + len(pal)
+        header = b"BM" + struct.pack(
+            "<IHHI", off + len(body), 0, 0, off
+        )
+        dib = struct.pack(
+            "<IiiHHIIiiII",
+            40, w, h, 1, bpp, 1 if bpp == 8 else 2,
+            len(body), 2835, 2835, 16, 16,
+        )
+        return header + dib + pal + body
 
-        def bmp8_payload(d: int) -> bytes:
-            w, h = 8, 4
-            pal = b"".join(
-                bytes([3 * j, 5 * j, 10 * j, 0]) for j in range(16)
-            )  # stored BGRA
-            rows = []
-            for y in range(h):
-                rows.append(
-                    bytes((d * 3 + y * w + x) % 16 for x in range(w))
-                )  # stride 8: already 4-byte aligned
-            body = b"".join(reversed(rows))  # bottom-up storage
-            off = 54 + len(pal)
-            header = b"BM" + struct.pack(
-                "<IHHI", off + len(body), 0, 0, off
-            )
-            dib = struct.pack(
-                "<IiiHHIIiiII",
-                40, w, h, 1, 8, 0, len(body), 2835, 2835, 16, 16,
-            )
-            return header + dib + pal + body
+    def bmp8_payload(d: int) -> bytes:
+        w, h = 8, 4
+        pal = b"".join(
+            bytes([3 * j, 5 * j, 10 * j, 0]) for j in range(16)
+        )  # stored BGRA
+        rows = []
+        for y in range(h):
+            rows.append(
+                bytes((d * 3 + y * w + x) % 16 for x in range(w))
+            )  # stride 8: already 4-byte aligned
+        body = b"".join(reversed(rows))  # bottom-up storage
+        off = 54 + len(pal)
+        header = b"BM" + struct.pack(
+            "<IHHI", off + len(body), 0, 0, off
+        )
+        dib = struct.pack(
+            "<IiiHHIIiiII",
+            40, w, h, 1, 8, 0, len(body), 2835, 2835, 16, 16,
+        )
+        return header + dib + pal + body
 
-        def wavf_payload(d: int) -> bytes:
-            data = b"".join(
-                struct.pack(
-                    "<f",
-                    (((d * 13 + i * 37) % 65536) - 32768) / 32768.0,
-                )
-                for i in range(128)
+    def wavf_payload(d: int) -> bytes:
+        data = b"".join(
+            struct.pack(
+                "<f",
+                (((d * 13 + i * 37) % 65536) - 32768) / 32768.0,
             )
-            fmt = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-            return (
-                b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<I", 16) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
+            for i in range(128)
+        )
+        fmt = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
+        return (
+            b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+            + b"fmt " + struct.pack("<I", 16) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
 
-        def payload(d: int) -> bytes:
-            if d % 2:
-                return wavf_payload(d)
-            if d % 8 == 2:
-                return bmp_rle_payload(d, 8)
-            if d % 8 == 6:
-                return bmp_rle_payload(d, 4)
-            return bmp8_payload(d)
+    def payload(d: int) -> tuple[bytes, str]:
+        if d % 2:
+            return wavf_payload(d), "audio"
+        if d % 8 == 2:
+            return bmp_rle_payload(d, 8), "image"
+        if d % 8 == 6:
+            return bmp_rle_payload(d, 4), "image"
+        return bmp8_payload(d), "image"
 
-        for pdf in it:
-            ids = [int(x) for x in pdf["doc_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [payload(d) for d in ids],
-                    "media_type": [
-                        "audio" if d % 2 else "image" for d in ids
-                    ],
-                }
-            )
-
-    # spread first (r15, guide §2.5): a small/packed documents table
-    # arrives as 1-2 input splits, and the whole synthesize->decode
-    # mapInPandas chain inherits that parallelism (measured: the six
-    # decode legs ran on ONE task at sf0.1). At real scale the input
-    # already has many splits and spread() is a no-op.
-    return spread(docs.select("doc_id")).mapInPandas(
-        batches, MEDIA_SCHEMA
-    )
+    return _synthesize(docs, payload)
 
 
 def synthesize_png_variant_media(docs: DataFrame) -> DataFrame:
@@ -3600,219 +3117,188 @@ def synthesize_png_variant_media(docs: DataFrame) -> DataFrame:
 
     PNG scanline filters cycle None/Sub/Up/Average/Paeth per row
     (independently per Adam7 pass), so every decode exercises real
-    unfiltering, and the Adam7 stream proves per-pass filter resets.
-    Construction runs in ``mapInPandas``, self-contained so it ships
-    by value."""
+    unfiltering, and the Adam7 stream proves per-pass filter resets."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
+    ADAM7 = (
+        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+    )
 
-        import pandas as _pd
+    def pack_row(samples, depth):
+        if depth == 8:
+            return bytes(v & 0xFF for v in samples)
+        if depth == 16:
+            out = bytearray()
+            for v in samples:
+                out += int(v).to_bytes(2, "big")
+            return bytes(out)
+        per = 8 // depth
+        out = bytearray()
+        for i in range(0, len(samples), per):
+            byte = 0
+            for j, v in enumerate(samples[i : i + per]):
+                byte |= (v & ((1 << depth) - 1)) << (
+                    8 - depth * (j + 1)
+                )
+            out.append(byte)
+        return bytes(out)
 
-        ADAM7 = (
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+    def filt_row(ft, row, prev, bpp):
+        """Spec-filter one packed scanline (inverse of decode)."""
+        if ft == 0:
+            return row
+        up = prev if prev is not None else bytes(len(row))
+        out = bytearray()
+        for x in range(len(row)):
+            a = row[x - bpp] if x >= bpp else 0
+            b = up[x]
+            c = up[x - bpp] if x >= bpp else 0
+            if ft == 1:
+                pred = a
+            elif ft == 2:
+                pred = b
+            elif ft == 3:
+                pred = (a + b) // 2
+            else:
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = (
+                    a if pa <= pb and pa <= pc
+                    else (b if pb <= pc else c)
+                )
+            out.append((row[x] - pred) & 0xFF)
+        return bytes(out)
+
+    def png_build(w, h, depth, ct, sample_at, palette=None,
+                  interlace=0):
+        """samples via sample_at(raster_index); filters cycle
+        0..4 per emitted scanline."""
+        ch = 3 if ct == 2 else 1
+        bpp = max(1, ch * depth // 8)
+        if interlace == 0:
+            passes = [(0, 0, 1, 1)]
+        else:
+            passes = ADAM7
+        raw, seq = bytearray(), 0
+        for x0, y0, dx, dy in passes:
+            pw = (w - x0 + dx - 1) // dx
+            ph = (h - y0 + dy - 1) // dy
+            if pw <= 0 or ph <= 0:
+                continue
+            prev = None
+            for j in range(ph):
+                y = y0 + j * dy
+                flat = []
+                for k in range(pw):
+                    x = x0 + k * dx
+                    flat.append(sample_at(y * w + x))
+                row = pack_row(flat, depth)
+                ft = seq % 5
+                seq += 1
+                raw += bytes([ft]) + filt_row(ft, row, prev, bpp)
+                prev = row
+        ihdr = struct.pack(
+            ">IIBBBBB", w, h, depth, ct, 0, 0, interlace
+        )
+        body = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+        if palette is not None:
+            body += _png_chunk(
+                b"PLTE", b"".join(bytes(c) for c in palette)
+            )
+        return (
+            body + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
+            + _png_chunk(b"IEND", b"")
         )
 
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data))
-            )
+    def gif_lzw(indices, min_code):
+        """Greedy-dictionary GIF-LZW encoder (variable width,
+        LSB-first) — the decoder's exact inverse."""
+        clear, end = 1 << min_code, (1 << min_code) + 1
+        out_bits: list[int] = []
+        width = min_code + 1
 
-        def pack_row(samples, depth):
-            if depth == 8:
-                return bytes(v & 0xFF for v in samples)
-            if depth == 16:
-                out = bytearray()
-                for v in samples:
-                    out += int(v).to_bytes(2, "big")
-                return bytes(out)
-            per = 8 // depth
-            out = bytearray()
-            for i in range(0, len(samples), per):
-                byte = 0
-                for j, v in enumerate(samples[i : i + per]):
-                    byte |= (v & ((1 << depth) - 1)) << (
-                        8 - depth * (j + 1)
-                    )
-                out.append(byte)
-            return bytes(out)
+        def emit(code):
+            for i in range(width):
+                out_bits.append((code >> i) & 1)
 
-        def filt_row(ft, row, prev, bpp):
-            """Spec-filter one packed scanline (inverse of decode)."""
-            if ft == 0:
-                return row
-            up = prev if prev is not None else bytes(len(row))
-            out = bytearray()
-            for x in range(len(row)):
-                a = row[x - bpp] if x >= bpp else 0
-                b = up[x]
-                c = up[x - bpp] if x >= bpp else 0
-                if ft == 1:
-                    pred = a
-                elif ft == 2:
-                    pred = b
-                elif ft == 3:
-                    pred = (a + b) // 2
-                else:
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = (
-                        a if pa <= pb and pa <= pc
-                        else (b if pb <= pc else c)
-                    )
-                out.append((row[x] - pred) & 0xFF)
-            return bytes(out)
-
-        def png_build(w, h, depth, ct, sample_at, palette=None,
-                      interlace=0):
-            """samples via sample_at(raster_index); filters cycle
-            0..4 per emitted scanline."""
-            ch = 3 if ct == 2 else 1
-            bpp = max(1, ch * depth // 8)
-            if interlace == 0:
-                passes = [(0, 0, 1, 1)]
-            else:
-                passes = ADAM7
-            raw, seq = bytearray(), 0
-            for x0, y0, dx, dy in passes:
-                pw = (w - x0 + dx - 1) // dx
-                ph = (h - y0 + dy - 1) // dy
-                if pw <= 0 or ph <= 0:
-                    continue
-                prev = None
-                for j in range(ph):
-                    y = y0 + j * dy
-                    flat = []
-                    for k in range(pw):
-                        x = x0 + k * dx
-                        flat.append(sample_at(y * w + x))
-                    row = pack_row(flat, depth)
-                    ft = seq % 5
-                    seq += 1
-                    raw += bytes([ft]) + filt_row(ft, row, prev, bpp)
-                    prev = row
-            ihdr = struct.pack(
-                ">IIBBBBB", w, h, depth, ct, 0, 0, interlace
-            )
-            body = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            if palette is not None:
-                body += chunk(
-                    b"PLTE", b"".join(bytes(c) for c in palette)
-                )
-            return (
-                body + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                + chunk(b"IEND", b"")
-            )
-
-        def gif_lzw(indices, min_code):
-            """Greedy-dictionary GIF-LZW encoder (variable width,
-            LSB-first) — the decoder's exact inverse."""
-            clear, end = 1 << min_code, (1 << min_code) + 1
-            out_bits: list[int] = []
-            width = min_code + 1
-
-            def emit(code):
-                for i in range(width):
-                    out_bits.append((code >> i) & 1)
-
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = end + 1
-            emit(clear)
-            prev = b""
-            for idx in indices:
-                cur = prev + bytes([idx])
-                if cur in table:
-                    prev = cur
-                    continue
-                emit(table[prev])
-                if next_code < 4096:
-                    table[cur] = next_code
-                    next_code += 1
-                if next_code == (1 << width) + 1 and width < 12:
-                    width += 1
-                prev = bytes([idx])
+        table = {bytes([i]): i for i in range(clear)}
+        next_code = end + 1
+        emit(clear)
+        prev = b""
+        for idx in indices:
+            cur = prev + bytes([idx])
+            if cur in table:
+                prev = cur
+                continue
             emit(table[prev])
-            emit(end)
-            data = bytearray()
-            for i in range(0, len(out_bits), 8):
-                byte = 0
-                for j, bit in enumerate(out_bits[i : i + 8]):
-                    byte |= bit << j
-                data.append(byte)
-            return bytes(data)
+            if next_code < 4096:
+                table[cur] = next_code
+                next_code += 1
+            if next_code == (1 << width) + 1 and width < 12:
+                width += 1
+            prev = bytes([idx])
+        emit(table[prev])
+        emit(end)
+        data = bytearray()
+        for i in range(0, len(out_bits), 8):
+            byte = 0
+            for j, bit in enumerate(out_bits[i : i + 8]):
+                byte |= bit << j
+            data.append(byte)
+        return bytes(data)
 
-        def gif_build(w, h, palette, indices, interlace):
-            min_code = 3  # 8-entry table
-            ct = b"".join(bytes(c) for c in palette)
-            lzw = gif_lzw(indices, min_code)
-            sub = b""
-            for i in range(0, len(lzw), 255):
-                blk = lzw[i : i + 255]
-                sub += bytes([len(blk)]) + blk
-            return (
-                b"GIF89a"
-                + struct.pack("<HHBBB", w, h, 0x80 | 2, 0, 0)
-                + ct
-                + b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
-                + bytes([0x40 if interlace else 0, min_code])
-                + sub + b"\x00" + b"\x3b"
-            )
+    def gif_build(w, h, palette, indices, interlace):
+        min_code = 3  # 8-entry table
+        ct = b"".join(bytes(c) for c in palette)
+        lzw = gif_lzw(indices, min_code)
+        sub = b""
+        for i in range(0, len(lzw), 255):
+            blk = lzw[i : i + 255]
+            sub += bytes([len(blk)]) + blk
+        return (
+            b"GIF89a"
+            + struct.pack("<HHBBB", w, h, 0x80 | 2, 0, 0)
+            + ct
+            + b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
+            + bytes([0x40 if interlace else 0, min_code])
+            + sub + b"\x00" + b"\x3b"
+        )
 
-        def payload(d: int) -> bytes:
-            k = d % 5
-            if k == 0:
-                pal = [(17 * j, 13 * j, 7 * j) for j in range(16)]
-                return png_build(
-                    8, 4, 8, 3,
-                    lambda i: (d * 3 + i) % 16, palette=pal,
-                )
-            if k == 1:
-                return png_build(
-                    9, 5, 4, 0, lambda i: (d + i) % 16, interlace=1
-                )
-            if k == 2:
-                return png_build(
-                    6, 3, 16, 0,
-                    lambda i: (d * 2654435761 + i * 48271) % 65536,
-                )
-            if k == 3:
-                w, h = 12, 9
-                pal = [(31 * j, 17 * j, 11 * j) for j in range(8)]
-                raster = [(d * 5 + i) % 8 for i in range(w * h)]
-                # the stream carries rows in GIF89a pass order
-                order = (
-                    list(range(0, h, 8)) + list(range(4, h, 8))
-                    + list(range(2, h, 4)) + list(range(1, h, 2))
-                )
-                stream: list[int] = []
-                for y in order:
-                    stream += raster[y * w : (y + 1) * w]
-                return gif_build(w, h, pal, stream, interlace=True)
+    def payload(d: int) -> bytes:
+        k = d % 5
+        if k == 0:
+            pal = [(17 * j, 13 * j, 7 * j) for j in range(16)]
             return png_build(
-                10, 4, 1, 0, lambda i: (d + i) % 2
+                8, 4, 8, 3,
+                lambda i: (d * 3 + i) % 16, palette=pal,
             )
-
-        for pdf in it:
-            ids = [int(x) for x in pdf["doc_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [payload(d) for d in ids],
-                    "media_type": ["image"] * len(ids),
-                }
+        if k == 1:
+            return png_build(
+                9, 5, 4, 0, lambda i: (d + i) % 16, interlace=1
             )
+        if k == 2:
+            return png_build(
+                6, 3, 16, 0,
+                lambda i: (d * 2654435761 + i * 48271) % 65536,
+            )
+        if k == 3:
+            w, h = 12, 9
+            pal = [(31 * j, 17 * j, 11 * j) for j in range(8)]
+            raster = [(d * 5 + i) % 8 for i in range(w * h)]
+            # the stream carries rows in GIF89a pass order
+            order = (
+                list(range(0, h, 8)) + list(range(4, h, 8))
+                + list(range(2, h, 4)) + list(range(1, h, 2))
+            )
+            stream: list[int] = []
+            for y in order:
+                stream += raster[y * w : (y + 1) * w]
+            return gif_build(w, h, pal, stream, interlace=True)
+        return png_build(
+            10, 4, 1, 0, lambda i: (d + i) % 2
+        )
 
-    # spread first (r15, guide §2.5): a small/packed documents table
-    # arrives as 1-2 input splits, and the whole synthesize->decode
-    # mapInPandas chain inherits that parallelism (measured: the six
-    # decode legs ran on ONE task at sf0.1). At real scale the input
-    # already has many splits and spread() is a no-op.
-    return spread(docs.select("doc_id")).mapInPandas(
-        batches, MEDIA_SCHEMA
-    )
+    return _synthesize(docs, lambda d: (payload(d), "image"))
 
 
 def synthesize_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
@@ -3827,122 +3313,12 @@ def synthesize_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
     accumulation, successive-approximation and EOB-run machinery of
     ``_jpeg_progressive`` runs for real against a SQL oracle computed
     from doc_id alone."""
+    prog_jpeg = _make_progressive_dc_jpeg()
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
+    def payload(d: int) -> tuple[bytes, str]:
+        return prog_jpeg((d * 7) % 100 - 50), "image"
 
-        prog_jpeg = _make_progressive_dc_jpeg()
-
-        for pdf in it:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        prog_jpeg((d * 7) % 100 - 50) for d in ids
-                    ],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    # spread first (r15, guide §2.5): a small/packed documents table
-    # arrives as 1-2 input splits, and the whole synthesize->decode
-    # mapInPandas chain inherits that parallelism (measured: the six
-    # decode legs ran on ONE task at sf0.1). At real scale the input
-    # already has many splits and spread() is a no-op.
-    return spread(docs.select("doc_id")).mapInPandas(
-        batches, MEDIA_SCHEMA
-    )
-
-
-def _make_progressive_dc_jpeg():
-    """``prog_jpeg(dc, prec=8) -> bytes``: the progressive (SOF2)
-    twin of ``_make_dc_jpeg`` — same 16×8 grayscale DC-only content
-    under a flat q=16 table, split into DC-first (Al=1) +
-    DC-refinement (Al=0) + EOB-run AC scans. Decodes to uniform
-    ``128 + 2·dc`` (``prec=12``: Pq=1 table, 5-bit DC categories,
-    uniform ``2048 + 2·dc``)."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return (
-            bytes([0xFF, marker])
-            + struct.pack(">H", len(body) + 2)
-            + body
-        )
-
-    def scan_bytes(bits: list) -> bytes:
-        bits = bits + [1] * ((-len(bits)) % 8)
-        out = bytearray()
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for bit in bits[i : i + 8]:
-                byte = (byte << 1) | bit
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-        return bytes(out)
-
-    def prog_jpeg(dc: int, prec: int = 8) -> bytes:
-        if prec == 8:
-            dqt = seg(0xDB, bytes([0]) + bytes([16] * 64))
-            # DC: categories 0..11 as 4-bit codes
-            dht_dc = seg(
-                0xC4,
-                bytes([0x00]) + bytes([0, 0, 0, 12] + [0] * 12)
-                + bytes(range(12)),
-            )
-            dc_bits = 4
-        else:  # 12-bit: Pq=1 table, categories 0..15 as 5-bit codes
-            dqt = seg(
-                0xDB,
-                bytes([0x10])
-                + b"".join(struct.pack(">H", 16) for _ in range(64)),
-            )
-            dht_dc = seg(
-                0xC4,
-                bytes([0x00]) + bytes([0, 0, 0, 0, 16] + [0] * 11)
-                + bytes(range(16)),
-            )
-            dc_bits = 5
-        dht_ac = seg(
-            0xC4, bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0x10])
-        )
-        sof = seg(
-            0xC2,
-            bytes([prec]) + struct.pack(">HH", 8, 16)
-            + bytes([1, 1, 0x11, 0]),
-        )
-
-        def put(bits, v, n):
-            bits.extend((v >> i) & 1 for i in range(n - 1, -1, -1))
-
-        # scan 1 — DC first, Al=1: diffs of (dc >> 1) over two blocks
-        b1: list = []
-        t = dc >> 1
-        for d in (t, 0):
-            s = abs(d).bit_length()
-            put(b1, s, dc_bits)
-            if s:
-                put(b1, d if d > 0 else d + (1 << s) - 1, s)
-        sos1 = seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01]))
-        # scan 2 — DC refinement, Ah=1 Al=0: one raw bit per block
-        b2: list = []
-        put(b2, dc & 1, 1)
-        put(b2, dc & 1, 1)
-        sos2 = seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x10]))
-        # scan 3 — AC first over [1, 63]: one EOB1 symbol (run of 2)
-        b3: list = [0, 0]  # EOB1 code (1 bit) + 1 extension bit (0)
-        sos3 = seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00]))
-        return (
-            b"\xff\xd8" + dqt + dht_dc + dht_ac + sof
-            + sos1 + scan_bytes(b1)
-            + sos2 + scan_bytes(b2)
-            + sos3 + scan_bytes(b3)
-            + b"\xff\xd9"
-        )
-
-    return prog_jpeg
+    return _synthesize(docs, payload)
 
 
 def synthesize_media_from_documents(docs: DataFrame) -> DataFrame:
@@ -3989,14 +3365,8 @@ def resize_image_stats(media: DataFrame, factor: int = 2) -> DataFrame:
     (corpus jobs must survive crafted files)."""
     if factor < 1:
         raise ValueError(f"factor must be >= 1, got {factor}")
-    bmp_core, _, png_core, gif_core, jpeg_core = _make_content_decoders()
+    decoders = _pixel_decoders()
     header_core = _make_header_parser()
-    pure = {
-        "bmp": bmp_core,
-        "png": png_core,
-        "gif": gif_core,
-        "jpeg": jpeg_core,
-    }
     f = int(factor)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4005,15 +3375,12 @@ def resize_image_stats(media: DataFrame, factor: int = 2) -> DataFrame:
 
         import pandas as _pd
 
-        # same pluggable native seam as extract_decoded_stats
-        decode = _make_pixel_decoder(pure, _load_native_codecs(pure), 64)
-
         def one(b: bytes) -> tuple:
             meta = header_core(b) or {}
             fmt = meta.get("format")
             try:
-                if fmt in ("bmp", "png", "gif", "jpeg"):
-                    px = decode(fmt, b).astype("int64")
+                if fmt in decoders:
+                    px = decoders[fmt](b).astype("int64")
                     h2, w2 = px.shape[0] // f, px.shape[1] // f
                     if h2 == 0 or w2 == 0:
                         return (fmt, None, None, None, None, None, None)
@@ -4354,67 +3721,43 @@ def synthesize_mjpeg_media(docs: DataFrame) -> DataFrame:
     parser walks for real. A SQL oracle recomputes every sampled
     frame's stats from doc_id alone."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def chunk(cc: bytes, body: bytes) -> bytes:
+        pad = b"\x00" if len(body) & 1 else b""
+        return cc + struct.pack("<I", len(body)) + body + pad
 
-        import pandas as _pd
+    def lst(kind: bytes, body: bytes) -> bytes:
+        return chunk(b"LIST", kind + body)
 
-        dc_jpeg = _make_dc_jpeg()
-
-        def chunk(cc: bytes, body: bytes) -> bytes:
-            pad = b"\x00" if len(body) & 1 else b""
-            return cc + struct.pack("<I", len(body)) + body + pad
-
-        def lst(kind: bytes, body: bytes) -> bytes:
-            return chunk(b"LIST", kind + body)
-
-        def payload(doc_id: int) -> bytes:
-            n = 3 + doc_id % 4
-            frames = [
-                dc_jpeg((doc_id * 7 + f * 13) % 100 - 50)
-                for f in range(n)
-            ]
-            avih = chunk(
-                b"avih",
-                struct.pack(
-                    "<10I", 40000, 0, 0, 0, n, 0, 1, 0, 16, 8
-                )
-                + b"\x00" * 16,
+    def payload(doc_id: int) -> bytes:
+        n = 3 + doc_id % 4
+        frames = [
+            _dc_jpeg([(doc_id * 7 + f * 13) % 100 - 50])
+            for f in range(n)
+        ]
+        avih = chunk(
+            b"avih",
+            struct.pack(
+                "<10I", 40000, 0, 0, 0, n, 0, 1, 0, 16, 8
             )
-            strh = chunk(
-                b"strh",
-                b"vids" + b"MJPG"
-                + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, 25, 0,
-                              n, 0, 0, 0, 0),
-            )
-            strf = chunk(
-                b"strf",
-                struct.pack(
-                    "<IiiHH4sIiiII", 40, 16, 8, 1, 24, b"MJPG",
-                    16 * 8 * 3, 0, 0, 0, 0,
-                ),
-            )
-            hdrl = lst(b"hdrl", avih + lst(b"strl", strh + strf))
-            movi = lst(
-                b"movi", b"".join(chunk(b"00dc", f) for f in frames)
-            )
-            return chunk(b"RIFF", b"AVI " + hdrl + movi)
+            + b"\x00" * 16,
+        )
+        strh = chunk(
+            b"strh",
+            b"vids" + b"MJPG"
+            + struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, 25, 0,
+                          n, 0, 0, 0, 0),
+        )
+        strf = chunk(
+            b"strf",
+            struct.pack(
+                "<IiiHH4sIiiII", 40, 16, 8, 1, 24, b"MJPG",
+                16 * 8 * 3, 0, 0, 0, 0,
+            ),
+        )
+        hdrl = lst(b"hdrl", avih + lst(b"strl", strh + strf))
+        movi = lst(
+            b"movi", b"".join(chunk(b"00dc", f) for f in frames)
+        )
+        return chunk(b"RIFF", b"AVI " + hdrl + movi)
 
-        for pdf in it:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [payload(d) for d in ids],
-                    "media_type": ["video"] * len(ids),
-                }
-            )
-
-    # spread first (r15, guide §2.5): a small/packed documents table
-    # arrives as 1-2 input splits, and the whole synthesize->decode
-    # mapInPandas chain inherits that parallelism (measured: the six
-    # decode legs ran on ONE task at sf0.1). At real scale the input
-    # already has many splits and spread() is a no-op.
-    return spread(docs.select("doc_id")).mapInPandas(
-        batches, MEDIA_SCHEMA
-    )
+    return _synthesize(docs, lambda d: (payload(d), "video"))

@@ -3164,9 +3164,10 @@ def q_multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
     return MM.extract_image_meta(media)
 
 
-# Mirrors _fake_meta in operators/multimodal.py: byte k of the digest is
-# the pair of hex chars at (2k+1, 2k+2); DuckDB's sha256(VARCHAR) hashes
-# the string's UTF-8 bytes — exactly the synthesized payload.
+# Mirrors the fake_meta stand-in of extract_image_meta in
+# operators/multimodal.py: byte k of the digest is the pair of hex chars
+# at (2k+1, 2k+2); DuckDB's sha256(VARCHAR) hashes the string's UTF-8
+# bytes — exactly the synthesized payload.
 _MULTIMODAL_SQL = """
 WITH m AS (
   SELECT doc_id AS media_id,

@@ -988,12 +988,15 @@ def _dir_file_metrics(dirs: list[str]) -> tuple[int, int]:
     """(n_files, n_rows) of the parquet files under ``dirs`` — footer
     metadata only (a few KB per freshly written file), the source for
     operation metrics. O(files touched by THIS commit), never O(table);
-    at real scale the counts ride inside the write tasks themselves."""
+    at real scale the counts ride inside the write tasks themselves.
+    ``_change_data`` subtrees are change rows, not data, and are not
+    counted."""
     import pyarrow.parquet as pq
 
     nf = nr = 0
     for d in dirs:
-        for root, _, files in os.walk(d):
+        for root, subdirs, files in os.walk(d):
+            subdirs[:] = [s for s in subdirs if s != "_change_data"]
             for name in files:
                 if name.endswith(".parquet"):
                     nf += 1
@@ -2042,8 +2045,6 @@ def merge_commit(
     if parts:
         writer = writer.partitionBy(*parts)
     writer.parquet(commit_dir)
-    if not parts:  # a full rewrite counts its files before change rows
-        nf, nr = _dir_file_metrics([commit_dir])
     extra = (
         {"change_data": _write_change_data(
             _merge_changes(spec, source, target), commit_dir, mapping
@@ -2058,6 +2059,7 @@ def merge_commit(
             merged.schema.json(), (mapping, retired),
             stats_cols=stats_cols, extra=extra,
         )
+    nf, nr = _dir_file_metrics([commit_dir])
     return _publish(
         path,
         op,
@@ -2178,8 +2180,6 @@ def delete_where(
     if not plain:
         writer = writer.partitionBy(*parts)
     writer.parquet(commit_dir)
-    if plain:  # a full rewrite counts its files before change rows
-        nf, nr = _dir_file_metrics([commit_dir])
     extra = (
         {"change_data": _write_change_data(
             data.filter(cond).withColumn("_change_type", F.lit("delete")),
@@ -2194,6 +2194,7 @@ def delete_where(
             path, "DELETE", base.version, affected, commit_dir, parts,
             base.schema_json, under, extra=extra,
         )
+    nf, nr = _dir_file_metrics([commit_dir])
     return _publish(
         path,
         "DELETE",

@@ -605,7 +605,7 @@ def test_sos_component_count_bounds_are_typed():
     with pytest.raises(ValueError, match="component count"):
         MM.decode_jpeg_pixels(bytes(bad))
     # Huffman multi-scan walk: 12-bit color fixture, Ns patched to 5
-    huff = MM._make_dc_jpeg12_color()([1, 2, 3])
+    huff = MM._dc_jpeg([1, 2, 3], prec=12)
     sos_at = huff.find(b"\xff\xda")
     bad = bytearray(huff)
     bad[sos_at + 4] = 5

@@ -2100,54 +2100,48 @@ def test_extract_audio_features_known_waveform(spark):
     assert got["zero_crossings"] == 6
     assert rows[6]["n_samples"] is None
 
-# --- pluggable native-decode seam (operators/multimodal.py
-# _load_native_codecs / _make_pixel_decoder) ---
 
-def test_native_seam_defaults_to_pure_and_env_gate(monkeypatch):
-    import numpy as np
+# sha256 per synthesizer over (media_id, media_type, payload), rows
+# sorted by media_id, for doc_id 0..239 (see the test below).
+_SYNTH_DIGESTS = {
+    "synthesize_decodable_media": "6c01ba0045e17ee7a842bba8b68f443554513203e6461625b4b09c3c1eee91b3",
+    "synthesize_jpeg_media": "2ed646255a2a9e73b04d88bff2b79cc9f3089724efe5fa1e376e30164f2c66e6",
+    "synthesize_arith_jpeg_media": "f7f41559c436f8b97b445be2e709af238a606548016c7e881b98f6881fc50a0c",
+    "synthesize_cmyk_jpeg_media": "5d9ecd9525747b1a0bb312024b83cba0d705401282e8a14f4aad2dbd1cc89709",
+    "synthesize_jpeg12_media": "db880a0bb6b7c4f1fabd1fd41a7c44fd7c0d41c6b88d90c68cb7458b8d4595e8",
+    "synthesize_bmp_wav_variant_media": "99f8c40c418b5cf17a3deff0bf71fcfa1971dd6fcd1adcf04496ffea1e8e2a75",
+    "synthesize_png_variant_media": "93b86ff02cb7b4fbf3aa27fb71ce2dfdd3ee8aa7615ee79e60971aa50296c231",
+    "synthesize_progressive_jpeg_media": "20b84873734c863bf57bb25a7db86b9a4b8f857cbe1e24f27e640b56820af409",
+    "synthesize_mjpeg_media": "cba3fe68148b09cca4b87c19ce518f5b15e9d2483bac4047f66604a6f61db1b9",
+}
 
-    payload = _bmp_bytes_gradient(8, 6, seed=3)
-    pure = {"bmp": MM.decode_bmp_pixels}
 
-    # no env: pure path only
-    monkeypatch.delenv("SPARK_GRAFT_NATIVE_DECODE", raising=False)
-    assert MM._load_native_codecs(pure) == {}
-    dec = MM._make_pixel_decoder(pure, {}, 64)
-    assert np.array_equal(dec("bmp", payload), MM.decode_bmp_pixels(payload))
+def test_synthesizer_payload_bytes_pinned(spark):
+    """Every public media synthesizer emits byte-identical payloads to
+    the ones the 13 oracle-checked media queries were written against.
+    doc_id 0..239 covers every mod-3/4/5/8 variant. The digests in
+    ``_SYNTH_DIGESTS`` were computed at commit 0217f21, before the
+    synthesizers and JPEG fixture writers were folded, so a refactor
+    that changes one byte of any fixture fails here."""
+    import hashlib
 
-    # env "1" in this container: PIL absent -> empty registry, pure path
-    monkeypatch.setenv("SPARK_GRAFT_NATIVE_DECODE", "1")
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if not has_pil:
-        assert MM._load_native_codecs(pure) == {}
-
-    # the clearly-marked deterministic fakes exercise the plumbing
-    monkeypatch.setenv("SPARK_GRAFT_NATIVE_DECODE", "fake")
-    fakes = MM._load_native_codecs(pure)
-    assert set(fakes) == {"bmp"}
-    dec = MM._make_pixel_decoder(pure, fakes, 1)
-    assert np.array_equal(dec("bmp", payload), MM.decode_bmp_pixels(payload))
-
-    # fake-drift: the every-call cross-check fails LOUD with the
-    # non-poison exception
-    import pytest
-
-    monkeypatch.setenv("SPARK_GRAFT_NATIVE_DECODE", "fake-drift")
-    drift = MM._load_native_codecs(pure)
-    dec = MM._make_pixel_decoder(pure, drift, 1)
-    with pytest.raises(MM.NativeDecoderDrift):
-        dec("bmp", payload)
-    # sampling stride honored: stride 3 checks calls 1, 4, 7...
-    dec = MM._make_pixel_decoder(pure, drift, 3)
-    with pytest.raises(MM.NativeDecoderDrift):
-        dec("bmp", payload)
-    dec2 = MM._make_pixel_decoder(pure, drift, 0)  # 0 disables checks
-    assert dec2("bmp", payload) is not None
+    docs = spark.createDataFrame(
+        [(d, "t") for d in range(240)], "doc_id long, text string"
+    )
+    got = {}
+    for name in _SYNTH_DIGESTS:
+        rows = sorted(
+            getattr(MM, name)(docs).collect(), key=lambda r: r["media_id"]
+        )
+        assert len(rows) == 240, name
+        h = hashlib.sha256()
+        for r in rows:
+            p = bytes(r["payload"])
+            h.update(
+                f"{r['media_id']}:{r['media_type']}:{len(p)}:".encode() + p
+            )
+        got[name] = h.hexdigest()
+    assert got == _SYNTH_DIGESTS
 
 
 def test_synthesize_bmp_wav_variant_media_round_trip(spark):
@@ -2192,25 +2186,23 @@ def test_jpeg_12bit_grayscale_decode():
     import numpy as np
     import pytest
 
-    enc = MM._make_dc_jpeg12()
     for dc in (0, 7, -50, 999, -1000):
-        px = MM.decode_jpeg_pixels(enc(dc))
+        px = MM.decode_jpeg_pixels(MM._dc_jpeg([dc], prec=12))
         assert px.shape == (8, 16, 1) and px.dtype == np.uint16
         want = 2048 + 2 * dc
         assert int(px.min()) == int(px.max()) == want, (dc, want)
 
     # DC category 12 (|dc| >= 2048) exercises the 12-bit category
     # range the 8-bit path rejects
-    px = MM.decode_jpeg_pixels(enc(-2048, q0=8))
+    px = MM.decode_jpeg_pixels(MM._dc_jpeg([-2048], prec=12, q=8))
     assert int(px.min()) == int(px.max()) == 0  # 2048 - 2048
 
     # 12-bit COLOR (Ns=3 YCbCr) decodes for real since round 10:
     # zero chroma DCs sit exactly at the 12-bit center 2048, so every
     # channel is the closed-form 2048 + 2*dc_Y — a wrong chroma
     # center (the 8-bit 128) would shift channels by thousands.
-    cenc = MM._make_dc_jpeg12_color()
     for dcy in (0, 7, -50, 999):
-        cpx = MM.decode_jpeg_pixels(cenc([dcy, 0, 0]))
+        cpx = MM.decode_jpeg_pixels(MM._dc_jpeg([dcy, 0, 0], prec=12))
         assert cpx.shape == (8, 16, 3) and cpx.dtype == np.uint16
         want = 2048 + 2 * dcy
         assert int(cpx.min()) == int(cpx.max()) == want, (dcy, want)
@@ -2231,7 +2223,7 @@ def test_jpeg_12bit_grayscale_decode():
         bytes([12]) + struct.pack(">HH", 8, 8)
         + bytes([3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
     )
-    base = enc(0)
+    base = MM._dc_jpeg([0], prec=12)
     sof_at = base.find(b"\xff\xc0")
     sof_len = 2 + struct.unpack(">H", base[sof_at + 2 : sof_at + 4])[0]
     spliced = base[:sof_at] + color_sof + base[sof_at + sof_len :]
@@ -2251,7 +2243,7 @@ def test_jpeg_12bit_grayscale_decode():
     # to 12 — the DC-only payload is equally valid at 12-bit (Pq=0
     # tables are legal for extended precision), and planes become
     # 2048 + 2·dc with RGB = floor(c·k/4095 + 0.5)
-    cmyk = MM._make_dc_jpeg_cmyk()([1, 2, 3, 4], 0)
+    cmyk = MM._dc_jpeg([1, 2, 3, 4], adobe=0)
     csof = cmyk.find(b"\xff\xc0")
     cmyk12 = bytearray(cmyk)
     assert cmyk12[csof + 4] == 8  # SOF sample-precision byte
@@ -2350,24 +2342,6 @@ def test_synthesize_png_variant_media_round_trip(spark):
         assert r["content_min"] == min(vals), (d, r)
         assert r["content_max"] == max(vals), (d, r)
         assert r["top_row_sum"] == sum(vals[:top_n]), (d, r)
-
-
-def _jpeg_sof_header(subsampled):
-    """Minimal JFIF prefix with one SOF0: enough for
-    _jpeg_is_subsampled's segment walk."""
-    import struct
-
-    comps = (
-        [(1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1)]
-        if subsampled
-        else [(1, 0x11, 0), (2, 0x11, 1), (3, 0x11, 1)]
-    )
-    sof = bytes([8]) + struct.pack(">HH", 16, 16) + bytes([len(comps)])
-    for cid, fac, tq in comps:
-        sof += bytes([cid, fac, tq])
-    return (
-        b"\xff\xd8\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    )
 
 
 def _rle_bmp(stream: bytes, w: int, h: int, bpp: int, comp: int) -> bytes:
@@ -2492,7 +2466,6 @@ def test_jpeg_cmyk_and_ycck_decode():
     import pytest
 
     _, _, _, _, jpeg = MM._make_content_decoders()
-    mk = MM._make_dc_jpeg_cmyk()
 
     def expect(dcs, transform):
         p = [128.0 + 2 * d for d in dcs]
@@ -2519,7 +2492,7 @@ def test_jpeg_cmyk_and_ycck_decode():
         ([-50, 49, -1, 0], 0),
         ([25, 5, -35, 45], 2),
     ]:
-        px = jpeg(mk(dcs, transform))
+        px = jpeg(MM._dc_jpeg(dcs, adobe=transform))
         assert px.shape == (8, 16, 3) and px.dtype == np.uint8
         assert {tuple(v) for row in px for v in row} == {
             expect(dcs, transform)
@@ -2527,14 +2500,14 @@ def test_jpeg_cmyk_and_ycck_decode():
 
     # APP14 absent -> CMYK default: strip the APP14 segment (it is
     # the first marker after SOI, 2 + 2 + 14 bytes long)
-    payload = mk([10, -20, 30, 40], 0)
+    payload = MM._dc_jpeg([10, -20, 30, 40], adobe=0)
     assert payload[2:4] == b"\xff\xee"
     stripped = payload[:2] + payload[4 + 14 :]
     assert np.array_equal(jpeg(stripped), jpeg(payload))
 
     # transform=1 (YCbCr) on a 4-component frame: typed refusal
     with pytest.raises(NotImplementedError, match="transform"):
-        jpeg(mk([10, -20, 30, 40], 1))
+        jpeg(MM._dc_jpeg([10, -20, 30, 40], adobe=1))
 
 
 def test_jpeg_adobe_rgb_three_component():
@@ -2545,7 +2518,7 @@ def test_jpeg_adobe_rgb_three_component():
     import numpy as np
 
     _, _, _, _, jpeg = MM._make_content_decoders()
-    base = MM._make_dc_jpeg()(14)  # grayscale: uniform 156
+    base = MM._dc_jpeg([14])  # grayscale: uniform 156
 
     # splice a 3-component SOF/SOS around the same DC tables: easier
     # to build from the CMYK builder by dropping component 4
@@ -2659,7 +2632,7 @@ def test_jpeg_cmyk_multiscan_sequential():
     )
     px = jpeg(payload)
     # same closed form as the interleaved builder at transform=2
-    interleaved = jpeg(MM._make_dc_jpeg_cmyk()(dcs, 2))
+    interleaved = jpeg(MM._dc_jpeg(dcs, adobe=2))
     assert np.array_equal(px, interleaved)
     yy, cb, cr, k = (128.0 + 2 * d for d in dcs)
     c = min(max(yy + 1.402 * (cr - 128.0), 0.0), 255.0)
@@ -2671,11 +2644,9 @@ def _reference_png_decode(payload: bytes):
     unfilter straight from RFC 2083 pseudocode, per-sample bit
     extraction, no shared code or structure with the production
     decoder (which is numpy-vectorized with per-filter fast paths).
-    Exists as the permanent stand-in for a native codec in this
-    container (Pillow et al. are uninstallable — TUNING.md): two
-    implementations written independently agreeing byte-for-byte
+    Two implementations written independently agreeing byte-for-byte
     across the randomized variant space is the strongest cross-check
-    available without third-party binaries."""
+    available without a third-party codec library."""
     import struct
     import zlib
 
@@ -2777,21 +2748,15 @@ def _reference_png_decode(payload: bytes):
 
 
 def test_native_seam_against_independent_reference_decoder():
-    """Round-10 permanent closure of the native-seam watch: no real
-    codec library is importable here, so the seam's strongest possible
-    exercise is a SECOND independently-written decoder registered as
-    the 'native' side, with the production drift machinery
-    (xcheck_every=1) comparing every payload byte-for-byte across a
-    randomized sweep of the full PNG variant space. A disagreement in
-    either implementation, or a seam bug (shape/tolerance/skip logic),
-    raises NativeDecoderDrift / AssertionError here."""
+    """The production PNG decoder and an independently written
+    from-the-spec reference decoder (``_reference_png_decode``) agree
+    exactly (same dtype, shape and values) across a seeded randomized
+    sweep of the PNG variant space: color types, 1/2/4/8/16-bit
+    depths, palettes, Adam7 and every filter type. The test kept its
+    name from the removed native-codec seam, whose sampled cross-check
+    first ran this comparison; the comparison is now made directly."""
     import numpy as np
 
-    dec = MM._make_pixel_decoder(
-        {"png": MM.decode_png_pixels},
-        {"png": _reference_png_decode},
-        1,  # cross-check every payload
-    )
     rng = np.random.default_rng(77)
     n_checked = 0
     for case in range(30):
@@ -2833,221 +2798,9 @@ def test_native_seam_against_independent_reference_decoder():
             payload = _png_build(
                 img, 16, 0, interlace=interlace, filters=filters
             )
-        out = dec("png", payload)  # raises NativeDecoderDrift on any
-        assert out is not None  # disagreement between implementations
+        out = MM.decode_png_pixels(payload)
+        ref = _reference_png_decode(payload)
+        assert out.dtype == ref.dtype and out.shape == ref.shape, case
+        assert np.array_equal(out, ref), case
         n_checked += 1
     assert n_checked == 30
-
-
-def test_native_xcheck_skips_pure_undecodable_variants():
-    """A variant only the native codec can decode (pure raises
-    NotImplementedError/ValueError) must NOT leak the pure decoder's
-    exception out of a sampled cross-check: output would otherwise
-    depend on which call positions the sampling stride lands on."""
-    import numpy as np
-
-    px = np.full((4, 4, 3), 7, np.uint8)
-
-    def pure_refuses(_p):
-        raise NotImplementedError("pure decoder lacks this variant")
-
-    def pure_chokes(_p):
-        raise ValueError("pure decoder thinks it is corrupt")
-
-    for pure_fn in (pure_refuses, pure_chokes):
-        dec = MM._make_pixel_decoder(
-            {"bmp": pure_fn}, {"bmp": lambda p: px}, 1
-        )
-        # every call sampled; every call must still return native out
-        for _ in range(3):
-            assert np.array_equal(dec("bmp", b"payload"), px)
-
-
-def test_native_xcheck_pure_crash_surfaces():
-    """The skip is NARROW: a pure decoder CRASHING (IndexError/KeyError —
-    not the typed NotImplementedError/ValueError boundary signals) on a
-    sampled payload must surface as NativeDecoderDrift (round-10 ADVICE:
-    the raw crash types are exactly what the stats path poison-nulls per
-    row, so leaking them raw made a sampled crash a nondeterministic NULL
-    instead of a loud deterministic failure)."""
-    import numpy as np
-    import pytest
-
-    px = np.full((4, 4, 3), 7, np.uint8)
-
-    def pure_crashes(_p):
-        raise IndexError("pure decoder crashed on a decodable payload")
-
-    dec = MM._make_pixel_decoder({"bmp": pure_crashes}, {"bmp": lambda p: px}, 1)
-    with pytest.raises(MM.NativeDecoderDrift, match="IndexError"):
-        dec("bmp", b"payload")
-
-
-def test_native_xcheck_all_skipped_warns_per_format():
-    """If EVERY sampled cross-check for a format skipped (>=8 samples),
-    drift detection never ran for that format — a RuntimeWarning flags
-    it (round-10 ADVICE downgraded this from a task-killing raise: an
-    all-native-only corpus is a legitimate workload). Counters are PER
-    FORMAT so one format's skips never blame another, and a single
-    successful comparison clears the condition for its format."""
-    import warnings
-
-    import numpy as np
-    import pytest
-
-    px = np.full((4, 4, 3), 7, np.uint8)
-
-    def pure_refuses(_p):
-        raise NotImplementedError("native-only variant")
-
-    dec = MM._make_pixel_decoder(
-        {"bmp": pure_refuses, "png": lambda p: px},
-        {"bmp": lambda p: px, "png": lambda p: px},
-        1,
-    )
-    # interleave a HEALTHY png with the all-skipping bmp: the bmp
-    # warning must still fire (per-format counters) and name bmp
-    for _ in range(7):
-        dec("bmp", b"payload")
-        dec("png", b"payload")
-    with pytest.warns(RuntimeWarning, match="native-bmp"):
-        np.testing.assert_array_equal(dec("bmp", b"payload"), px)
-    # the healthy format never warns
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        dec("png", b"payload")
-
-    # one real comparison early -> later skips never trip the counter
-    calls = {"n": 0}
-
-    def pure_first_only(_p):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            return px
-        raise NotImplementedError("native-only variant")
-
-    dec2 = MM._make_pixel_decoder(
-        {"bmp": pure_first_only}, {"bmp": lambda p: px}, 1
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        for _ in range(20):
-            assert np.array_equal(dec2("bmp", b"payload"), px)
-
-
-def test_native_xcheck_jpeg_tolerances():
-    """JPEG cross-check reflects legitimate decoder variance:
-    4:4:4/grayscale allows IDCT rounding (max 2, mean 0.5);
-    subsampled compares aggregates (mean|diff| 3.0, mean bias 1.0)
-    because fancy vs replication chroma upsampling legitimately
-    differs by tens at edges. A genuinely wrong image still trips
-    both."""
-    import numpy as np
-    import pytest
-
-    sub = _jpeg_sof_header(subsampled=True)
-    full = _jpeg_sof_header(subsampled=False)
-    assert MM._jpeg_is_subsampled(sub) is True
-    assert MM._jpeg_is_subsampled(full) is False
-    assert MM._jpeg_is_subsampled(b"\xff\xd8\x00") is True  # loose
-
-    rng = np.random.default_rng(5)
-    ref = rng.integers(0, 256, (16, 16, 3)).astype(np.uint8)
-
-    def mk(native_out, payload):
-        dec = MM._make_pixel_decoder(
-            {"jpeg": lambda p: ref}, {"jpeg": lambda p: native_out}, 1
-        )
-        return lambda: dec("jpeg", payload)
-
-    # 4:4:4: +/-1 IDCT rounding passes, +3 somewhere fails
-    wobble = ref.astype(np.int16)
-    wobble[0::2] += 1
-    wobble[1::4] -= 1
-    ok444 = np.clip(wobble, 0, 255).astype(np.uint8)
-    assert mk(ok444, full)() is not None
-    bad444 = ref.copy()
-    bad444[0, 0, 0] = (int(ref[0, 0, 0]) + 3) % 256
-    with pytest.raises(MM.NativeDecoderDrift):
-        mk(bad444, full)()
-
-    # subsampled: large LOCAL chroma-edge diffs pass if aggregates
-    # stay close (zero-sum perturbation, mean|diff| <= 3.0)
-    edge = ref.astype(np.int64)
-    edge[0, 0:2, 2] += 40   # fancy-vs-replication style edge diff
-    edge[0, 2:4, 2] -= 40   # balanced: no mean bias
-    edge = np.clip(edge, 0, 255).astype(np.uint8)
-    assert mk(edge, sub)() is not None
-    # but the SAME perturbation on a 4:4:4 payload is drift
-    with pytest.raises(MM.NativeDecoderDrift):
-        mk(edge, full)()
-    # a wrong image (different content) trips the aggregate check
-    wrong = rng.integers(0, 256, (16, 16, 3)).astype(np.uint8)
-    with pytest.raises(MM.NativeDecoderDrift):
-        mk(wrong, sub)()
-    # and a systematic bias trips it even with small per-pixel diffs
-    biased = np.clip(ref.astype(np.int16) + 2, 0, 255).astype(np.uint8)
-    with pytest.raises(MM.NativeDecoderDrift):
-        mk(biased, sub)()
-    # gross LOCAL corruption (one wrong region, aggregates diluted on a
-    # big image): max|diff| > 128 trips the localized bound even though
-    # mean|diff| and bias stay tiny (round-9 ADVICE)
-    big = np.full((64, 64, 3), 120, np.uint8)
-    corrupt = big.copy()
-    corrupt[0:4, 0:8, :] = 255  # one wrong MCU, half blown high...
-    corrupt[4:8, 0:8, :] = 1    # ...half blown low: no mean bias
-    dec_big = MM._make_pixel_decoder(
-        {"jpeg": lambda p: big}, {"jpeg": lambda p: corrupt}, 1
-    )
-    diff = np.abs(corrupt.astype(np.int64) - big.astype(np.int64))
-    assert diff.mean() <= 3.0  # global aggregates alone would pass...
-    assert abs(corrupt.astype(np.float64).mean() - 120.0) <= 1.0
-    with pytest.raises(MM.NativeDecoderDrift):  # ...max|diff| trips
-        dec_big("jpeg", sub)
-
-
-def test_native_seam_through_spark_decoded_stats(spark):
-    import numpy as np
-
-    rows = [
-        (i, bytearray(_bmp_bytes_gradient(8, 6, seed=i)), "image")
-        for i in range(1, 7)
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-
-    want = {
-        r["media_id"]: r
-        for r in MM.extract_decoded_stats(media).collect()
-    }
-    # a correct injected native codec: identical stats through the
-    # real mapInPandas path, cross-checked on every payload
-    # codecs defined as closures so cloudpickle ships them by value
-    # into the python workers (a test-module reference would not import)
-    dec_bmp = MM.decode_bmp_pixels
-
-    def fake_native(p, _d=dec_bmp):
-        return _d(p)
-
-    def drifting_native(p, _d=dec_bmp):
-        out = _d(p).copy()
-        out[..., 0] = 255 - out[..., 0]
-        return out
-
-    got = {
-        r["media_id"]: r
-        for r in MM.extract_decoded_stats(
-            media, native_codecs={"bmp": fake_native},
-            xcheck_every=1,
-        ).collect()
-    }
-    for k in want:
-        assert tuple(want[k]) == tuple(got[k])
-
-    # a DRIFTING native codec kills the task (loud), never NULL-rows
-    import pytest
-
-    with pytest.raises(Exception, match="drift|NativeDecoderDrift"):
-        MM.extract_decoded_stats(
-            media, native_codecs={"bmp": drifting_native},
-            xcheck_every=1,
-        ).collect()

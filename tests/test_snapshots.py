@@ -1327,6 +1327,77 @@ def test_describe_history_operation_metrics(spark, tmp_path):
     assert S.describe_history(cl)[0]["metrics"]["source_version"] >= 0
 
 
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_change_data_commits_count_data_files_only(
+    spark, tmp_path, partitioned
+):
+    """MERGE and DELETE with ``change_data=True`` write their change
+    rows under the commit's ``_change_data`` dir; the commit metrics
+    count the data files and rows only, for the plain full rewrite and
+    the partition-granular rewrite alike."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import (
+        TableSpec,
+    )
+
+    spec = TableSpec(
+        name="cd",
+        schema=StructType(
+            [
+                StructField("k", LongType(), False),
+                StructField("part", LongType(), False),
+            ]
+        ),
+        primary_key="k",
+        partition_by=("part",) if partitioned else (),
+    )
+    path = str(tmp_path / "t")
+    rows = "k long, part long"
+    S.merge_commit(
+        spark,
+        spark.createDataFrame([(k, k % 2) for k in range(6)], rows),
+        path,
+        spec,
+        change_data=True,
+    )
+
+    def new_files(version):
+        """Data files the commit ``version`` wrote (change files are
+        invisible to data scans)."""
+        live = set(S.read(spark, path).inputFiles())
+        if version == 0:
+            return live
+        old = set(S.read(spark, path, version=version - 1).inputFiles())
+        return live - old
+
+    def check(version, want_rows):
+        (m,) = [
+            h["metrics"]
+            for h in S.describe_history(path)
+            if h["version"] == version
+        ]
+        assert m["num_output_rows"] == want_rows, m
+        assert m["num_files_added"] == len(new_files(version)), m
+
+    check(0, 6)
+    # k=1 updated, k=7 inserted (both part 1); change rows: 3
+    S.merge_commit(
+        spark,
+        spark.createDataFrame([(1, 1), (7, 1)], rows),
+        path,
+        spec,
+        change_data=True,
+    )
+    check(1, 4 if partitioned else 7)  # part 1 rewritten | whole table
+    S.delete_where(spark, path, "k IN (3, 4)", change_data=True)
+    # both parts touched: 5 survivors in the rewrite either way
+    check(2, 5)
+    assert sorted(r.k for r in S.read(spark, path).collect()) == [
+        0, 1, 2, 5, 7,
+    ]
+
+
 def test_timestamp_as_of_time_travel(spark, tmp_path):
     """TIMESTAMP AS OF: a commit-time timestamp resolves to the highest
     version at or before it; pre-table timestamps raise; version and
