@@ -250,10 +250,20 @@ def maintain_min_max(
     value, which the aggregate doesn't hold. This operator takes the
     standard hybrid: groups whose removed values stay strictly INSIDE
     the stored envelope merge deltas like SUM/COUNT; groups whose
-    delete/update-old touches an endpoint are recomputed from
-    ``fact_final`` — but only those groups' rows, via a key semi-join
-    (AQE broadcasts the unsafe-key set), so rescan cost follows the
-    affected groups, not the table.
+    delete/update-old touches an endpoint take the envelope of their
+    ``fact_final`` rows instead.
+
+    One pass: the stored envelope, the batch's added/removed values and
+    the fact rows are unioned into one tagged frame and aggregated by
+    ONE ``groupBy(keys)`` (null-safe, so a NULL-keyed group pairs with
+    its own state row); each group then picks the merged or the
+    rescanned envelope. Only keys with a stored row or a change row
+    come back, so ``fact_final`` may be the whole post-change fact or
+    any superset of the rows of the keys the batch REMOVES from — an
+    endpoint-touching group always has a removal, so no other key can
+    need its rows. The streaming twin passes exactly that removal-key
+    slice; partial aggregation shrinks the fact side to one row per key
+    and input partition before the shuffle.
 
     ``base_agg``: keys + ``min_scaled``/``max_scaled`` (fixed-point
     longs, same quantization as ``agg_deltas``). ``fact_final``: the
@@ -262,28 +272,38 @@ def maintain_min_max(
     """
     fx_new = _fx(new_val, scale)
     fx_old = _fx(old_val, scale)
-    fx_val = _fx(val, scale)
-    added = F.when(F.col(op_col).isin("I", "U"), fx_new)
-    removed = F.when(F.col(op_col).isin("D", "U"), fx_old)
-    batch = changes.groupBy(*keys).agg(
-        F.min(added).alias("i_min"),
-        F.max(added).alias("i_max"),
-        F.min(removed).alias("r_min"),
-        F.max(removed).alias("r_max"),
-    )
-    # null-safe outer merge: a NULL-keyed group pairs with its own state
-    # row (SQL `=` would split it and silently ignore its deletes)
-    j = _ns_join(base_agg, batch, keys, "full_outer").select(
-        *[
-            F.coalesce(F.col(c), F.col("__r_" + c)).alias(c)
-            for c in keys
+    none = F.lit(None).cast("long")
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            base_agg.select(
+                *keys, "min_scaled", "max_scaled", none.alias("_add"),
+                none.alias("_rem"), none.alias("_fact"),
+                F.lit(1).alias("_live"),
+            ),
+            changes.select(
+                *keys, none.alias("min_scaled"), none.alias("max_scaled"),
+                F.when(F.col(op_col).isin("I", "U"), fx_new).alias("_add"),
+                F.when(F.col(op_col).isin("D", "U"), fx_old).alias("_rem"),
+                none.alias("_fact"), F.lit(1).alias("_live"),
+            ),
+            fact_final.select(
+                *keys, none.alias("min_scaled"), none.alias("max_scaled"),
+                none.alias("_add"), none.alias("_rem"),
+                _fx(val, scale).alias("_fact"), F.lit(0).alias("_live"),
+            ),
         ],
-        "min_scaled",
-        "max_scaled",
-        "i_min",
-        "i_max",
-        "r_min",
-        "r_max",
+    )
+    g = tagged.groupBy(*keys).agg(
+        F.min("min_scaled").alias("min_scaled"),
+        F.max("max_scaled").alias("max_scaled"),
+        F.min("_add").alias("i_min"),
+        F.max("_add").alias("i_max"),
+        F.min("_rem").alias("r_min"),
+        F.max("_rem").alias("r_max"),
+        F.min("_fact").alias("f_min"),
+        F.max("_fact").alias("f_max"),
+        F.max("_live").alias("_live"),
     )
     # safe ⇔ every removed value sits strictly inside the stored
     # envelope (endpoints untouched, second-best irrelevant); a key
@@ -296,36 +316,26 @@ def maintain_min_max(
             & (F.col("r_max") < F.col("max_scaled"))
         )
     )
-    # merged feeds three branches (fast filter, unsafe keys, rescan
-    # semi-join); it is aggregate+batch-scale, so a lazy checkpoint
-    # shares the changes aggregation and the full-outer join instead of
-    # re-running them per branch
-    merged = j.withColumn("_safe", safe).localCheckpoint(eager=False)
-    fast = merged.filter(F.col("_safe")).select(
-        *keys,
-        F.least(
-            F.coalesce(F.col("min_scaled"), F.col("i_min")),
-            F.coalesce(F.col("i_min"), F.col("min_scaled")),
-        ).alias("min_scaled"),
-        F.greatest(
-            F.coalesce(F.col("max_scaled"), F.col("i_max")),
-            F.coalesce(F.col("i_max"), F.col("max_scaled")),
-        ).alias("max_scaled"),
-    ).filter(F.col("min_scaled").isNotNull())
-    unsafe_keys = merged.filter(~F.col("_safe")).select(*keys)
-    rescan = (
-        _ns_join(fact_final, unsafe_keys, keys, "left_semi")
-        .groupBy(*keys)
-        .agg(
-            F.min(fx_val).alias("min_scaled"),
-            F.max(fx_val).alias("max_scaled"),
+    lo = F.least(
+        F.coalesce(F.col("min_scaled"), F.col("i_min")),
+        F.coalesce(F.col("i_min"), F.col("min_scaled")),
+    )
+    hi = F.greatest(
+        F.coalesce(F.col("max_scaled"), F.col("i_max")),
+        F.coalesce(F.col("i_max"), F.col("max_scaled")),
+    )
+    return (
+        g.filter(F.col("_live") == 1)
+        .select(
+            *keys,
+            F.when(safe, lo).otherwise(F.col("f_min")).alias("min_scaled"),
+            F.when(safe, hi).otherwise(F.col("f_max")).alias("max_scaled"),
         )
-        # groups whose surviving values are all NULL drop out, matching
-        # the fast path's contract: the maintained envelope tracks
-        # non-NULL values only, whichever path classified the group
+        # groups whose surviving values are all NULL drop out: the
+        # maintained envelope tracks non-NULL values only, whichever
+        # branch classified the group
         .filter(F.col("min_scaled").isNotNull())
     )
-    return fast.unionByName(rescan)
 
 
 def build_topk_state(
@@ -383,125 +393,135 @@ def maintain_topk(
     The maintained invariant is that stored values are a TRUE RANKING
     PREFIX of the key's live values. Maintenance preserves it:
 
-    * removals multiset-subtract from the stored rows (occurrence-paired
-      anti-join; removals below the floor aren't stored and correctly
-      no-op — they live in the unknown region);
-    * an added value is admitted only when the key is complete (no
-      unknown region — everything is known) or the value is >= the
-      pre-batch floor (it provably outranks every unknown; the tie case
-      is safe because equal values are interchangeable in a multiset
-      ranking). A REJECTED add joins the unknown region, so it flips
-      ``incomplete`` on — without the flag, a later batch could trust a
-      prefix that silently stopped being one;
-    * the union is re-ranked and trimmed to k+buffer.
+    * intra-batch adds and removes of the same value net out first (a
+      CDC batch may insert a row and delete it, or its equal-valued
+      twin, within one delivery window — values are interchangeable in
+      a multiset ranking, so the net count IS the sequential effect);
+    * net removals subtract from the stored count of their value
+      (removals below the floor aren't stored and correctly no-op —
+      they live in the unknown region);
+    * a net add is admitted only when the key is complete (no unknown
+      region — everything is known) or the value is >= the pre-batch
+      floor (it provably outranks every unknown; the tie case is safe
+      because equal values are interchangeable). A REJECTED add joins
+      the unknown region, so it flips ``incomplete`` on — without the
+      flag, a later batch could trust a prefix that silently stopped
+      being one;
+    * the result is re-ranked and trimmed to k+buffer.
+
+    All of it is multiset algebra on COUNTS: the stored rows and the
+    batch's adds and removes become one tagged frame, shuffled once by
+    the key and aggregated per ``(keys, value)``; floor, admission,
+    running rank (``sum(cnt)`` over value desc, NULLs last), trim,
+    ``incomplete`` and the squeeze test are windows partitioned by the
+    key, so no further exchange is needed, and kept rows come back by
+    ``explode(array_repeat(value, count))``. ``groupBy`` is null-safe:
+    NULL keys and NULL values pair like any other (a NULL-valued add on
+    an incomplete key fails admission and flags the key — NULLs rank
+    last on both engines).
 
     The top-k stays provable while an incomplete key retains >= k
     prefix rows; incomplete keys squeezed below k rebuild from
-    ``fact_final`` via a key semi-join (rescan cost follows the
-    squeezed keys only; complete keys never rescan — small groups with
-    < k total rows are exact as-is). Read the leaderboard off the
-    returned state with ``topk_rows``; output is deterministic as a
-    multiset per key."""
+    ``fact_final`` via a broadcast key semi-join, so only the squeezed
+    keys' fact rows are shuffled (complete keys never rescan — small
+    groups with < k total rows are exact as-is). A key is squeezed only
+    if the batch removed one of its values, so ``fact_final`` may be
+    the whole post-change fact or any superset of the removal keys'
+    rows (the streaming twin passes that slice). Read the leaderboard
+    off the returned state with ``topk_rows``; output is deterministic
+    as a multiset per key."""
     m = k + buffer
-    fx_new = _fx(new_val, scale)
-    fx_old = _fx(old_val, scale)
-    added = changes.filter(F.col(op_col).isin("I", "U")).select(
-        *keys, fx_new.alias("val_scaled")
+    none = F.lit(None).cast("int")
+    zero, one = F.lit(0), F.lit(1)
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            stored.select(
+                *keys, "val_scaled", one.alias("_s"), zero.alias("_a"),
+                zero.alias("_r"), F.col("incomplete").cast("int").alias("_i"),
+            ),
+            changes.filter(F.col(op_col).isin("I", "U")).select(
+                *keys, _fx(new_val, scale).alias("val_scaled"),
+                zero.alias("_s"), one.alias("_a"), zero.alias("_r"),
+                none.alias("_i"),
+            ),
+            changes.filter(F.col(op_col).isin("D", "U")).select(
+                *keys, _fx(old_val, scale).alias("val_scaled"),
+                zero.alias("_s"), zero.alias("_a"), one.alias("_r"),
+                none.alias("_i"),
+            ),
+        ],
     )
-    removed = changes.filter(F.col(op_col).isin("D", "U")).select(
-        *keys, fx_old.alias("val_scaled")
+    wk = Window.partitionBy(*keys)
+    by_rank = wk.orderBy(F.col("val_scaled").desc_nulls_last()).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    meta = stored.groupBy(*keys).agg(
-        F.min("val_scaled").alias("_floor"),
-        F.max(F.col("incomplete").cast("int")).alias("_inc"),
+    net = F.col("_a") - F.col("_r")
+    # the explicit key partitioning satisfies the (keys, value) grouping
+    # AND every key window below: one exchange for the whole advance
+    counts = (
+        tagged.repartition(*keys)
+        .groupBy(*keys, "val_scaled")
+        .agg(
+            F.sum("_s").alias("_s"),
+            F.sum("_a").alias("_a"),
+            F.sum("_r").alias("_r"),
+            F.max("_i").alias("_i"),
+        )
+        .select(
+            *keys,
+            "val_scaled",
+            "_s",
+            F.greatest(net, zero).alias("_na"),
+            F.greatest(-net, zero).alias("_nr"),
+            # pre-batch floor and incompleteness of the key
+            F.min(F.when(F.col("_s") > 0, F.col("val_scaled")))
+            .over(wk)
+            .alias("_floor"),
+            F.coalesce(F.max("_i").over(wk), zero).alias("_inc"),
+        )
     )
-    occ = Window.partitionBy(*keys, "val_scaled").orderBy(F.lit(1))
-    # net out intra-batch add/remove pairs of the same value first: a
-    # CDC batch may insert a row and delete it (or its equal-valued
-    # twin) within one delivery window; values are interchangeable in a
-    # multiset ranking, so occurrence-pairing adds against removes is
-    # exactly the sequential net effect. Only the remainders touch the
-    # stored state.
-    pair_cols = [*keys, "val_scaled", "occ"]
-    # all pairing joins are null-safe: NULL keys (and NULL stored
-    # values) must pair like any other value or removals silently no-op
-    # and adds bypass the floor admission, breaking the true-prefix
-    # invariant for exactly the groups build_topk_state promises survive
-    addocc = added.withColumn("occ", F.row_number().over(occ))
-    remocc = removed.withColumn("occ", F.row_number().over(occ))
-    added = _ns_join(addocc, remocc, pair_cols, "left_anti").select(
-        *keys, "val_scaled"
+    admit = (F.col("_inc") == 0) | F.coalesce(
+        F.col("val_scaled") >= F.col("_floor"), F.lit(False)
     )
-    removed = _ns_join(remocc, addocc, pair_cols, "left_anti").select(
-        *keys, "val_scaled"
-    )
-    sr = stored.select(*keys, "val_scaled").withColumn(
-        "occ", F.row_number().over(occ)
-    )
-    rr = removed.withColumn("occ", F.row_number().over(occ))
-    survived = _ns_join(sr, rr, pair_cols, "left_anti").select(
-        *keys, "val_scaled"
-    )
-    adds = _ns_join(added, meta, keys, "left").withColumn(
-        # null-safe: a NULL-valued add on an incomplete key must land in
-        # the REJECTED branch (flagging the key), not vanish from both
-        # filters as SQL NULL — it joins the unknown region like any
-        # other below-floor value (NULLs rank last on both engines)
-        "_admit",
-        (F.coalesce(F.col("_inc"), F.lit(0)) == 0)
-        | F.coalesce(
-            F.col("val_scaled") >= F.col("_floor"), F.lit(False)
-        ),
-    )
-    admitted = adds.filter(F.col("_admit")).select(*keys, "val_scaled")
-    rejected_keys = (
-        adds.filter(~F.col("_admit")).select(*keys).distinct()
-    )
-    rk = Window.partitionBy(*keys).orderBy(F.col("val_scaled").desc())
-    # ONE checkpointed ranked frame feeds every branch (kept rows,
-    # trimmed keys, counts) — the occurrence windows, netting anti-joins
-    # and admission join execute once per batch, not once per branch
-    ranked = (
-        survived.unionByName(admitted)
-        .withColumn("rk", F.row_number().over(rk))
-        .localCheckpoint(eager=False)
-    )
-    kept = ranked.filter(F.col("rk") <= m).select(*keys, "val_scaled")
-    counts = kept.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-    # post-batch incompleteness: an unknown region existed before, or a
-    # rejected add just created one (rejection implies _inc, but keep
-    # the disjunction explicit), or the trim above cut rows
-    trimmed_keys = (
-        ranked.filter(F.col("rk") > m).select(*keys).distinct()
-    )
-    inc_keys = (
-        meta.filter(F.col("_inc") == 1)
-        .select(*keys)
-        .unionByName(rejected_keys)
-        .unionByName(trimmed_keys)
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # incomplete keys squeezed below k can no longer prove their top-k
-    # — including keys whose stored rows were ALL removed (no kept row)
-    squeezed = (
-        _ns_join(inc_keys, counts, keys, "left")
-        .filter(F.coalesce(F.col("_n"), F.lit(0)) < k)
-        .select(*keys)
-        .localCheckpoint(eager=False)
-    )
-    safe = _ns_join(
-        _ns_join(kept, squeezed, keys, "left_anti"),
-        inc_keys.withColumn("_i", F.lit(True)),
-        keys,
-        "left",
-    ).select(
+    counts = counts.select(
         *keys,
         "val_scaled",
-        F.coalesce(F.col("_i"), F.lit(False)).alias("incomplete"),
+        "_inc",
+        (
+            F.greatest(F.col("_s") - F.col("_nr"), zero)
+            + F.when(admit, F.col("_na")).otherwise(zero)
+        ).alias("_cnt"),
+        ((F.col("_na") > 0) & ~admit).cast("int").alias("_rej"),
     )
+    ranked = counts.select(
+        *keys,
+        "val_scaled",
+        "_cnt",
+        "_inc",
+        (F.sum("_cnt").over(by_rank) - F.col("_cnt")).alias("_above"),
+        F.sum("_cnt").over(wk).alias("_total"),
+        F.max("_rej").over(wk).alias("_rej"),
+    )
+    # post-batch incompleteness: an unknown region existed before, or a
+    # rejected add just created one, or the trim cuts rows
+    incomplete = (
+        (F.col("_inc") == 1) | (F.col("_rej") == 1) | (F.col("_total") > m)
+    )
+    # incomplete keys squeezed below k can no longer prove their top-k
+    # — including keys whose stored rows were ALL removed
+    squeezed = incomplete & (F.least(F.col("_total"), F.lit(m)) < k)
+    kept = F.least(
+        F.col("_cnt"), F.greatest(F.lit(m) - F.col("_above"), zero)
+    ).cast("int")
+    safe = ranked.filter(~squeezed & (kept > 0)).select(
+        *keys,
+        F.explode(F.array_repeat("val_scaled", kept)).alias("val_scaled"),
+        incomplete.alias("incomplete"),
+    )
+    squeezed_keys = F.broadcast(ranked.filter(squeezed).select(*keys))
     rescan = build_topk_state(
-        _ns_join(fact_final, squeezed, keys, "left_semi"),
+        _ns_join(fact_final, squeezed_keys, keys, "left_semi"),
         keys,
         val,
         k,

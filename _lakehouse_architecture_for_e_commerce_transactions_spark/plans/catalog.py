@@ -7761,9 +7761,10 @@ def q_incremental_minmax(spark: SparkSession, sf: str) -> DataFrame:
     `incremental_agg` — the textbook NON-self-maintainable aggregate
     (operators/incremental.py:maintain_min_max): groups whose removed
     values stay inside the stored envelope merge deltas in O(batch);
-    groups whose delete/update touches an endpoint rescan ONLY their own
-    rows via a key semi-join. The oracle recomputes from the post-change
-    state, which the hybrid must equal exactly."""
+    groups whose delete/update touches an endpoint take the envelope of
+    their own post-change rows, all in one keyed aggregation. The oracle
+    recomputes from the post-change state, which the hybrid must equal
+    exactly."""
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
         incremental as INC,
     )

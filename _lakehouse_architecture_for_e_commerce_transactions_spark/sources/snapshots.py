@@ -825,50 +825,45 @@ def collect_file_stats(
     import pyarrow.parquet as pq
 
     out: dict[str, dict] = {}
-    for d in dirs:
-        for root, _, files in os.walk(d):
-            for name in files:
-                if not name.endswith(".parquet"):
+    for fpath in (f for d in dirs for f in _parquet_files(d)):
+        md = pq.ParquetFile(fpath).metadata
+        stats: dict[str, dict] = {}
+        for rg in range(md.num_row_groups):
+            row_group = md.row_group(rg)
+            for ci in range(row_group.num_columns):
+                col_md = row_group.column(ci)
+                c = col_md.path_in_schema
+                if c not in cols:
                     continue
-                fpath = os.path.join(root, name)
-                md = pq.ParquetFile(fpath).metadata
-                stats: dict[str, dict] = {}
-                for rg in range(md.num_row_groups):
-                    row_group = md.row_group(rg)
-                    for ci in range(row_group.num_columns):
-                        col_md = row_group.column(ci)
-                        c = col_md.path_in_schema
-                        if c not in cols:
-                            continue
-                        st = col_md.statistics
-                        ent = stats.setdefault(
-                            c, {"min": None, "max": None, "nulls": 0}
-                        )
-                        if st is None:
-                            # unknown content: poison the entry so the
-                            # pruner keeps the file
-                            stats[c] = {"min": None, "max": None,
-                                        "nulls": None}
-                            continue
-                        if st.null_count is None or ent["nulls"] is None:
-                            ent["nulls"] = None
-                        else:
-                            ent["nulls"] += st.null_count
-                        if st.has_min_max:
-                            lo, hi = _enc_stat(st.min), _enc_stat(st.max)
-                            if lo is None or hi is None:
-                                stats[c] = {"min": None, "max": None,
-                                            "nulls": None}
-                                continue
-                            if ent["min"] is None or _dec_stat(lo) < _dec_stat(
-                                ent["min"]
-                            ):
-                                ent["min"] = lo
-                            if ent["max"] is None or _dec_stat(hi) > _dec_stat(
-                                ent["max"]
-                            ):
-                                ent["max"] = hi
-                out[fpath] = {"rows": md.num_rows, "cols": stats}
+                st = col_md.statistics
+                ent = stats.setdefault(
+                    c, {"min": None, "max": None, "nulls": 0}
+                )
+                if st is None:
+                    # unknown content: poison the entry so the
+                    # pruner keeps the file
+                    stats[c] = {"min": None, "max": None,
+                                "nulls": None}
+                    continue
+                if st.null_count is None or ent["nulls"] is None:
+                    ent["nulls"] = None
+                else:
+                    ent["nulls"] += st.null_count
+                if st.has_min_max:
+                    lo, hi = _enc_stat(st.min), _enc_stat(st.max)
+                    if lo is None or hi is None:
+                        stats[c] = {"min": None, "max": None,
+                                    "nulls": None}
+                        continue
+                    if ent["min"] is None or _dec_stat(lo) < _dec_stat(
+                        ent["min"]
+                    ):
+                        ent["min"] = lo
+                    if ent["max"] is None or _dec_stat(hi) > _dec_stat(
+                        ent["max"]
+                    ):
+                        ent["max"] = hi
+        out[fpath] = {"rows": md.num_rows, "cols": stats}
     return out
 
 
@@ -961,26 +956,21 @@ def collect_file_blooms(
     import pyarrow.parquet as pq
 
     out: dict[str, dict] = {}
-    for d in dirs:
-        for root, _, files in os.walk(d):
-            for name in files:
-                if not name.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(root, name)
-                pf = pq.ParquetFile(fpath)
-                # a file may lack an inherited bloom column (written
-                # after a DROP COLUMN): it gets no bloom for it
-                have = [c for c in cols if c in pf.schema_arrow.names]
-                tbl = pf.read(columns=have)
-                built = {
-                    c: _bloom_build(tbl.column(c).to_pylist(), fpp)
-                    for c in have
-                }
-                # a None build means no canonical form: record no bloom
-                # for that column so reads fail open rather than prune
-                out[fpath] = {
-                    c: b for c, b in built.items() if b is not None
-                }
+    for fpath in (f for d in dirs for f in _parquet_files(d)):
+        pf = pq.ParquetFile(fpath)
+        # a file may lack an inherited bloom column (written
+        # after a DROP COLUMN): it gets no bloom for it
+        have = [c for c in cols if c in pf.schema_arrow.names]
+        tbl = pf.read(columns=have)
+        built = {
+            c: _bloom_build(tbl.column(c).to_pylist(), fpp)
+            for c in have
+        }
+        # a None build means no canonical form: record no bloom
+        # for that column so reads fail open rather than prune
+        out[fpath] = {
+            c: b for c, b in built.items() if b is not None
+        }
     return out
 
 
@@ -993,17 +983,10 @@ def _dir_file_metrics(dirs: list[str]) -> tuple[int, int]:
     counted."""
     import pyarrow.parquet as pq
 
-    nf = nr = 0
-    for d in dirs:
-        for root, subdirs, files in os.walk(d):
-            subdirs[:] = [s for s in subdirs if s != "_change_data"]
-            for name in files:
-                if name.endswith(".parquet"):
-                    nf += 1
-                    nr += pq.ParquetFile(
-                        os.path.join(root, name)
-                    ).metadata.num_rows
-    return nf, nr
+    files = [f for d in dirs for f in _parquet_files(d)]
+    return len(files), sum(
+        pq.ParquetFile(f).metadata.num_rows for f in files
+    )
 
 
 def _cluster_shape(
@@ -1728,8 +1711,14 @@ def _part_maybe_matches(
 
 
 def _parquet_files(d: str) -> list[str]:
+    """The parquet files under ``d`` — THE data-file walker behind
+    ``data_files``, the stats/bloom/metrics collectors and the scans.
+    ``_change_data`` subtrees hold a commit's change rows, not table
+    rows, so the walk never descends into them (walk a change dir
+    itself to list its files)."""
     out = []
-    for root, _, files in os.walk(d):
+    for root, subdirs, files in os.walk(d):
+        subdirs[:] = [s for s in subdirs if s != "_change_data"]
         out.extend(
             os.path.join(root, f) for f in files if f.endswith(".parquet")
         )

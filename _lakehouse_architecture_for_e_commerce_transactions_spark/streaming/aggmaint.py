@@ -3,10 +3,20 @@ fact⋈dim enrichment views kept current from CDC change streams,
 exactly-once.
 
 Each micro-batch advances the stored state with the batch operators from
-``operators/incremental`` — O(batch) work plus a state-key-space join,
-never a fact rescan — and publishes the advance atomically. State lives
-in the snapshot TABLE, not in Spark streaming state: the checkpoint
-stays tiny however large the key space grows, the view is
+``operators/incremental`` — O(batch) work on the touched keys' state
+slice — and publishes the advance atomically. The MIN/MAX and TOP-K
+advances are multiset algebra on COUNTS: the state slice, the batch's
+adds and removes (and, for MIN/MAX, the rescan rows) are unioned into
+one tagged frame and aggregated in ONE key-partitioned pass — a
+``groupBy(k)`` for MIN/MAX, per-``(k, value)`` counts plus key windows
+for TOP-K — so the state advance pays one exchange, plus the rescan of
+squeezed TOP-K keys when there are any. Rescans read only the REMOVAL
+keys' slice of the fact mirror (a file-pruned ``read_where``): a group
+can need a rescan only if the batch removed one of its values, so a
+micro-batch reads those keys' fact rows, not the whole mirror.
+
+State lives in the snapshot TABLE, not in Spark streaming state: the
+checkpoint stays tiny however large the key space grows, the view is
 queryable/time-travelable like any other table, and a restarted stream
 resumes from the table head.
 
@@ -51,11 +61,12 @@ cadence. A twin is only a ``_TwinSpec``:
   ``_app_id`` last; the watermark marker row derives from it;
 * ``feed_schema`` — the CSV feed (the change rows, or ``(k, v)`` /
   ``(k, t, x)`` for the insert-only sketches and EWMA);
-* ``advance(slice, batch, fact_now)`` — the slice's next state rows;
+* ``advance(slice, batch, fact_now)`` — the slice's next state rows
+  (``fact_now``: the removal keys' mirror slice, mirror twins only);
 * ``touched(batch)`` — where the scope keys come from: the batch's
   keys, or the deltas' keys for hist/cm;
 * ``build(fact_now)`` — set for the twins that keep a fact mirror
-  (minmax, topk): their creating state is built from the mirror;
+  (minmax, topk): their creating state is built from the whole mirror;
 * ``counted`` — agg only: the profile collect also yields the change
   count reported to ``on_batch``.
 
@@ -569,15 +580,23 @@ def _compact_state(spark: SparkSession, path: str) -> None:
     op="MAINTENANCE", not "OPTIMIZE": dropping marker rows IS a row
     change, and OPTIMIZE is the one label the stream sources trust to
     mean bytes-only (when no markers exist, the plain ``compact``
-    below keeps its honest OPTIMIZE label)."""
+    below keeps its honest OPTIMIZE label).
+
+    The newest marker's batch id comes from ``_stats_watermark`` — no
+    Spark job: every stamped commit carries a marker at its batch id
+    and its data rows at that id, so the max ``_last_batch`` over the
+    files IS the max marker. Tables without complete stats fall back
+    to a scan of the marker rows."""
     snap = S.load_snapshot(path)
     cur = S.read(spark, path)
     key0 = cur.columns[0]  # every state/fact schema leads with its key
-    mb = (
-        cur.filter(F.col(key0).isNull())
-        .agg(F.max("_last_batch"))
-        .first()[0]
-    )
+    mb, _ = _stats_watermark(path)
+    if mb is None:
+        mb = (
+            cur.filter(F.col(key0).isNull())
+            .agg(F.max("_last_batch"))
+            .first()[0]
+        )
     if mb is None:
         S.compact(spark, path)
         return
@@ -661,16 +680,15 @@ def _keyed_twin(
         f.name for f in spec.state_schema.fields if f.name not in _WM_STATS
     ]
 
-    def advance_state(batch: DataFrame, batch_id: int, profile) -> None:
+    def advance_state(
+        batch: DataFrame, batch_id: int, profile, rem_keys
+    ) -> None:
         state, last, stored_app = _table_state(
             spark, state_path, spec.state_schema, cols
         )
         skip, rebuild = _guard(batch_id, last, stored_app, app)
         if skip:
             return
-        fact_now = (
-            read_maintained_fact(spark, fact_path) if fact_path else None
-        )
         n_changes = None
         if last is None or rebuild:
             # table creation / derivation rebuild: full state, once
@@ -691,6 +709,16 @@ def _keyed_twin(
                     if keys is not None
                     else batch.count()
                 )
+        fact_now = None
+        if fact_path is not None:
+            # the creating build reads the whole mirror; an advance reads
+            # only the removal keys' slice (every key a rescan can need
+            # has a D/U row in the batch), the whole mirror past the cap
+            fact_now = (
+                read_maintained_fact(spark, fact_path)
+                if touched is None or rem_keys is None
+                else _fact_slice(spark, fact_path, rem_keys)
+            )
         if touched is None and spec.build is not None:
             nxt = spec.build(fact_now)
         elif n_changes == 0:
@@ -711,7 +739,7 @@ def _keyed_twin(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch = _null_guarded_key(batch_df, "k", spec.name)
         if fact_path is None:
-            advance_state(batch, batch_id, None)
+            advance_state(batch, batch_id, None, None)
             return
         # fact first, then state: a crash between the two replays into
         # "fact skips, state applies" (see the MIN/MAX section below)
@@ -721,7 +749,7 @@ def _keyed_twin(
             _advance_fact(
                 spark, batch, fact_path, batch_id, app, rem_keys=rem_keys
             )
-            advance_state(batch, batch_id, rows)
+            advance_state(batch, batch_id, rows, rem_keys)
         finally:
             batch.unpersist()
 
@@ -1057,16 +1085,18 @@ def stream_join_view_maintenance(
 #
 #   * a FACT MIRROR — the live (k, val) multiset the change feed
 #     describes. Insert-only batches append; batches with removals
-#     multiset-subtract (occurrence-paired anti-join) and republish.
-#     This is the committed table the batch operators' key-scoped
-#     rescans read — rescan input is real table state, not stream
-#     state, so the checkpoint stays tiny and a restart resumes from
-#     the table head.
+#     multiset-subtract (one signed-count groupBy) and republish the
+#     removal keys' slice. This is the committed table the batch
+#     operators' key-scoped rescans read — rescan input is real table
+#     state, not stream state, so the checkpoint stays tiny and a
+#     restart resumes from the table head.
 #   * the maintained STATE (min/max envelope, or the top-(k+buffer)
 #     leaderboard with its incomplete flags) — advanced per batch by
-#     operators/incremental.maintain_min_max / maintain_topk, i.e.
-#     O(batch) plus rescans scoped to endpoint-touching / squeezed
-#     keys only.
+#     operators/incremental.maintain_min_max / maintain_topk in one
+#     key-partitioned count pass, i.e. O(batch) plus rescans of the
+#     endpoint-touching / squeezed keys. Both kinds of key have a D/U
+#     row in the batch, so the operators get the removal keys' mirror
+#     slice as their fact input (the whole mirror past the key cap).
 #
 # Commit order is fact first, then state: a crash between the two
 # replays into "fact skips, state applies", and the state's rescan
@@ -1108,6 +1138,20 @@ _TOPK_SCHEMA = StructType(
 def read_maintained_fact(spark: SparkSession, fact_path: str) -> DataFrame:
     return (
         S.read(spark, fact_path)
+        .filter(F.col("k").isNotNull())
+        .select("k", "val")
+    )
+
+
+def _fact_slice(spark: SparkSession, fact_path: str, keys: list) -> DataFrame:
+    """The live mirror rows of ``keys``: a ``read_where`` whose literal
+    IN-list skips files by their k stats/blooms at planning time. No
+    keys gives an empty relation the optimizer prunes from the plan
+    (``limit(0)``), so an insert-only batch schedules no rescan."""
+    if not keys:
+        return spark.createDataFrame([], "k string, val double").limit(0)
+    return (
+        S.read_where(spark, fact_path, [("k", "in", keys)])
         .filter(F.col("k").isNotNull())
         .select("k", "val")
     )
@@ -1179,12 +1223,13 @@ def _advance_fact(
       live rows of the removal keys (a file-pruned ``read_where`` scan
       when the key set fits a literal IN-list, a broadcast semi-join
       otherwise) union the batch's adds, multiset-subtract the
-      removals via an occurrence-paired NULL-SAFE anti-join (a NULL
-      old/new value pairs with a NULL-valued fact row instead of
-      ghosting forever), and land through
-      ``snapshots.replace_where_commit`` — ONE atomic commit that
-      tombstones the old slice (deletion vectors) and appends the new
-      one. The pairing window shuffles the touched slice only.
+      removals as ONE signed-count ``groupBy(k, val)`` (+1 per live or
+      added row, -1 per removal; each value comes back
+      ``max(count, 0)`` times — null-safe, so a NULL old/new value
+      pairs with a NULL-valued fact row instead of ghosting forever),
+      and land through ``snapshots.replace_where_commit`` — ONE atomic
+      commit that tombstones the old slice (deletion vectors) and
+      appends the new one. The count shuffles the touched slice only.
 
     The replay watermark travels inside the same atomic commit (marker
     row + per-file stats), so exactly-once survives any crash point.
@@ -1192,8 +1237,6 @@ def _advance_fact(
     folds the accumulated small files + tombstones — amortized layout
     maintenance, not per-batch work.
     """
-    from pyspark.sql import Window
-
     last, aid = _fact_watermark(spark, fact_path)
     skip, rebuild = _guard(batch_id, last, aid, app)
     if skip:
@@ -1215,13 +1258,15 @@ def _advance_fact(
     )
 
     def pair_subtract(pool: DataFrame, removals: DataFrame) -> DataFrame:
-        occ = Window.partitionBy("k", "val").orderBy(F.lit(1))
-        return INC._ns_join(
-            pool.withColumn("occ", F.row_number().over(occ)),
-            removals.withColumn("occ", F.row_number().over(occ)),
-            ["k", "val", "occ"],
-            "left_anti",
-        ).select("k", "val")
+        n = F.sum("_n").cast("int")
+        return (
+            pool.withColumn("_n", F.lit(1))
+            .unionByName(removals.withColumn("_n", F.lit(-1)))
+            .groupBy("k", "val")
+            .agg(n.alias("_n"))
+            .filter(F.col("_n") > 0)
+            .select("k", F.explode(F.array_repeat("val", "_n")).alias("val"))
+        )
 
     def stamped(df: DataFrame) -> DataFrame:
         return _stamped(spark, df, _FACT_SCHEMA, batch_id, app)
@@ -1258,11 +1303,7 @@ def _advance_fact(
         # literal IN-list scope: the tombstone scan inside
         # replace_where_commit prunes files via per-file k-blooms/stats
         pred = [("k", "in", rem_keys)]
-        slice_old = (
-            S.read_where(spark, fact_path, pred)
-            .filter(F.col("k").isNotNull())
-            .select("k", "val")
-        )
+        slice_old = _fact_slice(spark, fact_path, rem_keys)
         # one parsed IN expression (operators/util.in_list): isin would
         # pay a py4j round-trip per key, ~0.4 s per use at the key cap
         touched = U.in_list("k", rem_keys)
@@ -1306,7 +1347,8 @@ def stream_minmax_maintenance(
     ``operators/incremental.maintain_min_max``: per-key MIN/MAX kept
     current from change-row CSVs (``k, op ∈ {I,U,D}, old_val,
     new_val``), with endpoint-touching groups rescanned from the
-    committed fact mirror only. Per-batch mirror work is O(batch)
+    removal keys' slice of the committed fact mirror. Per-batch mirror
+    work is O(batch)
     (append / keyed replace — see ``_advance_fact``); pass
     ``compact_every=N`` to fold the accumulated small files and
     deletion vectors every N applied batches (amortized layout
@@ -1344,7 +1386,8 @@ def stream_topk_maintenance(
     ``operators/incremental.maintain_topk``: a continuously maintained
     per-key leaderboard. The stored top-(k+buffer) prefix absorbs the
     batch; only keys squeezed below a provable top-k rebuild, from the
-    committed fact mirror, via a key semi-join. Mirror commits are
+    removal keys' slice of the committed fact mirror, via a broadcast
+    key semi-join. Mirror commits are
     O(batch); ``compact_every`` folds small files/DVs periodically
     (see ``stream_minmax_maintenance``)."""
     spec = _TwinSpec(

@@ -20,11 +20,28 @@ change_row = st.tuples(
     st.floats(min_value=0.0, max_value=1000.0, allow_nan=False),
 )
 
+# a few repeated values plus NULL: multiset counts, ties and NULL
+# ranking (NULLs rank last) for the MIN/MAX and TOP-K operators
+tied_val = st.one_of(st.none(), st.sampled_from([1.0, 2.5, 4.0]))
+tied_base_row = st.tuples(st.sampled_from(["a", "b"]), tied_val)
+tied_change_row = st.tuples(
+    st.sampled_from(["I", "U", "D"]), st.sampled_from(["a", "b"]), tied_val
+)
 
-def _fx(x: float) -> int:
+
+def _fx(x: float | None) -> int | None:
     import math
 
-    return int(math.floor(x * 100 + 0.5))
+    return None if x is None else int(math.floor(x * 100 + 0.5))
+
+
+def _unfx(v: int | None) -> float | None:
+    return None if v is None else v / 100.0
+
+
+def _top(vals: list, k: int) -> list:
+    """The k largest values, NULLs ranked last."""
+    return sorted(vals, key=lambda v: (v is None, -(v or 0)))[:k]
 
 
 @settings(max_examples=6, deadline=None)
@@ -106,6 +123,21 @@ def test_maintained_minmax_equals_recompute(spark, base_rows, raw_changes):
     """The hybrid fast-path/rescan MIN/MAX maintenance must equal a
     recompute for ANY change interleaving — including deletes that hit
     the stored envelope's endpoints (the non-self-maintainable case)."""
+    _check_minmax(spark, base_rows, raw_changes)
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    st.lists(tied_base_row, min_size=0, max_size=10),
+    st.lists(tied_change_row, min_size=0, max_size=10),
+)
+def test_maintained_minmax_ties_and_nulls(spark, base_rows, raw_changes):
+    """Repeated values and NULLs: removing one copy of a tied endpoint
+    keeps it, and a group whose live values are all NULL drops out."""
+    _check_minmax(spark, base_rows, raw_changes)
+
+
+def _check_minmax(spark, base_rows, raw_changes):
     from pyspark.sql import functions as F
 
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
@@ -133,9 +165,11 @@ def test_maintained_minmax_equals_recompute(spark, base_rows, raw_changes):
         else:
             state[k].remove(_fx(old))
             state[k].append(_fx(new))
-    want = {
-        k: (min(v), max(v)) for k, v in state.items() if v
-    }
+    want = {}
+    for k, v in state.items():
+        live = [x for x in v if x is not None]
+        if live:
+            want[k] = (min(live), max(live))
 
     def df_of(rows, schema):
         return spark.createDataFrame(rows if rows else [], schema)
@@ -153,7 +187,7 @@ def test_maintained_minmax_equals_recompute(spark, base_rows, raw_changes):
         changes, "k string, op string, old_val double, new_val double"
     )
     final_rows = [
-        (k, v / 100.0) for k, vals in state.items() for v in vals
+        (k, _unfx(v)) for k, vals in state.items() for v in vals
     ]
     fact_final = df_of(final_rows, "k string, val double")
     out = INC.maintain_min_max(base_agg, ch, fact_final, ["k"], "val")
@@ -242,6 +276,23 @@ def test_maintained_topk_two_chained_batches(
     state, so a prefix silently corrupted by batch 1 (an insert slotted
     below the unknown floor, a shrunken prefix misread as complete)
     surfaces here even when each single batch looks right."""
+    _check_topk_chain(spark, base_rows, [raw1, raw2])
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    st.lists(tied_base_row, min_size=0, max_size=10),
+    st.lists(tied_change_row, min_size=0, max_size=8),
+    st.lists(tied_change_row, min_size=0, max_size=8),
+)
+def test_maintained_topk_ties_and_nulls(spark, base_rows, raw1, raw2):
+    """Two chained batches over repeated values and NULLs: per-value
+    counts net adds against removes, tied values straddle the k+buffer
+    cut, and NULLs rank last in the stored prefix and the leaderboard."""
+    _check_topk_chain(spark, base_rows, [raw1, raw2])
+
+
+def _check_topk_chain(spark, base_rows, raws):
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
         incremental as INC,
     )
@@ -283,7 +334,7 @@ def test_maintained_topk_two_chained_batches(
 
     def fact_df():
         rows = [
-            (kk, v / 100.0) for kk, vals in state.items() for v in vals
+            (kk, _unfx(v)) for kk, vals in state.items() for v in vals
         ]
         return df_of(rows, "k string, val double")
 
@@ -291,7 +342,7 @@ def test_maintained_topk_two_chained_batches(
         df_of(base_rows, "k string, val double"),
         ["k"], "val", k=K, buffer=BUF,
     )
-    for raw in (raw1, raw2):
+    for raw in raws:
         changes = mk_changes(raw)
         apply(changes)
         ch = df_of(
@@ -304,7 +355,7 @@ def test_maintained_topk_two_chained_batches(
 
     want = {}
     for kk, vals in state.items():
-        for i, v in enumerate(sorted(vals, reverse=True)[:K], start=1):
+        for i, v in enumerate(_top(vals, K), start=1):
             want[(kk, i)] = v
     got = {
         (r["k"], r["pos"]): r["val_scaled"]

@@ -5,6 +5,8 @@ slowdowns at scale."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
@@ -96,11 +98,10 @@ def test_triangle_wedge_join_is_equi(spark):
 
 
 def test_topk_maintenance_is_equi_join_only(spark):
-    """No nested-loop or cartesian join in the top-k maintenance plan's
-    FINAL segment (the lazily-checkpointed subplans compile into
-    separate executions invisible here; their join shapes are covered
-    behaviorally by the hypothesis equivalence tests), plus an exactness
-    check of the maintained leaderboard."""
+    """No nested-loop or cartesian join anywhere in the top-k
+    maintenance plan — one query: the key-partitioned count pass, its
+    key windows, and the broadcast key semi-join that rescans squeezed
+    keys — plus an exactness check of the maintained leaderboard."""
     from pyspark.sql import functions as F
 
     from _lakehouse_architecture_for_e_commerce_transactions_spark.operators import (
@@ -128,3 +129,28 @@ def test_topk_maintenance_is_equi_join_only(spark):
         for r in INC.topk_rows(out, ["k"], 3).collect()
     }
     assert got[("k0", 1)] == 2700 and got[("k1", 1)] == 5000
+
+    # a batch that squeezes k0 (its top three removed): one key
+    # exchange carries the count pass and the squeezed-key broadcast
+    # reuses it; the rescan filters the fact rows by that broadcast
+    # BEFORE its own exchange, so only squeezed keys' fact rows shuffle
+    squeeze = spark.createDataFrame(
+        [("k0", "D", v, None) for v in (27.0, 24.0, 21.0)], ch.schema
+    )
+    fact2 = fact.filter((F.col("k") != "k0") | (F.col("val") < 21))
+    out2 = INC.maintain_topk(
+        stored, squeeze, fact2, ["k"], "val", k=3, buffer=2
+    )
+    plan2 = executed_plan_text(out2).split("== Initial Plan ==")[0]
+    key_exchange = r"\+- Exchange hashpartitioning\([^)]*\), REPARTITION_BY_COL"
+    assert len(re.findall(key_exchange, plan2)) == 1
+    assert "ReusedExchange" in plan2
+    assert "LeftSemi, BuildRight" in plan2
+    got2 = [
+        r["val_scaled"]
+        for r in INC.topk_rows(out2, ["k"], 3)
+        .filter(F.col("k") == "k0")
+        .orderBy("pos")
+        .collect()
+    ]
+    assert got2 == [1800, 1500, 1200]

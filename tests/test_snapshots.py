@@ -1398,6 +1398,60 @@ def test_change_data_commits_count_data_files_only(
     ]
 
 
+def test_change_data_files_stay_out_of_data_file_surfaces(
+    spark, tmp_path
+):
+    """A plain table's ``_change_data`` files are change rows, never
+    table rows: after two ``merge_commit(..., change_data=True)`` the
+    pruned scan, the metadata-only row count, DESCRIBE DETAIL's file
+    count and the stats sidecar all see the data files only."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.tables import (
+        TableSpec,
+    )
+
+    spec = TableSpec(
+        name="cdleak",
+        schema=StructType(
+            [
+                StructField("k", LongType(), False),
+                StructField("v", LongType(), False),
+            ]
+        ),
+        primary_key="k",
+    )
+    path = str(tmp_path / "t")
+    rows = "k long, v long"
+    S.merge_commit(
+        spark, spark.createDataFrame([(k, k) for k in range(6)], rows),
+        path, spec, stats_for=["k"], change_data=True,
+    )
+    S.merge_commit(
+        spark, spark.createDataFrame([(1, 1), (7, 7)], rows),
+        path, spec, stats_for=["k"], change_data=True,
+    )
+    live = S.read(spark, path)
+    data = set(live.inputFiles())
+    assert all("/_change_data/" not in f for f in data)
+    assert sorted(S.data_files(path)) == sorted(
+        S._strip_file_scheme(f) for f in data
+    )
+    report: dict = {}
+    got = S.read_where(spark, path, [("k", "<=", 1)], report=report)
+    assert sorted(tuple(r) for r in got.collect()) == [(0, 0), (1, 1)]
+    assert report["files_total"] == len(data)
+    got = S.read_where(spark, path, [("k", "in", [1, 7])])
+    assert sorted(tuple(r) for r in got.collect()) == [(1, 1), (7, 7)]
+    assert S.table_stats(path)["rows"] == live.count() == 7
+    assert S.describe_detail(path)["num_files"] == len(data)
+    snap = S.load_snapshot(path)
+    assert snap.file_stats
+    assert all("/_change_data/" not in f for f in snap.file_stats)
+    # the change feed still reads its change files
+    assert S._raw_manifest(path, snap.version).get("change_data")
+
+
 def test_timestamp_as_of_time_travel(spark, tmp_path):
     """TIMESTAMP AS OF: a commit-time timestamp resolves to the highest
     version at or before it; pre-table timestamps raise; version and

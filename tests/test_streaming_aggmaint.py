@@ -644,3 +644,47 @@ def test_stats_watermark_mixed_table_scans_statless_files_only(
         os.remove(os.path.join(mdir, name))
     assert S.load_snapshot(p3).dv_dead is None
     assert _stats_watermark(p3, spark) == (None, None)
+
+
+def test_compact_state_marker_fold_from_stats_or_scan(spark, tmp_path):
+    """``_compact_state`` keeps every data row and only the newest
+    watermark marker, whether the marker's batch id comes from the
+    manifest stats (stamped tables) or from a scan of the marker rows
+    (a table whose commits carry no stats)."""
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.sources import (
+        snapshots as S,
+    )
+    from _lakehouse_architecture_for_e_commerce_transactions_spark.streaming.aggmaint import (
+        _WM_STATS,
+        _compact_state,
+        _stats_watermark,
+    )
+
+    ddl = "k string, v long, _last_batch long, _app_id string"
+    commits = [
+        [("a", 1, 0, "app"), (None, None, 0, "app")],
+        [("b", 2, 1, "app"), (None, None, 1, "app")],
+        [("a", 3, 2, "app"), (None, None, 2, "app")],
+    ]
+    want = sorted(
+        [("a", 1, 0), ("b", 2, 1), ("a", 3, 2), (None, None, 2)],
+        key=repr,
+    )
+    for stats in (_WM_STATS + ["k"], None):
+        path = str(tmp_path / ("stats" if stats else "plain"))
+        for i, rows in enumerate(commits):
+            S.commit(
+                spark, spark.createDataFrame(rows, ddl), path,
+                mode="append" if i else "overwrite", stats_for=stats,
+            )
+        assert _stats_watermark(path) == (
+            (2, "app") if stats else (None, None)
+        )
+        _compact_state(spark, path)
+        got = sorted(
+            ((r["k"], r["v"], r["_last_batch"])
+             for r in S.read(spark, path).collect()),
+            key=repr,
+        )
+        assert got == want
+        assert S.load_snapshot(path).op == "MAINTENANCE"

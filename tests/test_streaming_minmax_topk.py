@@ -317,9 +317,8 @@ def test_fact_mirror_replace_scope_prunes_files(spark, tmp_path):
 
 def test_null_valued_change_rows_pair_null_safe(spark, tmp_path):
     """A D/U change row with NULL old_val must retire the NULL-valued
-    fact row (null-safe occurrence pairing) instead of ghosting it
-    forever — including when insert and delete land in DIFFERENT
-    batches."""
+    fact row (null-safe signed count) instead of ghosting it forever —
+    including when insert and delete land in DIFFERENT batches."""
     from _lakehouse_architecture_for_e_commerce_transactions_spark.streaming import (
         aggmaint as AM,
     )
@@ -450,3 +449,106 @@ def test_fact_mirror_wide_key_batch_uses_join_scope(spark, tmp_path, monkeypatch
     snaps = S.history(factp)
     assert snaps[-1].op == "REPLACEWHERE"
     assert set(snaps[0].dirs) <= set(snaps[-1].dirs)  # no rewrite
+
+
+def _budget_feed(seed: int, n_keys: int = 12, per_file: int = 60):
+    """Three change files like the benchmark's feed: an insert-only seed
+    file, then two files mixing I/U/D over values that exist (removals
+    hit extrema and squeeze leaderboards, so rescans run)."""
+    import random
+
+    rng = random.Random(seed)
+    live: dict[str, list[float]] = {}
+    files = []
+    for b in range(3):
+        rows = []
+        for _ in range(per_file):
+            k = f"k{min(int(rng.paretovariate(1.2)) - 1, n_keys - 1):02d}"
+            vals = live.setdefault(k, [])
+            op = "I" if b == 0 or not vals else rng.choice("IIUUD")
+            if op == "I":
+                v = round(rng.uniform(0.0, 100.0), 2)
+                vals.append(v)
+                rows.append(f"{k},I,,{v!r}")
+                continue
+            old = vals.pop(rng.randrange(len(vals)))
+            if op == "U":
+                v = round(rng.uniform(0.0, 100.0), 2)
+                vals.append(v)
+                rows.append(f"{k},U,{old!r},{v!r}")
+            else:
+                rows.append(f"{k},D,{old!r},")
+        files.append(rows)
+    return files, live
+
+
+def _job_id_mark(spark, tag: str) -> int:
+    """Run one tiny job in its own group and return its id. Job ids are
+    global and sequential, so the jobs of a drain are the ids strictly
+    between two marks — a count the status store's retention cap
+    (``spark.ui.retainedJobs``) cannot truncate."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return max(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_twin_drain_job_budget(spark, tmp_path):
+    """Each twin drains three files (compact_every=3) within 55 Spark
+    jobs. One key-partitioned count pass per micro-batch, the
+    removal-key rescan slice and the stats-based compaction watermark
+    keep it there; the occurrence-window/anti-join formulation with its
+    lazy checkpoints paid 62 (MIN/MAX) and 105 (TOP-K) jobs per drain
+    on this feed shape. Every job of the drain runs in the query's job
+    group, and the state still equals a recompute."""
+    files, live = _budget_feed(7)
+    for twin in ("minmax", "topk"):
+        d = tmp_path / twin
+        raw = str(d / "raw")
+        for i, rows in enumerate(files):
+            p = os.path.join(raw, f"c{i}.csv")
+            _write(p, rows)
+            os.utime(p, (1_000_000 + i, 1_000_000 + i))
+        reader = (
+            spark.readStream.schema("k string, op string, old_val double, "
+                                    "new_val double")
+            .option("header", True)
+            .option("maxFilesPerTrigger", "1")
+            .csv(raw)
+        )
+        args = (spark, reader, str(d / "fact"), str(d / "state"),
+                str(d / "ckpt"))
+        before = _job_id_mark(spark, f"before-{twin}")
+        if twin == "minmax":
+            q = stream_minmax_maintenance(*args, compact_every=3)
+        else:
+            q = stream_topk_maintenance(*args, k=3, buffer=2,
+                                        compact_every=3)
+        q.awaitTermination(300)
+        after = _job_id_mark(spark, f"after-{twin}")
+        assert q.exception() is None
+        assert len(q.recentProgress) == 3
+        grouped = spark.sparkContext.statusTracker().getJobIdsForGroup(
+            str(q.runId)
+        )
+        assert grouped and all(before < j < after for j in grouped)
+        jobs = after - before - 1
+        assert jobs <= 55, f"{twin}: {jobs} Spark jobs for a 3-file drain"
+        if twin == "minmax":
+            got = {
+                r["k"]: (r["min_scaled"], r["max_scaled"])
+                for r in read_maintained_minmax(spark, str(d / "state"))
+                .collect()
+            }
+            assert got == _want_minmax(live)
+        else:
+            got = {
+                (r["k"], r["pos"]): r["val_scaled"]
+                for r in read_maintained_topk(spark, str(d / "state"), 3)
+                .collect()
+            }
+            assert got == _want_topk(live, 3)
